@@ -292,9 +292,11 @@ def knn_ivf(
     # (v09 r15 baseline: 10 physical parquet scans, most of them this
     # lineage; knn_ivf_pq already does this for its codebook).  At 100 TB
     # the centroid relation is the persisted coarse-quantizer index;
-    # materializing it once IS the production shape (guide §5).  LAZY
-    # (r16): the first broadcast build materializes the blocks — the
-    # eager form paid one extra result-stage job for the same sharing.
+    # materializing it once IS the production shape.  EAGER,
+    # not lazy: both broadcasts can be built concurrently inside one job,
+    # and a lazy checkpoint then races — each build computes the deferred
+    # Lloyd lineage before either has cached it (the r16 lazy-checkpoint
+    # boundary, measured on v04: 3.7 -> 4.3 s).
     cents = ivf_centroids(corpus, n_clusters).localCheckpoint()
     indexed = _assign(corpus, cents)
     qscored = queries.crossJoin(F.broadcast(cents)).withColumn(

@@ -8,8 +8,9 @@ as Postgres cache tiers become DataFrames; callers persist whichever tiers
 they want as Parquet/Delta tables (sinks/).
 
 At 100TB: every stage is shuffle-bounded by its key (uri or yuid), the
-closure iterates O(component diameter) bounded rounds, and nothing ever
-collects to the driver.
+closure runs O(log n) star rounds, and nothing unbounded collects to the
+driver — the closure gathers its edge set only when it fits the broadcast
+threshold, bounded by a limit before the gather (pipeline/closure.py).
 """
 
 from __future__ import annotations
@@ -86,8 +87,9 @@ def run_build(
     # tier once and read it back), truncating every downstream scan to a
     # columnar read of the already-parsed struct.
     docs = _m_lazy(with_doc(records))
-    # lazy: the one in-chain consumer is the closure's own (eager)
-    # symmetrize checkpoint, which executes this exactly once anyway
+    # lazy: the one in-chain consumer is the closure — its bounded
+    # gather (or, above the broadcast threshold, its first star round)
+    # scans this once and materializes it in that job
     equiv_edges = _m_lazy(reconcile(docs, indexes))
 
     all_uris = docs.select(

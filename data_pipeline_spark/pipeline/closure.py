@@ -1,23 +1,41 @@
 """Connected-components labeling — the equivalence-closure engine.
 
 Replaces the reference's per-record BFS collector + mutable Redis idmap
-unions (collector.py:108-278, reference_manager.py:212-407) with whole-
-dataset iterative label propagation: each node takes the minimum label among
-itself and its neighbors until fixpoint. Convergence is O(max component
-diameter) rounds; entity-equivalence components are small (the reference
-bounds BFS at max_distance=3), so this terminates in a handful of rounds.
+unions (collector.py:108-278, reference_manager.py:212-407) with one
+whole-dataset operator: every node is labeled with the minimum node id of
+its component.  The operator is routed by size, the same bounded
+"gather to one place" decision a broadcast join makes:
 
-Scale notes (100TB): every round is one shuffle join on the edge list.
-`localCheckpoint` truncates lineage so plans don't grow unboundedly; AQE
-coalesces the shrinking change-set. For pathological long-chain graphs,
-switch to the large-star/small-star algorithm (O(log n) rounds, same
-join primitive) — not needed for equivalence sets with bounded diameter.
+- **local** — when the de-self-looped edge set fits
+  ``spark.sql.autoBroadcastJoinThreshold``, it is gathered once (bounded
+  by ``limit`` before the gather, never after), dictionary-encoded with
+  Arrow and closed on the driver by a numpy min-label/pointer-jumping
+  kernel; the labels go back as one Arrow-backed DataFrame.  One job
+  instead of one shuffle round trip per iteration: at entity-equivalence
+  sizes the closure's cost was driver planning between round actions,
+  not work.
+- **star** — above the threshold (or with the threshold at ``-1``, which
+  also disables broadcast joins), large-star/small-star (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond"): O(log n) rounds on
+  any graph, each round one action with one exchange per star operation
+  and the fixpoint test computed in-band (see ``connected_components_star``).
+
+Scale notes (100TB): the star path never collects a node's neighbourhood
+into one row — each star operation is a window over the node key, which
+streams a hot hub's neighbours instead of building them into an array —
+and each round's edge set is a localCheckpoint, so plans do not grow with
+the round count.  A graph just above the threshold pays one extra pass
+over its input lineage for the refused gather.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def connected_components(
@@ -26,258 +44,154 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 50,
     stats: dict | None = None,
-    algorithm: str = "auto",
-    auto_halving_budget: int = 4,
-    auto_decay_threshold: float = 0.7,
 ) -> DataFrame:
     """Label every node of the undirected graph with the minimum node id
-    reachable from it. Returns DataFrame(node, component).
+    reachable from it.  Returns DataFrame(node, component), both of the
+    input column's type.
 
-    ``edges`` may be directed and contain duplicates/self-loops; it is
-    symmetrized and deduplicated here.  ``stats`` (if given) receives
-    {"rounds": n, "algorithm": name} so tests can pin the O(log n)
-    convergence claim and the routing decision.
-
-    ``algorithm``: 'halving' is label propagation with pointer
-    shortcutting — right for equivalence graphs whose components have
-    bounded diameter (the reference caps BFS at max_distance=3).  'star'
-    is large-star/small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond"), whose per-round work is proportional to the
-    CURRENT edge set rather than the full label relation — faster on
-    pathological graphs (very long chains, giant components) where
-    propagation's every-round full-label join becomes the bottleneck
-    (measured: star 1.11-1.21x faster once 5,000-link chains appear,
-    SCALE.md round 10).
-
-    'auto' (default — VERDICT r10 #6) removes the human from the choice:
-    run halving, and if it either exhausts ``auto_halving_budget`` rounds
-    or its changed-label count decays slower than
-    ``auto_decay_threshold`` round-over-round (the long-chain signature:
-    every round still relabels ~n nodes), restart with star on the
-    already-symmetrized edge set.  Bounded-diameter graphs — the common
-    entity-equivalence shape — converge inside the budget and never pay
-    for star; a 100 TB run that unexpectedly grows a giant component
-    switches after at most ``auto_halving_budget`` cheap rounds.  Both
-    arms produce identical labels (min-id per component), so routing
-    never changes results — only which plan computes them (proven on
-    both shapes in tests/test_pipeline_scale.py).
-    """
-    if algorithm == "star":
-        return connected_components_star(
-            edges, src=src, dst=dst, max_iter=max_iter, stats=stats
-        )
-    if algorithm not in ("halving", "auto"):
-        raise ValueError(f"unknown closure algorithm: {algorithm!r}")
-    fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    sym = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
-    # EAGER checkpoint: round 1's tagged relation unions TWO scans of
-    # sym inside one stage — with a lazy checkpoint each branch's tasks
-    # race to compute the deferred final stage per partition (the r16
-    # lazy-checkpoint boundary: lazy only for sequential consumers)
-    sym = sym.filter(F.col("src") != F.col("dst")).localCheckpoint()
-
-    budget = min(auto_halving_budget, max_iter) if algorithm == "auto" else max_iter
-    labels, converged, rounds = _halving_loop(
-        sym,
-        budget,
-        decay_threshold=(auto_decay_threshold if algorithm == "auto" else None),
+    ``edges`` may be directed and contain duplicates; self-loops and edges
+    with a null endpoint are dropped, so a node whose only edges are those
+    gets no label.  ``stats`` (if given) receives {"rounds": n,
+    "algorithm": "local" | "star"} so tests and tools can pin the route
+    and the convergence claim.  ``max_iter`` bounds the star rounds; the
+    local kernel always runs to its fixpoint."""
+    spark = edges.sparkSession
+    # `u != v` is null (so filtered) when either endpoint is null
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
+        F.col("u") != F.col("v")
     )
-    if not converged and algorithm == "auto":
-        # Keep the probe's work: contract the graph by the current labels
-        # before handing off to star.  label(u) is always a node of u's
-        # component (min over reachable labels, init self), so the
-        # quotient graph (label(u), label(v)) has exactly the original
-        # component structure — and after k probe rounds every already-
-        # converged component collapses to an edgeless single node (its
-        # edges become dropped self-loops) while chains shrink ~2^k-fold.
-        # Star then runs on the pathological residue alone, which is why
-        # auto beats BOTH manual choices on mixed shapes (SCALE.md r11)
-        # instead of paying probe + full-graph star.
-        lab_u = labels.select(
-            F.col("node").alias("_u"), F.col("component").alias("_cu")
-        )
-        lab_v = labels.select(
-            F.col("node").alias("_v"), F.col("component").alias("_cv")
-        )
-        contracted = (
-            sym.join(lab_u, sym.src == F.col("_u"))
-            .join(lab_v, sym.dst == F.col("_v"))
-            .select(F.col("_cu").alias("src"), F.col("_cv").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        star_stats: dict = {}
-        star_labels = connected_components_star(
-            contracted, src="src", dst="dst", max_iter=max_iter, stats=star_stats
-        ).select(
-            F.col("node").alias("_lab"), F.col("component").alias("_comp")
-        )
-        # components already converged in the probe never reach star
-        # (edgeless after contraction) — their probe label IS the answer
-        out = labels.join(
-            star_labels, labels.component == F.col("_lab"), "left"
-        ).select(
-            "node",
-            F.coalesce(F.col("_comp"), F.col("component")).alias("component"),
-        )
-        if stats is not None:
-            stats["rounds"] = rounds + star_stats["rounds"]
-            stats["halving_rounds"] = rounds
-            stats["algorithm"] = "star"
-        return out
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if threshold >= 0:
+        node_type = e.schema["u"].dataType
+        # Spark's own per-row size estimate (row overhead + type default
+        # sizes) turns the byte threshold into a row bound for the limit
+        row_bytes = 8 + 2 * e._jdf.schema().apply("u").dataType().defaultSize()
+        cap = min(threshold // row_bytes, 2**31 - 2)  # limit() takes an int
+        tbl = e.limit(cap + 1).toArrow()
+        if tbl.num_rows <= cap and tbl.nbytes <= threshold:
+            nodes, labels, rounds = _close_local(tbl)
+            if stats is not None:
+                stats["rounds"] = rounds
+                stats["algorithm"] = "local"
+            schema = StructType(
+                [StructField("node", node_type), StructField("component", node_type)]
+            )
+            return spark.createDataFrame(
+                pa.table({"node": nodes, "component": labels}), schema
+            )
+    out = connected_components_star(e, "u", "v", max_iter=max_iter, stats=stats)
     if stats is not None:
-        stats["rounds"] = rounds
-        stats["algorithm"] = "halving"
-    return labels
+        stats["algorithm"] = "star"
+    return out
 
 
-def _halving_loop(
-    sym: DataFrame,
-    max_iter: int,
-    decay_threshold: float | None = None,
-) -> tuple[DataFrame, bool, int]:
-    """Path-halving label propagation over a symmetrized, deduplicated,
-    self-loop-free edge set.  Returns (labels, converged, rounds).
+def _close_local(tbl: pa.Table) -> tuple[pa.Array, pa.Array, int]:
+    """(sorted nodes, their component labels, hooking rounds) of a
+    gathered two-column edge table.
 
-    ``decay_threshold``: if set, bail out (converged=False) as soon as
-    changed(r) > threshold * changed(r-1) for r >= 2 — slow decay means
-    the graph has long chains / a giant component and the caller should
-    re-route to the star algorithm rather than keep paying the full
-    label-relation join per round."""
-    labels: DataFrame | None = None  # identity mapping until after round 1
-
+    Nodes are dictionary-encoded and renumbered by sort rank, so the
+    minimum node id of a component is its minimum index.  The kernel is
+    Shiloach-Vishkin shaped: every edge hooks the larger of its two roots
+    under the smaller (``np.minimum.at``, so each root takes its minimum
+    proposal), then pointer jumping flattens every tree to depth one.
+    Roots only ever move to smaller roots, so the component minimum —
+    which nothing can undercut — ends as every member's root; each round
+    at least halves the number of trees that still have a crossing edge."""
+    ends = pa.concat_arrays(
+        [tbl.column(0).combine_chunks(), tbl.column(1).combine_chunks()]
+    )
+    enc = pc.dictionary_encode(ends)
+    order = pc.sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty_like(order)
+    rank[order] = np.arange(len(order))
+    ids = rank[enc.indices.to_numpy()]
+    u, v = ids[: tbl.num_rows], ids[tbl.num_rows:]
+    parent = np.arange(len(order))
     rounds = 0
-    converged = False
-    prev_changed: int | None = None
-    for _ in range(max_iter):
+    while not np.array_equal(parent[u], parent[v]):
         rounds += 1
-        # Round 1 specialization (r15 opt): against the identity labeling
-        # the propagate join `sym ⋈ labels on src == node` is a no-op —
-        # every neighbor label IS the neighbor id — so the first round
-        # reads labels straight off the edge set (self rows appear once
-        # per incident edge; min/max aggregates are multiplicity-blind).
-        # This removes the labels-init checkpoint job AND round 1's
-        # join exchange (guide §2.4).
-        if labels is None:
-            tagged = (
-                sym.select(
-                    F.col("src").alias("node"),
-                    F.col("src").alias("component"),
-                    F.lit(True).alias("_self"),
-                )
-                .union(
-                    sym.select(
-                        F.col("dst").alias("node"),
-                        F.col("src").alias("component"),
-                        F.lit(False).alias("_self"),
-                    )
-                )
-            )
-        else:
-            # neighbor labels: for every edge (src->dst), dst can adopt
-            # src's label
-            prop = (
-                sym.join(labels, sym.src == labels.node)
-                .select(F.col("dst").alias("node"), F.col("component"))
-            )
-            tagged = labels.select(
-                "node", "component", F.lit(True).alias("_self")
-            ).union(prop.select("node", "component", F.lit(False).alias("_self")))
-        # the self rows are tagged so the round's OLD label rides through
-        # the min-aggregation as a second aggregate (a node's self rows
-        # all carry its current label, so the max-of-when is that label).
-        # Carrying it makes the convergence check below a filter-count
-        # over the already-checkpointed relation — the previous shape
-        # re-joined new vs old labels on node, a 2-exchange shuffle job
-        # per round that existed only to compute `changed` (r15 opt,
-        # guide §2.4: remove shuffles outright).
-        new_labels = (
-            tagged.groupBy("node")
-            .agg(
-                F.min("component").alias("component"),
-                F.max(F.when(F.col("_self"), F.col("component"))).alias("_old"),
-            )
-        )
-        # pointer shortcut (path halving): component ids are node ids, so
-        # every node can also adopt its component's OWN component —
-        # label(u) := min(label(u), label(label(u))). This turns O(chain
-        # length) convergence into O(log n): without it a 120-node chain
-        # needs 120 rounds; with it, ~8.
-        step = new_labels
-        right = step.select(
-            F.col("node").alias("_ptr_node"), F.col("component").alias("_ptr_comp")
-        )
-        # lazy checkpoint + convergence count in ONE job (r16 opt): the
-        # eager form paid a dedicated result-stage job to cache the round's
-        # labels and then a second job to count changes over the cached
-        # blocks; the lazy form materializes the blocks inside the count's
-        # own job — same cached relation, one fewer job barrier per round.
-        # The count's filter is a narrow op over the checkpointed RDD, so
-        # its job computes (and caches) every partition — no partial-
-        # materialization hazard.
-        new_labels = (
-            step.join(right, step.component == F.col("_ptr_node"), "left")
-            .select(
-                step.node,
-                F.least(
-                    step.component,
-                    F.coalesce(F.col("_ptr_comp"), step.component),
-                ).alias("component"),
-                step._old,
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter(F.col("component") != F.col("_old")).count()
-        labels = new_labels.select("node", "component")
-        if changed == 0:
-            converged = True
-            break
-        if (
-            decay_threshold is not None
-            and prev_changed is not None
-            and changed > decay_threshold * prev_changed
-        ):
-            break
-        prev_changed = changed
-    if labels is None:  # max_iter == 0: the identity labeling, unpropagated
-        labels = (
-            sym.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("component", F.col("node"))
-        )
-    return labels, converged, rounds
+        pu, pv = parent[u], parent[v]
+        np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    nodes = enc.dictionary.take(pa.array(order))
+    return nodes, nodes.take(pa.array(parent)), rounds
 
 
-def _large_star(e: DataFrame) -> DataFrame:
-    """(u,v) edge set -> large-star round: every node connects its
-    strictly-larger neighbors to the minimum of its closed neighborhood."""
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    m = sym.groupBy("u").agg(F.min("v").alias("mn"))
-    m = m.select("u", F.least(F.col("u"), F.col("mn")).alias("m"))
-    return (
-        sym.join(m, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .distinct()
+def _star_round(e: DataFrame) -> DataFrame:
+    """One large-star + small-star round over canonical edges (hi > lo).
+
+    Rows with a null ``lo`` are markers: one per node of the round's INPUT
+    that is neither a root (every neighbour larger) nor a leaf (exactly
+    one neighbour, and it is smaller).  The input's markers are dropped;
+    the output's count the input's non-star nodes, which is zero exactly
+    when the input is already the fixpoint — a forest of stars rooted at
+    each component's minimum.
+
+    Each star operation is ONE window exchange over the node key: the
+    window's min/max give the closed neighbourhood minimum and the
+    root/leaf test, and its lag drops duplicate edges in-band (both
+    operations emit some), so no `distinct` exchange is needed."""
+    u, v, hi, lo = F.col("u"), F.col("v"), F.col("hi"), F.col("lo")
+    node_type = e.schema["hi"].dataType
+    by_u = Window.partitionBy("u").orderBy("v")
+    whole_u = by_u.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    # large star: connect every strictly-larger neighbour of u to the
+    # minimum of u's closed neighbourhood
+    sym = e.filter(lo.isNotNull()).select(
+        F.inline(
+            F.array(
+                F.struct(hi.alias("u"), lo.alias("v")),
+                F.struct(lo.alias("u"), hi.alias("v")),
+            )
+        )
     )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Small-star round: every node connects its smaller-or-equal
-    neighbors (grouping each edge at its larger endpoint) to the minimum
-    of that closed neighborhood."""
-    canon = (
-        e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+    mn, mx, prev = F.col("mn"), F.col("mx"), F.col("prev")
+    large = (
+        sym.select(
+            "u",
+            "v",
+            F.min("v").over(whole_u).alias("mn"),
+            F.max("v").over(whole_u).alias("mx"),
+            F.lag("v").over(by_u).alias("prev"),
+        )
+        .filter(prev.isNull() | (prev != v))
+        .select(
+            F.inline(
+                F.array(
+                    F.when(
+                        v > u, F.struct(v.alias("hi"), F.least(u, mn).alias("lo"))
+                    ),
+                    # prev is null on u's first row only: one marker per node
+                    F.when(
+                        prev.isNull() & (mn < u) & (mx > mn),
+                        F.struct(u.alias("hi"), F.lit(None).cast(node_type).alias("lo")),
+                    ),
+                )
+            )
+        )
+        .filter(hi.isNotNull())
     )
-    m = canon.groupBy("u").agg(F.min("v").alias("mn"))
-    j = canon.join(m, "u")
+    # small star: connect hi and each of its smaller neighbours to the
+    # minimum of that set.  Nulls sort first, so a marker is its
+    # partition's first row: its running min stays null (it passes
+    # through as a marker) and the real rows' running min is the minimum
+    by_hi = Window.partitionBy("hi").orderBy("lo")
     return (
-        j.filter(F.col("v") != F.col("mn"))
-        .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-        .union(j.select("u", F.col("mn").alias("v")))
-        .distinct()
+        large.select(
+            "hi",
+            "lo",
+            F.min("lo").over(by_hi).alias("mn"),
+            F.lag("lo").over(by_hi).alias("prev"),
+        )
+        .filter(prev.isNull() | (prev != lo))
+        .select(
+            F.when(lo.isNull() | (lo == mn), hi).otherwise(lo).alias("hi"),
+            mn.alias("lo"),
+        )
     )
 
 
@@ -289,44 +203,41 @@ def connected_components_star(
     stats: dict | None = None,
 ) -> DataFrame:
     """Large-star/small-star connected components: alternate the two star
-    operations until the edge set reaches its fixpoint (a forest of
-    stars), then read each node's component off its star root.  O(log n)
-    rounds on any graph — including the long chains and giant components
-    where per-round label propagation degrades — and every round is the
-    same bounded-fanout groupBy+join primitive, so no single key ever
-    accumulates more than its current neighborhood."""
-    # new_e is lazily checkpointed (r16, same as the halving loop): its
-    # FIRST consumer is the exceptAll convergence job, which computes
-    # every partition sequentially before anything else reads it.  The
-    # INITIAL e stays eager — its first consumer is _large_star's
-    # two-branch union, whose branches scan e concurrently inside one
-    # stage (the r16 lazy-checkpoint boundary: lazy only for sequential
-    # consumers).
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
+    operations until the edge set is a forest of stars, then read each
+    node's component off its star root.  O(log n) rounds on any graph.
+
+    Each round is ONE action: the round's edge set is a lazy
+    localCheckpoint whose blocks are computed by the count of its marker
+    rows (``_star_round``) — the fixpoint test rides in the job that
+    materializes the round, so a round costs its two window exchanges
+    plus that count, with no set comparison of old and new edges."""
+    e = edges.filter(F.col(src) != F.col(dst)).select(
+        F.greatest(src, dst).alias("hi"), F.least(src, dst).alias("lo")
     )
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
-        new_e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        changed = (
-            new_e.exceptAll(e).limit(1).count() + e.exceptAll(new_e).limit(1).count()
-        )
-        e = new_e
-        if changed == 0:
+        # lazy is safe: the count is the round's first and only consumer
+        # until the next round's single scan
+        e = _star_round(e).localCheckpoint(eager=False)
+        non_star = e.filter(F.col("lo").isNull())
+        # an RDD count of the filtered scan: one job, no aggregate exchange
+        if non_star._jdf.queryExecution().toRdd().count() == 0:
             break
     if stats is not None:
         stats["rounds"] = rounds
-    # converged: edges point children at their star root (v < u, v = root)
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    # a star forest: each leaf's only row names its root; roots map to
+    # themselves (min also covers an unconverged max_iter cut-off)
     return (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("mn"))
+        e.filter(F.col("lo").isNotNull())
         .select(
-            F.col("u").alias("node"),
-            F.least(F.col("u"), F.col("mn")).alias("component"),
+            F.inline(
+                F.array(
+                    F.struct(F.col("hi").alias("node"), F.col("lo").alias("component")),
+                    F.struct(F.col("lo").alias("node"), F.col("lo").alias("component")),
+                )
+            )
         )
+        .groupBy("node")
+        .agg(F.min("component").alias("component"))
     )

@@ -5,7 +5,9 @@ Replaces the reference's mutable Redis idmap with in-place UUID unions
 /root/reference) by a pure dataflow (SURVEY §4 known-hard #1/#2):
 
 1. connected components over equiv_edges label every URI with the lexical
-   minimum member URI of its equivalence class;
+   minimum member URI of its equivalence class (closure.py: a driver-side
+   Arrow/numpy closure when the edge set fits the broadcast threshold,
+   distributed star rounds above it);
 2. minting is **deterministic**: ``uuid5(NAMESPACE_URL, min_member)`` —
    same input data always yields the same YUID, with no driver-side state
    (replaces ``uuid.uuid4()`` minting, redis.py:221);

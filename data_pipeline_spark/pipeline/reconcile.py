@@ -236,7 +236,7 @@ def reconcile(
     ``broadcast_index=False`` routes J1 through the hot/cold-split salted
     shuffle join (see name_join) for authority indexes too large to
     broadcast.  ``broadcast_index="auto"`` removes the human from the
-    choice (the closure auto-routing principle): one columnar count of
+    choice (size-routed, like the closure): one columnar count of
     the name index picks broadcast below ``auto_broadcast_max_rows``
     (the measured crossover region — the hot/cold A/B shows blanket
     replication still winning at 500k and losing 1.6-6x at 5M-20M,

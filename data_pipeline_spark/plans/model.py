@@ -198,9 +198,17 @@ def serving_prefix(sf_dir: str) -> str:
 
 def _reap_stale_serving_dirs(spark: SparkSession) -> None:
     """Best-effort removal of serving-model warehouse dirs whose owning
-    process is gone (plus legacy un-suffixed ones from older builds).
-    Only dirs of DEAD pids are touched, so a live concurrent session's
-    tables are never disturbed."""
+    process is gone.  Only ``serve_*_p<pid>_*`` dirs of DEAD pids are
+    touched, so a live concurrent session's tables are never disturbed;
+    dirs without a pid suffix are left alone, since nothing proves their
+    owner is gone.
+
+    Assumptions: the warehouse is a local POSIX path (``os.kill(pid, 0)``
+    is the liveness probe, so a non-file warehouse is skipped); every
+    process sharing it runs on this host (pids are per-host, so another
+    host's live owner would look dead); and the catalog is the in-memory
+    one, so a dead process's table registrations died with it and
+    removing the files orphans no catalog entry."""
     import os
     import shutil
     from urllib.parse import urlparse
@@ -211,22 +219,20 @@ def _reap_stale_serving_dirs(spark: SparkSession) -> None:
     if not root or not os.path.isdir(root):
         return
     pat = re.compile(r"^serve_.+_p(\d+)_(entities|edges_subj|edges_obj)$")
-    legacy = re.compile(r"^serve_.+_(entities|edges_subj|edges_obj)$")
     for d in os.listdir(root):
         m = pat.match(d)
-        if m:
-            pid = int(m.group(1))
-            if pid == os.getpid():
-                continue
-            try:
-                os.kill(pid, 0)
-                continue  # owner alive — leave its tables alone
-            except ProcessLookupError:
-                pass
-            except PermissionError:
-                continue  # alive under another uid
-        elif not legacy.match(d):
+        if not m:
             continue
+        pid = int(m.group(1))
+        if pid == os.getpid():
+            continue
+        try:
+            os.kill(pid, 0)
+            continue  # owner alive — leave its tables alone
+        except ProcessLookupError:
+            pass
+        except PermissionError:
+            continue  # alive under another uid
         shutil.rmtree(os.path.join(root, d), ignore_errors=True)
 
 

@@ -82,26 +82,29 @@ GATE_PIN = [
     "r13_state_lookup",
     "r14_index_compact_probe",
     "r14_inline_compact_stream",
-    # r16 re-fronts (VERDICT r15 #6): q18 was rewritten r15 and b02/m01/
-    # m02/v04 touched r15, but all five rotated out of the r15 oracle
-    # sample — their driver proof is two rounds stale by now; pin for one
-    # round so CORRECTNESS_r16 re-vouches the current code.
-    "q18_large_orders",
+    # r16 pins: q18 and v09 are dropped — their CORRECTNESS_r16 rows
+    # landed green and both stay benched (and locally oracle-tested) as
+    # HEADLINE queries.  m01/m02/v04/v07/d37 landed green too and are due
+    # to drop, but dropping them now would rotate them out of the window
+    # that the default test selection (tests/conftest.py) runs — they
+    # drop once closure pins no longer need the slots.
     "b02_entity_export",
     "m01_multimodal_features",
     "m02_frame_sample",
     "v04_ann_ivf",
-    # r16 code changes that re-gate (the r15 greens predate them):
-    # - operators/similarity.py k-means changed: seeds now come from the
-    #   collect_list aggregate instead of the single-partition window
-    #   (the packed row-local assignment was tried and REVERTED — see
-    #   _assign's docstring) (v04 above; v07/v09/d37 cover the IVF-PQ,
-    #   recall-eval and SemDeDup shapes over the same trainer);
-    # - pipeline/edges.py extract_names_table went row-local (b03).
-    # b01/b02 (pinned above) re-prove the lazy-checkpoint chain.
     "v07_ann_ivf_pq",
-    "v09_ann_recall_eval",
     "d37_semantic_dedup",
+    # closure.py rewritten (size-routed local gather + one-shuffle star
+    # rounds): j16 (now the routing gate) and d13 (dedup groups through
+    # the closure) take the two freed slots.  j05, j09 and d12 are among
+    # the AGE_SLOTS stalest greens, so the window re-proves them without
+    # a pin; b01/b02/b03 re-prove the full chain through the closure.
+    # Pins are capped at GATE_WINDOW_SIZE - AGE_SLOTS = 26, so the other
+    # callers (d36, d41, d53) and the SimHash pair d08/d34 get no slot
+    # until m01/m02/v04/v07/d37 drop; they stay covered by the local
+    # oracle suite (d08 is a HEADLINE query).
+    "j16_closure_auto_routed",
+    "d13_corpus_clean",
     "b03_entity_facets_names",
 ]
 

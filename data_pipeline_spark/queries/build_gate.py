@@ -13,7 +13,7 @@ srcB's twin.  Every equivalence component is exactly a pair, so the
 DuckDB oracle is the customer table itself: one merged entity per
 custkey, label elected from srcA (merge order), exactly 2 sources
 folded.  The chain exercised is the production one end to end —
-envelope parse, J2 record-asserted edges, closure (auto-routed), uuid5
+envelope parse, J2 record-asserted edges, closure (size-routed), uuid5
 mint, reidentify, Arrow merge fold — none of it mocked.
 """
 

@@ -133,9 +133,10 @@ def x04_reference_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j05_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive equivalence closure (J5/J7, collector.py:108-278 +
-    reference_manager.py:212-407): connected-components labeling via
-    iterative label propagation (pipeline/closure.py), pinned here against
-    a recursive-CTE oracle on the nation/region graph."""
+    reference_manager.py:212-407): connected-components labeling through
+    the default size-routed closure (pipeline/closure.py — the local
+    gather at this size), pinned here against a recursive-CTE oracle on
+    the nation/region graph."""
     nation = load_table(spark, sf_dir, "nation")
     a = nation.alias("a")
     b = nation.alias("b")
@@ -205,13 +206,13 @@ def _g03_oracle() -> str:
 def g03_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer->supplier purchase graph, 3 fixed
     iterations, damping 0.85, top-20 by rank — iterative graph
-    analytics beyond the closure family (J5 is label propagation to a
+    analytics beyond the closure family (J5 is a closure to a
     FIXPOINT; PageRank is the weighted-mass cousin every analytics
     engine ships).  Each iteration is ONE join (edges x ranks on src,
-    both co-partitionable on the node key) plus one aggregate — the
-    same per-round shape as closure.py, so the 100 TB posture is
-    identical: rounds x (shuffle on node id), lineage truncated per
-    round in the production path, AQE handles the inevitable in-degree
+    both co-partitionable on the node key) plus one aggregate, so the
+    100 TB posture is that of closure.py's star rounds: rounds x
+    (shuffle on node id), lineage truncated per round in the
+    production path, AQE handles the inevitable in-degree
     skew (celebrity suppliers) by splitting the oversized reduce
     partitions.
 
@@ -313,19 +314,18 @@ def g03_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="J5,graph-closure-star",
 )
 def j09_closure_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The large-star/small-star closure fallback (Kiveris et al.) as its
-    own driver gate, on the shape it exists for: 50-link CHAINS (dense
-    customer row numbers, chain edges rn -> rn+1 within blocks of 50).
-    j05 gates the default path-halving algorithm on clique-ish
-    components; this pins the star algorithm's fixpoint + root-readout
-    against the same recursive-CTE oracle style.  The adversarial scale
-    run (SCALE.md round 10) measured star FASTER than halving once
-    5,000-link chains appear (1.11x at 30x, 1.21x at 100x), so the
-    fallback is the production choice for long-chain graphs — it earns a
-    correctness gate of its own."""
+    """The distributed large-star/small-star closure (Kiveris et al.) as
+    its own driver gate, on the shape it exists for: 50-link CHAINS
+    (dense customer row numbers, chain edges rn -> rn+1 within blocks of
+    50).  It calls ``connected_components_star`` directly, because at
+    every driver scale factor the default closure routes to the local
+    gather — without this gate the path that takes over above the
+    broadcast threshold would have no driver proof.  Pins the star
+    rounds, the in-band fixpoint test and the root readout against the
+    same recursive-CTE oracle style as j05."""
     from pyspark.sql import Window as W
 
-    from ..pipeline.closure import connected_components
+    from ..pipeline.closure import connected_components_star
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     rn = F.row_number().over(W.orderBy("c_custkey")) - 1
@@ -337,7 +337,7 @@ def j09_closure_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("rn") % 50 != 49) & F.col("_has_next"))
         .select(node.alias("src"), nxt.alias("dst"))
     )
-    return connected_components(edges, algorithm="star")
+    return connected_components_star(edges)
 
 
 @query(
@@ -365,17 +365,16 @@ def j09_closure_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="J5,graph-closure-auto",
 )
 def j16_closure_auto_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The auto-routed closure's SWITCH path as its own driver gate
-    (round 11): 200-link chains through the DEFAULT algorithm — long
-    enough that the budgeted halving probe cannot converge, so the gate
-    exercises the full auto machinery: probe rounds, the label-CONTRACTED
-    handoff (quotient graph by probe labels), star on the residue, and
-    the join-back for probe-converged components.  j05 gates auto's
-    stay-on-halving arm (clique shape), j09 the star arm invoked
-    directly; this pins the routing + contraction composition against
-    the same recursive-CTE oracle style.  The switch is asserted
-    (stats['algorithm'] == 'star'), so the gate cannot silently degrade
-    into re-testing the halving arm if budgets change."""
+    """The closure's ROUTING as its own driver gate: 200-link chains
+    through the DEFAULT closure, which must route to the local gather
+    (Arrow dictionary-encode + numpy kernel on the driver) — at sf0.1
+    the chain set is ~15k edges, far below any broadcast threshold the
+    driver's session uses.  j05 gates the default path on clique-shaped
+    components, j09 the star path invoked directly; this pins that the
+    size routing actually picks the local path at benchmark scale (so a
+    broken size estimate cannot silently send every closure through the
+    star rounds) and that its labels on long chains match the
+    recursive-CTE oracle."""
     from pyspark.sql import Window as W
 
     from ..pipeline.closure import connected_components
@@ -393,8 +392,8 @@ def j16_closure_auto_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats: dict = {}
     out = connected_components(edges, stats=stats)
     # explicit raise, not assert: under `python -O` an assert is stripped
-    # and the gate silently degrades into a plain halving re-test — the
-    # exact degradation this check exists to catch (ADVICE r11)
-    if stats["algorithm"] != "star":
-        raise RuntimeError(f"auto did not switch on 200-link chains: {stats}")
+    # and the gate silently degrades into a star re-test — the exact
+    # degradation this check exists to catch
+    if stats["algorithm"] != "local":
+        raise RuntimeError(f"closure did not route local on 200-link chains: {stats}")
     return out

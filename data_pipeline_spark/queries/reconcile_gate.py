@@ -461,8 +461,9 @@ def a02_skewed_merge_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     of 128 rows splits into CHAIN components of sizes 1/2/5/20/100 (record
     rn asserts equivalence to rn+1 while the next row is in the same
     chain).  Chains are the worst case for label propagation — a 100-link
-    chain needs ~100 naive rounds; path halving (closure.py) must close it
-    in O(log n) — and the 100-record groups stress the merge fold's
+    chain needs ~100 naive rounds; the closure (closure.py: pointer
+    jumping locally, star rounds distributed) must close it in O(log n)
+    — and the 100-record groups stress the merge fold's
     per-group Arrow batch where a01's groups are always pairs.  The
     reference bounds BFS at max_distance=3 precisely to dodge this shape
     (docs/sample_config/base.json:6, process/collector.py:201-218); the

@@ -319,9 +319,9 @@ def test_any_edges_and_texts_and_word_query(spark, built):
 
 
 def test_closure_long_chain_converges(spark):
-    """Path-halving makes a 120-node chain converge in O(log n) rounds —
-    without it, min-label propagation needs one round per hop and a
-    bounded max_iter leaves the chain fragmented."""
+    """A 120-node chain closes into one component under a max_iter far
+    below its length — plain min-label propagation needs one round per
+    hop and would leave the chain fragmented (long ids, default route)."""
     from data_pipeline_spark.pipeline.closure import connected_components
 
     edges = spark.createDataFrame([(i, i + 1) for i in range(120)], ["src", "dst"])

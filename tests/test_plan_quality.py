@@ -114,56 +114,78 @@ def test_dsl_planner_is_memoized_and_cached(spark):
     assert p1.entities.is_cached and p1.edges.is_cached
 
 
-def test_closure_path_halving_round_count(spark):
-    """Path halving: a 120-node chain must converge in O(log n) rounds
-    (~8), not O(n) — the property that keeps closure affordable on deep
-    equivalence chains at scale."""
-    from data_pipeline_spark.pipeline.closure import connected_components
-
-    chain = spark.createDataFrame(
-        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(119)], ["src", "dst"]
+def _chain(spark, n=120):
+    return spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n - 1)], ["src", "dst"]
     )
-    stats: dict = {}
-    labels = connected_components(chain, stats=stats, algorithm="halving")
-    comps = {r.component for r in labels.collect()}
-    assert comps == {"n000"}  # one component, min label
-    assert stats["rounds"] <= 10, f"chain took {stats['rounds']} rounds"
 
 
-def test_closure_auto_routes_by_shape(spark):
-    """algorithm='auto' (the default, VERDICT r10 #6): bounded-diameter
-    graphs converge inside the halving budget and never pay for star;
-    long chains trip the budget/decay trigger and re-route to star —
-    and BOTH arms return the same labels, so routing is invisible in
-    results."""
+def _count_jobs(spark, fn):
+    """(fn(), number of Spark jobs it launched), counted with the status
+    tracker under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _with_threshold(spark, value, fn):
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", value)
+    try:
+        return fn()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_closure_default_routes_local_in_few_jobs(spark):
+    """At test size the edge set fits the broadcast threshold, so the
+    default closure gathers it once and closes it on the driver: a
+    120-node chain (the shape that needs O(log n) shuffle rounds) costs a
+    handful of jobs, not a job fan per round."""
     from data_pipeline_spark.pipeline.closure import connected_components
 
-    # bounded shape: region-sized cliques — auto must stay on halving
-    cliques = spark.createDataFrame(
-        [(f"g{g}a", f"g{g}{m}") for g in range(5) for m in "bcde"],
+    chain = _chain(spark).localCheckpoint()
+    stats: dict = {}
+    labels, jobs = _count_jobs(
+        spark, lambda: connected_components(chain, stats=stats)
+    )
+    assert stats["algorithm"] == "local"
+    assert jobs <= 5, f"local closure launched {jobs} jobs"
+    rows = {r.node: r.component for r in labels.collect()}
+    assert len(rows) == 120 and set(rows.values()) == {"n000"}
+
+
+def test_closure_routes_by_broadcast_threshold(spark):
+    """Setting spark.sql.autoBroadcastJoinThreshold to -1 — which also
+    disables broadcast joins — forces the distributed star path, and the
+    two routes label identically (min node id per component)."""
+    from data_pipeline_spark.pipeline.closure import connected_components
+
+    edges = spark.createDataFrame(
+        [(f"g{g}a", f"g{g}{m}") for g in range(5) for m in "bcde"]
+        + [("b", "a"), ("b", "c"), ("c", "b"), ("x", "x"), ("y", "z")],
         ["src", "dst"],
     )
-    stats: dict = {}
-    got = {(r.node, r.component)
-           for r in connected_components(cliques, stats=stats).collect()}
-    want = {(r.node, r.component)
-            for r in connected_components(cliques, algorithm="halving").collect()}
-    assert got == want
-    assert stats["algorithm"] == "halving"
-
-    # pathological shape: one 120-node chain — auto must switch to star
-    # after at most the halving budget, and still label identically
-    chain = spark.createDataFrame(
-        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(119)], ["src", "dst"]
-    )
-    stats = {}
-    got = {(r.node, r.component)
-           for r in connected_components(chain, stats=stats).collect()}
-    want = {(r.node, r.component)
-            for r in connected_components(chain, algorithm="halving").collect()}
-    assert got == want
-    assert stats["algorithm"] == "star"
-    assert stats["halving_rounds"] <= 4  # the budgeted probe, not a full run
+    local_stats: dict = {}
+    local = {(r.node, r.component)
+             for r in connected_components(edges, stats=local_stats).collect()}
+    star_stats: dict = {}
+    star = _with_threshold(spark, "-1", lambda: {
+        (r.node, r.component)
+        for r in connected_components(edges, stats=star_stats).collect()
+    })
+    assert local_stats["algorithm"] == "local"
+    assert star_stats["algorithm"] == "star"
+    assert local == star
+    assert ("x", "x") not in local  # self-loop-only nodes get no label
+    assert ("c", "a") in local and ("z", "y") in local
 
 
 def test_rj01_range_join_is_bin_equijoin(spark):
@@ -241,33 +263,54 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
 
 
 def test_closure_star_variant_matches_and_converges_fast(spark):
-    """The large-star/small-star fallback (algorithm='star') must agree
-    with the default labeling and converge in O(log n) rounds on the
-    pathological long chain that motivates it."""
-    from data_pipeline_spark.pipeline.closure import connected_components
+    """The distributed star path on the pathological long chain: O(log n)
+    rounds, each ONE action of at most three jobs (two window exchanges
+    plus the in-band fixpoint count) with no exceptAll set comparison,
+    and the same labels as the local path."""
+    from pyspark.sql import functions as F
 
-    chain = spark.createDataFrame(
-        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(119)], ["src", "dst"]
+    from data_pipeline_spark.pipeline.closure import (
+        _star_round,
+        connected_components,
+        connected_components_star,
     )
+
+    chain = _chain(spark).localCheckpoint()
     stats: dict = {}
-    labels = connected_components(chain, stats=stats, algorithm="star")
+    labels, jobs = _count_jobs(
+        spark, lambda: connected_components_star(chain, stats=stats)
+    )
     rows = {r.node: r.component for r in labels.collect()}
     assert set(rows.values()) == {"n000"}
     assert len(rows) == 120
     assert stats["rounds"] <= 10, f"star chain took {stats['rounds']} rounds"
+    assert jobs <= 3 * stats["rounds"], f"{jobs} jobs in {stats['rounds']} rounds"
+    canon = chain.select(F.greatest("src", "dst").alias("hi"), F.least("src", "dst").alias("lo"))
+    plan = _star_round(canon)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert "Except" not in plan and "replicaterows" not in plan, plan
+    assert rows == {r.node: r.component for r in connected_components(chain).collect()}
 
-    # two components + duplicate/reversed/self-loop noise: same answer as
-    # the default algorithm
+
+def test_closure_long_ids_keep_type(spark):
+    """Long node ids (dedup's integer doc ids, here beyond 2^32) come back
+    as longs on both routes — the Arrow round trip must not narrow or
+    stringify them."""
+    from data_pipeline_spark.pipeline.closure import connected_components
+
+    big = 1 << 40
     edges = spark.createDataFrame(
-        [("b", "a"), ("b", "c"), ("c", "b"), ("x", "x"), ("y", "z"),
-         ("z", "y"), ("a", "c")],
-        ["src", "dst"],
+        [(big + 3, big + 1), (big + 1, big + 2), (big + 7, big + 8)],
+        "src bigint, dst bigint",
     )
-    default = {(r.node, r.component)
-               for r in connected_components(edges).collect()}
-    star = {(r.node, r.component)
-            for r in connected_components(edges, algorithm="star").collect()}
-    assert star == default
+    want = {(big + 1, big + 1), (big + 2, big + 1), (big + 3, big + 1),
+            (big + 7, big + 7), (big + 8, big + 7)}
+    for threshold in (spark.conf.get("spark.sql.autoBroadcastJoinThreshold"), "-1"):
+        out = _with_threshold(
+            spark, threshold, lambda: connected_components(edges)
+        )
+        assert dict(out.dtypes) == {"node": "bigint", "component": "bigint"}
+        assert {(r.node, r.component) for r in out.collect()} == want
 
 
 def test_bucketed_model_traversal_edges_side_no_exchange(spark):
@@ -943,7 +986,8 @@ def test_serving_tables_are_process_unique_and_reaped(spark):
     each other's serving tables mid-read (the dsl_q13
     FAILED_READ_FILE.FILE_NOT_EXIST flake): the prefix carries this
     process's pid, and the reaper removes only dirs whose owning pid is
-    dead — a live peer's tables and this process's own are untouched."""
+    dead — a live peer's tables, this process's own, and un-suffixed
+    dirs (no pid, so no proof their owner is gone) are untouched."""
     import os
     import shutil
 
@@ -960,7 +1004,7 @@ def test_serving_tables_are_process_unique_and_reaped(spark):
     try:
         model._reap_stale_serving_dirs(spark)
         assert not os.path.isdir(dead), "dead pid's dir must be reaped"
-        assert not os.path.isdir(legacy), "legacy un-suffixed dir must be reaped"
+        assert os.path.isdir(legacy), "un-suffixed dir has no liveness proof"
         assert os.path.isdir(mine), "own (live) dir must survive"
     finally:
         for d in (dead, legacy, mine):

@@ -637,41 +637,76 @@ def _uf_components(edges):
     return {n: find(n) for n in parent}
 
 
-@settings(max_examples=6, deadline=None)
-@given(st.data())
-@pytest.mark.slow  # full-coverage tier (r16 split): fast siblings cover the surface
-def test_closure_algorithms_agree_on_random_graphs(spark, data):
-    """halving, star and auto (incl. its contracted handoff) must all
-    equal a Python union-find reference on random graphs — duplicates,
-    reversals, self-loops, multiple components, and an optional planted
-    long chain that provokes the auto switch."""
+def _closure_routes_agree(spark, edges, schema):
+    """Both closure routes — the local gather (default threshold) and the
+    distributed star rounds (threshold -1) — must equal the union-find
+    reference, and keep the input's node type.  The engine drops edges
+    with a null endpoint and self-loops, so a node seen only there gets
+    no label; the reference is fed the same edges."""
     from data_pipeline_spark.pipeline.closure import connected_components
 
-    n = data.draw(st.integers(min_value=2, max_value=25))
-    raw = data.draw(
-        st.lists(
-            st.tuples(st.integers(0, n), st.integers(0, n)),
-            min_size=1,
-            max_size=50,
-        )
+    want = set(
+        _uf_components(
+            [(a, b) for a, b in edges if a is not None and b is not None and a != b]
+        ).items()
     )
-    if data.draw(st.booleans()):  # planted chain: auto should switch
+    df = spark.createDataFrame(edges, schema)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    routes = {}
+    try:
+        for threshold in (prev, "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            stats: dict = {}
+            out = connected_components(df, stats=stats)
+            assert out.schema["node"].dataType == df.schema["src"].dataType
+            assert out.schema["component"].dataType == df.schema["src"].dataType
+            routes[stats["algorithm"]] = {(r.node, r.component) for r in out.collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert set(routes) == {"local", "star"}
+    for route, got in routes.items():
+        assert got == want, f"{route} diverged: {sorted(got ^ want)[:10]}"
+
+
+@settings(max_examples=6, deadline=None)
+@given(st.data())
+@pytest.mark.slow  # full-coverage tier (r16 split): the fast sibling covers the surface
+def test_closure_routes_agree_on_random_graphs(spark, data):
+    """local and star closure equal a Python union-find reference on
+    random graphs — duplicates, reversals, self-loops, null endpoints,
+    multiple components, long (> 2^32) or string ids, empty input, and
+    an optional planted long chain that takes the star path several
+    rounds."""
+    n = data.draw(st.integers(min_value=2, max_value=25))
+    end = st.one_of(st.none(), st.integers(0, n))
+    raw = data.draw(st.lists(st.tuples(end, end), min_size=0, max_size=50))
+    if data.draw(st.booleans()):
         raw = raw + [(100 + i, 101 + i) for i in range(30)]
-    edges = [(f"n{a:03d}", f"n{b:03d}") for a, b in raw]
-    want = {
-        (u, c)
-        for u, c in _uf_components(edges).items()
-        # the engine drops pure-self-loop nodes (no non-self edge), as
-        # does its symmetrize step — mirror that in the reference
-        if any(a != b and u in (a, b) for a, b in edges)
-    }
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    for algo in ("halving", "star", "auto"):
-        got = {
-            (r.node, r.component)
-            for r in connected_components(df, algorithm=algo).collect()
-        }
-        assert got == want, f"{algo} diverged"
+    if data.draw(st.booleans()):
+        edges = [
+            tuple(None if x is None else 5_000_000_000 + x for x in e) for e in raw
+        ]
+        schema = "src bigint, dst bigint"
+    else:
+        edges = [tuple(None if x is None else f"n{x:03d}" for x in e) for e in raw]
+        schema = "src string, dst string"
+    _closure_routes_agree(spark, edges, schema)
+
+
+def test_closure_routes_agree_fast(spark):
+    """Fast sibling of the random-graph test: one long-id graph with every
+    kind of noise (duplicate, reversed, self-loop, null endpoint, a
+    self-loop-only node) plus a string chain, and the empty input."""
+    big = 5_000_000_000
+    noisy = [
+        (big + 2, big + 1), (big + 2, big + 3), (big + 3, big + 2),
+        (big + 1, big + 3), (big + 1, big + 3), (big + 9, big + 9),
+        (big + 7, None), (None, big + 8), (big + 7, big + 8),
+    ]
+    _closure_routes_agree(spark, noisy, "src bigint, dst bigint")
+    chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(12)] + [("x", "y")]
+    _closure_routes_agree(spark, chain, "src string, dst string")
+    _closure_routes_agree(spark, [], "src string, dst string")
 
 
 _HK_KEY = st.sampled_from(["hot", "k1", "k2", "k3", "absent_side"])

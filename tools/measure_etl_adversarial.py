@@ -9,20 +9,21 @@ REAL chain (reconcile -> closure -> mint -> reidentify -> merge):
 
 - uniform pair base (volume): srcA/srcB twins per customer, as before;
 - CHAIN components of sizes 10 / 100 / 5,000 (srcC): the worst case for
-  label propagation — a 5,000-link chain is ~5,000 naive rounds; path
-  halving must close it in O(log n);
+  label propagation — a 5,000-link chain is ~5,000 naive rounds; the
+  closure must close it in O(log n);
 - a CELEBRITY plant (srcD): ``n_celeb`` records sharing one hot name that
   the name index maps to a single target — the J1 join fans them all to
   one hub, producing a ~n_celeb-member star component and a ~n_celeb-record
   merge group.  reconcile runs with broadcast_index=False so the hot
   (name_clean, rectype) key exercises operators/skew.salted_join on the
   real path, not just the a20 equality proof;
-- star-vs-halving: both closure algorithms timed on the SAME adversarial
-  edge set (the crossover the halving docstring promises 'star' for).
+- both closure routes timed on the SAME adversarial edge set: the default
+  (local gather when the edge set fits the broadcast threshold) and the
+  distributed star rounds (threshold -1).
 
 Invariants asserted (not just timed): component sizes are exactly the
 planted 2/10/100/5000/(n_celeb+1) multiset, the max merge group is the
-celebrity group, and both closure algorithms agree on the component count.
+celebrity group, and both closure routes agree on the component count.
 
 Usage:
     python tools/measure_etl_adversarial.py /tmp/sf1x30 [n_celeb]
@@ -243,24 +244,26 @@ def main(sf_dir: str, n_celeb: int = 20_000) -> None:
         reident.groupBy("yuid").count().agg(F.max("count")).collect()[0][0]
     )
 
-    # ---- star vs halving vs auto on the SAME adversarial edge set ----
-    # auto (VERDICT r10 #6) must land on the best manual choice for this
-    # shape: the planted 5,000-link chains defeat the halving budget, so
-    # it should re-route to star and cost ~star + the budgeted probe.
+    # ---- both closure routes on the SAME adversarial edge set ----
+    # default: size-routed by spark.sql.autoBroadcastJoinThreshold (local
+    # gather when the edge set fits); -1 forces the distributed star path
     closure_cmp: dict[str, dict] = {}
     n_comp = {}
-    for algo in ("halving", "star", "auto"):
+    prev_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for route, threshold in (("default", prev_threshold), ("star", "-1")):
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
         st: dict = {}
         t0 = time.perf_counter()
         comps = connected_components(
-            equiv_edges, src="src_uri", dst="dst_uri", algorithm=algo, stats=st
+            equiv_edges, src="src_uri", dst="dst_uri", stats=st
         )
-        n_comp[algo] = comps.select("component").distinct().count()
-        closure_cmp[algo] = {
+        n_comp[route] = comps.select("component").distinct().count()
+        closure_cmp[route] = {
             "sec": round(time.perf_counter() - t0, 1),
             "rounds": st.get("rounds"),
-            "routed_to": st.get("algorithm", algo),
+            "routed_to": st.get("algorithm"),
         }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_threshold)
     algos_agree = len(set(n_comp.values())) == 1
 
     total = round(sum(stages.values()), 1)

@@ -162,8 +162,8 @@ def main(sf_dir: str) -> None:
         "total_sec": total,
         "ms_per_record": round(1000 * total / n_recs, 3),
         "closure_rounds": cc_stats.get("rounds"),
-        # auto-routing (default algorithm='auto'): the benign pair shape
-        # must stay on halving — the probe budget is never exhausted
+        # size routing: 'local' while the edge set fits
+        # spark.sql.autoBroadcastJoinThreshold, 'star' above it
         "closure_routed_to": cc_stats.get("algorithm"),
         "max_merge_group": max_merge_group,
         "invariants_ok": (n_merged == n_cust and bad_sizes == 0),

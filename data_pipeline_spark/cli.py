@@ -107,17 +107,14 @@ def cmd_build(args) -> int:
     spark = _spark(args)
     records = spark.read.parquet(args.records)
     idmap_prev = spark.read.parquet(args.idmap_prev) if args.idmap_prev else None
-    tiers = args.tiers.split(",")
     out = run_build(
         spark,
         records,
         _load_indexes(spark, args),
         idmap_prev=idmap_prev,
         merge_order=merge_order,
-        # several consumed tiers share the chain — execute it once
-        materialize=len(tiers) > 1,
     )
-    _write_tiers(out, args.out, tiers)
+    _write_tiers(out, args.out, args.tiers.split(","))
     return 0
 
 

@@ -241,13 +241,11 @@ def incremental_build(
         .join(F.broadcast(blast), F.col("_uri") == blast.uri, "left_semi")
         .drop("_uri")
     )
-    # materialize the delta-sized slice ONCE: run_build's envelope
-    # extractions (names/equivalents/timespans/all_uris) each re-execute
-    # their input lineage, and un-checkpointed that lineage contains the
-    # corpus-sized uri scan — measured ~6 redundant 900k-row scans per
-    # crawl at 30x (SCALE.md round 10).  The slice is blast-radius-sized,
-    # so the checkpoint is cheap and truncates every downstream scan to
-    # delta rows.
+    # materialize the delta-sized slice ONCE: it has three consumers
+    # (run_build's envelope parse, reidentify's records read, and
+    # records_delta below), and un-checkpointed each would re-run the
+    # corpus-sized uri scan of the semi-join.  The slice is
+    # blast-radius-sized, so the checkpoint is cheap.
     slice_records = apply_changes_to_records(slice_prev, changes).localCheckpoint()
     rebuilt = run_build(
         spark, slice_records, indexes, idmap_prev, merge_order, delta_sized=True

@@ -154,9 +154,7 @@ def _pair_records(
     """,
     survey="J2,J5,J7,J8,A1,W2,build-chain",
 )
-def b01_entity_build(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def b01_entity_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full entity build chain at SF scale, one row per merged
     entity: (identifier, rectype, label, n_sources).  identifier is the
     shared member identifier (both pair members carry the custkey), the
@@ -175,15 +173,9 @@ def b01_entity_build(
         "same_as": empty_relation(spark, "uri_a string, uri_b string"),
         "different_from": empty_relation(spark, "uri_a string, uri_b string"),
     }
-    # materialize: this gate consumes TWO tiers (merged + reidentified);
-    # without it each lineage re-executes the whole chain — the production
-    # multi-tier consumer (the CLI) persists tiers for exactly this reason,
-    # and the gate should time the chain once, like production does.
-    # (materialize=False is the plan-hygiene test hook: checkpoints
-    # truncate lineage, so full-chain plan pins need the lazy form.)
-    out = run_build(
-        spark, records, indexes, merge_order=_MERGE_ORDER, materialize=materialize
-    )
+    # this gate consumes TWO tiers (merged + reidentified); run_build's
+    # checkpoints run the chain once for both, like the production CLI
+    out = run_build(spark, records, indexes, merge_order=_MERGE_ORDER)
     members = out["reidentified"].groupBy("yuid").agg(
         F.min("identifier").alias("identifier"),
         F.countDistinct("source").alias("n_sources"),
@@ -224,9 +216,7 @@ def b01_entity_build(
     """,
     survey="X1,X5,K6,build-chain",
 )
-def b02_entity_export(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def b02_entity_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The EXTRACTION/EXPORT half of the build at SF scale (VERDICT r11
     #1): run_build -> edges tier -> N-Triples serialization, string-exact
     against the oracle.  b01 consumes the merged tier; its lineage never
@@ -258,11 +248,9 @@ def b02_entity_export(
         "same_as": empty_relation(spark, "uri_a string, uri_b string"),
         "different_from": empty_relation(spark, "uri_a string, uri_b string"),
     }
-    # materialize: two consumed tiers (edges via merged + reidentified) —
-    # same once-not-twice argument as b01; False = plan-hygiene test hook
-    out = run_build(
-        spark, records, indexes, merge_order=_MERGE_ORDER, materialize=materialize
-    )
+    # two consumed tiers (edges via merged + reidentified): the chain
+    # runs once, as in b01
+    out = run_build(spark, records, indexes, merge_order=_MERGE_ORDER)
     # yuid -> stable member identifier (both pair members share the
     # custkey); yuid-keyed groupBy + yuid-keyed join, same keys the chain
     # already shuffles on
@@ -301,9 +289,7 @@ def b02_entity_export(
     """,
     survey="X2,A16-adjacent,F8,build-chain",
 )
-def b03_entity_facets_names(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def b03_entity_facets_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The remaining export tiers (VERDICT r11 #1's scope, completed):
     run_build -> extract_facets + extract_names_table over a pair corpus
     whose srcA carries two ``identified_by`` Name entries.  b02 proved
@@ -323,9 +309,7 @@ def b03_entity_facets_names(
         "same_as": empty_relation(spark, "uri_a string, uri_b string"),
         "different_from": empty_relation(spark, "uri_a string, uri_b string"),
     }
-    out = run_build(
-        spark, records, indexes, merge_order=_MERGE_ORDER, materialize=materialize
-    )
+    out = run_build(spark, records, indexes, merge_order=_MERGE_ORDER)
     members = out["reidentified"].groupBy("yuid").agg(
         F.min("identifier").alias("identifier")
     )
@@ -361,9 +345,7 @@ def b03_entity_facets_names(
     """,
     survey="X1-texts,Q4,F8,build-chain",
 )
-def b04_entity_texts(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def b04_entity_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TEXTS export tier + the word query over it, through the full
     chain — the last document->relational extraction surface without a
     driver gate (b02 edges, b03 facets/names).  The corpus carries two
@@ -388,9 +370,7 @@ def b04_entity_texts(
         "same_as": empty_relation(spark, "uri_a string, uri_b string"),
         "different_from": empty_relation(spark, "uri_a string, uri_b string"),
     }
-    out = run_build(
-        spark, records, indexes, merge_order=_MERGE_ORDER, materialize=materialize
-    )
+    out = run_build(spark, records, indexes, merge_order=_MERGE_ORDER)
     members = out["reidentified"].groupBy("yuid").agg(
         F.min("identifier").alias("identifier")
     )

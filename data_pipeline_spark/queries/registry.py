@@ -62,10 +62,8 @@ def query(name: str, oracle: str | None, survey: str = ""):
     returned unwrapped for plan tests and composition."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        def wrapped(spark: SparkSession, sf_dir: str, **kwargs) -> DataFrame:
-            # kwargs pass through to gate-only knobs (e.g. build_gate's
-            # materialize=False plan-hygiene hook); driver calls use none
-            return total_order(fn(spark, sf_dir, **kwargs))
+        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return total_order(fn(spark, sf_dir))
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

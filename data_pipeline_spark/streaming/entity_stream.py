@@ -337,10 +337,7 @@ def init_state(
     compaction rewrites whole buckets, so size them to a bounded byte
     range (~128 MB at production scale — corpus_bytes/128MB buckets);
     default auto-sizes from the records row count."""
-    # materialize: two consumed output tiers (idmap + merged) — execute
-    # the chain once, not per consumed lineage
-    out = run_build(spark, records, indexes, merge_order=merge_order,
-                    materialize=True)
+    out = run_build(spark, records, indexes, merge_order=merge_order)
     if buckets is None:
         buckets = _auto_buckets(records.count())
     for tier in _TIERS:

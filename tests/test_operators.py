@@ -282,8 +282,8 @@ def test_ivf_pq_recall_and_rerank_lever(spark, emb):
 
 
 def test_ivf_pq_serving_path_equals_selfcontained(spark, emb):
-    """The prebuilt-index serving path (ivf_pq_index(materialize=True)
-    passed via ``index=``) must return byte-identical rows to the
+    """The prebuilt-index serving path (ivf_pq_index passed via
+    ``index=``) must return byte-identical rows to the
     self-contained declared-query path — the 100 TB contract that the
     persisted index is THE index, not an approximation of the inline
     build.  Geometry (dsub) is derived from the stored codebook, so a
@@ -295,7 +295,7 @@ def test_ivf_pq_serving_path_equals_selfcontained(spark, emb):
     )
     corpus = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("nemb"))
     inline = knn_ivf_pq(queries, corpus, k=5, nprobe=4).collect()
-    idx = ivf_pq_index(corpus, materialize=True)
+    idx = ivf_pq_index(corpus)
     served = knn_ivf_pq(queries, corpus, k=5, nprobe=4, index=idx).collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, served))
 

@@ -397,3 +397,24 @@ def test_empty_index_elision_is_identity(spark):
     assert not any(
         se(t[k]) for k in ("name_index", "uri_index", "same_as", "different_from")
     )
+
+
+def test_run_build_tiers_read_only_checkpoints(spark, tmp_path):
+    """One materialization rule: every tier run_build returns reads only
+    checkpointed relations (LogicalRDD leaves) and never the input
+    records, so a consumer of several tiers cannot re-run an upstream
+    layer; materialize=False raises."""
+    t = fixture_tables(spark)
+    path = str(tmp_path / "records.parquet")
+    t["records"].write.parquet(path)
+    records = spark.read.parquet(path)
+    indexes = {k: t[k] for k in ("name_index", "uri_index", "same_as", "different_from")}
+    out = run_build(spark, records, indexes, idmap_prev=t["idmap_prev"])
+    for name, df in out.items():
+        analyzed = df._jdf.queryExecution().analyzed()
+        leaves = analyzed.collectLeaves()
+        kinds = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+        assert kinds == {"LogicalRDD"}, (name, kinds)
+        assert "records.parquet" not in analyzed.toString(), name
+    with pytest.raises(ValueError):
+        run_build(spark, records, indexes, materialize=False)

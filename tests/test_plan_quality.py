@@ -5,6 +5,8 @@ fails here, not in production."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from data_pipeline_spark.queries import QUERIES
@@ -15,6 +17,39 @@ SF = "/root/testdata/sf0.001"
 def _plan(spark, name: str) -> str:
     df = QUERIES[name].spark_fn(spark, SF)
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _executed_plans(spark, run) -> list[str]:
+    """Call ``run()`` and return the physical plan description of every
+    SQL execution it started (each eager localCheckpoint and each
+    action), oldest first, read from the session's SQL status store,
+    which records them with the UI disabled.  An adaptive plan's
+    description holds its final plan above its initial one."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    last = store.executionsList().reverseIterator()
+    mark = last.next().executionId() if last.hasNext() else -1
+    run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = []
+    it = store.executionsList().reverseIterator()
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() <= mark:
+            break
+        plans.append(e.physicalPlanDescription())
+    assert plans, "no SQL execution recorded"
+    return plans[::-1]
+
+
+def _assert_gate_joins_keyed(spark, name: str) -> None:
+    """Every SQL execution of a build gate (run_build's six tier
+    checkpoints and the final collect) plans keyed joins only: no
+    CartesianProduct and no BroadcastNestedLoopJoin."""
+    plans = _executed_plans(spark, lambda: QUERIES[name].spark_fn(spark, SF).collect())
+    assert len(plans) >= 7, len(plans)
+    for plan in plans:
+        assert "CartesianProduct" not in plan, plan
+        assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_q04_broadcasts_all_dims_no_sort_merge(spark):
@@ -789,7 +824,7 @@ def test_v07_stored_index_dynamic_partition_pruning(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
     )
-    cents, cb, entries = ivf_pq_index(corpus, materialize=True)
+    cents, cb, entries = ivf_pq_index(corpus)
     base = str(tmp_path / "ivfpq")
     entries.write.partitionBy("cluster_id").parquet(f"{base}/entries")
     cents.write.parquet(f"{base}/cents")
@@ -895,27 +930,27 @@ def test_incremental_splice_broadcasts_delta_side(spark):
         F.concat(F.lit("https://fixture.test/srcA/"), ks).alias("object_uri"),
         F.lit(None).cast("string").alias("payload"),
     )
-    inc = incremental_build(
+    plans = _executed_plans(spark, lambda: incremental_build(
         spark, records, changes, idx,
-        idmap_prev=prev["idmap"].localCheckpoint(),
-        prev_merged=prev["merged"].localCheckpoint(),
-    )
-    out = inc["merged_full"]
-    out.collect()  # execute: AQE finalizes join strategies at runtime
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # FINAL adaptive plan: the splice anti-joins (yuid keys, prev_merged
+        idmap_prev=prev["idmap"], prev_merged=prev["merged"],
+    )["merged_full"].collect())  # execute: AQE finalizes join strategies
+    # FINAL adaptive plans of every execution, the slice rebuild's tier
+    # checkpoints included: the splice anti-joins (yuid keys, prev_merged
     # side) and the blast membership joins (qua_uri keys, idmap_prev
     # side) must end up broadcast — statically hinted where the delta is
     # known (incremental.py), AQE-converted for the slice rebuild's
     # prev-idmap stability join (assign_yuids: comps is delta-sized at
-    # runtime).  Sort-merge INSIDE the delta-sized slice (e.g. the
-    # closure's uri-keyed singleton anti-join) is fine
-    assert "BroadcastHashJoin" in plan
-    for line in plan.splitlines():
-        if "SortMergeJoin" in line and ("yuid" in line or "qua_uri" in line):
-            raise AssertionError(
-                f"corpus-sided splice/blast join stayed sort-merge: {line}"
-            )
+    # runtime).  Sort-merge on other keys INSIDE the delta-sized slice
+    # (e.g. the closure's uri-keyed singleton anti-join) is fine
+    finals = [p.split("== Initial Plan ==")[0] for p in plans]
+    assert any("BroadcastHashJoin" in f for f in finals)
+    for plan, final in zip(plans, finals):
+        for node in re.findall(r"SortMergeJoin[^(\n]*\((\d+)\)", final):
+            keys = plan.split(f"\n({node}) SortMergeJoin", 1)[1].split("\n\n", 1)[0]
+            if "yuid" in keys or "qua_uri" in keys:
+                raise AssertionError(
+                    f"corpus-sided splice/blast join stayed sort-merge: {keys}"
+                )
 
 
 @pytest.mark.parametrize("name", [
@@ -1012,21 +1047,15 @@ def test_serving_tables_are_process_unique_and_reaped(spark):
 
 
 def test_b02_export_plan_hygiene(spark):
-    """The export gate's full lineage (chain -> extract_edges ->
-    to_ntriples): every join keyed (no CartesianProduct /
-    BroadcastNestedLoopJoin), and the NT serialization adds NO exchange
-    of its own — it must stay a projection over the edges tier (the
-    reference's export phase is scan-shaped: run-export.py streams
-    records through a mapper)."""
+    """The export gate's whole chain (every run_build checkpoint ->
+    extract_edges -> to_ntriples): every join keyed (no CartesianProduct
+    / BroadcastNestedLoopJoin) in every SQL execution the gate runs, and
+    the NT serialization adds NO exchange of its own — it must stay a
+    projection over the edges tier (the reference's export phase is
+    scan-shaped: run-export.py streams records through a mapper)."""
     from data_pipeline_spark.pipeline.edges import to_ntriples
 
-    # materialize=False: the gate checkpoints tiers by default (it consumes
-    # two of them), which truncates lineage — the hygiene pin needs the
-    # full lazy chain in one plan
-    df = QUERIES["b02_entity_export"].spark_fn(spark, SF, materialize=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    _assert_gate_joins_keyed(spark, "b02_entity_export")
     # the serializer is a narrow projection: over an exchange-free input
     # its executed plan must contain no Exchange at all
     edges = spark.createDataFrame(
@@ -1038,20 +1067,15 @@ def test_b02_export_plan_hygiene(spark):
 
 
 def test_b03_facets_names_plan_hygiene(spark):
-    """The facets/names export tiers' full lineage: keyed joins only —
-    same contract as b02's edges-tier pin."""
-    df = QUERIES["b03_entity_facets_names"].spark_fn(spark, SF, materialize=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    """The facets/names export tiers, every SQL execution of the whole
+    chain: keyed joins only — same contract as b02's edges-tier pin."""
+    _assert_gate_joins_keyed(spark, "b03_entity_facets_names")
 
 
 def test_b04_texts_plan_hygiene(spark):
-    """The texts tier + word query full lineage: keyed joins only."""
-    df = QUERIES["b04_entity_texts"].spark_fn(spark, SF, materialize=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    """The texts tier + word query, every SQL execution of the whole
+    chain: keyed joins only."""
+    _assert_gate_joins_keyed(spark, "b04_entity_texts")
 
 
 def test_entity_state_fold_broadcasts_touched_keys(spark, tmp_path):

@@ -332,7 +332,7 @@ def main(sf_dir: str) -> None:
     base_idmap = read_base_tier(spark, state_dir, "idmap")
     gold = run_build(
         spark, final["records"], indexes, idmap_prev=base_idmap,
-        merge_order=order, materialize=True,
+        merge_order=order,
     )
     cols = ["yuid", "data"]
     extra = final["merged"].select(cols).exceptAll(gold["merged"].select(cols)).count()

@@ -96,9 +96,7 @@ def main(sf_dir: str, n_repeats: int = 2) -> None:
 
     # phase 1b: IVF-PQ index build (coarse k-means + residual PQ + entries)
     t0 = time.perf_counter()
-    ivf_index = ivf_pq_index(
-        corpus, n_clusters=_N_CLUSTERS, materialize=True
-    )
+    ivf_index = ivf_pq_index(corpus, n_clusters=_N_CLUSTERS)
     sec_ivf_index = round(time.perf_counter() - t0, 1)
 
     def run_bf():

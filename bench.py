@@ -117,10 +117,11 @@ def _spark_canary(spark) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    canary_start = _spin_canary()
-    spark = get_spark("bench")
+def warm_up(spark, sf_dir: str) -> None:
+    """Everything bench.py runs before its timed loop: the parquet
+    footer read, the DSL planner and serving-model pre-warm, and one
+    synthetic shuffle+join+window job (tools/measure.py imports it so
+    both harnesses start their timed region from the same state)."""
     # warm the JVM + parquet footers once so per-query numbers measure the
     # query, not session startup
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
@@ -156,6 +157,13 @@ def main() -> None:
         .selectExpr("k", "count", "row_number() OVER (ORDER BY k) AS rn")
         .count()
     )
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    canary_start = _spin_canary()
+    spark = get_spark("bench")
+    warm_up(spark, sf_dir)
 
     spark_canary_start = _spark_canary(spark)
 

@@ -447,7 +447,8 @@ def pq_train_codes(
     if materialize:
         # checkpoint the trained codebook BEFORE deriving codes: codes'
         # lineage otherwise re-runs the whole training plan when it is
-        # itself materialized (measured double-training in measure_pq)
+        # itself materialized (SCALE.md, "Measured scaling curve (round
+        # 8)", v06 PQ-ADC phase split)
         cb = cb.localCheckpoint()
     codes = _pq_assign(sv, cb, "neighbor_id")
     if materialize:
@@ -461,7 +462,6 @@ def pq_index(
     dsub: int = 8,
     ks: int = 16,
     iters: int = 1,
-    materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Product-quantization index over corpus(neighbor_id, nemb):
     returns (codebook(sub, code, dsub, cval), codes(neighbor_id, sub, code)).
@@ -480,13 +480,7 @@ def pq_index(
     aggregates; the persisted index stores m uint8-sized codes + one norm
     per vector instead of the full vector — 64-dim float64 collapses from
     512 B to ~16 B (32x), which is the difference between an in-memory and
-    a disk-bound candidate scan at 100 TB.
-
-    ``materialize=True`` localCheckpoints the codebook before encoding
-    and the codes after: without it, a caller that materializes the
-    returned codes re-executes the whole training plan through the
-    codes' lineage (measured double-training in tools/measure_pq.py) —
-    the persisted-index stand-in for serving and measurement."""
+    a disk-bound candidate scan at 100 TB."""
     sv = _pq_subdims(corpus, "neighbor_id", "nemb", dsub)
     seeds = (
         corpus.orderBy("neighbor_id")
@@ -494,7 +488,7 @@ def pq_index(
         .select("neighbor_id")
         .withColumn("code", F.row_number().over(W.orderBy("neighbor_id")) - 1)
     )
-    return pq_train_codes(sv, seeds, iters=iters, materialize=materialize)
+    return pq_train_codes(sv, seeds, iters=iters)
 
 
 def vector_norms(df: DataFrame, id_col: str, emb_col: str, out: str = "nrm") -> DataFrame:

@@ -246,9 +246,10 @@ def serving_planner(spark: SparkSession, sf_dir: str, n_buckets: int = 32):
 
     This is what dsl_q13 drives in the driver bench: build_planner's
     cached in-memory model measures QUERY plans, but the round-11
-    serving win (dual-layout routing + bucketed layout,
-    tools/measure_dsl_scale.py) lived only in a self-reported tool —
-    a routing regression was driver-invisible (VERDICT r11 #4)."""
+    serving win (dual-layout routing + bucketed layout; SCALE.md,
+    "Measured scaling curve (round 11)", search-DSL serving at scale)
+    lived only in a self-reported tool — a routing regression was
+    driver-invisible (VERDICT r11 #4)."""
     key = (spark.sparkContext.applicationId, sf_dir, n_buckets)
     p = _SERVING.get(key)
     if p is None:

@@ -7,14 +7,16 @@ was invisible to the driver.  b01 runs the REAL ``pipeline.build
 sf0.1 bench scales it exactly like every other headline query) and
 emits an oracle-checkable projection of the merged tier.
 
-Corpus: the measure_etl_scale pair protocol — one Person record per
-customer in each of two pseudo-sources, srcA asserting equivalence to
-srcB's twin.  Every equivalence component is exactly a pair, so the
-DuckDB oracle is the customer table itself: one merged entity per
-custkey, label elected from srcA (merge order), exactly 2 sources
-folded.  The chain exercised is the production one end to end —
-envelope parse, J2 record-asserted edges, closure (size-routed), uuid5
-mint, reidentify, Arrow merge fold — none of it mocked.
+Corpus: the pair protocol of SCALE.md "Measured scaling curve (round
+8)" (``tools/measure.py build --sf DIR`` runs ``run_build`` on it) — one
+Person record per customer in each of two pseudo-sources, srcA
+asserting equivalence to srcB's twin.  Every equivalence component is
+exactly a pair, so the DuckDB oracle is the customer table itself: one
+merged entity per custkey, label elected from srcA (merge order),
+exactly 2 sources folded.  The chain exercised is the production one
+end to end — envelope parse, J2 record-asserted edges, closure
+(size-routed), uuid5 mint, reidentify, Arrow merge fold — none of it
+mocked.
 """
 
 from __future__ import annotations

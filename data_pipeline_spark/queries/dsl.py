@@ -319,8 +319,10 @@ def dsl_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, 41M rows per exchange already at the 30x protocol scale)
     with NO Exchange on the edge side.  A regression in the dual-layout
     routing (forward->object-bucketed, inverse->subject-bucketed) now
-    shows up as a driver bench/correctness delta instead of only in
-    tools/measure_dsl_scale.py.
+    shows up as a driver bench/correctness delta instead of only in a
+    scale run (SCALE.md, "Measured scaling curve (round 11)"; reproduce
+    with ``tools/measure.py queries dsl_q13_bucketed_serving_inverse
+    --sf DIR``).
 
     Query: widget parts contained in >480k orders — a word-query leaf
     AND an inverse traversal whose subquery side (orders) shuffles to

@@ -573,7 +573,8 @@ def j14_salted_celebrity_reconcile(spark: SparkSession, sf_dir: str) -> DataFram
     16 salts) as its OWN driver gate, under a celebrity plant — 40% of
     records share one hot name the index maps to a single target, the
     skew shape the salted path exists for (VERDICT r9 #1; measured on
-    the real chain at 30x/100x in tools/measure_etl_adversarial.py).
+    the real chain at 30x/100x in SCALE.md, "Measured scaling curve
+    (round 10)", adversarial-shape entity build).
     The oracle states the expected edge set analytically: every
     hot-name record gains the T1 edge, record 7 (whose unique name the
     index also lists) gains T7 — identical output to the broadcast path

@@ -661,8 +661,9 @@ def d51_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets for the exact intersection count.  Measured at sf0.01: 165
     candidate pairs enter verification vs 11,533 from the plain
     inverted-index join (70x) for the identical 25-pair result; at the
-    mirrored 50k-doc corpus (tools/measure_prefix_join.py): 5.2x less
-    wall-clock, 3.9x fewer candidates, byte-identical 250,600 pairs.  Prefix lengths use integer
+    mirrored 50k-doc corpus (SCALE.md, "Measured scaling curve (round
+    9)"): 5.2x less wall-clock, 3.9x fewer candidates, byte-identical
+    250,600 pairs.  Prefix lengths use integer
     arithmetic (ceil(3n/5) = (3n+4) div 5) — no float boundary can
     shorten a prefix below the proof's bound."""
     docs = load_table(spark, sf_dir, "documents")

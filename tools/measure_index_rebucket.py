@@ -2,6 +2,11 @@
 measured at corpus scale, closing the measurement gap its entity twin
 (``rebucket_state``, measured at 100x in round 14) does not share.
 
+No declared query covers this: ``rebucket_index`` is an operator-run
+maintenance rewrite of a persisted index directory, not a query over an
+SF directory, so ``tools/measure.py`` cannot time it; the tests check its
+lifecycle only at a few hundred rows.
+
 ``rebucket_index`` is deliberately O(tier) — init-shaped, like the
 rebuild it replaces — so the claim under measurement is NOT flatness;
 it is the operational envelope an operator needs before running it:
@@ -27,26 +32,16 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 
-from pyspark.sql import SparkSession
+from measure import bench
 from pyspark.sql import functions as F
 
 BUCKETS = 1024
 
 
-def _spin(iters: int = 2_000_000) -> float:
-    t0 = time.perf_counter()
-    acc = 0
-    for i in range(iters):
-        acc += i
-    _ = acc
-    return round(time.perf_counter() - t0, 3)
-
-
 def main(sf_dir: str) -> None:
-    sys.path.insert(0, "/root/repo")
-
     from data_pipeline_spark.queries.dedup import (
         bands_df,
         minhash_signatures,
@@ -64,25 +59,15 @@ def main(sf_dir: str) -> None:
         run_batch_key,
         tier_dir,
     )
+    from data_pipeline_spark.session import get_spark
 
-    canary_start = _spin()
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.host", "127.0.0.1")
-        .getOrCreate()
-    )
+    canary_start = bench._spin_canary()
+    spark = get_spark("measure_index_rebucket")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     n_docs = docs.count()
-    work = f"/tmp/idx_rebucket_{os.path.basename(sf_dir.rstrip('/'))}"
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(work)
+    work = tempfile.mkdtemp(prefix="idx_rebucket_")
     report: dict = {"sf_dir": sf_dir, "n_docs": n_docs,
                     "buckets_before": BUCKETS, "canary_start": canary_start}
 
@@ -166,10 +151,10 @@ def main(sf_dir: str) -> None:
     got = spark.read.parquet(tpath).count()
     assert got == rows_before[tier], (got, rows_before[tier])
 
-    report["canary_end"] = _spin()
+    report["canary_end"] = bench._spin_canary()
     shutil.rmtree(work)
     print(json.dumps(report), flush=True)
 
 
 if __name__ == "__main__":
-    main(sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1x30")
+    main(sys.argv[1])

@@ -109,14 +109,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register all tables as temp views (for the SQL surface) and return them."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 def spread_scan(df: DataFrame) -> DataFrame:
     """Raise parallelism before an explode amplification or heavy per-row
     stage when the scan produced fewer splits than cores: a small corpus

@@ -340,7 +340,7 @@ def cmd_state_export(args) -> int:
 
 def cmd_state_lookup(args) -> int:
     """Point lookup against the folded entity state: reads only the
-    bucket dirs the keys hash to plus committed deltas (the reference's
+    bucket files the keys hash to plus committed deltas (the reference's
     record-cache keyed get), never a corpus scan."""
     from .streaming.entity_stream import lookup_state
 
@@ -393,7 +393,7 @@ def cmd_state_rebucket(args) -> int:
     from .streaming.entity_stream import rebucket_state
 
     spark = _spark(args)
-    rebucket_state(spark, args.state, args.checkpoint, args.buckets)
+    rebucket_state(spark, args.state, args.buckets)
     print(f"[cli] rebucketed state base to {args.buckets} buckets")
     return 0
 
@@ -671,7 +671,7 @@ def build_parser() -> argparse.ArgumentParser:
     sl = sub.add_parser(
         "state-lookup",
         help="point lookup of fold keys against the folded entity state "
-        "(reads only the keys' bucket dirs + committed deltas)",
+        "(reads only the keys' bucket files + committed deltas)",
     )
     sl.add_argument("--state", required=True, metavar="DIR")
     sl.add_argument("--checkpoint", required=True, metavar="DIR")
@@ -708,12 +708,10 @@ def build_parser() -> argparse.ArgumentParser:
         "state-stats bucket_bytes_max outgrowing the sizing target "
         "(~128 MB/bucket at production scale); doubling the count halves "
         "it (measured at 100x: 37 s over 3M records, SCALE.md round 14). "
-        "Run after compaction; atomic per tier; a mid-run crash degrades "
-        "lookups to the full fold until the next compaction completes "
-        "the rebucket",
+        "Pending deltas may stay (folds re-hash from each tier's meta); "
+        "atomic per tier; re-run it to finish an interrupted rebucket",
     )
     sb.add_argument("--state", required=True, metavar="DIR")
-    sb.add_argument("--checkpoint", required=True, metavar="DIR")
     sb.add_argument("--buckets", type=int, required=True, metavar="N")
     _add_common(sb)
     sb.set_defaults(fn=cmd_state_rebucket)

@@ -80,20 +80,6 @@ def extract_features(
     )
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize operator: the Spark plumbing (projection + metadata
-    update) is real; the pixel work raises until a decoder is installed."""
-
-    def _resize(content: bytes, mime: str) -> bytes:
-        raise NotImplementedError(
-            "media decode libraries are not available in this environment; "
-            "plug a real resize(content, mime, w, h) implementation here"
-        )
-
-    _ = _resize  # exported for documentation; the metadata path below is real
-    return media.withColumn("width", F.lit(width)).withColumn("height", F.lit(height))
-
-
 FRAME_SCHEMA = (
     "media_id string, frame_ms int, frame_idx int, n_bytes int, frame_sha string"
 )

@@ -19,19 +19,6 @@ from pyspark.sql import functions as F
 from .envelope import with_doc
 
 
-def _ref_edges(docs: DataFrame, field: str, predicate: str) -> DataFrame:
-    return (
-        docs.select(
-            F.col("yuid").alias("subject"),
-            F.explode(F.coalesce(F.col(f"doc.{field}"), F.array())).alias("o"),
-        )
-        .filter(F.col("o.id").isNotNull())
-        .select(
-            "subject", F.lit(predicate).alias("predicate"), F.col("o.id").alias("object")
-        )
-    )
-
-
 def extract_edges(merged: DataFrame) -> DataFrame:
     """merged(yuid, rectype, data) -> edges(subject, predicate, object).
 

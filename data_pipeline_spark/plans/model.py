@@ -187,13 +187,26 @@ def serving_prefix(sf_dir: str) -> str:
     in process B deletes the part-files process A is mid-read on
     (observed twice: FAILED_READ_FILE.FILE_NOT_EXIST on dsl_q13 whenever
     a bench/sweep ran beside the test suite).  Cross-process sharing was
-    already zero; the unique name removes only the interference.  Dirs
-    orphaned by dead processes are reaped in serving_planner."""
+    already zero; the unique name removes only the interference.  A
+    process removes its own dirs at clean exit; dirs orphaned by killed
+    processes are reaped in serving_planner."""
     import os
 
     return (
         "serve_" + re.sub(r"\W+", "_", sf_dir).strip("_") + f"_p{os.getpid()}"
     )
+
+
+_SERVE_DIR = re.compile(r"^serve_.+_p(\d+)_(entities|edges_subj|edges_obj)$")
+
+
+def _local_warehouse(spark: SparkSession) -> str | None:
+    """The warehouse root as a local path; None for a non-file warehouse
+    (the reapers below only act on local POSIX dirs)."""
+    from urllib.parse import urlparse
+
+    parsed = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
+    return parsed.path if parsed.scheme in ("", "file") and parsed.path else None
 
 
 def _reap_stale_serving_dirs(spark: SparkSession) -> None:
@@ -211,16 +224,12 @@ def _reap_stale_serving_dirs(spark: SparkSession) -> None:
     removing the files orphans no catalog entry."""
     import os
     import shutil
-    from urllib.parse import urlparse
 
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    parsed = urlparse(warehouse)
-    root = parsed.path if parsed.scheme in ("", "file") else None
+    root = _local_warehouse(spark)
     if not root or not os.path.isdir(root):
         return
-    pat = re.compile(r"^serve_.+_p(\d+)_(entities|edges_subj|edges_obj)$")
     for d in os.listdir(root):
-        m = pat.match(d)
+        m = _SERVE_DIR.match(d)
         if not m:
             continue
         pid = int(m.group(1))
@@ -234,6 +243,33 @@ def _reap_stale_serving_dirs(spark: SparkSession) -> None:
         except PermissionError:
             continue  # alive under another uid
         shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+
+
+def _reap_own_serving_dirs(root: str) -> None:
+    """This process's ``serve_*_p<pid>_*`` dirs under ``root`` — run at
+    clean interpreter exit, so a finished process leaves no serving
+    tables behind for a later process's stale-dir reaper."""
+    import os
+    import shutil
+
+    if not os.path.isdir(root):
+        return
+    for d in os.listdir(root):
+        m = _SERVE_DIR.match(d)
+        if m and int(m.group(1)) == os.getpid():
+            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+
+
+def _reap_at_exit(spark: SparkSession) -> None:
+    import atexit
+
+    root = _local_warehouse(spark)
+    if root and root not in _REAP_AT_EXIT:
+        _REAP_AT_EXIT.add(root)
+        atexit.register(_reap_own_serving_dirs, root)
+
+
+_REAP_AT_EXIT: set = set()
 
 
 def serving_planner(spark: SparkSession, sf_dir: str, n_buckets: int = 32):
@@ -254,6 +290,7 @@ def serving_planner(spark: SparkSession, sf_dir: str, n_buckets: int = 32):
     p = _SERVING.get(key)
     if p is None:
         _reap_stale_serving_dirs(spark)
+        _reap_at_exit(spark)
         prefix = serving_prefix(sf_dir)
         materialize_model_bucketed(spark, sf_dir, prefix, n_buckets)
         p = load_planner_bucketed(spark, prefix)

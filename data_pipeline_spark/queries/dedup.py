@@ -1148,26 +1148,6 @@ def candidates_from_signatures(sigs: DataFrame) -> DataFrame:
     )
 
 
-def embedding_lsh_candidates(emb: DataFrame) -> DataFrame:
-    """(id_a, id_b): sign-LSH candidate pairs (see
-    candidates_from_signatures; this form computes the signatures
-    inline — d09 materializes them as a tier instead).
-
-    Tuning note (measured on the synthetic testdata): COS_T=0.45 means a
-    ~63-degree angular radius — at that radius NO exact bucketing scheme
-    can prune (triangle-inequality cluster pruning admits 100% of pairs;
-    measured), so this is the standard recall-tuned LSH path.  With
-    5 planes x 8 tables x multiprobe-1, measured recall vs the exact
-    all-pairs twin is 1.0 at both test SFs; the driver oracle pins the
-    SCHEME (same plane literals in DuckDB, _emb_lsh_oracle) and
-    tests/test_operators.py pins recall >= 0.95 against EMB_EXACT_SQL —
-    candidates stay bounded by collisions either way.  At a production
-    near-dup threshold (>=0.9) per-plane
-    collision rises to ~0.85 and n_planes scales with log(corpus), making
-    the candidate volume collapse far below n^2."""
-    return candidates_from_signatures(embedding_signatures(emb))
-
-
 @query("d09_embedding_neardup", oracle=_emb_lsh_oracle(), survey="dedup-embedding")
 def d09_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, scale path: sign-LSH bucket

@@ -226,7 +226,7 @@ def r13_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (update + delete classes), then point-look-up a key per class —
     updated keys must serve the crawl's payload (the delta winner),
     deleted keys must serve nothing, untouched keys the base row.  The
-    lookup reads only the keys' bucket dirs plus the crawl's delta (the
+    lookup reads only the keys' bucket files plus the crawl's delta (the
     poison test in tests/test_entity_state_buckets.py pins the pruning;
     this gate pins the SEMANTICS against a DuckDB oracle).
 

@@ -97,12 +97,6 @@ def export_csv(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").option("header", "true").csv(path)
 
 
-def export_by_source(df: DataFrame, path: str, source_col: str = "source") -> None:
-    """K9: per-source partitioned export (zip-per-source analog:
-    partitionBy gives one directory per source)."""
-    df.write.mode("overwrite").partitionBy(source_col).json(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

@@ -44,10 +44,9 @@ from ..queries.dedup import (
 )
 from .index_util import (
     read_tier_meta,
-    repair_index_dir,
-    shared_index_lease,
     require_batch_layout,
     run_batch_key,
+    stream_sink,
     tier_dir as _tier_dir,
     write_base,
 )
@@ -186,39 +185,25 @@ def stream_dedup(
     run's batch-0 fold.
 
     ``compact_every``: fold committed batch partitions into base every N
-    micro-batches (round 14 — the entity stream's inline hook applied to
-    the index streams, which otherwise grow one partition dir per
-    micro-batch forever; at production cadence that is the small-files
-    problem compact_index exists for).  Runs BEFORE the sink takes its
-    shared lock — compact_index takes the exclusive lock, and flock
-    does not upgrade — and folds only batches committed BEFORE this
-    one, so a retry of this batch probes exactly the state the first
-    attempt saw."""
-    # finish or roll back a compaction the previous process died in
-    repair_index_dir(index_dir)
+    micro-batches (the index streams otherwise grow one partition dir
+    per micro-batch forever; at production cadence that is the
+    small-files problem compact_index exists for).  Repair, compaction
+    and the shared lease follow the one sink lifecycle,
+    index_util.stream_sink."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            from .index_util import compact_index
-
-            compact_index(spark, index_dir, checkpoint)
+    def serve(batch: DataFrame, batch_id: int) -> None:
         key = run_batch_key(checkpoint, batch_id)
-        # repair-then-shared per micro-batch (ADVICE r14): finish a DEAD
-        # out-of-band compactor's persisted plan under the exclusive lock
-        # BEFORE probing, then serve the batch under the shared lock —
-        # otherwise this batch could see a fold both swapped into base
-        # and in its surviving batch dirs (index_util.shared_index_lease)
-        with shared_index_lease(index_dir):
-            out = match_batch(spark, batch, index_dir, batch_key=key)
-            # batch_id is a STRING partition key ('<32hex>-b<N>');
-            # consumers that filtered/ordered numerically get the numeric
-            # micro-batch id as a real data column (README §streaming)
-            out.withColumn(
-                "micro_batch_id", F.lit(batch_id).cast("bigint")
-            ).write.mode("overwrite").parquet(
-                os.path.join(matches_dir, f"batch_id={key}")
-            )
+        out = match_batch(spark, batch, index_dir, batch_key=key)
+        # batch_id is a STRING partition key ('<32hex>-b<N>'); consumers
+        # that filtered/ordered numerically get the numeric micro-batch
+        # id as a real data column (README §streaming)
+        out.withColumn(
+            "micro_batch_id", F.lit(batch_id).cast("bigint")
+        ).write.mode("overwrite").parquet(
+            os.path.join(matches_dir, f"batch_id={key}")
+        )
 
+    sink = stream_sink(spark, index_dir, checkpoint, serve, compact_every)
     reader = spark.readStream.schema("doc_id bigint, text string")
     if max_files_per_trigger is not None:
         # one-file-per-crawl sequencing: later crawls must probe an index

@@ -106,16 +106,6 @@ def apply_changes(
     return survivors.unionByName(upserts)
 
 
-def classify_change(change_col: F.Column) -> F.Column:
-    """R3: normalize feed verbs to the engine's CDC vocabulary."""
-    return (
-        F.when(change_col.isin("create", "add"), "create")
-        .when(change_col.isin("update", "move", "merge", "refresh"), "update")
-        .when(change_col.isin("delete", "remove"), "delete")
-        .otherwise("update")
-    )
-
-
 def stream_changes(
     spark: SparkSession,
     feed_path: str,

@@ -13,11 +13,11 @@ an ordinary advisory file lock:
 - pure readers never repair; the serving read takes the SHARED lock
   only while it materializes, so it can never observe a bucket
   mid-swap;
-- index-stream sinks take the SHARED lock per micro-batch (after an
-  exclusive repair of any dead compactor's pending plan —
-  index_util.shared_index_lease), so an out-of-band compact_index
-  serializes against live probes/folds at micro-batch boundaries
-  instead of racing them.
+- every stream sink (index and entity) takes the SHARED lock per
+  micro-batch (after an exclusive repair of any dead compactor's
+  pending plan — index_util.stream_sink / shared_index_lease), so an
+  out-of-band compaction serializes against live probes/folds at
+  micro-batch boundaries instead of racing them.
 
 Round 15: the lock implementation moved behind the storage provider
 seam (storage.py — VERDICT r14 #3); these wrappers keep the call sites

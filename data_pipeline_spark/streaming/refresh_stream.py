@@ -37,10 +37,9 @@ from ..queries.dedup import (
     refresh_verdicts,
 )
 from .index_util import (
-    repair_index_dir,
-    shared_index_lease,
     require_batch_layout,
     run_batch_key,
+    stream_sink,
     tier_dir as _tier_dir,
     write_base,
 )
@@ -126,30 +125,18 @@ def stream_refresh(
     run's folds.
 
     ``compact_every``: fold committed batch partitions into base every N
-    micro-batches (see stream_dedup — same hook, same lock ordering:
-    compaction runs before the sink's shared lock)."""
-    # finish or roll back a compaction the previous process died in
-    repair_index_dir(index_dir)
+    micro-batches (index_util.stream_sink, the one sink lifecycle)."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            from .index_util import compact_index
-
-            compact_index(spark, index_dir, checkpoint)
+    def serve(batch: DataFrame, batch_id: int) -> None:
         key = run_batch_key(checkpoint, batch_id)
-        # repair-then-shared per micro-batch (ADVICE r14): finish a DEAD
-        # out-of-band compactor's persisted plan under the exclusive lock
-        # BEFORE probing, then serve the batch under the shared lock —
-        # otherwise this batch could see a fold both swapped into base
-        # and in its surviving batch dirs (index_util.shared_index_lease)
-        with shared_index_lease(index_dir):
-            out = refresh_batch(spark, batch, index_dir, batch_key=key)
-            out.withColumn(
-                "micro_batch_id", F.lit(batch_id).cast("bigint")
-            ).write.mode("overwrite").parquet(
-                os.path.join(verdicts_dir, f"batch_id={key}")
-            )
+        out = refresh_batch(spark, batch, index_dir, batch_key=key)
+        out.withColumn(
+            "micro_batch_id", F.lit(batch_id).cast("bigint")
+        ).write.mode("overwrite").parquet(
+            os.path.join(verdicts_dir, f"batch_id={key}")
+        )
 
+    sink = stream_sink(spark, index_dir, checkpoint, serve, compact_every)
     feed = spark.readStream.schema("doc_id bigint, text string").json(feed_path)
     return (
         feed.writeStream.foreachBatch(sink)

@@ -51,10 +51,9 @@ from ..queries.sketches import (
     merge_registers,
 )
 from .index_util import (
-    repair_index_dir,
-    shared_index_lease,
     require_batch_layout,
     run_batch_key,
+    stream_sink,
     tier_dir as _tier_dir,
 )
 
@@ -155,28 +154,17 @@ def stream_profile(
     twins use.
 
     ``compact_every``: fold committed batch partitions into base every N
-    micro-batches (see stream_dedup — same hook, same lock ordering;
-    here the fold is sketch-sized by construction, so the hook purely
-    bounds partition-dir count)."""
-    # finish or roll back a compaction the previous process died in
-    repair_index_dir(profile_dir)
+    micro-batches (index_util.stream_sink, the one sink lifecycle; here
+    the fold is sketch-sized by construction, so the hook purely bounds
+    partition-dir count)."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            from .index_util import compact_index
-
-            compact_index(spark, profile_dir, checkpoint)
+    def serve(batch: DataFrame, batch_id: int) -> None:
         key = run_batch_key(checkpoint, batch_id)
-        # repair-then-shared per micro-batch (ADVICE r14): finish a DEAD
-        # out-of-band compactor's persisted plan under the exclusive lock
-        # BEFORE probing, then serve the batch under the shared lock —
-        # otherwise this batch could see a fold both swapped into base
-        # and in its surviving batch dirs (index_util.shared_index_lease)
-        with shared_index_lease(profile_dir):
-            fold_batch(batch.select("source", "text"), profile_dir, key)
-            fold_cms_batch(batch.select("source", "text"), profile_dir, key)
-            fold_hist_batch(batch.select("source", "text"), profile_dir, key)
+        fold_batch(batch.select("source", "text"), profile_dir, key)
+        fold_cms_batch(batch.select("source", "text"), profile_dir, key)
+        fold_hist_batch(batch.select("source", "text"), profile_dir, key)
 
+    sink = stream_sink(spark, profile_dir, checkpoint, serve, compact_every)
     feed = spark.readStream.schema(
         "doc_id bigint, source string, text string"
     ).json(feed_path)

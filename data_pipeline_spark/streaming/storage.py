@@ -77,8 +77,8 @@ class PosixStorageProvider:
         manifest commit: write the new files under a versioned prefix,
         then publish_file a manifest naming the live file set (the
         Hudi/Delta timeline pattern); readers resolve the manifest
-        instead of LISTing the prefix.  The plan files this layer
-        already persists (plan.json records the exact file swaps) ARE
+        instead of LISTing the prefix.  The compaction plans this
+        layer already persists (they record the exact file swaps) ARE
         that manifest in embryo — a cloud backend would make readers
         consume them instead of directory listings."""
         os.rename(src, dst)

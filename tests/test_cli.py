@@ -292,7 +292,7 @@ def test_cli_stream_entity_end_to_end(spark, tmp_path, capsys):
         "state-stats", "--state", state, "--checkpoint", str(tmp_path / "ck"),
     ]) == 0
     stats = json.loads(capsys.readouterr().out)
-    assert stats["layout"] == "bucketed"
+    assert stats["tiers"]["merged"]["layout"] == "bucketed"
     assert stats["committed_delta_fanin"] == 0  # everything compacted
     assert stats["tiers"]["merged"]["delta_dirs"] == 0
     assert stats["tiers"]["merged"]["base_bytes"] > 0

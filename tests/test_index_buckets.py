@@ -26,7 +26,7 @@ import shutil
 import pytest
 
 from data_pipeline_spark.streaming.index_util import (
-    _apply_index_plan,
+    _apply_plan,
     compact_index,
     read_tier_meta,
     repair_index_dir,
@@ -143,7 +143,7 @@ def test_compaction_crash_windows_no_double_fold(spark, tmp_path):
     assert spark.read.parquet(tpath).count() == 1005
 
     # (c) literal mid-apply crash: stage a second fold, persist its plan,
-    # then CRASH (simulated: stop before _apply_index_plan) — repair must
+    # then CRASH (simulated: stop before _apply_plan) — repair must
     # finish the swap and the batch-dir delete in one pass
     ck2 = _mk_checkpoint(tmp_path, "ck2", [0])
     key2 = run_batch_key(ck2, 0)
@@ -151,7 +151,7 @@ def test_compaction_crash_windows_no_double_fold(spark, tmp_path):
     new = spark.read.parquet(tier_dir(idx, "fp", key2))
     from data_pipeline_spark.streaming.index_util import _stage_partial
     base = tier_dir(idx, "fp", "base")
-    plan = _stage_partial(spark, base, cdir, new, ["fp"], 8, [key2])
+    plan = _stage_partial(spark, base, new, new.unionByName, [key2])
     with open(os.path.join(cdir, "plan.json"), "w") as f:
         json.dump(plan, f)
     # crash here: plan + staging on disk, nothing applied
@@ -181,7 +181,7 @@ def test_mid_apply_crash_resumes(spark, tmp_path):
     new = spark.read.parquet(tier_dir(idx, "fp", key))
 
     from data_pipeline_spark.streaming.index_util import _stage_partial
-    plan = _stage_partial(spark, base, cdir, new, ["fp"], 4, [key])
+    plan = _stage_partial(spark, base, new, new.unionByName, [key])
     assert len(plan["swap"]) >= 2  # 50 rows over 4 buckets: several touched
     with open(os.path.join(cdir, "plan.json"), "w") as f:
         json.dump(plan, f)
@@ -189,7 +189,7 @@ def test_mid_apply_crash_resumes(spark, tmp_path):
     # state: one bucket's staged file back in .compact, its target removed
     staged_copy = str(tmp_path / "staged_copy")
     shutil.copytree(cdir, staged_copy)
-    _apply_index_plan(tpath)
+    _apply_plan(tpath)
     assert spark.read.parquet(tpath).count() == 1050
     shutil.copytree(staged_copy, cdir)
     n, pairs = next(iter(plan["swap"].items()))
@@ -220,10 +220,11 @@ def test_unrecoverable_plan_raises(spark, tmp_path):
         repair_index_dir(idx)
 
 
-def test_legacy_flat_base_migration(spark, tmp_path):
-    """A pre-round-14 flat base compacts via the legacy whole-tier path
-    by default; passing bucket_specs migrates it — fold + base written
-    bucketed with a fresh meta, and the NEXT compaction is partial."""
+def test_legacy_flat_base_whole_tier_fold(spark, tmp_path):
+    """A pre-round-14 flat base (no meta) compacts via the whole-tier
+    replace_all fold and keeps the flat layout — the path the bounded
+    sketch tiers use.  (There is no flat->bucketed migration: rebuild
+    such a tier with index_corpus.)"""
     idx = str(tmp_path / "idx")
     # legacy flat base: plain parquet dir, no meta
     _fp_rows(spark, 0, 800).write.parquet(tier_dir(idx, "fp", "base"))
@@ -234,34 +235,10 @@ def test_legacy_flat_base_migration(spark, tmp_path):
         _fp_rows(spark, 90000 + 10 * i, 90005 + 10 * i).write.parquet(
             tier_dir(idx, "fp", key)
         )
-    # legacy fold keeps the flat layout
     assert compact_index(spark, idx, ck) == {"fp": 2}
     assert read_tier_meta(idx, "fp") is None
     assert spark.read.parquet(os.path.join(idx, "fp")).count() == 810
-
-    # migration: the next fold rewrites the tier bucketed
-    (ck3 := _mk_checkpoint(tmp_path, "ck3", [0]))
-    key3 = run_batch_key(ck3, 0)
-    _fp_rows(spark, 95000, 95002).write.parquet(tier_dir(idx, "fp", key3))
-    assert compact_index(
-        spark, idx, ck3, bucket_specs={"fp": (["fp"], 8)}
-    ) == {"fp": 1}
-    assert read_tier_meta(idx, "fp") == {"buckets": 8, "key": ["fp"]}
-    assert len(_bucket_files(idx, "fp")) >= 1
-    assert spark.read.parquet(os.path.join(idx, "fp")).count() == 812
-    # and the round after that is partial
-    ck4 = _mk_checkpoint(tmp_path, "ck4", [0])
-    key4 = run_batch_key(ck4, 0)
-    _fp_rows(spark, 97000, 97001).write.parquet(tier_dir(idx, "fp", key4))
-    base = tier_dir(idx, "fp", "base")
-    before = {f: os.path.getmtime(os.path.join(base, f))
-              for f in _bucket_files(idx, "fp")}
-    assert compact_index(spark, idx, ck4) == {"fp": 1}
-    after = {f: os.path.getmtime(os.path.join(base, f))
-             for f in _bucket_files(idx, "fp")}
-    changed = {f for f in after if before.get(f) != after[f]}
-    assert len(changed) <= 1
-    assert spark.read.parquet(os.path.join(idx, "fp")).count() == 813
+    assert sorted(os.listdir(os.path.join(idx, "fp"))) == ["batch=base"]
 
 
 def test_dedup_stream_probe_unchanged_across_bucketed_compaction(
@@ -582,7 +559,7 @@ def test_shared_lease_repairs_dead_compactor(spark, tmp_path):
     base = tier_dir(idx, "fp", "base")
     new = spark.read.parquet(tier_dir(idx, "fp", key))
 
-    plan = _stage_partial(spark, base, cdir, new, ["fp"], 4, [key])
+    plan = _stage_partial(spark, base, new, new.unionByName, [key])
     assert len(plan["swap"]) >= 2
     with open(os.path.join(cdir, "plan.json"), "w") as f:
         json.dump(plan, f)

@@ -1046,6 +1046,53 @@ def test_serving_tables_are_process_unique_and_reaped(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
+def test_serving_dirs_removed_at_clean_exit(tmp_path):
+    """A process removes its OWN ``serve_*_p<pid>_*`` warehouse dirs at
+    clean interpreter exit instead of leaving them for a later process's
+    stale-dir reaper; another pid's dirs are not its to touch.  Runs a
+    real child interpreter; the model build is stubbed to just create the
+    three table dirs, so the drill needs no JVM."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    wh = str(tmp_path / "warehouse")
+    other = os.path.join(wh, "serve_x_p1_entities")  # pid 1: alive, not ours
+    os.makedirs(other)
+    script = f"""
+import os, sys
+sys.path.insert(0, {repo!r})
+from data_pipeline_spark.plans import model
+
+class _Conf:
+    def get(self, key):
+        return {wh!r}
+
+class _Spark:
+    conf = _Conf()
+    class sparkContext:
+        applicationId = "app"
+
+def fake_materialize(spark, sf_dir, prefix, n_buckets):
+    for t in ("entities", "edges_subj", "edges_obj"):
+        os.makedirs(os.path.join({wh!r}, prefix + "_" + t))
+
+model.materialize_model_bucketed = fake_materialize
+model.load_planner_bucketed = lambda spark, prefix: object()
+model.serving_planner(_Spark(), "sf_x")
+own = [d for d in os.listdir({wh!r}) if d.endswith(("entities", "edges_subj", "edges_obj")) and f"_p{{os.getpid()}}_" in d]
+print(os.getpid(), len(own))
+"""
+    out = subprocess.run([sys.executable, "-c", script], capture_output=True,
+                         text=True, timeout=120, check=True).stdout.split()
+    pid, live_dirs = int(out[0]), int(out[1])
+    assert live_dirs == 3  # the dirs existed while the process ran
+    left = [d for d in os.listdir(wh) if f"_p{pid}_" in d]
+    assert left == [], f"serving dirs survived a clean exit: {left}"
+    assert os.path.isdir(other)
+
+
 def test_b02_export_plan_hygiene(spark):
     """The export gate's whole chain (every run_build checkpoint ->
     extract_edges -> to_ntriples): every join keyed (no CartesianProduct

@@ -800,9 +800,11 @@ def test_entity_state_fold_matches_sequential_model(
 
     import os as _os
 
-    # base: one row per base key
+    # base: one row per base key, as a one-bucket store base
     _os.makedirs(f"{state_dir}/merged/v=base")
-    write(f"{state_dir}/merged/v=base/part", [(k, f"base-{k}") for k in base_keys])
+    write(f"{state_dir}/merged/v=base/b0.0", [(k, f"base-{k}") for k in base_keys])
+    with open(f"{state_dir}/merged/v=base/_META.json", "w") as f:
+        f.write('{"buckets": 1, "key": ["yuid"]}')
     model = {k: [f"base-{k}"] for k in base_keys}
 
     for i, (touched, rows) in enumerate(deltas):
@@ -837,11 +839,12 @@ def test_bucketed_compaction_matches_sequential_model(
 ):
     """compact_entity_state at an arbitrary CUT POINT in the crawl
     sequence must be invisible to the fold: commit deltas[:c], compact
-    (bucketed partial rewrite — or the flat->bucketed migration when the
-    base starts flat), commit the rest, fold — the result must equal the
-    sequential apply model, and a final compaction must leave base-only
-    state with the same rows.  Exercises deletions, recreations,
-    multi-row keys, new keys, empty deltas, and both base layouts."""
+    (the store's bucketed partial rewrite), commit the rest, fold — the
+    result must equal the sequential apply model, and a final compaction
+    must leave base-only state with the same rows.  Exercises deletions
+    (down to an emptied tier), recreations, multi-row keys, new keys,
+    empty deltas, and an empty base."""
+    import json
     import os as _os
 
     import pyarrow as pa
@@ -849,18 +852,17 @@ def test_bucketed_compaction_matches_sequential_model(
 
     from data_pipeline_spark.streaming.entity_stream import (
         _fold_tier,
-        _write_base,
-        _write_state_meta,
         compact_entity_state,
-        read_state_meta,
     )
-    from data_pipeline_spark.streaming.index_util import run_batch_key
+    from data_pipeline_spark.streaming.index_util import (
+        run_batch_key,
+        write_bucketed_base,
+    )
 
     base_keys = data.draw(st.lists(
         st.sampled_from(_fold_keys), unique=True, max_size=6))
     n_deltas = data.draw(st.integers(0, 3))
     cut = data.draw(st.integers(0, n_deltas))
-    bucketed_base = data.draw(st.booleans())
     deltas = []
     for i in range(n_deltas):
         touched = data.draw(st.lists(
@@ -884,32 +886,26 @@ def test_bucketed_compaction_matches_sequential_model(
             path + ".parquet",
         )
 
-    # merged base (the tier under test) + minimal records/idmap bases so
-    # compaction's all-tier pass has real dirs to fold
-    base_pairs = [(k, f"base-{k}") for k in base_keys]
-    if bucketed_base:
-        _write_base(
-            spark.createDataFrame(
-                base_pairs or [("seed", "seed")], "yuid string, data string"
-            ),
-            "merged", 4, f"{state_dir}/merged/v=base",
-        )
-        _write_state_meta(state_dir, {"layout": "bucketed", "buckets": 4})
-    else:
-        _os.makedirs(f"{state_dir}/merged/v=base")
-        write_pairs(f"{state_dir}/merged/v=base/part",
-                    base_pairs or [("seed", "seed")])
+    # merged base (the tier under test, 4 buckets) + minimal one-bucket
+    # records/idmap bases so compaction's all-tier pass has real dirs
+    write_bucketed_base(
+        spark.createDataFrame(
+            [(k, f"base-{k}") for k in base_keys], "yuid string, data string"
+        ),
+        f"{state_dir}/merged/v=base", ["yuid"], 4,
+    )
     model = {k: [f"base-{k}"] for k in base_keys}
-    if not base_pairs:
-        model["seed"] = ["seed"]
 
-    _os.makedirs(f"{state_dir}/records/v=base")
+    for tier, key in (("records", "get_json_object(data, '$.id')"),
+                      ("idmap", "yuid")):
+        _os.makedirs(f"{state_dir}/{tier}/v=base")
+        with open(f"{state_dir}/{tier}/v=base/_META.json", "w") as f:
+            json.dump({"buckets": 1, "key": [key]}, f)
     pq.write_table(
         pa.table({"data": pa.array(['{"id":"dummy"}'], pa.string())}),
-        f"{state_dir}/records/v=base/part.parquet",
+        f"{state_dir}/records/v=base/b0.0.parquet",
     )
-    _os.makedirs(f"{state_dir}/idmap/v=base")
-    write_pairs(f"{state_dir}/idmap/v=base/part", [("du", "dy")],
+    write_pairs(f"{state_dir}/idmap/v=base/b0.0", [("du", "dy")],
                 cols=("qua_uri", "yuid"))
 
     empty_records = pa.table({"data": pa.array([], pa.string())})
@@ -957,8 +953,6 @@ def test_bucketed_compaction_matches_sequential_model(
     for i in range(cut):
         commit(i)
     compact_entity_state(spark, state_dir, ckpt)
-    if cut:  # a compaction that folded anything migrates a flat base
-        assert read_state_meta(state_dir) is not None
     for i in range(cut, n_deltas):
         commit(i)
 

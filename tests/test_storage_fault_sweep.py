@@ -377,39 +377,36 @@ def test_index_rebucket_crash_sweep(spark, tmp_path):
 
 
 def test_entity_rebucket_crash_sweep(spark, tmp_path):
-    """rebucket_state crashed before every mutation boundary.  The
-    design's degraded-not-wrong claims, each drilled at every k: the
-    very next lookup_state serves the correct values (a mixed bucket
-    map forces its full-fold fallback via the rebucket_to marker), and
-    re-running the op converges to the target layout with the rows
-    intact.  (The OTHER recovery path — a delta-bearing compaction
-    completing a marked rebucket — is pinned by
-    test_rebucket_state_lifecycle; with no deltas pending, re-run is
-    the documented recovery.)"""
+    """rebucket_state crashed before every mutation boundary, with a
+    committed delta pending (no compact-first precondition: folds
+    recompute buckets from each tier's own meta).  Drilled at every k:
+    the very next lookup_state serves the correct values — tiers may sit
+    at different bucket counts, each base swapped WITH its meta — and
+    re-running the op converges to the target count with the rows
+    intact; a compaction afterwards still reaches the serial fold."""
     state_pre, ck = _build_entity_fixture(spark, tmp_path)
-    compact_entity_state(spark, state_pre, ck)  # rebucket precondition
     want = _entity_rows(spark, state_pre, ck)
 
     probe_dir = str(tmp_path / "erb_probe")
     shutil.copytree(state_pre, probe_dir)
     probe = FaultInjectingProvider(crash_at=None)
     storage.set_provider(probe)
-    rebucket_state(spark, probe_dir, ck, 8)
+    rebucket_state(spark, probe_dir, 8)
     storage.set_provider(PosixStorageProvider())
     n = len(probe.trace)
     assert n >= 8, probe.trace
     assert _entity_rows(spark, probe_dir, ck) == want
-    assert read_state_meta(probe_dir)["buckets"] == 8
+    assert {m["buckets"] for m in read_state_meta(probe_dir).values()} == {8}
 
     for k in range(n):
         work = str(tmp_path / f"erb_k{k}")
         shutil.copytree(state_pre, work)
         storage.set_provider(FaultInjectingProvider(crash_at=k))
         with pytest.raises(_Crash):
-            rebucket_state(spark, work, ck, 8)
+            rebucket_state(spark, work, 8)
         storage.set_provider(PosixStorageProvider())
-        # serving read first, before any repair: correct rows even on a
-        # mixed bucket map (marker -> full-fold fallback)
+        # serving read first, before any repair: correct rows whatever
+        # mix of old and new per-tier bucket counts the crash left
         served = {
             json.loads(r["data"])["id"]: r["data"]
             for r in lookup_state(
@@ -420,10 +417,12 @@ def test_entity_rebucket_crash_sweep(spark, tmp_path):
         assert _uri(5) not in served, k
         assert json.loads(served[_uri(7)])["_label"] == "A7", k
         # recovery: re-run the op.  It must cope with every crash
-        # residue — marker-only, mixed bucket map, half-applied plan —
-        # because its own entry repairs tiers and re-reads the FULL base
-        rebucket_state(spark, work, ck, 8)
+        # residue — half-applied plan, tiers at mixed counts — because
+        # its own entry repairs tiers and re-reads each FULL base
+        rebucket_state(spark, work, 8)
         assert _entity_rows(spark, work, ck) == want, f"diverged at #{k + 1}"
         meta = read_state_meta(work)
-        assert "rebucket_to" not in meta and meta["buckets"] == 8, (k, meta)
+        assert {m["buckets"] for m in meta.values()} == {8}, (k, meta)
+        compact_entity_state(spark, work, ck)
+        assert _entity_rows(spark, work, ck) == want, f"compact diverged at #{k + 1}"
         shutil.rmtree(work)

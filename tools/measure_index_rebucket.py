@@ -1,6 +1,8 @@
 """Shared-index rebucket scale protocol (round 15): ``rebucket_index``
-measured at corpus scale, closing the measurement gap its entity twin
-(``rebucket_state``, measured at 100x in round 14) does not share.
+measured at corpus scale.  Entity state and the shared indexes run the
+same store rebucket (``index_util.rebucket_base``, one per tier), so this
+protocol prices both; ``rebucket_state`` was last measured on its own at
+100x in round 14, before the two stores were one.
 
 No declared query covers this: ``rebucket_index`` is an operator-run
 maintenance rewrite of a persisted index directory, not a query over an
@@ -139,7 +141,7 @@ def main(sf_dir: str) -> None:
     shutil.rmtree(cdir, ignore_errors=True)
     t0 = time.perf_counter()
     plan = _stage_replace_all(
-        spark.read.parquet(base), ["id"], BUCKETS, cdir, fold=[]
+        spark.read.parquet(base), ["id"], BUCKETS, base, fold=[]
     )
     _persist_plan(cdir, plan)
     report["crash_stage_sec"] = round(time.perf_counter() - t0, 1)

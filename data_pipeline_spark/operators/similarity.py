@@ -7,14 +7,21 @@ Two stages, both pure DataFrame ops:
    deterministic pseudo-random hyperplanes (component h[j][d] derived from
    md5(j,d) — reproducible across runs/engines, no RNG state) and bucket by
    the sign pattern. Vectors are written bucketed-by-signature; a query
-   probes only its own bucket (+ optional multi-probe neighbors at Hamming
-   distance 1), so the candidate set is corpus/2^n_planes on average
-   instead of the full corpus.
+   probes its own bucket and the multi-probe neighbors at Hamming
+   distance 1, so the candidate set is a small fraction of the corpus
+   instead of all of it.
 2. **Exact re-rank**: cosine (JVM-side zip_with/aggregate — no UDF) over
    the candidates, window top-k with deterministic tiebreaks.
 
+This module holds the ONE definition of each vector-similarity primitive
+— ``cosine``, ``embedding_signatures``, ``hamming1_flips`` and the
+(t, sig) ``multiprobe_pairs`` join — next to its DuckDB twin
+(``COSINE_SQL``, ``embedding_signatures_sql``, ``hamming1_flips_sql``).
+The query modules (v03, d09, v05) and the streaming probe import them
+from here; nothing here imports from ``queries/``.
+
 Brute-force (`knn_bruteforce`) is the correctness baseline the ANN path is
-measured against (recall@k, tests/test_similarity.py).
+measured against (recall@k, tests/test_operators.py).
 """
 
 from __future__ import annotations
@@ -25,15 +32,13 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
-def cosine(a: str, b: str) -> Column:
-    """Cosine similarity of two array<double> columns, built-in exprs only."""
-    return cosine_cols(F.col(a), F.col(b))
-
-
-def cosine_cols(a: Column, b: Column) -> Column:
-    """Column-expression form of ``cosine`` (same fold order, same bits) —
-    usable inside higher-order-function lambdas where the operands are
-    lambda variables, not named columns."""
+def cosine(a: str | Column, b: str | Column) -> Column:
+    """Cosine similarity of two array<double> operands — column names or
+    Columns (lambda variables inside a higher-order function included).
+    Built-in exprs only: zip_with products and aggregate sums, folded in
+    component order, so every caller gets the same bits."""
+    a = F.col(a) if isinstance(a, str) else a
+    b = F.col(b) if isinstance(b, str) else b
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
     )
@@ -42,7 +47,16 @@ def cosine_cols(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
-def _plane(j: int, dim: int, table: int = 0) -> list[float]:
+# DuckDB spelling of ``cosine`` over two relations aliased a and b, each
+# with an ``emb`` list column — the exact all-pairs oracles' form
+COSINE_SQL = """
+    list_sum(list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] * b.emb[i]))
+    / (sqrt(list_sum(list_transform(a.emb, x -> x * x)))
+       * sqrt(list_sum(list_transform(b.emb, x -> x * x))))
+"""
+
+
+def _plane(j: int, dim: int, table: int) -> list[float]:
     """Deterministic unit-free hyperplane: component d is ±1 from one bit of
     md5(table:j:d). Rademacher projections preserve angles well enough for
     bucketing, and bake into the plan as literals — nothing to ship."""
@@ -53,7 +67,7 @@ def _plane(j: int, dim: int, table: int = 0) -> list[float]:
     return out
 
 
-def lsh_signature(vec_col: str, dim: int, n_planes: int = 8, table: int = 0) -> Column:
+def lsh_signature(vec_col: str, dim: int, n_planes: int, table: int) -> Column:
     """Bit-string signature: sign of the dot product against each plane."""
     bits = []
     for j in range(n_planes):
@@ -69,6 +83,90 @@ def lsh_signature(vec_col: str, dim: int, n_planes: int = 8, table: int = 0) -> 
         )
         bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
+
+
+def embedding_signatures(emb: DataFrame, dim: int, planes: int, tables: int) -> DataFrame:
+    """(id, t, sig): the sign-LSH signatures of ALL ``tables`` plane sets
+    over an (id, emb) relation in ONE pass — one struct-array explode
+    instead of a scan per table re-evaluating the interpreted signature
+    fold.  This is the relation a production index persists, partitioned
+    by (t, sig); d09, v03, v05 and the streaming probe all build it
+    here, so their buckets cannot drift."""
+    structs = [
+        F.struct(F.lit(t).alias("t"), lsh_signature("emb", dim, planes, t).alias("sig"))
+        for t in range(tables)
+    ]
+    return emb.select("id", F.explode(F.array(*structs)).alias("ts")).select(
+        "id", F.col("ts.t").alias("t"), F.col("ts.sig").alias("sig")
+    )
+
+
+def hamming1_flips(n_bits: int) -> Column:
+    """Array column of 1 + n_bits signature strings over the ``sig``
+    column: the original plus every 1-bit flip — the Hamming<=1
+    multiprobe set ``multiprobe_pairs`` explodes."""
+    sig = F.col("sig")
+    return F.array(
+        sig,
+        *[
+            F.concat(
+                F.substring(sig, 1, j),
+                F.when(F.substring(sig, j + 1, 1) == "1", "0").otherwise("1"),
+                F.substring(sig, j + 2, n_bits - j - 1),
+            )
+            for j in range(n_bits)
+        ],
+    )
+
+
+def embedding_signatures_sql(src: str, dim: int, planes: int, tables: int) -> str:
+    """DuckDB twin of ``embedding_signatures`` over relation ``src``
+    (vec_id, emb): one SELECT per table, UNION ALL'd, with the same
+    md5-derived planes (``_plane``) baked in as list literals."""
+    sig_selects = []
+    for t in range(tables):
+        bits = []
+        for j in range(planes):
+            plane = "[" + ",".join(
+                "1" if c > 0 else "-1" for c in _plane(j, dim, t)
+            ) + "]::DOUBLE[]"
+            bits.append(
+                f"CASE WHEN list_dot_product(emb, {plane}) >= 0 "
+                "THEN '1' ELSE '0' END"
+            )
+        sig_selects.append(
+            f"SELECT vec_id, {t} AS t, concat({', '.join(bits)}) AS sig FROM {src}"
+        )
+    return "\nUNION ALL\n".join(sig_selects)
+
+
+def hamming1_flips_sql(planes: int) -> str:
+    """DuckDB twin of ``hamming1_flips``: the list literal of the ``sig``
+    column and its ``planes`` single-bit flips."""
+    flips = ["sig"]
+    for j in range(1, planes + 1):
+        flips.append(
+            f"concat(substr(sig, 1, {j - 1}), "
+            f"CASE substr(sig, {j}, 1) WHEN '1' THEN '0' ELSE '1' END, "
+            f"substr(sig, {j + 1}, {planes - j}))"
+        )
+    return f"[{', '.join(flips)}]"
+
+
+def multiprobe_pairs(probe: DataFrame, index: DataFrame, planes: int) -> DataFrame:
+    """(probe_id, index_id), each pair once: a probe vector's signature
+    or one of its Hamming-1 flips equals an index vector's signature in
+    the same table.  Both inputs are (id, t, sig) relations from
+    ``embedding_signatures``; the probe side carries 1 + planes rows per
+    (vector, table), the index side one, and the only join is the
+    (t, sig) equi-join — never a theta self-join.  Callers add their own
+    id predicate (``<`` for undirected pairs, ``!=`` for directed
+    probes); Catalyst pushes it into the join condition."""
+    p = probe.select(
+        F.col("id").alias("probe_id"), "t", F.explode(hamming1_flips(planes)).alias("sig")
+    )
+    i = index.select(F.col("id").alias("index_id"), "t", "sig")
+    return p.join(i, ["t", "sig"]).select("probe_id", "index_id").distinct()
 
 
 def semantic_dedup(
@@ -330,43 +428,40 @@ def knn_lsh(
     k: int = 5,
     n_planes: int = 6,
     n_tables: int = 2,
-    multiprobe: bool = True,
 ) -> DataFrame:
-    """ANN top-k: bucket-join on LSH signatures, exact cosine re-rank.
+    """ANN top-k: sign-LSH multiprobe candidates, exact cosine re-rank.
 
     Recall levers (standard LSH tuning):
     - ``n_tables`` independent plane sets: a true neighbor is a candidate
       if it collides in ANY table — recall 1-(1-p^b)^L;
-    - ``multiprobe``: each query also probes the n_planes buckets at
-      Hamming distance 1, buying recall with probes instead of index copies.
+    - Hamming-1 multiprobe (``multiprobe_pairs``): each query also probes
+      the n_planes buckets at Hamming distance 1, buying recall with
+      probes instead of index copies.
 
-    Candidate volume ≈ corpus * L * (1+n_planes) / 2^n_planes; tune
-    n_planes up as the corpus grows. At scale the corpus index is written
-    once, partitioned by (table, sig), so each probe is a partition-pruned
-    read, and only candidates ever reach the exact cosine."""
-    cands = None
-    for t in range(n_tables):
-        csig = corpus.withColumn("sig", lsh_signature("nemb", dim, n_planes, t))
-        qsig = queries.withColumn("sig", lsh_signature("qemb", dim, n_planes, t))
-        if multiprobe:
-            flips = F.array(
-                F.col("sig"),
-                *[
-                    F.concat(
-                        F.substring(F.col("sig"), 1, j),
-                        F.when(F.substring(F.col("sig"), j + 1, 1) == "1", "0").otherwise("1"),
-                        F.substring(F.col("sig"), j + 2, n_planes - j - 1),
-                    )
-                    for j in range(n_planes)
-                ],
-            )
-            qsig = qsig.withColumn("sig", F.explode(flips))
-        one = csig.join(F.broadcast(qsig), "sig").filter(
-            F.col("query_id") != F.col("neighbor_id")
-        )
-        cands = one if cands is None else cands.unionByName(one)
-    pairs = cands.dropDuplicates(["query_id", "neighbor_id"]).withColumn(
-        "cos_sim", F.round(cosine("qemb", "nemb"), 6)
+    Candidates come from ONE (t, sig) equi-join over every table's
+    signatures (the d09/v05 construction, with the query batch as the
+    broadcast probe side).  Candidate volume ≈ corpus * L * (1+n_planes)
+    / 2^n_planes; tune n_planes up as the corpus grows.  At scale the
+    corpus signatures are written once, partitioned by (t, sig), so each
+    probe is a partition-pruned read, and only candidates ever reach the
+    exact cosine."""
+    qsig = embedding_signatures(
+        queries.select(F.col("query_id").alias("id"), F.col("qemb").alias("emb")),
+        dim, n_planes, n_tables,
+    )
+    csig = embedding_signatures(
+        corpus.select(F.col("neighbor_id").alias("id"), F.col("nemb").alias("emb")),
+        dim, n_planes, n_tables,
+    )
+    cands = (
+        multiprobe_pairs(F.broadcast(qsig), csig, n_planes)
+        .filter(F.col("probe_id") != F.col("index_id"))
+        .select(F.col("probe_id").alias("query_id"), F.col("index_id").alias("neighbor_id"))
+    )
+    pairs = (
+        corpus.join(cands, "neighbor_id")
+        .join(F.broadcast(queries), "query_id")
+        .withColumn("cos_sim", F.round(cosine("qemb", "nemb"), 6))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
     return (

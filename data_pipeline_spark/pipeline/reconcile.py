@@ -6,9 +6,10 @@ in /root/reference). Restated Spark-first, reconciliation is a handful of
 whole-dataset joins producing one ``equiv_edges(src_uri, dst_uri, rectype,
 provenance)`` relation:
 
-- J1 name-equality: broadcast hash join names ⋈ name_index on
-  (clean name, rectype) — the index side is bounded (curated indexes),
-  so it broadcasts; the record side streams.
+- J1 name-equality: names ⋈ name_index on (clean name, rectype),
+  size-routed — a bounded (curated) index broadcasts and the record side
+  streams; an authority index above the broadcast threshold takes the
+  hot/cold-split salted shuffle join.
 - J2 uri-equivalence: explode `equivalent[]` ⋈ uri_index.
 - J4 sameAs: curated pairs unioned in as edges.
 - J3 differentFrom: curated pairs remove edges (both directions) BEFORE
@@ -57,27 +58,49 @@ def _statically_empty(df: DataFrame) -> bool:
         return False
 
 
-def name_join(
-    names: DataFrame, name_index: DataFrame, broadcast_index: bool = True
-) -> DataFrame:
+def name_join(names: DataFrame, name_index: DataFrame) -> DataFrame:
     """J1: records' prioritized clean names probed against the per-source
     name index; type must match. Candidate election (W4,
     reconciler.py:266-274): when several index entries match, the target
     supported by the MOST of the record's names wins, then best (lowest)
     priority, then identifier — all deterministic.
 
-    ``broadcast_index=False`` is the large-authority path: when the name
-    index scales with the corpus (the reference's full LCNAF/ULAN-sized
-    authorities — millions of entries, not a curated broadcast-able dim),
-    the probe becomes a shuffle join on (name_clean, rectype), and a
-    celebrity name ("John Smith") is hot on BOTH sides.
-    hot_key_salted_join (operators/skew.py) splits the key space: only
-    (name_clean, rectype) keys above a probe-side frequency threshold are
-    salted (fanning each over n_salts tasks, replicating just the index
-    rows under those keys), while the cold remainder takes a plain
-    shuffle join — so the corpus-scale index side stays ~1x instead of
-    the n_salts-x a blanket salted_join would cost.  Output proven equal
-    to the broadcast path (tests/test_pipeline_scale.py)."""
+    Size-routed like the closure (SURVEY §7.2: broadcast only bounded
+    indexes): an index whose Catalyst size estimate is within
+    ``spark.sql.autoBroadcastJoinThreshold`` broadcasts; a larger one,
+    or any index when the threshold is -1, takes ``name_join_salted``.
+    The estimate is read off the optimized plan's statistics, so routing
+    runs no job.  A stored index (parquet) has one; an index built from
+    local Python rows (``createDataFrame``, the fixtures and gates) is an
+    RDD without one — Catalyst reports Long.MaxValue — and, its rows
+    having fit in one process, keeps the broadcast route.  The session's 64 MB
+    threshold sits near the measured crossover (SCALE.md round 11:
+    blanket replication still wins at 500k entries and loses 1.6-6x at
+    5M-20M)."""
+    threshold = names.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    size = int(str(name_index._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    fits = threshold >= 0 and (size <= threshold or size == 2**63 - 1)
+    return _name_join(names, name_index, salted=not fits)
+
+
+def name_join_salted(names: DataFrame, name_index: DataFrame) -> DataFrame:
+    """The large-authority J1 route: when the name index scales with the
+    corpus (the reference's full LCNAF/ULAN-sized authorities — millions
+    of entries, not a curated broadcast-able dim), the probe becomes a
+    shuffle join on (name_clean, rectype), and a celebrity name ("John
+    Smith") is hot on BOTH sides.  hot_key_salted_join
+    (operators/skew.py) splits the key space: only (name_clean, rectype)
+    keys above a probe-side frequency threshold are salted (fanning each
+    over n_salts tasks, replicating just the index rows under those
+    keys), while the cold remainder takes a plain shuffle join — so the
+    corpus-scale index side stays ~1x instead of the n_salts-x a blanket
+    salted_join would cost.  Same election as the broadcast route, and
+    the same edges (tests/test_pipeline_scale.py); j14 gates it
+    directly."""
+    return _name_join(names, name_index, salted=True)
+
+
+def _name_join(names: DataFrame, name_index: DataFrame, salted: bool) -> DataFrame:
     from pyspark.sql import Window as W
 
     idx_cols = name_index.select(
@@ -86,7 +109,7 @@ def name_join(
         "target_identifier",
         F.col("rectype").alias("idx_rectype"),
     )
-    if broadcast_index:
+    if not salted:
         idx = F.broadcast(idx_cols)
         hits = names.join(
             idx,
@@ -218,8 +241,6 @@ def reconcile(
     records: DataFrame,
     indexes: dict[str, DataFrame],
     min_equivs: int = 3,
-    broadcast_index: bool | str = True,
-    auto_broadcast_max_rows: int = 1_000_000,
 ) -> DataFrame:
     """Full reconcile pass: one equiv_edges relation from all join families.
 
@@ -233,17 +254,9 @@ def reconcile(
     skip it, which both mirrors the reference and prunes the name join's
     probe side at scale.
 
-    ``broadcast_index=False`` routes J1 through the hot/cold-split salted
-    shuffle join (see name_join) for authority indexes too large to
-    broadcast.  ``broadcast_index="auto"`` removes the human from the
-    choice (size-routed, like the closure): one columnar count of
-    the name index picks broadcast below ``auto_broadcast_max_rows``
-    (the measured crossover region — the hot/cold A/B shows blanket
-    replication still winning at 500k and losing 1.6-6x at 5M-20M,
-    SCALE.md round 11; a sub-1M index broadcasts comfortably at ~tens
-    of MB) and the salted shuffle path above it."""
-    if broadcast_index == "auto":
-        broadcast_index = indexes["name_index"].count() <= auto_broadcast_max_rows
+    J1 picks its route from the name index's size (name_join): the
+    broadcast join for a bounded index, the hot/cold-split salted
+    shuffle join for an authority index too large to broadcast."""
     # accept a pre-parsed (and possibly checkpointed) envelope relation —
     # run_build shares one parse across reconcile and all_uris
     docs = records if "doc" in records.columns else with_doc(records)
@@ -280,9 +293,7 @@ def reconcile(
             )
         )
         gated_names = extract_names(docs.filter(n_eq < min_equivs))
-        name_edges = name_join(
-            gated_names, indexes["name_index"], broadcast_index=broadcast_index
-        )
+        name_edges = name_join(gated_names, indexes["name_index"])
         edges = edges.unionByName(name_edges)
     if not _statically_empty(indexes["uri_index"]):
         edges = edges.unionByName(uri_join(equivs, indexes["uri_index"]))

@@ -23,6 +23,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.similarity import (
+    COSINE_SQL,
+    cosine,
+    embedding_signatures,
+    embedding_signatures_sql,
+    hamming1_flips_sql,
+    multiprobe_pairs,
+)
 from .registry import query
 from .text3 import _WS_SPLIT
 
@@ -191,8 +199,8 @@ def minhash_signatures(shingles: DataFrame) -> DataFrame:
 def band_hash_cols() -> list:
     """The N_BANDS band-hash expressions over a signature relation's
     s0..s{N_SIGS-1} columns — THE bucket-key construction, shared by
-    bands_df (streaming index), lsh_candidates (batch join) and any
-    future consumer, so the keys cannot drift."""
+    bands_df (streaming index), lsh_candidates (batch join) and
+    lsh_candidates_capped, so the keys cannot drift."""
     return [
         F.md5(
             F.concat_ws(
@@ -227,38 +235,48 @@ def bands_df(sigs: DataFrame) -> DataFrame:
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
 
 
-def lsh_candidates(sigs: DataFrame) -> DataFrame:
-    """(id_a, id_b): pairs sharing >=1 LSH band bucket, each emitted
-    EXACTLY ONCE — from its first shared band — so there is no
-    ``.distinct()`` exchange after the band join (the r5 shape shuffled
-    the candidate volume a second time; on a near-identical corpus most
-    qualifying pairs share all 4 bands, so that distinct processed the
-    result 2-4x over).  Same trick as simhash_candidates: each side
-    carries its full band-hash array (4 x 32 hex chars), and the join
-    keeps band s only when every band t < s differs between the two docs
-    — static per-band conjunctions, fully codegen.  Emission set is
-    identical to the distinct form (pinned by the unchanged oracle)."""
-    bh = band_hash_cols()
-    bands = sigs.select(
-        "id", F.array(*bh).alias("bhs"), F.posexplode(F.array(*bh)).alias("band", "bh")
+def first_shared_band_pairs(rows: DataFrame, keys: list) -> DataFrame:
+    """Pairs of ``rows`` (an id column plus payload) that share >= 1 of
+    the band keys ``keys`` (one Column per band), each emitted EXACTLY
+    ONCE: from its first shared band.  The one banded candidate join of
+    the MinHash (lsh_candidates) and SimHash (simhash_candidates) paths.
+
+    Each side posexplodes its band keys, so the only join key is
+    (band, key) with a.id < b.id — never a theta self-join.  Each side
+    also carries its whole key array, and the join keeps band s only
+    when every band t < s differs between the two rows: static per-band
+    conjunctions, fully codegen.  So no ``.distinct()`` exchange follows
+    the join; on a near-identical corpus most qualifying pairs share
+    every band, and a distinct would process the result 2-4x over.  The
+    emission set equals the distinct form.  Returns the joined relation;
+    callers select from ``a.*`` and ``b.*``."""
+    bands = rows.select(
+        "*",
+        F.array(*keys).alias("band_keys"),
+        F.posexplode(F.array(*keys)).alias("band", "key"),
     )
-    a, b_ = bands.alias("a"), bands.alias("b")
-    differs = [F.col("a.bhs")[t] != F.col("b.bhs")[t] for t in range(N_BANDS)]
+    a, b = bands.alias("a"), bands.alias("b")
     first_match = F.lit(False)
-    for s in range(N_BANDS - 1, -1, -1):
+    for s in range(len(keys) - 1, -1, -1):
         earlier_all_differ = F.lit(True)
         for t in range(s):
-            earlier_all_differ = earlier_all_differ & differs[t]
+            earlier_all_differ = earlier_all_differ & (
+                F.col("a.band_keys")[t] != F.col("b.band_keys")[t]
+            )
         first_match = F.when(F.col("a.band") == s, earlier_all_differ).otherwise(first_match)
-    return (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .filter(first_match)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.key") == F.col("b.key"))
+        & (F.col("a.id") < F.col("b.id")),
+    ).filter(first_match)
+
+
+def lsh_candidates(sigs: DataFrame) -> DataFrame:
+    """(id_a, id_b): pairs sharing >=1 LSH band bucket, each emitted
+    exactly once (first_shared_band_pairs over band_hash_cols)."""
+    return first_shared_band_pairs(sigs, band_hash_cols()).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
     )
 
 
@@ -268,7 +286,7 @@ def lsh_candidates_capped(sigs: DataFrame, bucket_cap: int = 64) -> DataFrame:
     B documents lands ALL of them in the same band buckets, so the plain
     band join emits B(B-1)/2 pairs (100k family = 5e9 pairs from one
     bucket).  This variant splits every over-cap bucket the way the
-    semantic tier's capped_assignment does (operators/similarity.py:126):
+    semantic tier's capped_assignment does (operators/similarity.py):
     row_number over (md5(id), id) within the bucket, mod ceil(n/cap) —
     deterministic and EXACT (every sub-bucket holds at most ``bucket_cap``
     ids by construction), applied BEFORE the pair join so the quadratic
@@ -615,21 +633,28 @@ def d33_minhash_estimate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SimHash (32-bit, word-level)
+# SimHash (word-level), at two widths: 32 bits (d08/d32) and 64 bits, the
+# production width (d34/d36/d41/d48 — SCALE.md round 6: 8-bit segments
+# over a 32-bit hash concentrated 55% of a template corpus into one
+# bucket; 16-bit segments over 64 bits re-sparsify)
 # ---------------------------------------------------------------------------
-N_BITS = 32
 HAMMING_T = 3
 
 
-def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, simhash): 32-bit word-level SimHash. Bit j of a word's md5-hex
-    prefix votes +1/-1; the sign of each bit-sum forms the fingerprint.
-    32 bits (not 16): at 100TB the fingerprint must discriminate — a
-    16-bit hash leaves only 16 values per 4-bit band, so candidate
-    buckets grow quadratically dense; 8-bit bands give 256 values and
-    ~16x sparser buckets for the same pigeonhole-exact guarantee."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), _WS_SPLIT)
-    # Per-doc word dedup is ROW-LOCAL (array_distinct) so the 32-sum
+def simhash_df(docs: DataFrame, bits: int) -> DataFrame:
+    """(id, simhash): ``bits``-wide word-level SimHash (32 or 64) of a
+    (doc_id, text) relation.  Bit j of a word's md5-hex prefix votes
+    +1/-1; the sign of each bit-sum forms the fingerprint.  The prefix
+    is read as 32-bit conv() words (a single 16-hex conv overflows
+    BIGINT's signed range and nulls out).  At 64 bits, bit 63's
+    shift-add term is Long.MIN — the fingerprint is the two's-complement
+    64-bit value, identical in DuckDB (bit_count/xor verified
+    two's-complement there).  32 bits, not 16: at 100TB the fingerprint
+    must discriminate — a 16-bit hash leaves only 16 values per 4-bit
+    band, so candidate buckets grow quadratically dense."""
+    toks = F.split(F.lower(F.trim(F.col("text"))), _WS_SPLIT)
+    h = F.md5(F.col("w"))
+    # Per-doc word dedup is ROW-LOCAL (array_distinct) so the bit-sum
     # groupBy fully combines each doc map-side — the exchange carries
     # ~n_docs partial rows, not the word relation.  The previous
     # explode -> distinct -> groupBy shape shuffled every (id, word) row
@@ -638,36 +663,42 @@ def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     # no explode at all — measured 3x SLOWER than this: lambda HOFs run
     # interpreted per element, outside whole-stage codegen, while
     # explode + md5 + partial agg stay codegen end-to-end.)
-    words = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.array_distinct(F.array_remove(toks, ""))).alias("w"),
-        )
-        # one hex->long conversion per word; bits extract with integer
-        # shift/mask instead of 32 per-row substring+conv string ops
+    words = docs.select(
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(F.array_remove(toks, ""))).alias("w"),
+    ).select(
+        "id",
+        # one hex->long conversion per 32 bits; bits extract with integer
+        # shift/mask instead of per-bit substring+conv string ops
         # (measured ~15% off the tier build at sf0.1)
-        .withColumn("v", F.conv(F.substring(F.md5(F.col("w")), 1, N_BITS // 4), 16, 10).cast("long"))
+        *[
+            F.conv(F.substring(h, 8 * i + 1, 8), 16, 10).cast("long").alias(f"v{i}")
+            for i in range(bits // 32)
+        ],
     )
+
+    def bit_at(j: int):
+        return F.shiftright(F.col(f"v{j // 32}"), 31 - j % 32).bitwiseAND(F.lit(1))
+
     # Packed accumulators (r16 opt, VERDICT r15 #7): two 32-bit ones-counts
-    # per long instead of 32 separate ±1 sums — halves the aggregation
-    # buffer (33 -> 17 slots) and the partial rows crossing the exchange.
+    # per long instead of one ±1 sum per bit — halves the aggregation
+    # buffer and the partial rows crossing the exchange.
     # Exact sign equivalence: the old vote sum is 2*ones_j - n_words, so
     # b_j > 0  <=>  2*ones_j > n_words; counts are integers, no rounding.
     # 32-bit fields cannot overflow (ones <= distinct words per doc < 2^31)
     # and the long sum stays under 2^63 for any doc below ~2e9 words.
-    sums = []
-    for p in range(N_BITS // 2):
-        bit_lo = F.shiftright(F.col("v"), N_BITS - 1 - 2 * p).bitwiseAND(F.lit(1))
-        bit_hi = F.shiftright(F.col("v"), N_BITS - 2 - 2 * p).bitwiseAND(F.lit(1))
-        sums.append(F.sum(bit_lo + F.shiftleft(bit_hi, 32)).alias(f"p{p}"))
+    sums = [
+        F.sum(bit_at(2 * p) + F.shiftleft(bit_at(2 * p + 1), 32)).alias(f"p{p}")
+        for p in range(bits // 2)
+    ]
     sums.append(F.count(F.lit(1)).alias("nw"))
     agg = words.groupBy("id").agg(*sums)
-    # flat shift-add, not a 32-branch CASE chain: the deep when/otherwise
+    # flat shift-add, not a per-bit CASE chain: the deep when/otherwise
     # tree cost ~2.5s of one-time janino compilation per session
     # (measured); boolean-cast + shiftleft compiles in half the time and
     # evaluates identically (2*ones_j > n_words -> bit j set)
     sim = None
-    for j in range(N_BITS):
+    for j in range(bits):
         ones = F.shiftright(F.col(f"p{j // 2}"), 32 * (j % 2)).bitwiseAND(
             F.lit(0xFFFFFFFF)
         )
@@ -676,182 +707,15 @@ def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     return agg.select("id", sim.cast("bigint").alias("simhash"))
 
 
-def _simhash_sql() -> str:
+def _simhash_sql(bits: int, src: str) -> str:
+    """DuckDB twin of ``simhash_df``: the words/hashed/agg/sims CTEs over
+    any (doc_id, text) relation ``src``."""
     digit = lambda j: f"(strpos('0123456789abcdef', substr(h, {j // 4 + 1}, 1)) - 1)"
     bit = lambda j: f"(CAST(floor({digit(j)} / {2 ** (3 - j % 4)}) AS BIGINT) % 2)"
-    sums = ", ".join(f"SUM({bit(j)} * 2 - 1) AS b{j}" for j in range(N_BITS))
-    val = " + ".join(f"CASE WHEN b{j} > 0 THEN {2**j} ELSE 0 END" for j in range(N_BITS))
-    return f"""
-    words AS (
-        SELECT DISTINCT doc_id AS id, w FROM (
-            SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+')) AS w
-            FROM documents) WHERE w <> ''
-    ),
-    hashed AS (SELECT id, substr(md5(w), 1, {N_BITS // 4}) AS h FROM words),
-    agg AS (SELECT id, {sums} FROM hashed GROUP BY id),
-    sims AS (SELECT id, CAST({val} AS BIGINT) AS simhash FROM agg)
-    """
-
-
-SIMHASH_ORACLE = f"""
-    WITH {_simhash_sql()}
-    SELECT a.id AS id_a, b.id AS id_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-    FROM sims a JOIN sims b ON a.id < b.id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= {HAMMING_T}
-"""
-
-
-N_SEGMENTS = 4  # 32 bits -> 4 segments of 8 bits; Hamming<=3 => >=1 equal
-
-
-def simhash_candidates(sims: DataFrame) -> DataFrame:
-    """(id_a, id_b, hamming): verified near-dup pairs via segment banding.
-    EXACT for Hamming <= 3 by pigeonhole — 3 differing bits cannot touch
-    all 4 segments, so every qualifying pair shares >=1 (segment_idx,
-    segment_value) bucket — identical results to the all-pairs form while
-    the only join key is the bucket: ~n*4 rows each side, never a theta
-    self-join. 8-bit segments keep buckets sparse (256 values each)."""
-    seg_bits = N_BITS // N_SEGMENTS
-    # one explode, not an N_SEGMENTS-way unionAll — see lsh_candidates on
-    # why (union branches each compile their own codegen class; the
-    # one-time compile cost dominated this query's cold wall-clock)
-    segs = sims.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("seg"),
-                        (F.shiftright(F.col("simhash"), seg_bits * s) % (2**seg_bits)).alias(
-                            "segval"
-                        ),
-                    )
-                    for s in range(N_SEGMENTS)
-                ]
-            )
-        ).alias("sv"),
-    ).select("id", "simhash", F.col("sv.seg").alias("seg"), F.col("sv.segval").alias("segval"))
-    a, b = segs.alias("a"), segs.alias("b")
-    # Hamming verify INSIDE the candidate select: bit_count + filter in
-    # codegen, never a shuffle.  Each surviving pair is emitted EXACTLY
-    # ONCE — from its first shared segment (the filter keeps segment s
-    # only when no segment t < s also matches, computable from the two
-    # fingerprints alone) — so there is no .distinct() exchange at all.
-    # A near-identical corpus makes this matter: at sf0.1 most qualifying
-    # pairs share all 4 segments, so the old distinct processed the
-    # result volume 2-4x over.
-    hamming = F.bit_count(F.expr("a.simhash ^ b.simhash"))
-    xor = F.expr("a.simhash ^ b.simhash")
-    seg_differs = [
-        (F.shiftright(xor, t * seg_bits) % (2**seg_bits)) != 0
-        for t in range(N_SEGMENTS)
-    ]
-    # "no segment before this one also matched" — static per-segment
-    # conjunctions, fully codegen (the joined segment itself matches by
-    # the equi-join condition)
-    first_match = F.lit(False)
-    for s in range(N_SEGMENTS - 1, -1, -1):
-        earlier_all_differ = F.lit(True)
-        for t in range(s):
-            earlier_all_differ = earlier_all_differ & seg_differs[t]
-        first_match = F.when(F.col("a.seg") == s, earlier_all_differ).otherwise(first_match)
-    return (
-        a.join(
-            b,
-            (F.col("a.seg") == F.col("b.seg"))
-            & (F.col("a.segval") == F.col("b.segval"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .filter(first_match)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= HAMMING_T)
-    )
-
-
-@query("d08_simhash_pairs", oracle=SIMHASH_ORACLE, survey="dedup-simhash")
-def d08_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: 32-bit fingerprints, Hamming distance <= 3.
-    Scale path: segment-banded candidate join (pigeonhole-exact superset,
-    see simhash_candidates) + Hamming verify on candidates only — same
-    results as the all-pairs oracle, no O(n^2) self-join in the plan.
-
-    The fingerprint tier is materialized once (localCheckpoint via the
-    session tier cache): the banded union references sims 4x per side and
-    Catalyst does not CSE across union branches — without this, the
-    word-explode aggregation runs 8x (measured). At 100TB the fingerprint
-    tier is a persisted table, which is exactly this shape."""
-    sims = _tier(
-        spark, sf_dir, "simhash",
-        lambda: simhash_df(load_table(spark, sf_dir, "documents")),
-    )
-    return simhash_candidates(sims)
-
-
-# ---------------------------------------------------------------------------
-# SimHash, 64-bit — the production fingerprint width (SCALE.md round 6:
-# 8-bit segments over a 32-bit hash concentrated 55% of a template corpus
-# into one bucket; 16-bit segments over 64 bits re-sparsify)
-# ---------------------------------------------------------------------------
-N_BITS64 = 64
-SEG64 = 4  # 16-bit segments; Hamming <= 3 => >= 1 equal (pigeonhole)
-
-
-def simhash64_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, simhash): 64-bit word-level SimHash — same construction as
-    simhash_df but over the first 16 md5 hex chars, assembled from two
-    32-bit conv() words (a single 16-hex conv overflows BIGINT's signed
-    range and nulls out).  Bit 63's shift-add term is Long.MIN — the
-    fingerprint is the two's-complement 64-bit value, identical in
-    DuckDB (bit_count/xor verified two's-complement there)."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), _WS_SPLIT)
-    h = F.md5(F.col("w"))
-    words = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.array_distinct(F.array_remove(toks, ""))).alias("w"),
-        )
-        .select(
-            "id",
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("v0"),
-            F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("v1"),
-        )
-    )
-    # same packed-accumulator shape as simhash_df (r16): 64 ±1 sums ->
-    # 32 packed ones-count longs + one word count, exact sign equivalence
-    def bit_at(j: int):
-        word = F.col("v0") if j < 32 else F.col("v1")
-        return F.shiftright(word, 31 - j % 32).bitwiseAND(F.lit(1))
-
-    sums = []
-    for p in range(N_BITS64 // 2):
-        sums.append(
-            F.sum(bit_at(2 * p) + F.shiftleft(bit_at(2 * p + 1), 32)).alias(f"p{p}")
-        )
-    sums.append(F.count(F.lit(1)).alias("nw"))
-    agg = words.groupBy("id").agg(*sums)
-    sim = None
-    for j in range(N_BITS64):
-        ones = F.shiftright(F.col(f"p{j // 2}"), 32 * (j % 2)).bitwiseAND(
-            F.lit(0xFFFFFFFF)
-        )
-        term = F.shiftleft((ones * 2 > F.col("nw")).cast("long"), j)
-        sim = term if sim is None else sim + term
-    return agg.select("id", sim.cast("bigint").alias("simhash"))
-
-
-def _simhash64_sql(src: str = "documents") -> str:
-    digit = lambda j: f"(strpos('0123456789abcdef', substr(h, {j // 4 + 1}, 1)) - 1)"
-    bit = lambda j: f"(CAST(floor({digit(j)} / {2 ** (3 - j % 4)}) AS BIGINT) % 2)"
-    sums = ", ".join(f"SUM({bit(j)} * 2 - 1) AS b{j}" for j in range(N_BITS64))
+    sums = ", ".join(f"SUM({bit(j)} * 2 - 1) AS b{j}" for j in range(bits))
     terms = [
         f"CASE WHEN b{j} > 0 THEN {2**j if j < 63 else '(-9223372036854775807 - 1)'} ELSE 0 END"
-        for j in range(N_BITS64)
+        for j in range(bits)
     ]
     val = " + ".join(terms)
     return f"""
@@ -860,14 +724,15 @@ def _simhash64_sql(src: str = "documents") -> str:
             SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+')) AS w
             FROM {src}) WHERE w <> ''
     ),
-    hashed AS (SELECT id, substr(md5(w), 1, {N_BITS64 // 4}) AS h FROM words),
+    hashed AS (SELECT id, substr(md5(w), 1, {bits // 4}) AS h FROM words),
     agg AS (SELECT id, {sums} FROM hashed GROUP BY id),
     sims AS (SELECT id, CAST({val} AS BIGINT) AS simhash FROM agg)
     """
 
 
-SIMHASH64_ORACLE = f"""
-    WITH {_simhash64_sql()}
+def _simhash_pairs_oracle(bits: int) -> str:
+    return f"""
+    WITH {_simhash_sql(bits, "documents")}
     SELECT a.id AS id_a, b.id AS id_b,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
     FROM sims a JOIN sims b ON a.id < b.id
@@ -875,52 +740,30 @@ SIMHASH64_ORACLE = f"""
 """
 
 
-def simhash64_candidates(sims: DataFrame) -> DataFrame:
-    """simhash_candidates for 64-bit fingerprints: 16-bit segment
-    banding (pigeonhole-exact for Hamming <= 3), first-shared-segment
-    single emission.  Segment values extract with shiftrightunsigned +
-    mask — plain shiftright/% would sign-extend fingerprints with bit 63
-    set into negative segment values."""
-    seg_bits = N_BITS64 // SEG64
+def simhash_candidates(sims: DataFrame, bits: int) -> DataFrame:
+    """(id_a, id_b, hamming): verified near-dup pairs of ``bits``-wide
+    fingerprints via segment banding.  EXACT for Hamming <= HAMMING_T
+    by pigeonhole — the fingerprint splits into HAMMING_T + 1 segments
+    (8 bits each at 32, 16 at 64), which HAMMING_T differing bits cannot
+    all touch, so every qualifying pair shares >= 1 (segment, value)
+    bucket — identical results to the all-pairs form while the only
+    join key is the bucket: ~n*4 rows each side, never a theta
+    self-join.  Pairs come from first_shared_band_pairs, emitted once
+    from their first shared segment, and the Hamming verify runs inside
+    the candidate select (bit_count + filter in codegen, no shuffle).
+    Segment values extract with shiftrightunsigned + mask: plain
+    shiftright/% would sign-extend a 64-bit fingerprint with bit 63 set
+    into negative segment values."""
+    n_seg = HAMMING_T + 1
+    seg_bits = bits // n_seg
     mask = F.lit((1 << seg_bits) - 1)
-    segs = sims.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("seg"),
-                        F.shiftrightunsigned(F.col("simhash"), seg_bits * s)
-                        .bitwiseAND(mask)
-                        .alias("segval"),
-                    )
-                    for s in range(SEG64)
-                ]
-            )
-        ).alias("sv"),
-    ).select("id", "simhash", F.col("sv.seg").alias("seg"), F.col("sv.segval").alias("segval"))
-    a, b = segs.alias("a"), segs.alias("b")
-    hamming = F.bit_count(F.expr("a.simhash ^ b.simhash"))
-    xor = F.expr("a.simhash ^ b.simhash")
-    seg_differs = [
-        F.shiftrightunsigned(xor, t * seg_bits).bitwiseAND(mask) != 0
-        for t in range(SEG64)
+    segs = [
+        F.shiftrightunsigned(F.col("simhash"), seg_bits * s).bitwiseAND(mask)
+        for s in range(n_seg)
     ]
-    first_match = F.lit(False)
-    for s in range(SEG64 - 1, -1, -1):
-        earlier_all_differ = F.lit(True)
-        for t in range(s):
-            earlier_all_differ = earlier_all_differ & seg_differs[t]
-        first_match = F.when(F.col("a.seg") == s, earlier_all_differ).otherwise(first_match)
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        a.join(
-            b,
-            (F.col("a.seg") == F.col("b.seg"))
-            & (F.col("a.segval") == F.col("b.segval"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .filter(first_match)
+        first_shared_band_pairs(sims, segs)
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -930,23 +773,40 @@ def simhash64_candidates(sims: DataFrame) -> DataFrame:
     )
 
 
-@query("d34_simhash64_pairs", oracle=SIMHASH64_ORACLE, survey="dedup-simhash")
+def _simhash_tier(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
+    """The documents' fingerprint tier at one width, materialized once
+    per session (localCheckpoint via the tier cache): the banded join
+    references it on both sides, and at 100TB it is a persisted table."""
+    return _tier(
+        spark, sf_dir, f"simhash{bits}",
+        lambda: simhash_df(load_table(spark, sf_dir, "documents"), bits),
+    )
+
+
+@query("d08_simhash_pairs", oracle=_simhash_pairs_oracle(32), survey="dedup-simhash")
+def d08_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dup pairs: 32-bit fingerprints, Hamming distance <= 3.
+    Scale path: segment-banded candidate join (pigeonhole-exact superset,
+    see simhash_candidates) + Hamming verify on candidates only — same
+    results as the all-pairs oracle, no O(n^2) self-join in the plan.
+    The fingerprint tier is materialized once (_simhash_tier) and
+    shared with d32."""
+    return simhash_candidates(_simhash_tier(spark, sf_dir, 32), 32)
+
+
+@query("d34_simhash64_pairs", oracle=_simhash_pairs_oracle(64), survey="dedup-simhash")
 def d34_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash near-dup pairs, Hamming <= 3 — the production
     fingerprint width: 16-bit segments give 65,536 values per band, so
     the template-corpus concentration that piled 55% of 32-bit
     fingerprints into one 8-bit segment bucket (SCALE.md round 6)
     re-sparsifies, and Hamming<=3 classes shrink to genuine near-dups.
-    Same pigeonhole-exact banding + single-emission shape as d08."""
-    sims = _tier(
-        spark, sf_dir, "simhash64",
-        lambda: simhash64_df(load_table(spark, sf_dir, "documents")),
-    )
-    return simhash64_candidates(sims)
+    The same simhash_df / simhash_candidates as d08, at bits=64."""
+    return simhash_candidates(_simhash_tier(spark, sf_dir, 64), 64)
 
 
 SIMHASH_GROUPS_ORACLE = f"""
-    WITH {_simhash_sql()}
+    WITH {_simhash_sql(32, "documents")}
     SELECT id AS doc_id,
            MIN(id) OVER (PARTITION BY simhash) AS keeper_doc_id
     FROM sims
@@ -965,15 +825,10 @@ def d32_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over one shuffle at any density.  Exact-simhash match is the
     word-order-robust middle ground between d02's exact text fingerprint
     and d08's Hamming<=3 pairs.  Shares d08's fingerprint tier."""
-    sims = _tier(
-        spark, sf_dir, "simhash",
-        lambda: simhash_df(load_table(spark, sf_dir, "documents")),
-    )
-    from pyspark.sql import Window as W
-
+    sims = _simhash_tier(spark, sf_dir, 32)
     return sims.select(
         F.col("id").alias("doc_id"),
-        F.min("id").over(W.partitionBy("simhash")).alias("keeper_doc_id"),
+        F.min("id").over(Window.partitionBy("simhash")).alias("keeper_doc_id"),
     )
 
 
@@ -982,12 +837,6 @@ def d32_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 COS_T = 0.45
 
-_COS = """
-    list_sum(list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] * b.emb[i]))
-    / (sqrt(list_sum(list_transform(a.emb, x -> x * x)))
-       * sqrt(list_sum(list_transform(b.emb, x -> x * x))))
-"""
-
 # Exact all-pairs twin: NOT the driver oracle (see _emb_lsh_oracle) — used
 # by the local recall test, which pins the LSH path's recall against it.
 EMB_EXACT_SQL = f"""
@@ -995,53 +844,15 @@ EMB_EXACT_SQL = f"""
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
         FROM embeddings
     )
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b, ROUND({_COS}, 6) AS cos_sim
+    SELECT a.vec_id AS id_a, b.vec_id AS id_b, ROUND({COSINE_SQL}, 6) AS cos_sim
     FROM vecs a JOIN vecs b ON a.vec_id < b.vec_id
-    WHERE ROUND({_COS}, 6) >= {COS_T}
+    WHERE ROUND({COSINE_SQL}, 6) >= {COS_T}
 """
 
 
 EMB_DIM = 64
 EMB_PLANES = 5  # per-table signature bits
 EMB_TABLES = 8  # independent plane sets
-
-
-def _emb_sig_select_sql(src: str) -> str:
-    """The per-table sign-LSH signature selects over relation ``src``,
-    with the deterministic md5-derived hyperplanes
-    (operators/similarity._plane) baked in as SQL literals — shared by
-    the d09 and v05 oracles so the plane scheme cannot drift between
-    them."""
-    from ..operators.similarity import _plane
-
-    sig_selects = []
-    for t in range(EMB_TABLES):
-        bits = []
-        for j in range(EMB_PLANES):
-            plane = "[" + ",".join(
-                "1" if c > 0 else "-1" for c in _plane(j, EMB_DIM, t)
-            ) + "]::DOUBLE[]"
-            bits.append(
-                f"CASE WHEN list_dot_product(emb, {plane}) >= 0 "
-                "THEN '1' ELSE '0' END"
-            )
-        sig_selects.append(
-            f"SELECT vec_id, {t} AS t, concat({', '.join(bits)}) AS sig FROM {src}"
-        )
-    return "\nUNION ALL\n".join(sig_selects)
-
-
-def _emb_flips_sql() -> list[str]:
-    """The Hamming-1 multiprobe signature set (the signature itself plus
-    each single-bit flip) as SQL expressions over a ``sig`` column."""
-    flips = ["sig"]
-    for j in range(1, EMB_PLANES + 1):
-        flips.append(
-            f"concat(substr(sig, 1, {j - 1}), "
-            f"CASE substr(sig, {j}, 1) WHEN '1' THEN '0' ELSE '1' END, "
-            f"substr(sig, {j + 1}, {EMB_PLANES - j}))"
-        )
-    return flips
 
 
 def _emb_lsh_oracle() -> str:
@@ -1052,8 +863,7 @@ def _emb_lsh_oracle() -> str:
     verify) rather than a dataset-dependent recall property of the test
     corpus (an exact-all-pairs oracle asserts recall == 1.0, which a
     testdata regeneration could break without any code bug)."""
-    sigs_sql = _emb_sig_select_sql("vecs")
-    flips = _emb_flips_sql()
+    sigs_sql = embedding_signatures_sql("vecs", EMB_DIM, EMB_PLANES, EMB_TABLES)
 
     return f"""
     WITH vecs AS (
@@ -1064,7 +874,7 @@ def _emb_lsh_oracle() -> str:
         {sigs_sql}
     ),
     probes AS (
-        SELECT vec_id, t, unnest([{", ".join(flips)}]) AS sig FROM sigs
+        SELECT vec_id, t, unnest({hamming1_flips_sql(EMB_PLANES)}) AS sig FROM sigs
     ),
     cands AS (
         SELECT DISTINCT p.vec_id AS id_a, s.vec_id AS id_b
@@ -1088,81 +898,21 @@ def _emb_lsh_oracle() -> str:
 """
 
 
-def embedding_signatures(emb: DataFrame) -> DataFrame:
-    """(id, t, sig): the sign-LSH signatures of ALL tables in ONE pass
-    over the embeddings — one struct-array explode instead of
-    EMB_TABLES separate scans each re-evaluating the interpreted
-    signature fold (the r5 review-flagged perf target).  This is the
-    relation a production index persists, partitioned by (t, sig)."""
-    from ..operators.similarity import lsh_signature
-
-    structs = [
-        F.struct(
-            F.lit(t).alias("t"),
-            lsh_signature("emb", EMB_DIM, EMB_PLANES, t).alias("sig"),
-        )
-        for t in range(EMB_TABLES)
-    ]
-    return emb.select("id", F.explode(F.array(*structs)).alias("ts")).select(
-        "id", F.col("ts.t").alias("t"), F.col("ts.sig").alias("sig")
-    )
-
-
-def hamming1_flips(n_bits: int = EMB_PLANES, col: str = "sig"):
-    """Array column of 1 + n_bits signature strings: the original plus
-    every 1-bit flip — the Hamming<=1 multiprobe set.  ONE construction
-    shared by the batch candidates (candidates_from_signatures) and the
-    streaming probe (similarity_stream.probe_candidates) so the
-    multiprobe scheme cannot drift between the two paths the v05 gate
-    pins together."""
-    return F.array(
-        F.col(col),
-        *[
-            F.concat(
-                F.substring(F.col(col), 1, j),
-                F.when(F.substring(F.col(col), j + 1, 1) == "1", "0").otherwise("1"),
-                F.substring(F.col(col), j + 2, n_bits - j - 1),
-            )
-            for j in range(n_bits)
-        ],
-    )
-
-
-def candidates_from_signatures(sigs: DataFrame) -> DataFrame:
-    """(id_a, id_b): unordered pairs colliding in >=1 sign-LSH table at
-    Hamming <= 1 (multiprobe), from a (id, t, sig) signature relation —
-    probe side carries 1+EMB_PLANES signatures per (vector, table),
-    index side one, and the single (t, sig) equi-join replaces the old
-    per-table join union — never an O(n^2) theta self-join."""
-    probe = sigs.select("id", "t", F.explode(hamming1_flips()).alias("sig"))
-    return (
-        probe.alias("a")
-        .join(
-            sigs.alias("b"),
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
 @query("d09_embedding_neardup", oracle=_emb_lsh_oracle(), survey="dedup-embedding")
 def d09_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, scale path: sign-LSH bucket
-    candidates + exact cosine verify on candidates only.  The embeddings
-    projection and the 8-table signature relation are materialized tiers
-    (one scan each — the signature fold previously re-evaluated on both
-    sides of all 8 table branches and the verify re-scanned the parquet
-    twice; at 100TB both are persisted tables, the index one partitioned
-    by (t, sig)).  The ORACLE replicates the same deterministic LSH
-    scheme in DuckDB from shared plane literals (_emb_lsh_oracle), so the
-    gate is dataset-independent; recall against the exact all-pairs twin
+    candidates (operators/similarity.multiprobe_pairs: Hamming-1
+    multiprobe, one (t, sig) equi-join) + exact cosine verify on
+    candidates only.  The embeddings projection and the 8-table
+    signature relation are materialized tiers (one scan each — the
+    signature fold previously re-evaluated on both sides of all 8 table
+    branches and the verify re-scanned the parquet twice; at 100TB both
+    are persisted tables, the index one partitioned by (t, sig)).  The
+    ORACLE replicates the same deterministic LSH scheme in DuckDB from
+    shared plane literals (_emb_lsh_oracle), so the gate is
+    dataset-independent; recall against the exact all-pairs twin
     (EMB_EXACT_SQL) is pinned separately by tests/test_operators.py.
     Cosine stays JVM-side via zip_with/aggregate."""
-    from .vector import cosine_expr
-
     emb = _tier(
         spark, sf_dir, "emb",
         lambda: load_table(spark, sf_dir, "embeddings").select(
@@ -1173,16 +923,22 @@ def d09_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs = _tier(
         spark, sf_dir, "emb_sigs",
-        lambda: embedding_signatures(emb),
+        lambda: embedding_signatures(emb, EMB_DIM, EMB_PLANES, EMB_TABLES),
         table="embeddings",
     )
-    cands = candidates_from_signatures(sigs)
-    a = emb.select(F.col("id").alias("id_a"), F.col("emb").alias("qemb"))
-    b = emb.select(F.col("id").alias("id_b"), F.col("emb").alias("nemb"))
+    cands = multiprobe_pairs(sigs, sigs, EMB_PLANES).filter(
+        F.col("probe_id") < F.col("index_id")
+    )
+    a = emb.select(F.col("id").alias("probe_id"), F.col("emb").alias("qemb"))
+    b = emb.select(F.col("id").alias("index_id"), F.col("emb").alias("nemb"))
     return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", F.round(cosine_expr("qemb", "nemb"), 6).alias("cos_sim"))
+        cands.join(a, "probe_id")
+        .join(b, "index_id")
+        .select(
+            F.col("probe_id").alias("id_a"),
+            F.col("index_id").alias("id_b"),
+            F.round(cosine("qemb", "nemb"), 6).alias("cos_sim"),
+        )
         .filter(F.col("cos_sim") >= COS_T)
     )
 
@@ -1365,7 +1121,7 @@ CORPUS_CLEAN_TIERED_ORACLE = f"""
           ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
     ),
     {_TIERED_SQL},
-    {_simhash64_sql()},
+    {_simhash_sql(64, "documents")},
     sim_edges AS (
         SELECT keeper AS id_a, id AS id_b FROM (
             SELECT id, MIN(id) OVER (PARTITION BY simhash) AS keeper FROM sims
@@ -1440,10 +1196,7 @@ def d36_corpus_clean_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id")
 
     tier_pairs = tiered_verified_pairs(spark, sf_dir).select("id_a", "id_b")
-    sims64 = _tier(
-        spark, sf_dir, "simhash64",
-        lambda: simhash64_df(load_table(spark, sf_dir, "documents")),
-    )
+    sims64 = _simhash_tier(spark, sf_dir, 64)
     edges = tier_pairs.unionByName(fingerprint_star_edges(sims64))
 
     groups = connected_components(edges, src="id_a", dst="id_b").select(
@@ -1482,7 +1235,7 @@ def _d41_oracle() -> str:
           ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
     ),
     {_TIERED_SQL},
-    {_simhash64_sql("documents_clean")},
+    {_simhash_sql(64, "documents_clean")},
     sim_edges AS (
         SELECT keeper AS id_a, id AS id_b FROM (
             SELECT id, MIN(id) OVER (PARTITION BY simhash) AS keeper FROM sims
@@ -1572,7 +1325,7 @@ def d41_training_data_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: signature_estimate_pairs(sigs, lsh_candidates(sigs)),
     )
     tier_pairs = tiered_pairs_from(da, est).select("id_a", "id_b")
-    sims64 = _tier(spark, sf_dir, "d41_simhash64", lambda: simhash64_df(cleaned))
+    sims64 = _tier(spark, sf_dir, "d41_simhash64", lambda: simhash_df(cleaned, 64))
     edges = tier_pairs.unionByName(fingerprint_star_edges(sims64))
     groups = connected_components(edges, src="id_a", dst="id_b").select(
         F.col("node").alias("doc_id"), F.col("component").alias("keeper")
@@ -1675,7 +1428,6 @@ def _v05_oracle() -> str:
     index (the rest); the batch's signatures multiprobe the index at
     Hamming<=1 and candidates exact-cosine verify — the DIRECTED form of
     the d09 scheme, from the same plane literals."""
-    flips = _emb_flips_sql()
     return f"""
     WITH vecs AS (
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
@@ -1684,13 +1436,13 @@ def _v05_oracle() -> str:
     newv AS (SELECT * FROM vecs WHERE vec_id % {_V05_MOD} = 0),
     idxv AS (SELECT * FROM vecs WHERE vec_id % {_V05_MOD} <> 0),
     new_sigs AS (
-        {_emb_sig_select_sql("newv")}
+        {embedding_signatures_sql("newv", EMB_DIM, EMB_PLANES, EMB_TABLES)}
     ),
     idx_sigs AS (
-        {_emb_sig_select_sql("idxv")}
+        {embedding_signatures_sql("idxv", EMB_DIM, EMB_PLANES, EMB_TABLES)}
     ),
     probes AS (
-        SELECT vec_id, t, unnest([{", ".join(flips)}]) AS sig FROM new_sigs
+        SELECT vec_id, t, unnest({hamming1_flips_sql(EMB_PLANES)}) AS sig FROM new_sigs
     ),
     cands AS (
         SELECT DISTINCT p.vec_id AS new_id, s.vec_id AS corpus_id
@@ -1733,7 +1485,10 @@ def v05_stream_similarity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     newv = emb.filter(F.col("id") % _V05_MOD == 0)
     idxv = emb.filter(F.col("id") % _V05_MOD != 0)
     return probe_matches(
-        newv, embedding_signatures(newv), embedding_signatures(idxv), idxv
+        newv,
+        embedding_signatures(newv, EMB_DIM, EMB_PLANES, EMB_TABLES),
+        embedding_signatures(idxv, EMB_DIM, EMB_PLANES, EMB_TABLES),
+        idxv,
     )
 
 
@@ -1785,7 +1540,7 @@ def _d48_oracle() -> str:
                     ELSE text END AS text
         FROM documents
     ),
-    {_simhash64_sql('planted')},
+    {_simhash_sql(64, 'planted')},
     feat AS (
         SELECT doc_id,
                md5(regexp_replace(lower(trim(text, ' ')), '{ws}', ' ', 'g')) AS fp,
@@ -1915,7 +1670,7 @@ def refresh_features(docs: DataFrame) -> DataFrame:
             "n_stop"
         ),
     )
-    sims = simhash64_df(docs)
+    sims = simhash_df(docs, 64)
     return feat.join(sims, feat.doc_id == sims.id).drop("id")
 
 

@@ -568,18 +568,22 @@ def a02_skewed_merge_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="J1,W4,skew",
 )
 def j14_salted_celebrity_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The large-authority J1 path (reconcile broadcast_index=False:
-    operators/skew.salted_join fans hot (name_clean, rectype) keys over
-    16 salts) as its OWN driver gate, under a celebrity plant — 40% of
-    records share one hot name the index maps to a single target, the
-    skew shape the salted path exists for (VERDICT r9 #1; measured on
-    the real chain at 30x/100x in SCALE.md, "Measured scaling curve
-    (round 10)", adversarial-shape entity build).
-    The oracle states the expected edge set analytically: every
-    hot-name record gains the T1 edge, record 7 (whose unique name the
-    index also lists) gains T7 — identical output to the broadcast path
-    by the tested equality, proven here through the salted plan."""
-    from ..pipeline.reconcile import reconcile
+    """The large-authority J1 route (pipeline/reconcile.name_join_salted:
+    operators/skew.hot_key_salted_join fans hot (name_clean, rectype)
+    keys over 16 salts) as its OWN oracle gate, under a celebrity plant
+    — 40% of records share one hot name the index maps to a single
+    target, the skew shape the salted path exists for (VERDICT r9 #1;
+    measured on the real chain at 30x/100x in SCALE.md, "Measured
+    scaling curve (round 10)", adversarial-shape entity build).  It
+    calls ``name_join_salted`` directly, because a two-row index always
+    takes name_join's broadcast route — without this gate the route
+    that takes over above the broadcast threshold would have no oracle
+    gate (the j09 pattern).  The oracle states the expected edge set
+    analytically: every hot-name record gains the T1 edge, record 7
+    (whose unique name the index also lists) gains T7 — identical
+    output to the broadcast route by the tested equality."""
+    from ..pipeline.envelope import extract_names, with_doc
+    from ..pipeline.reconcile import name_join_salted
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     k = F.col("c_custkey")
@@ -600,15 +604,9 @@ def j14_salted_celebrity_reconcile(spark: SparkSession, sf_dir: str) -> DataFram
         F.lit("Person").alias("rectype"),
         data.alias("data"),
     )
-    e = spark.createDataFrame
-    indexes = {
-        "name_index": e(
-            [("idx", "celebrity q smith", "T1", "Person"),
-             ("idx", "unique 7", "T7", "Person")],
-            "source string, name_clean string, target_identifier string, rectype string",
-        ),
-        "uri_index": empty_relation(spark, "source string, ext_uri string, target_identifier string, rectype string"),
-        "same_as": empty_relation(spark, "uri_a string, uri_b string"),
-        "different_from": empty_relation(spark, "uri_a string, uri_b string"),
-    }
-    return reconcile(records, indexes, broadcast_index=False)
+    name_index = spark.createDataFrame(
+        [("idx", "celebrity q smith", "T1", "Person"),
+         ("idx", "unique 7", "T7", "Person")],
+        "source string, name_clean string, target_identifier string, rectype string",
+    )
+    return name_join_salted(extract_names(with_doc(records)), name_index)

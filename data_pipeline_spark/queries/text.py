@@ -248,26 +248,27 @@ _D06_ORACLE = """
     """
 
 
+D06_MAX_DOCS = 100_000  # d06's corpus-size guard
+
+
 @query("d06_ngram_jaccard_pairs", oracle=_D06_ORACLE, survey="dedup-ngram-jaccard")
 def d06_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs by 3-gram Jaccard >= 0.6: shingle -> inverted
     index self-join -> intersection counts -> Jaccard. This exact-Jaccard
     form is the oracle twin of the MinHash/LSH scale path
-    (pipeline/dedup.py): LSH banding replaces the full shingle self-join
+    (queries/dedup.py): LSH banding replaces the full shingle self-join
     with bucketed candidate generation at 100TB.  Deliberately quadratic
-    in hot shingles — guarded against accidental large-corpus use."""
-    import os
-
+    in hot shingles — guarded against accidental large-corpus use: it
+    refuses corpora above D06_MAX_DOCS."""
     docs = load_table(spark, sf_dir, "documents")
-    max_docs = int(os.environ.get("SPARK_GRAFT_D06_MAX_DOCS", "100000"))
     # limit(k+1).count() short-circuits the scan at the threshold — the
-    # guard's cost is bounded by max_docs rows, never a full corpus count
-    n = docs.limit(max_docs + 1).count()
-    if n > max_docs:
+    # guard's cost is bounded by D06_MAX_DOCS rows, never a full corpus count
+    n = docs.limit(D06_MAX_DOCS + 1).count()
+    if n > D06_MAX_DOCS:
         raise ValueError(
             f"d06_ngram_jaccard_pairs is the quadratic small-SF oracle twin "
-            f"(>{max_docs} docs); use d07_minhash_lsh_pairs for large "
-            f"corpora, or raise SPARK_GRAFT_D06_MAX_DOCS explicitly."
+            f"(>{D06_MAX_DOCS} docs); use d07_minhash_lsh_pairs for large "
+            f"corpora."
         )
     toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\f\r]+")
     with_toks = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 3)

@@ -1,8 +1,10 @@
 """Similarity search over the `embeddings` table (array<float> column).
 
-Brute-force cosine top-k is the correctness baseline; the LSH-bucketed
-variant (pipeline/similarity.py) is the 100TB scale path — random-hyperplane
-bucketing turns the O(n^2) cross join into per-bucket joins.
+Brute-force cosine top-k is the correctness baseline; the ANN routes in
+operators/similarity.py (sign-LSH, IVF, PQ, SQ) are the 100TB scale
+paths — sign-LSH bucketing turns the O(n^2) cross join into per-bucket
+joins.  The cosine fold, the signature builder and the multiprobe flips
+are defined there once, each beside the DuckDB twin these oracles use.
 
 Determinism: cosine is computed component-order-sequentially on doubles in
 both engines, then ROUNDed to 6 digits before ranking, with vec_id
@@ -16,27 +18,13 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.similarity import (
+    COSINE_SQL,
+    cosine,
+    embedding_signatures_sql,
+    hamming1_flips_sql,
+)
 from .registry import query
-
-
-def cosine_expr(a: str, b: str) -> F.Column:
-    """Cosine similarity between two array<double> columns, JVM-side only:
-    zip_with products + aggregate sums (whole-stage codegen, no UDF)."""
-    dot = F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(F.aggregate(F.col(a), F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(F.col(b), F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
-
-
-_COS_SQL = """
-    list_sum(list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] * b.emb[i]))
-    / (sqrt(list_sum(list_transform(a.emb, x -> x * x)))
-       * sqrt(list_sum(list_transform(b.emb, x -> x * x))))
-"""
 
 
 @query(
@@ -49,7 +37,7 @@ _COS_SQL = """
     ),
     pairs AS (
         SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, b.label AS neighbor_label,
-               ROUND({_COS_SQL}, 6) AS cos_sim
+               ROUND({COSINE_SQL}, 6) AS cos_sim
         FROM vecs a JOIN vecs b ON a.vec_id <> b.vec_id
         WHERE a.vec_id < 10
     )
@@ -80,7 +68,7 @@ def v01_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = (
         corpus.join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", F.round(cosine_expr("qemb", "nemb"), 6))
+        .withColumn("cos_sim", F.round(cosine("qemb", "nemb"), 6))
         .select("query_id", "neighbor_id", "neighbor_label", "cos_sim")
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
@@ -165,38 +153,13 @@ _V03_DIM, _V03_PLANES, _V03_TABLES, _V03_K = 64, 4, 3, 5
 
 def _v03_oracle() -> str:
     """DuckDB twin of the v03 sign-LSH ANN, generated from the SAME
-    md5-derived hyperplanes baked in as SQL literals (the d09 pattern:
-    the gate pins the SCHEME — deterministic buckets, multiprobe,
-    exact-cosine re-rank, total-order top-k — not a dataset recall
-    property).  Everything here is exact given the plane literals, so
-    the two engines cannot drift."""
-    from ..operators.similarity import _plane
-
-    def plane_lit(j: int, t: int) -> str:
-        comps = ",".join(
-            "1" if c > 0 else "-1" for c in _plane(j, _V03_DIM, t)
-        )
-        return f"[{comps}]::DOUBLE[]"
-
-    sig_selects = []
-    for t in range(_V03_TABLES):
-        bits = [
-            f"CASE WHEN list_dot_product(emb, {plane_lit(j, t)}) >= 0"
-            " THEN '1' ELSE '0' END"
-            for j in range(_V03_PLANES)
-        ]
-        sig_selects.append(
-            f"SELECT vec_id, {t} AS t, concat({', '.join(bits)}) AS sig FROM vecs"
-        )
-    sigs_sql = "\nUNION ALL\n".join(sig_selects)
-
-    flips = ["sig"]
-    for j in range(1, _V03_PLANES + 1):
-        flips.append(
-            f"concat(substr(sig, 1, {j - 1}), "
-            f"CASE substr(sig, {j}, 1) WHEN '1' THEN '0' ELSE '1' END, "
-            f"substr(sig, {j + 1}, {_V03_PLANES - j}))"
-        )
+    md5-derived hyperplanes baked in as SQL literals by the same
+    signature and flip generators as d09/v05 (the d09 pattern: the gate
+    pins the SCHEME — deterministic buckets, multiprobe, exact-cosine
+    re-rank, total-order top-k — not a dataset recall property).
+    Everything here is exact given the plane literals, so the two
+    engines cannot drift."""
+    sigs_sql = embedding_signatures_sql("vecs", _V03_DIM, _V03_PLANES, _V03_TABLES)
 
     return f"""
     WITH vecs AS (
@@ -207,7 +170,7 @@ def _v03_oracle() -> str:
         {sigs_sql}
     ),
     probes AS (
-        SELECT vec_id, t, unnest([{", ".join(flips)}]) AS sig
+        SELECT vec_id, t, unnest({hamming1_flips_sql(_V03_PLANES)}) AS sig
         FROM sigs WHERE vec_id < 10
     ),
     cands AS (
@@ -234,7 +197,9 @@ def _v03_oracle() -> str:
 
 @query("v03_ann_lsh", oracle=_v03_oracle(), survey="similarity-ann-lsh")
 def v03_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH ANN top-5, hash-verified: the oracle replicates the full
+    """Sign-LSH ANN top-5, hash-verified: knn_lsh builds every table's
+    signatures in one pass and multiprobes them in one (t, sig) join
+    (the d09/v05 primitives); the oracle replicates the full
     deterministic scheme (md5-derived planes -> sign signatures per
     table -> Hamming-1 multiprobe -> exact-cosine re-rank, vec_id
     tiebreaks) in DuckDB from shared plane literals, so the approximate
@@ -966,7 +931,7 @@ def _v09_oracle() -> str:
             SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
                    row_number() OVER (
                        PARTITION BY a.vec_id
-                       ORDER BY ROUND({_COS_SQL}, 6) DESC, b.vec_id) AS rn
+                       ORDER BY ROUND({COSINE_SQL}, 6) DESC, b.vec_id) AS rn
             FROM vecs a JOIN vecs b ON a.vec_id <> b.vec_id
             WHERE a.vec_id < 10
         ) WHERE rn <= {_V04_K}
@@ -1030,7 +995,7 @@ def v09_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         corpus.join(F.broadcast(queries_df),
                     F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", F.round(cosine_expr("qemb", "nemb"), 6))
+        .withColumn("cos_sim", F.round(cosine("qemb", "nemb"), 6))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
     exact = (

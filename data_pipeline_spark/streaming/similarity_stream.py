@@ -4,16 +4,16 @@ sign-LSH near-dup path (queries/dedup.py d09), the same way
 dedup_stream.py twins the MinHash pipeline.
 
 Each micro-batch of new vectors computes its sign-LSH signatures with
-THE SAME deterministic md5-derived planes as the batch path
-(queries.dedup.embedding_signatures — batch and streaming buckets cannot
-drift), probes the PERSISTED signature index with Hamming-1 multiprobe,
+THE SAME deterministic md5-derived planes and d09's plane counts
+(operators/similarity.embedding_signatures — batch and streaming
+buckets cannot drift), probes the PERSISTED signature index through the
+one Hamming-1 multiprobe join (operators/similarity.multiprobe_pairs),
 exact-cosine-verifies the candidates, emits (new vector, corpus
 neighbor, cos_sim >= threshold), and folds its own signatures + vectors
-into the index so later batches see it.  The probe construction is the
-pure functions ``probe_candidates``/``probe_matches``, which the
-declared batch gate (queries/dedup.py v05_stream_similarity_gate)
-hash-oracles against DuckDB — the streaming path's expressions are
-driver-verified through their batch twin.
+into the index so later batches see it.  The probe is the pure function
+``probe_matches``, which the declared batch gate (queries/dedup.py
+v05_stream_similarity_gate) hash-oracles against DuckDB — the streaming
+path's expressions are hash-verified through their batch twin.
 
 At-least-once idempotency: Structured Streaming may RETRY a micro-batch
 after a partial failure, so nothing here may blindly append.  Every
@@ -40,12 +40,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..queries.dedup import (
-    COS_T,
-    embedding_signatures,  # ONE signature construction batch + streaming share
-    hamming1_flips,  # ONE multiprobe construction batch + streaming share
-)
-from ..queries.vector import cosine_expr
+from ..operators.similarity import cosine, embedding_signatures, multiprobe_pairs
+from ..queries.dedup import COS_T, EMB_DIM, EMB_PLANES, EMB_TABLES
 from .index_util import (
     require_batch_layout,
     run_batch_key,
@@ -64,29 +60,9 @@ def index_corpus(emb: DataFrame, index_dir: str,
     HASH-BUCKETED on the vector id (index_util.write_base): partial
     compaction then rewrites only the buckets a crawl's vectors hash
     to — one vector's signature rows share its bucket."""
-    write_base(embedding_signatures(emb), index_dir, "sigs", ["id"],
-               buckets=buckets)
+    write_base(embedding_signatures(emb, EMB_DIM, EMB_PLANES, EMB_TABLES),
+               index_dir, "sigs", ["id"], buckets=buckets)
     write_base(emb, index_dir, "vecs", ["id"], buckets=buckets)
-
-
-def probe_candidates(new_sigs: DataFrame, idx_sigs: DataFrame) -> DataFrame:
-    """(new_id, corpus_id): directed Hamming-1 multiprobe of the index —
-    the probe side carries 1+EMB_PLANES signatures per (vector, table),
-    the index side one, and the only join is the (t, sig) equi-join.
-    The same construction (hamming1_flips) as the batch
-    candidates_from_signatures, but directed (new vs corpus), which is
-    what a continuous feed needs."""
-    probe = new_sigs.select("id", "t", F.explode(hamming1_flips()).alias("sig"))
-    return (
-        probe.alias("n")
-        .join(
-            idx_sigs.alias("i"),
-            (F.col("n.t") == F.col("i.t")) & (F.col("n.sig") == F.col("i.sig")),
-        )
-        .select(F.col("n.id").alias("new_id"), F.col("i.id").alias("corpus_id"))
-        .filter(F.col("new_id") != F.col("corpus_id"))
-        .distinct()
-    )
 
 
 def probe_matches(
@@ -94,13 +70,17 @@ def probe_matches(
     new_sigs: DataFrame,
     idx_sigs: DataFrame,
     idx_vecs: DataFrame,
-    threshold: float = COS_T,
 ) -> DataFrame:
-    """(new_id, corpus_id, cos_sim): the full probe — multiprobe
-    candidates, then exact-cosine verify against the indexed vectors.
-    Pure function of its four relations; both the streaming micro-batch
-    and the declared v05 gate run exactly this."""
-    cands = probe_candidates(new_sigs, idx_sigs)
+    """(new_id, corpus_id, cos_sim >= COS_T): the full probe — directed
+    Hamming-1 multiprobe candidates (new vs corpus, multiprobe_pairs),
+    then exact-cosine verify against the indexed vectors.  Pure function
+    of its four relations; both the streaming micro-batch and the
+    declared v05 gate run exactly this."""
+    cands = (
+        multiprobe_pairs(new_sigs, idx_sigs, EMB_PLANES)
+        .filter(F.col("probe_id") != F.col("index_id"))
+        .select(F.col("probe_id").alias("new_id"), F.col("index_id").alias("corpus_id"))
+    )
     a = new_vecs.select(F.col("id").alias("new_id"), F.col("emb").alias("qemb"))
     b = idx_vecs.select(F.col("id").alias("corpus_id"), F.col("emb").alias("nemb"))
     return (
@@ -108,9 +88,9 @@ def probe_matches(
         .join(b, "corpus_id")
         .select(
             "new_id", "corpus_id",
-            F.round(cosine_expr("qemb", "nemb"), 6).alias("cos_sim"),
+            F.round(cosine("qemb", "nemb"), 6).alias("cos_sim"),
         )
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= COS_T)
     )
 
 
@@ -119,7 +99,6 @@ def match_batch(
     batch: DataFrame,
     index_dir: str,
     append: bool = True,
-    threshold: float = COS_T,
     batch_key: str | None = None,
 ) -> DataFrame:
     """One micro-batch: probe the index (probe_matches), then
@@ -128,7 +107,7 @@ def match_batch(
     replaces its directory, so the fold is idempotent under
     at-least-once delivery.  Returns matches (new_id, corpus_id,
     cos_sim)."""
-    new_sigs = embedding_signatures(batch)
+    new_sigs = embedding_signatures(batch, EMB_DIM, EMB_PLANES, EMB_TABLES)
     idx_sigs = spark.read.parquet(os.path.join(index_dir, "sigs"))
     idx_vecs = spark.read.parquet(os.path.join(index_dir, "vecs"))
     if batch_key is not None:
@@ -142,7 +121,7 @@ def match_batch(
     idx_sigs = idx_sigs.select("id", "t", "sig")
     idx_vecs = idx_vecs.select("id", "emb")
     # materialize BEFORE the index grows (the plan reads the index dirs)
-    result = probe_matches(batch, new_sigs, idx_sigs, idx_vecs, threshold).localCheckpoint()
+    result = probe_matches(batch, new_sigs, idx_sigs, idx_vecs).localCheckpoint()
     if append:
         if batch_key is None:
             raise ValueError(

@@ -432,11 +432,12 @@ def test_d06_refuses_large_corpus(spark, monkeypatch):
     launching a hot-shingle self-join."""
     import pytest
 
+    from data_pipeline_spark.queries import text
     from data_pipeline_spark.queries.text import d06_ngram_jaccard_pairs
 
     from .conftest import SF_ORACLE
 
-    monkeypatch.setenv("SPARK_GRAFT_D06_MAX_DOCS", "10")
+    monkeypatch.setattr(text, "D06_MAX_DOCS", 10)
     with pytest.raises(ValueError, match="d07_minhash_lsh_pairs"):
         d06_ngram_jaccard_pairs(spark, SF_ORACLE)
 

@@ -121,13 +121,23 @@ def test_reidentify_idempotent(spark, built_pair):
     assert a == b  # all URIs already yuids -> second pass is a no-op
 
 
-def test_name_join_salted_equals_broadcast(spark):
-    """The large-authority J1 path (broadcast_index=False: salted shuffle
-    join, operators/skew.salted_join) must produce the exact edge set of
-    the broadcast path — exercised under a celebrity plant: 40% of the
-    records share one hot name that the index maps to a single target, so
-    the hot (name_clean, rectype) key fans out on BOTH join sides."""
-    from data_pipeline_spark.pipeline.reconcile import reconcile
+def test_name_join_salted_equals_broadcast(spark, tmp_path):
+    """The large-authority J1 route (name_join_salted: hot/cold-split
+    salted shuffle join, operators/skew.hot_key_salted_join) must produce
+    the exact edge set of the broadcast route — exercised under a
+    celebrity plant: 40% of the records share one hot name that the
+    index maps to a single target, so the hot (name_clean, rectype) key
+    fans out on BOTH join sides.  Three ways in: the default size route
+    (a 2-row index broadcasts), the route with the broadcast threshold
+    at -1 (salted), and a direct name_join_salted call.  The index is
+    stored as parquet, so Catalyst has a size estimate to route by; a
+    threshold below that estimate also takes the salted route."""
+    from data_pipeline_spark.pipeline.envelope import extract_names, with_doc
+    from data_pipeline_spark.pipeline.reconcile import (
+        name_join,
+        name_join_salted,
+        reconcile,
+    )
 
     cust = (
         spark.read.parquet(f"{SF}/customer.parquet").select("c_custkey").limit(500)
@@ -151,20 +161,43 @@ def test_name_join_salted_equals_broadcast(spark):
         data.alias("data"),
     )
     idx = _empty_indexes(spark)
-    idx["name_index"] = spark.createDataFrame(
+    local_index = spark.createDataFrame(
         [("idx", "celebrity q smith", "T1", "Person"),
          ("idx", "unique 7", "T7", "Person")],
         "source string, name_clean string, target_identifier string, rectype string",
     )
+    local_index.write.parquet(str(tmp_path / "name_index"))
+    idx["name_index"] = spark.read.parquet(str(tmp_path / "name_index"))
+    names = extract_names(with_doc(records))
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    # the default route reads the 2-row index's size estimate and plans
+    # the broadcast arm; the salted arm splits hot keys off with
+    # left-semi joins, which the broadcast arm never plans
+    def broadcast_route(index) -> bool:
+        p = plan(name_join(names, index))
+        return "strategy=broadcast" in p and "LeftSemi" not in p
+
+    assert broadcast_route(idx["name_index"])
+    # an index built from local rows has no size estimate and keeps
+    # the broadcast route
+    assert broadcast_route(local_index)
+    assert "LeftSemi" in plan(name_join_salted(names, idx["name_index"]))
     bc = sorted(map(tuple, reconcile(records, idx).collect()))
-    sj = sorted(map(tuple, reconcile(records, idx, broadcast_index=False).collect()))
-    assert bc == sj
-    # auto-routing: a tiny index picks the broadcast arm, a forced-low
-    # threshold picks the salted arm — both must keep the same edges
-    assert sorted(map(tuple, reconcile(records, idx, broadcast_index="auto").collect())) == bc
-    assert sorted(map(tuple, reconcile(
-        records, idx, broadcast_index="auto", auto_broadcast_max_rows=0
-    ).collect())) == bc
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    for threshold in ("-1", "1"):
+        spark.conf.set(key, threshold)
+        try:
+            assert not broadcast_route(idx["name_index"])
+            routed = sorted(map(tuple, reconcile(records, idx).collect()))
+        finally:
+            spark.conf.set(key, prev)
+        assert routed == bc
+    direct = sorted(map(tuple, name_join_salted(names, idx["name_index"]).collect()))
+    assert direct == bc
     # the celebrity fan-out actually happened: every hot-name record got
     # the same target edge
     n_hot = sum(1 for r in bc if r[1].endswith("/idx/T1"))

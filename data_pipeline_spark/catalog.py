@@ -140,3 +140,18 @@ def empty_relation(spark: SparkSession, schema: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     return spark.createDataFrame([], schema).filter(F.lit(False))
+
+
+# the four curated reconcile indexes (pipeline.reconcile's ``indexes``)
+INDEX_SCHEMAS = {
+    "name_index": "source string, name_clean string, target_identifier string, rectype string",
+    "uri_index": "source string, ext_uri string, target_identifier string, rectype string",
+    "same_as": "uri_a string, uri_b string",
+    "different_from": "uri_a string, uri_b string",
+}
+
+
+def empty_indexes(spark: SparkSession) -> dict[str, DataFrame]:
+    """Every reconcile index absent: four provably-empty relations, so
+    reconcile elides the joins against them."""
+    return {key: empty_relation(spark, schema) for key, schema in INDEX_SCHEMAS.items()}

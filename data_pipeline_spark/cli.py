@@ -24,13 +24,6 @@ import json
 import os
 import sys
 
-INDEX_SCHEMAS = {
-    "name_index": "source string, name_clean string, target_identifier string, rectype string",
-    "uri_index": "source string, ext_uri string, target_identifier string, rectype string",
-    "same_as": "uri_a string, uri_b string",
-    "different_from": "uri_a string, uri_b string",
-}
-
 BUILD_TIERS = ("merged", "idmap", "edges", "facets", "names", "equiv_edges", "reidentified")
 
 
@@ -41,13 +34,15 @@ def _spark(args):
 
 
 def _load_indexes(spark, args):
-    out = {}
-    for key in INDEX_SCHEMAS:
+    """The reconcile indexes named by --name-index etc.; an absent one is
+    provably empty, so reconcile elides its joins."""
+    from .catalog import empty_indexes
+
+    out = empty_indexes(spark)
+    for key in out:
         path = getattr(args, key, None)
         if path:
             out[key] = spark.read.parquet(path)
-        else:
-            out[key] = spark.createDataFrame([], INDEX_SCHEMAS[key])
     return out
 
 
@@ -536,6 +531,8 @@ def cmd_list(args) -> int:
 
 
 def _add_index_opts(p: argparse.ArgumentParser) -> None:
+    from .catalog import INDEX_SCHEMAS
+
     for key in INDEX_SCHEMAS:
         p.add_argument(f"--{key.replace('_', '-')}", dest=key, metavar="PARQUET")
 

@@ -16,14 +16,43 @@ from pyspark.sql import functions as F
 # zero-width + bidi control characters stripped from reconcile join keys
 _CTRL_CLASS = r"[\x{200B}-\x{200F}\x{202A}-\x{202E}\x{FEFF}]"
 
+# The one whitespace class every tokenizer, fingerprint and collapse
+# splits on, in Spark and in the DuckDB oracles alike: Java's \s matches
+# \x0b where RE2's does not, so the class is spelled out (property-tested
+# against the oracle on pathological corpora, tests/test_properties.py).
+WS = r"[ \t\n\f\r]+"
+
+
+def words(col: Column, lower: bool) -> Column:
+    """The whitespace tokenizer: ``col`` trimmed of spaces (and
+    lowercased when ``lower``), split on WS."""
+    return F.split(F.lower(F.trim(col)) if lower else F.trim(col), WS)
+
+
+# Spark's trim strips only ' '; DuckDB's one-argument trim also strips
+# U+00A0 and the other Unicode space separators, so every twin names ' '
+def words_sql(expr: str, lower: bool) -> str:
+    """DuckDB twin of words."""
+    inner = f"lower(trim({expr}, ' '))" if lower else f"trim({expr}, ' ')"
+    return f"regexp_split_to_array({inner}, '{WS}')"
+
+
+def content_fp(col: Column) -> Column:
+    """The d02 content fingerprint: md5 of the lowercased, trimmed text
+    with every whitespace run collapsed to one space."""
+    return F.md5(F.regexp_replace(F.lower(F.trim(col)), WS, " "))
+
+
+def content_fp_sql(expr: str) -> str:
+    """DuckDB twin of content_fp."""
+    return f"md5(regexp_replace(lower(trim({expr}, ' ')), '{WS}', ' ', 'g'))"
+
 
 def clean_name(col: Column) -> Column:
     """F8: strip zero-width/bidi controls, collapse whitespace, lower, trim
     — the canonical reconcile name key."""
     no_ctrl = F.regexp_replace(col, _CTRL_CLASS, "")
-    # pinned explicit whitespace class (repo convention: \x0b is NOT
-    # whitespace; Java \s would include it where RE2's does not)
-    one_space = F.regexp_replace(no_ctrl, r"[ \t\n\f\r]+", " ")
+    one_space = F.regexp_replace(no_ctrl, WS, " ")
     return F.lower(F.trim(one_space))
 
 
@@ -158,5 +187,4 @@ def strip_html(col: Column) -> Column:
     lt = F.regexp_replace(amp, r"&lt;", "<")
     gt = F.regexp_replace(lt, r"&gt;", ">")
     nbsp = F.regexp_replace(gt, r"&nbsp;", " ")
-    # pinned explicit whitespace class — pairs with the f14 oracle
-    return F.trim(F.regexp_replace(nbsp, r"[ \t\n\f\r]+", " "))
+    return F.trim(F.regexp_replace(nbsp, WS, " "))

@@ -85,6 +85,21 @@ def connected_components(
     return out
 
 
+def closure_sql(edges: str, src: str, dst: str) -> str:
+    """DuckDB twin of connected_components for the oracles: the ``sym``
+    and recursive ``walk(node, label)`` CTEs over the relation ``edges``
+    (columns ``src``, ``dst``), to sit under WITH RECURSIVE.  A node's
+    component is ``MIN(label)`` of its walk rows."""
+    return f"""sym AS (SELECT {src} AS s, {dst} AS d FROM {edges}
+            UNION SELECT {dst}, {src} FROM {edges}),
+    walk(node, label) AS (
+        SELECT s, s FROM sym
+        UNION
+        SELECT e.d, w.label FROM walk w JOIN sym e ON w.node = e.s
+        WHERE w.label < e.d
+    )"""
+
+
 def _close_local(tbl: pa.Table) -> tuple[pa.Array, pa.Array, int]:
     """(sorted nodes, their component labels, hooking rounds) of a
     gathered two-column edge table.

@@ -15,6 +15,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import INDEX_SCHEMAS
+
 URI = "https://fixture.test"
 
 
@@ -224,15 +226,11 @@ def fixture_tables(spark: SparkSession) -> dict[str, DataFrame]:
     """All Family-B fixture tables as DataFrames."""
     return {
         "records": spark.createDataFrame(build_records(), RECORDS_SCHEMA),
-        "name_index": spark.createDataFrame(
-            build_name_index(), "source string, name_clean string, target_identifier string, rectype string"
-        ),
-        "uri_index": spark.createDataFrame(
-            build_uri_index(), "source string, ext_uri string, target_identifier string, rectype string"
-        ),
-        "same_as": spark.createDataFrame(build_same_as(), "uri_a string, uri_b string"),
+        "name_index": spark.createDataFrame(build_name_index(), INDEX_SCHEMAS["name_index"]),
+        "uri_index": spark.createDataFrame(build_uri_index(), INDEX_SCHEMAS["uri_index"]),
+        "same_as": spark.createDataFrame(build_same_as(), INDEX_SCHEMAS["same_as"]),
         "different_from": spark.createDataFrame(
-            build_different_from(), "uri_a string, uri_b string"
+            build_different_from(), INDEX_SCHEMAS["different_from"]
         ),
         "idmap_prev": spark.createDataFrame(
             build_idmap_prev(), "qua_uri string, rectype string, yuid string"

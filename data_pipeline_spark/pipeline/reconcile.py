@@ -39,9 +39,12 @@ def local_uri_expr(source_col, ident_col):
 
 
 def _statically_empty(df: DataFrame) -> bool:
-    """True iff ``df`` is PROVABLY empty at plan time — a literal empty
-    LocalRelation (``createDataFrame([], schema)``), the shape the CLI
-    and gates pass for an absent curated index.  Plan introspection
+    """True iff ``df`` is PROVABLY empty at plan time — its optimized plan
+    is an empty LocalRelation, the shape ``catalog.empty_relation`` (and
+    so ``catalog.empty_indexes``) builds for an absent curated index and
+    the CLI and gates pass.  A bare ``createDataFrame([], schema)`` is
+    NOT such a plan: it optimizes to a LogicalRDD, so this returns False
+    for it and no join is elided.  Plan introspection
     only: no job, no take(1) scan, and a False answer merely means "not
     provable", never skips real data.  Used to elide whole join stages
     (r15 opt, guide §2.4 — remove shuffles outright): joining, unioning

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import empty_relation, load_table
+from ..catalog import empty_indexes, load_table
 from .registry import query
 
 _MERGE_ORDER = {"srcA": 0, "srcB": 1}
@@ -169,12 +169,7 @@ def b01_entity_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.build import run_build
 
     records = _pair_records(spark, sf_dir)
-    indexes = {
-        "name_index": empty_relation(spark, "source string, name_clean string, target_identifier string, rectype string"),
-        "uri_index": empty_relation(spark, "source string, ext_uri string, target_identifier string, rectype string"),
-        "same_as": empty_relation(spark, "uri_a string, uri_b string"),
-        "different_from": empty_relation(spark, "uri_a string, uri_b string"),
-    }
+    indexes = empty_indexes(spark)
     # this gate consumes TWO tiers (merged + reidentified); run_build's
     # checkpoints run the chain once for both, like the production CLI
     out = run_build(spark, records, indexes, merge_order=_MERGE_ORDER)
@@ -244,12 +239,7 @@ def b02_entity_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.edges import to_ntriples
 
     records = _pair_records(spark, sf_dir, with_membership=True)
-    indexes = {
-        "name_index": empty_relation(spark, "source string, name_clean string, target_identifier string, rectype string"),
-        "uri_index": empty_relation(spark, "source string, ext_uri string, target_identifier string, rectype string"),
-        "same_as": empty_relation(spark, "uri_a string, uri_b string"),
-        "different_from": empty_relation(spark, "uri_a string, uri_b string"),
-    }
+    indexes = empty_indexes(spark)
     # two consumed tiers (edges via merged + reidentified): the chain
     # runs once, as in b01
     out = run_build(spark, records, indexes, merge_order=_MERGE_ORDER)
@@ -305,12 +295,7 @@ def b03_entity_facets_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.edges import extract_facets, extract_names_table
 
     records = _pair_records(spark, sf_dir, with_names=True)
-    indexes = {
-        "name_index": empty_relation(spark, "source string, name_clean string, target_identifier string, rectype string"),
-        "uri_index": empty_relation(spark, "source string, ext_uri string, target_identifier string, rectype string"),
-        "same_as": empty_relation(spark, "uri_a string, uri_b string"),
-        "different_from": empty_relation(spark, "uri_a string, uri_b string"),
-    }
+    indexes = empty_indexes(spark)
     out = run_build(spark, records, indexes, merge_order=_MERGE_ORDER)
     members = out["reidentified"].groupBy("yuid").agg(
         F.min("identifier").alias("identifier")
@@ -366,12 +351,7 @@ def b04_entity_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.edges import extract_texts, word_query
 
     records = _pair_records(spark, sf_dir, with_names=True, with_statement=True)
-    indexes = {
-        "name_index": empty_relation(spark, "source string, name_clean string, target_identifier string, rectype string"),
-        "uri_index": empty_relation(spark, "source string, ext_uri string, target_identifier string, rectype string"),
-        "same_as": empty_relation(spark, "uri_a string, uri_b string"),
-        "different_from": empty_relation(spark, "uri_a string, uri_b string"),
-    }
+    indexes = empty_indexes(spark)
     out = run_build(spark, records, indexes, merge_order=_MERGE_ORDER)
     members = out["reidentified"].groupBy("yuid").agg(
         F.min("identifier").alias("identifier")

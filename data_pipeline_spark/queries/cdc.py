@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import empty_relation, load_table
+from ..catalog import empty_indexes, load_table
 from .registry import query
 
 
@@ -360,6 +360,75 @@ def rj02_overlapping_order_windows(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+# The r11/r12 pair corpus: srcA_k ~ srcB_k per customer k, each record
+# named [K<k>, <src>name<k>], and the merge order both gates build with.
+_PAIR_ORDER = {"srcA": 0, "srcB": 1, "srcN": 2}
+
+
+def _pair_rec(src: str, label_prefix: str, extra_name: str, link_to: str | None):
+    """A Person record document for customer c_custkey from ``src``,
+    labelled <label_prefix><k>, optionally equivalent to ``link_to``'s."""
+    ks = F.col("c_custkey").cast("string")
+    uri = F.concat(F.lit(f"https://fixture.test/{src}/"), ks)
+    fields = [
+        uri.alias("id"),
+        F.lit("Person").alias("type"),
+        F.concat(F.lit(label_prefix), ks).alias("_label"),
+        F.array(
+            F.struct(
+                F.lit("Name").alias("type"),
+                F.concat(F.lit("K"), ks).alias("content"),
+            ),
+            F.struct(
+                F.lit("Name").alias("type"),
+                F.concat(F.lit(extra_name), ks).alias("content"),
+            ),
+        ).alias("identified_by"),
+    ]
+    if link_to is not None:
+        fields.append(
+            F.array(
+                F.struct(
+                    F.concat(
+                        F.lit(f"https://fixture.test/{link_to}/"), ks
+                    ).alias("id"),
+                    F.lit("Person").alias("type"),
+                )
+            ).alias("equivalent")
+        )
+    return F.to_json(F.struct(*fields))
+
+
+def _pair_records(cust: DataFrame) -> DataFrame:
+    """The previous build's records: srcA_k (linking srcB_k) and srcB_k."""
+
+    def envelope(src: str, data):
+        return cust.select(
+            F.lit(src).alias("source"),
+            F.col("c_custkey").cast("string").alias("identifier"),
+            F.lit("Person").alias("rectype"),
+            F.lit("2026-01-01T00:00:00").alias("record_time"),
+            F.lit("create").alias("change"),
+            data.alias("data"),
+        )
+
+    return envelope("srcA", _pair_rec("srcA", "A", "Aname", "srcB")).unionByName(
+        envelope("srcB", _pair_rec("srcB", "B", "Bname", None))
+    )
+
+
+def _pair_rows(merged: DataFrame) -> DataFrame:
+    """(comp_key, label, n_names) of each merged entity document."""
+    names_schema = "identified_by array<struct<type:string,content:string>>"
+    return merged.select(
+        F.get_json_object(F.col("data"), "$.identified_by[0].content").alias("comp_key"),
+        F.get_json_object(F.col("data"), "$._label").alias("label"),
+        F.size(F.from_json(F.col("data"), names_schema).identified_by)
+        .cast("long")
+        .alias("n_names"),
+    )
+
+
 @query(
     "r11_incremental_build",
     oracle="""
@@ -397,57 +466,9 @@ def r11_incremental_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.col("c_custkey")
     ks = k.cast("string")
 
-    def rec(src: str, label_prefix: str, extra_name: str, link_to: str | None):
-        uri = F.concat(F.lit(f"https://fixture.test/{src}/"), ks)
-        fields = [
-            uri.alias("id"),
-            F.lit("Person").alias("type"),
-            F.concat(F.lit(label_prefix), ks).alias("_label"),
-            F.array(
-                F.struct(
-                    F.lit("Name").alias("type"),
-                    F.concat(F.lit("K"), ks).alias("content"),
-                ),
-                F.struct(
-                    F.lit("Name").alias("type"),
-                    F.concat(F.lit(extra_name), ks).alias("content"),
-                ),
-            ).alias("identified_by"),
-        ]
-        if link_to is not None:
-            fields.append(
-                F.array(
-                    F.struct(
-                        F.concat(
-                            F.lit(f"https://fixture.test/{link_to}/"), ks
-                        ).alias("id"),
-                        F.lit("Person").alias("type"),
-                    )
-                ).alias("equivalent")
-            )
-        return F.to_json(F.struct(*fields))
-
-    def envelope(src: str, data):
-        return cust.select(
-            F.lit(src).alias("source"),
-            ks.alias("identifier"),
-            F.lit("Person").alias("rectype"),
-            F.lit("2026-01-01T00:00:00").alias("record_time"),
-            F.lit("create").alias("change"),
-            data.alias("data"),
-        )
-
-    prev_records = envelope("srcA", rec("srcA", "A", "Aname", "srcB")).unionByName(
-        envelope("srcB", rec("srcB", "B", "Bname", None))
-    )
-    indexes = {
-        "name_index": empty_relation(spark, "source string, name_clean string, target_identifier string, rectype string"),
-        "uri_index": empty_relation(spark, "source string, ext_uri string, target_identifier string, rectype string"),
-        "same_as": empty_relation(spark, "uri_a string, uri_b string"),
-        "different_from": empty_relation(spark, "uri_a string, uri_b string"),
-    }
-    order = {"srcA": 0, "srcB": 1, "srcN": 2}
-    prev = run_build(spark, prev_records, indexes, merge_order=order)
+    prev_records = _pair_records(cust)
+    indexes = empty_indexes(spark)
+    prev = run_build(spark, prev_records, indexes, merge_order=_PAIR_ORDER)
 
     a_uri = F.concat(F.lit("https://fixture.test/srcA/"), ks)
     n_uri = F.concat(F.lit("https://fixture.test/srcN/"), ks)
@@ -465,8 +486,8 @@ def r11_incremental_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("create"))
             .alias("change"),
             F.when(m == 2, n_uri).otherwise(a_uri).alias("object_uri"),
-            F.when(m == 1, rec("srcA", "U", "Uname", "srcB"))
-            .when(m == 2, rec("srcN", "N", "Nname", "srcA"))
+            F.when(m == 1, _pair_rec("srcA", "U", "Uname", "srcB"))
+            .when(m == 2, _pair_rec("srcN", "N", "Nname", "srcA"))
             .alias("payload"),
         )
     )
@@ -477,17 +498,10 @@ def r11_incremental_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         indexes,
         idmap_prev=prev["idmap"],
         prev_merged=prev["merged"],
-        merge_order=order,
+        merge_order=_PAIR_ORDER,
         last_harvest="2026-01-15T00:00:00",
     )
-    names_schema = "identified_by array<struct<type:string,content:string>>"
-    return inc["merged_full"].select(
-        F.get_json_object(F.col("data"), "$.identified_by[0].content").alias("comp_key"),
-        F.get_json_object(F.col("data"), "$._label").alias("label"),
-        F.size(F.from_json(F.col("data"), names_schema).identified_by)
-        .cast("long")
-        .alias("n_names"),
-    )
+    return _pair_rows(inc["merged_full"])
 
 
 @query(
@@ -538,56 +552,8 @@ def r12_entity_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.col("c_custkey")
     ks = k.cast("string")
 
-    def rec(src: str, label_prefix: str, extra_name: str, link_to: str | None):
-        uri = F.concat(F.lit(f"https://fixture.test/{src}/"), ks)
-        fields = [
-            uri.alias("id"),
-            F.lit("Person").alias("type"),
-            F.concat(F.lit(label_prefix), ks).alias("_label"),
-            F.array(
-                F.struct(
-                    F.lit("Name").alias("type"),
-                    F.concat(F.lit("K"), ks).alias("content"),
-                ),
-                F.struct(
-                    F.lit("Name").alias("type"),
-                    F.concat(F.lit(extra_name), ks).alias("content"),
-                ),
-            ).alias("identified_by"),
-        ]
-        if link_to is not None:
-            fields.append(
-                F.array(
-                    F.struct(
-                        F.concat(
-                            F.lit(f"https://fixture.test/{link_to}/"), ks
-                        ).alias("id"),
-                        F.lit("Person").alias("type"),
-                    )
-                ).alias("equivalent")
-            )
-        return F.to_json(F.struct(*fields))
-
-    def envelope(src: str, data):
-        return cust.select(
-            F.lit(src).alias("source"),
-            ks.alias("identifier"),
-            F.lit("Person").alias("rectype"),
-            F.lit("2026-01-01T00:00:00").alias("record_time"),
-            F.lit("create").alias("change"),
-            data.alias("data"),
-        )
-
-    records = envelope("srcA", rec("srcA", "A", "Aname", "srcB")).unionByName(
-        envelope("srcB", rec("srcB", "B", "Bname", None))
-    )
-    indexes = {
-        "name_index": empty_relation(spark, "source string, name_clean string, target_identifier string, rectype string"),
-        "uri_index": empty_relation(spark, "source string, ext_uri string, target_identifier string, rectype string"),
-        "same_as": empty_relation(spark, "uri_a string, uri_b string"),
-        "different_from": empty_relation(spark, "uri_a string, uri_b string"),
-    }
-    order = {"srcA": 0, "srcB": 1, "srcN": 2}
+    records = _pair_records(cust)
+    indexes = empty_indexes(spark)
 
     a_uri = F.concat(F.lit("https://fixture.test/srcA/"), ks)
     n_uri = F.concat(F.lit("https://fixture.test/srcN/"), ks)
@@ -597,7 +563,7 @@ def r12_entity_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("2026-02-01T00:00:00").cast("timestamp").alias("end_time"),
         F.when(m == 0, F.lit("delete")).otherwise(F.lit("update")).alias("change"),
         a_uri.alias("object_uri"),
-        F.when(m == 1, rec("srcA", "U", "Uname", "srcB")).alias("payload"),
+        F.when(m == 1, _pair_rec("srcA", "U", "Uname", "srcB")).alias("payload"),
     )
     crawl2 = cust.filter(m.isin(1, 2, 3)).select(
         k.alias("seq"),
@@ -610,8 +576,8 @@ def r12_entity_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("create"))
         .alias("change"),
         F.when(m == 2, n_uri).otherwise(a_uri).alias("object_uri"),
-        F.when(m == 1, rec("srcA", "V", "Vname", "srcB"))
-        .when(m == 2, rec("srcN", "N", "Nname", "srcA"))
+        F.when(m == 1, _pair_rec("srcA", "V", "Vname", "srcB"))
+        .when(m == 2, _pair_rec("srcN", "N", "Nname", "srcA"))
         .alias("payload"),
     )
 
@@ -629,21 +595,14 @@ def r12_entity_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state_dir = os.path.join(work, "state")
     ckpt = os.path.join(work, "ckpt")
-    init_state(spark, records, indexes, state_dir, merge_order=order)
+    init_state(spark, records, indexes, state_dir, merge_order=_PAIR_ORDER)
     q = stream_entity_builds(
         spark, feed_dir, state_dir, ckpt, indexes,
-        merge_order=order, last_harvest="2026-01-15T00:00:00",
+        merge_order=_PAIR_ORDER, last_harvest="2026-01-15T00:00:00",
     )
     q.awaitTermination(600)
 
-    names_schema = "identified_by array<struct<type:string,content:string>>"
-    out = latest_state(spark, state_dir, ckpt)["merged"].select(
-        F.get_json_object(F.col("data"), "$.identified_by[0].content").alias("comp_key"),
-        F.get_json_object(F.col("data"), "$._label").alias("label"),
-        F.size(F.from_json(F.col("data"), names_schema).identified_by)
-        .cast("long")
-        .alias("n_names"),
-    )
+    out = _pair_rows(latest_state(spark, state_dir, ckpt)["merged"])
     # materialize, then reclaim the corpus-scale workdir (ADVICE r12:
     # the gate runs at least twice per round — verify + bench — and each
     # run leaked full state tiers + feed + checkpoint into /tmp).  A

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.strings import content_fp, content_fp_sql, words, words_sql
 from ..operators.similarity import (
     COSINE_SQL,
     cosine,
@@ -31,8 +32,9 @@ from ..operators.similarity import (
     hamming1_flips_sql,
     multiprobe_pairs,
 )
+from ..pipeline.closure import closure_sql, connected_components
 from .registry import query
-from .text3 import _WS_SPLIT
+from .text import QUALITY_OK_SQL, quality_counts, quality_counts_sql, quality_ok
 
 N_SIGS = 8  # min-hash permutations
 N_BANDS = 4  # bands of 2 rows each
@@ -149,7 +151,7 @@ def shingle_arrays_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     """(id, sh): distinct 3-word shingles per document as a row-local
     array — set-identical to exploding + distinct (pinned by the
     unchanged DuckDB oracles), but the dedup costs no shuffle."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), _WS_SPLIT)
+    toks = words(F.col(text_col), True)
     return (
         docs.select(F.col(id_col).alias("id"), toks.alias("toks"))
         .filter(F.size("toks") >= 3)
@@ -375,7 +377,7 @@ def verified_pairs_from_arrays(
 # ---------------------------------------------------------------------------
 # oracle SQL generators (same constructions in DuckDB dialect)
 # ---------------------------------------------------------------------------
-def _shingles_sql(src: str = "documents") -> str:
+def _shingles_sql(src: str) -> str:
     """The 3-word-shingle CTE over any (doc_id, text) relation — ``src``
     parameterized so the d41 composed build can shingle the substring-
     CLEANED text with the same construction the raw-document oracles
@@ -386,16 +388,13 @@ def _shingles_sql(src: str = "documents") -> str:
             SELECT doc_id,
                    unnest(list_transform(range(1, len(toks) - 1),
                           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingle
-            FROM (SELECT doc_id,
-                         regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+') AS toks
+            FROM (SELECT doc_id, {words_sql("text", True)} AS toks
                   FROM {src})
             WHERE len(toks) >= 3
         )
     )
 """
 
-
-_SHINGLES_SQL = _shingles_sql()
 
 
 def _sig_sql() -> str:
@@ -416,29 +415,95 @@ def _bands_sql() -> str:
     return "bands AS (" + " UNION ALL ".join(parts) + ")"
 
 
-MINHASH_ORACLE = f"""
-    WITH {_SHINGLES_SQL},
+def _cands_sql(src: str) -> str:
+    """The shingles, sigs, bands and cands CTEs over a (doc_id, text)
+    relation: cands holds every pair (id_a < id_b) sharing a band bucket."""
+    return f"""{_shingles_sql(src)},
     {_sig_sql()},
     {_bands_sql()},
     cands AS (
         SELECT DISTINCT a.id AS id_a, b.id AS id_b
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM shingles GROUP BY id),
+    )"""
+
+
+def _verify_sql(cands: str, a: str, b: str) -> str:
+    """The sizes and inter CTEs of the exact Jaccard verify: each
+    document's shingle count, and the shingles each candidate pair
+    (``a``, ``b``) of the relation ``cands`` shares."""
+    return f"""sizes AS (SELECT id, COUNT(*) AS n FROM shingles GROUP BY id),
     inter AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS n_both
-        FROM cands c
-        JOIN shingles sa ON c.id_a = sa.id
-        JOIN shingles sb ON c.id_b = sb.id AND sa.shingle = sb.shingle
-        GROUP BY c.id_a, c.id_b
-    )
-    SELECT id_a, id_b,
-           ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) AS jaccard
-    FROM inter JOIN sizes na ON id_a = na.id
-               JOIN sizes nb ON id_b = nb.id
-    WHERE ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) >= {JACCARD_T}
+        SELECT c.{a}, c.{b}, COUNT(*) AS n_both
+        FROM {cands} c
+        JOIN shingles sa ON c.{a} = sa.id
+        JOIN shingles sb ON c.{b} = sb.id AND sa.shingle = sb.shingle
+        GROUP BY c.{a}, c.{b}
+    )"""
+
+
+# a verified pair's exact Jaccard, over inter joined to both sizes
+_JACCARD_SQL = "ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6)"
+
+
+def _verified_sql(a: str, b: str, cols: str) -> str:
+    """SELECT ``cols`` of the candidate pairs whose exact Jaccard
+    (_JACCARD_SQL) reaches JACCARD_T — the verify's last step, after
+    _verify_sql's CTEs."""
+    return f"""SELECT {cols}
+    FROM inter JOIN sizes na ON {a} = na.id
+               JOIN sizes nb ON {b} = nb.id
+    WHERE {_JACCARD_SQL} >= {JACCARD_T}"""
+
+
+MINHASH_ORACLE = f"""
+    WITH {_cands_sql("documents")},
+    {_verify_sql("cands", "id_a", "id_b")}
+    {_verified_sql("id_a", "id_b", f"id_a, id_b, {_JACCARD_SQL} AS jaccard")}
 """
+
+# the verified near-dup pairs d12, d13 and d53 close into groups
+_PAIRS_SQL = f"""{_cands_sql("documents")},
+    {_verify_sql("cands", "id_a", "id_b")},
+    pairs AS ({_verified_sql("id_a", "id_b", "id_a, id_b")})"""
+
+
+def _groups_sql(edges: str) -> str:
+    """The sym, walk and groups CTEs: every node of the (id_a, id_b)
+    relation ``edges`` with its group's keeper, the min id of its
+    connected component."""
+    return f"""{closure_sql(edges, "id_a", "id_b")},
+    groups AS (SELECT node AS doc_id, MIN(label) AS keeper FROM walk GROUP BY node)"""
+
+
+def _quality_sql(src: str, cols: str) -> str:
+    """The quality CTE: ``cols`` of the (doc_id, text) relation ``src``
+    rows that pass the d04 quality rule."""
+    return f"""quality AS (
+        SELECT {cols} FROM (
+          SELECT doc_id, {quality_counts_sql("text")}
+          FROM {src}
+        ) WHERE {QUALITY_OK_SQL}
+    )"""
+
+
+# keeper election over quality q and groups g: a row survives when no
+# group holds it or it is its group's keeper (elect_keepers' twin)
+_KEEPERS_SQL = """LEFT JOIN groups g ON q.doc_id = g.doc_id
+    WHERE g.doc_id IS NULL OR g.keeper = q.doc_id"""
+
+
+def elect_keepers(quality: DataFrame, edges: DataFrame) -> DataFrame:
+    """Keeper election: the ``quality`` rows (keyed by doc_id) that no
+    near-dup group of ``edges`` (id_a, id_b) holds, or that are their
+    group's keeper, the min doc_id of its connected component.  The rows
+    gain that ``keeper`` column (null outside every group)."""
+    groups = connected_components(edges, src="id_a", dst="id_b").select(
+        F.col("node").alias("doc_id"), F.col("component").alias("keeper")
+    )
+    return quality.join(groups, "doc_id", "left").filter(
+        F.col("keeper").isNull() | (F.col("keeper") == F.col("doc_id"))
+    )
 
 
 @query("d07_minhash_lsh_pairs", oracle=MINHASH_ORACLE, survey="dedup-minhash-lsh")
@@ -455,35 +520,8 @@ def d07_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_GROUPS_ORACLE = f"""
-    WITH RECURSIVE {_SHINGLES_SQL},
-    {_sig_sql()},
-    {_bands_sql()},
-    cands AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM shingles GROUP BY id),
-    inter AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS n_both
-        FROM cands c
-        JOIN shingles sa ON c.id_a = sa.id
-        JOIN shingles sb ON c.id_b = sb.id AND sa.shingle = sb.shingle
-        GROUP BY c.id_a, c.id_b
-    ),
-    pairs AS (
-        SELECT id_a, id_b FROM inter
-        JOIN sizes na ON id_a = na.id JOIN sizes nb ON id_b = nb.id
-        WHERE ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) >= {JACCARD_T}
-    ),
-    sym AS (SELECT id_a AS s, id_b AS d FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-    walk(node, label) AS (
-        SELECT s, s FROM sym
-        UNION
-        SELECT e.d, w.label FROM walk w JOIN sym e ON w.node = e.s
-        WHERE w.label < e.d
-    )
+    WITH RECURSIVE {_PAIRS_SQL},
+    {closure_sql("pairs", "id_a", "id_b")}
     SELECT node AS doc_id, MIN(label) AS keeper_doc_id
     FROM walk GROUP BY node
 """
@@ -496,8 +534,6 @@ def d12_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-cleaning composition — candidate generation, verification,
     transitive grouping — each stage the scale-path form, pinned against a
     recursive-CTE oracle."""
-    from ..pipeline.closure import connected_components
-
     pairs = _verified_pairs_tier(spark, sf_dir)
     comps = connected_components(pairs.select("id_a", "id_b"), src="id_a", dst="id_b")
     return comps.select(
@@ -506,48 +542,11 @@ def d12_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CORPUS_CLEAN_ORACLE = f"""
-    WITH RECURSIVE {_SHINGLES_SQL},
-    {_sig_sql()},
-    {_bands_sql()},
-    cands AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM shingles GROUP BY id),
-    inter AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS n_both
-        FROM cands c
-        JOIN shingles sa ON c.id_a = sa.id
-        JOIN shingles sb ON c.id_b = sb.id AND sa.shingle = sb.shingle
-        GROUP BY c.id_a, c.id_b
-    ),
-    pairs AS (
-        SELECT id_a, id_b FROM inter
-        JOIN sizes na ON id_a = na.id JOIN sizes nb ON id_b = nb.id
-        WHERE ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) >= {JACCARD_T}
-    ),
-    sym AS (SELECT id_a AS s, id_b AS d FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-    walk(node, label) AS (
-        SELECT s, s FROM sym
-        UNION
-        SELECT e.d, w.label FROM walk w JOIN sym e ON w.node = e.s
-        WHERE w.label < e.d
-    ),
-    groups AS (SELECT node AS doc_id, MIN(label) AS keeper FROM walk GROUP BY node),
-    quality AS (
-        SELECT doc_id FROM (
-          SELECT doc_id,
-                 len(regexp_split_to_array(trim(text, ' '), '[ \t\n\f\r]+')) AS n_tokens,
-                 len(list_filter(regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+'),
-                                 t -> t IN ('the', 'a', 'of', 'and'))) AS n_stop
-          FROM documents
-        ) WHERE n_tokens >= 20 AND CAST(n_stop AS DOUBLE) / n_tokens < 0.5
-    )
+    WITH RECURSIVE {_PAIRS_SQL},
+    {_groups_sql("pairs")},
+    {_quality_sql("documents", "doc_id")}
     SELECT q.doc_id FROM quality q
-    LEFT JOIN groups g ON q.doc_id = g.doc_id
-    WHERE g.doc_id IS NULL OR g.keeper = q.doc_id
+    {_KEEPERS_SQL}
 """
 
 
@@ -558,28 +557,10 @@ def d13_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data prep job actually runs — every stage is the scale-path
     form; the only materialization is the shingle tier (reused by 4
     subtrees — a persisted table in production)."""
-    from ..pipeline.closure import connected_components
-
     docs = load_table(spark, sf_dir, "documents")
-
-    toks = F.split(F.trim(F.col("text")), _WS_SPLIT)
-    low_toks = F.split(F.lower(F.trim(F.col("text"))), _WS_SPLIT)
-    n_tokens = F.size(toks)
-    n_stop = F.size(F.filter(low_toks, lambda t: t.isin("the", "a", "of", "and")))
-    quality = docs.filter(
-        (n_tokens >= 20) & ((n_stop.cast("double") / n_tokens) < 0.5)
-    ).select("doc_id")
-
+    quality = docs.filter(quality_ok(*quality_counts(F.col("text")))).select("doc_id")
     pairs = _verified_pairs_tier(spark, sf_dir)
-    groups = connected_components(
-        pairs.select("id_a", "id_b"), src="id_a", dst="id_b"
-    ).select(F.col("node").alias("doc_id"), F.col("component").alias("keeper"))
-
-    return (
-        quality.join(groups, "doc_id", "left")
-        .filter(F.col("keeper").isNull() | (F.col("keeper") == F.col("doc_id")))
-        .select("doc_id")
-    )
+    return elect_keepers(quality, pairs.select("id_a", "id_b")).select("doc_id")
 
 
 EST_T = 0.5  # signature-agreement threshold for the estimate tier
@@ -589,14 +570,7 @@ _EST_AGREE = " + ".join(
 )
 
 MINHASH_ESTIMATE_ORACLE = f"""
-    WITH {_SHINGLES_SQL},
-    {_sig_sql()},
-    {_bands_sql()},
-    cands AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
-    )
+    WITH {_cands_sql("documents")}
     SELECT c.id_a, c.id_b,
            CAST(({_EST_AGREE}) AS DOUBLE) / {N_SIGS} AS est_jaccard
     FROM cands c
@@ -652,7 +626,7 @@ def simhash_df(docs: DataFrame, bits: int) -> DataFrame:
     two's-complement there).  32 bits, not 16: at 100TB the fingerprint
     must discriminate — a 16-bit hash leaves only 16 values per 4-bit
     band, so candidate buckets grow quadratically dense."""
-    toks = F.split(F.lower(F.trim(F.col("text"))), _WS_SPLIT)
+    toks = words(F.col("text"), True)
     h = F.md5(F.col("w"))
     # Per-doc word dedup is ROW-LOCAL (array_distinct) so the bit-sum
     # groupBy fully combines each doc map-side — the exchange carries
@@ -663,7 +637,7 @@ def simhash_df(docs: DataFrame, bits: int) -> DataFrame:
     # no explode at all — measured 3x SLOWER than this: lambda HOFs run
     # interpreted per element, outside whole-stage codegen, while
     # explode + md5 + partial agg stay codegen end-to-end.)
-    words = docs.select(
+    word_rows = docs.select(
         F.col("doc_id").alias("id"),
         F.explode(F.array_distinct(F.array_remove(toks, ""))).alias("w"),
     ).select(
@@ -692,7 +666,7 @@ def simhash_df(docs: DataFrame, bits: int) -> DataFrame:
         for p in range(bits // 2)
     ]
     sums.append(F.count(F.lit(1)).alias("nw"))
-    agg = words.groupBy("id").agg(*sums)
+    agg = word_rows.groupBy("id").agg(*sums)
     # flat shift-add, not a per-bit CASE chain: the deep when/otherwise
     # tree cost ~2.5s of one-time janino compilation per session
     # (measured); boolean-cast + shiftleft compiles in half the time and
@@ -721,7 +695,7 @@ def _simhash_sql(bits: int, src: str) -> str:
     return f"""
     words AS (
         SELECT DISTINCT doc_id AS id, w FROM (
-            SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+')) AS w
+            SELECT doc_id, unnest({words_sql("text", True)}) AS w
             FROM {src}) WHERE w <> ''
     ),
     hashed AS (SELECT id, substr(md5(w), 1, {bits // 4}) AS h FROM words),
@@ -1045,21 +1019,9 @@ _TIERED_SQL = f"""
         SELECT id_a, id_b FROM est
         WHERE est_jaccard >= {EST_REJECT} AND est_jaccard < {EST_ACCEPT}
     ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM shingles GROUP BY id),
-    inter AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS n_both
-        FROM border c
-        JOIN shingles sa ON c.id_a = sa.id
-        JOIN shingles sb ON c.id_b = sb.id AND sa.shingle = sb.shingle
-        GROUP BY c.id_a, c.id_b
-    ),
+    {_verify_sql("border", "id_a", "id_b")},
     exact AS (
-        SELECT id_a, id_b,
-               ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) AS sim,
-               'exact' AS method
-        FROM inter JOIN sizes na ON id_a = na.id
-                   JOIN sizes nb ON id_b = nb.id
-        WHERE ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) >= {JACCARD_T}
+        {_verified_sql("id_a", "id_b", f"id_a, id_b, {_JACCARD_SQL} AS sim, 'exact' AS method")}
     ),
     tier_pairs AS (
         SELECT * FROM accepted UNION ALL SELECT * FROM exact
@@ -1067,14 +1029,7 @@ _TIERED_SQL = f"""
 """
 
 TIERED_PAIRS_ORACLE = f"""
-    WITH {_SHINGLES_SQL},
-    {_sig_sql()},
-    {_bands_sql()},
-    cands AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
-    ),
+    WITH {_cands_sql("documents")},
     {_TIERED_SQL}
     SELECT id_a, id_b, sim, method FROM tier_pairs
 """
@@ -1112,14 +1067,7 @@ def fingerprint_star_edges(sims: DataFrame) -> DataFrame:
 
 
 CORPUS_CLEAN_TIERED_ORACLE = f"""
-    WITH RECURSIVE {_SHINGLES_SQL},
-    {_sig_sql()},
-    {_bands_sql()},
-    cands AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
-    ),
+    WITH RECURSIVE {_cands_sql("documents")},
     {_TIERED_SQL},
     {_simhash_sql(64, "documents")},
     sim_edges AS (
@@ -1132,27 +1080,10 @@ CORPUS_CLEAN_TIERED_ORACLE = f"""
         UNION
         SELECT id_a, id_b FROM sim_edges
     ),
-    sym AS (SELECT id_a AS s, id_b AS d FROM all_pairs
-            UNION SELECT id_b, id_a FROM all_pairs),
-    walk(node, label) AS (
-        SELECT s, s FROM sym
-        UNION
-        SELECT e.d, w.label FROM walk w JOIN sym e ON w.node = e.s
-        WHERE w.label < e.d
-    ),
-    groups AS (SELECT node AS doc_id, MIN(label) AS keeper FROM walk GROUP BY node),
-    quality AS (
-        SELECT doc_id FROM (
-          SELECT doc_id,
-                 len(regexp_split_to_array(trim(text, ' '), '[ \t\n\f\r]+')) AS n_tokens,
-                 len(list_filter(regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+'),
-                                 t -> t IN ('the', 'a', 'of', 'and'))) AS n_stop
-          FROM documents
-        ) WHERE n_tokens >= 20 AND CAST(n_stop AS DOUBLE) / n_tokens < 0.5
-    )
+    {_groups_sql("all_pairs")},
+    {_quality_sql("documents", "doc_id")}
     SELECT q.doc_id FROM quality q
-    LEFT JOIN groups g ON q.doc_id = g.doc_id
-    WHERE g.doc_id IS NULL OR g.keeper = q.doc_id
+    {_KEEPERS_SQL}
 """
 
 
@@ -1183,30 +1114,12 @@ def d36_corpus_clean_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard tier, which bounds them by verified similarity.  d13 remains
     the exact-verified correctness twin; d34's pairs relation remains
     the declared analysis query for when pairs ARE the product."""
-    from ..pipeline.closure import connected_components
-
     docs = load_table(spark, sf_dir, "documents")
-
-    toks = F.split(F.trim(F.col("text")), _WS_SPLIT)
-    low_toks = F.split(F.lower(F.trim(F.col("text"))), _WS_SPLIT)
-    n_tokens = F.size(toks)
-    n_stop = F.size(F.filter(low_toks, lambda t: t.isin("the", "a", "of", "and")))
-    quality = docs.filter(
-        (n_tokens >= 20) & ((n_stop.cast("double") / n_tokens) < 0.5)
-    ).select("doc_id")
-
+    quality = docs.filter(quality_ok(*quality_counts(F.col("text")))).select("doc_id")
     tier_pairs = tiered_verified_pairs(spark, sf_dir).select("id_a", "id_b")
     sims64 = _simhash_tier(spark, sf_dir, 64)
     edges = tier_pairs.unionByName(fingerprint_star_edges(sims64))
-
-    groups = connected_components(edges, src="id_a", dst="id_b").select(
-        F.col("node").alias("doc_id"), F.col("component").alias("keeper")
-    )
-    return (
-        quality.join(groups, "doc_id", "left")
-        .filter(F.col("keeper").isNull() | (F.col("keeper") == F.col("doc_id")))
-        .select("doc_id")
-    )
+    return elect_keepers(quality, edges).select("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1226,14 +1139,7 @@ def _d41_oracle() -> str:
         SELECT d.doc_id, COALESCE(a.clean_text, '') AS text
         FROM toked d LEFT JOIN clean_agg a USING (doc_id)
     ),
-    {_shingles_sql("documents_clean")},
-    {_sig_sql()},
-    {_bands_sql()},
-    cands AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
-    ),
+    {_cands_sql("documents_clean")},
     {_TIERED_SQL},
     {_simhash_sql(64, "documents_clean")},
     sim_edges AS (
@@ -1246,30 +1152,13 @@ def _d41_oracle() -> str:
         UNION
         SELECT id_a, id_b FROM sim_edges
     ),
-    sym AS (SELECT id_a AS s, id_b AS d FROM all_pairs
-            UNION SELECT id_b, id_a FROM all_pairs),
-    walk(node, label) AS (
-        SELECT s, s FROM sym
-        UNION
-        SELECT e.d, w.label FROM walk w JOIN sym e ON w.node = e.s
-        WHERE w.label < e.d
-    ),
-    groups AS (SELECT node AS doc_id, MIN(label) AS keeper FROM walk GROUP BY node),
-    quality AS (
-        SELECT doc_id, n_tokens FROM (
-          SELECT doc_id,
-                 len(regexp_split_to_array(trim(text, ' '), '[ \t\n\f\r]+')) AS n_tokens,
-                 len(list_filter(regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+'),
-                                 t -> t IN ('the', 'a', 'of', 'and'))) AS n_stop
-          FROM documents_clean
-        ) WHERE n_tokens >= 20 AND CAST(n_stop AS DOUBLE) / n_tokens < 0.5
-    )
+    {_groups_sql("all_pairs")},
+    {_quality_sql("documents_clean", "doc_id, n_tokens")}
     SELECT q.doc_id, c.text AS clean_text,
            CAST(q.n_tokens AS BIGINT) AS n_clean_tokens
     FROM quality q
     JOIN documents_clean c USING (doc_id)
-    LEFT JOIN groups g ON q.doc_id = g.doc_id
-    WHERE g.doc_id IS NULL OR g.keeper = q.doc_id
+    {_KEEPERS_SQL}
 """
 
 
@@ -1312,8 +1201,6 @@ def d41_training_data_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-shaped consumers; all near-dup machinery keeps its measured
     30x/100x posture (SCALE.md rounds 6-8) because the input shape
     (doc_id, text) is unchanged — only shorter."""
-    from ..pipeline.closure import connected_components
-
     cleaned = _d41_cleaned_tier(spark, sf_dir)
     da = _tier(spark, sf_dir, "d41_arrays", lambda: shingle_arrays_df(cleaned))
     sigs = _tier(
@@ -1327,46 +1214,32 @@ def d41_training_data_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier_pairs = tiered_pairs_from(da, est).select("id_a", "id_b")
     sims64 = _tier(spark, sf_dir, "d41_simhash64", lambda: simhash_df(cleaned, 64))
     edges = tier_pairs.unionByName(fingerprint_star_edges(sims64))
-    groups = connected_components(edges, src="id_a", dst="id_b").select(
-        F.col("node").alias("doc_id"), F.col("component").alias("keeper")
+    n_tokens, n_stop = quality_counts(F.col("text"))
+    quality = cleaned.filter(quality_ok(n_tokens, n_stop)).select(
+        "doc_id", n_tokens.cast("bigint").alias("n_clean_tokens")
     )
-
-    toks = F.split(F.trim(F.col("text")), _WS_SPLIT)
-    low_toks = F.split(F.lower(F.trim(F.col("text"))), _WS_SPLIT)
-    n_tokens = F.size(toks)
-    n_stop = F.size(F.filter(low_toks, lambda t: t.isin("the", "a", "of", "and")))
-    quality = cleaned.filter(
-        (n_tokens >= 20) & ((n_stop.cast("double") / n_tokens) < 0.5)
-    ).select("doc_id", n_tokens.cast("bigint").alias("n_clean_tokens"))
-
     return (
-        quality.join(groups, "doc_id", "left")
-        .filter(F.col("keeper").isNull() | (F.col("keeper") == F.col("doc_id")))
+        elect_keepers(quality, edges)
         .join(cleaned, "doc_id")
         .select("doc_id", F.col("text").alias("clean_text"), "n_clean_tokens")
     )
 
 
 def _d47_oracle() -> str:
-    from .text2 import SPLIT_TRAIN_LT, SPLIT_VAL_LT
+    from .text2 import SPLIT_BUCKET_SQL, SPLIT_CASE_SQL
 
     return f"""
     WITH built AS ({_d41_oracle()}),
     fp AS (
-        SELECT doc_id, n_clean_tokens,
-               md5(regexp_replace(lower(trim(clean_text)), '[ \\t\\n\\f\\r]+', ' ', 'g'))
-                 AS group_fp
+        SELECT doc_id, n_clean_tokens, {content_fp_sql("clean_text")} AS group_fp
         FROM built
     ),
     b AS (
         SELECT doc_id, n_clean_tokens,
-               CAST(CAST(('0x' || substr(md5(group_fp), 1, 2)) AS UBIGINT)
-                    AS BIGINT) AS bucket
+               {SPLIT_BUCKET_SQL.format(fp="group_fp")} AS bucket
         FROM fp
     )
-    SELECT CASE WHEN bucket < {SPLIT_TRAIN_LT} THEN 'train'
-                WHEN bucket < {SPLIT_VAL_LT} THEN 'val'
-                ELSE 'test' END AS split,
+    SELECT {SPLIT_CASE_SQL.format(b="bucket")} AS split,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_clean_tokens) AS BIGINT) AS n_tokens
     FROM b
@@ -1390,23 +1263,15 @@ def d47_training_split_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     accounting sums the already-computed n_clean_tokens.  At 100 TB the
     per-doc split column is written with the shards (shuffle-free, like
     d46); this manifest is its bounded per-split rollup."""
-    from .text2 import SPLIT_TRAIN_LT, SPLIT_VAL_LT
+    from .text2 import split_bucket, split_label
 
     built = d41_training_data_build(spark, sf_dir)
-    fp = F.md5(
-        F.regexp_replace(F.lower(F.trim(F.col("clean_text"))), r"[ \t\n\f\r]+", " ")
-    )
     b = built.select(
         "n_clean_tokens",
-        F.conv(F.substring(F.md5(fp), 1, 2), 16, 10).cast("long").alias("bucket"),
-    )
-    split = (
-        F.when(F.col("bucket") < SPLIT_TRAIN_LT, F.lit("train"))
-        .when(F.col("bucket") < SPLIT_VAL_LT, F.lit("val"))
-        .otherwise(F.lit("test"))
+        split_bucket(content_fp(F.col("clean_text"))).alias("bucket"),
     )
     return (
-        b.select(split.alias("split"), "n_clean_tokens")
+        b.select(split_label(F.col("bucket")).alias("split"), "n_clean_tokens")
         .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1523,7 +1388,6 @@ _D48_X_REV = " ".join(reversed(_D48_X.split()))
 def _d48_oracle() -> str:
     from .text4 import _BATCHDUP_MOD, _SHARED_MOD
 
-    ws = r"[ \t\n\f\r]+"
     return f"""
     WITH planted AS (
         SELECT doc_id,
@@ -1542,11 +1406,8 @@ def _d48_oracle() -> str:
     ),
     {_simhash_sql(64, 'planted')},
     feat AS (
-        SELECT doc_id,
-               md5(regexp_replace(lower(trim(text, ' ')), '{ws}', ' ', 'g')) AS fp,
-               len(regexp_split_to_array(trim(text, ' '), '{ws}')) AS n_tokens,
-               len(list_filter(regexp_split_to_array(lower(trim(text, ' ')), '{ws}'),
-                               t -> t IN ('the', 'a', 'of', 'and'))) AS n_stop,
+        SELECT doc_id, {content_fp_sql("text")} AS fp,
+               {quality_counts_sql("text")},
                (doc_id % {_D48_PREV_MOD} = 0) AS is_prev
         FROM planted
     ),
@@ -1566,8 +1427,7 @@ def _d48_oracle() -> str:
         FROM lvl1 WHERE NOT seen_prev
     ),
     lvl3 AS (
-        SELECT *, (n_tokens >= 20 AND CAST(n_stop AS DOUBLE) / n_tokens < 0.5)
-                  AS quality_ok
+        SELECT *, ({QUALITY_OK_SQL}) AS quality_ok
         FROM lvl2 WHERE rn = 1
     ),
     lvl4 AS (
@@ -1617,9 +1477,7 @@ def refresh_verdicts(
     w_fp = Window.partitionBy("fp").orderBy("doc_id")
     lvl2 = lvl1.filter(~F.col("seen_prev")).withColumn("rn", F.row_number().over(w_fp))
     lvl3 = lvl2.filter(F.col("rn") == 1).withColumn(
-        "quality_ok",
-        (F.col("n_tokens") >= 20)
-        & ((F.col("n_stop").cast("double") / F.col("n_tokens")) < 0.5),
+        "quality_ok", quality_ok(F.col("n_tokens"), F.col("n_stop"))
     )
     lvl4 = (
         lvl3.filter("quality_ok")
@@ -1658,17 +1516,12 @@ def refresh_features(docs: DataFrame) -> DataFrame:
     aggregate.  Shared by the d48 gate (over the planted split) and the
     scale tool (over a replica split); the admitted side of a production
     refresh appends exactly these columns to the two indexes."""
-    toks = F.split(F.trim(F.col("text")), _WS_SPLIT)
-    low_toks = F.split(F.lower(F.trim(F.col("text"))), _WS_SPLIT)
+    n_tokens, n_stop = quality_counts(F.col("text"))
     feat = docs.select(
         "doc_id",
-        F.md5(
-            F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS_SPLIT, " ")
-        ).alias("fp"),
-        F.size(toks).alias("n_tokens"),
-        F.size(F.filter(low_toks, lambda t: t.isin("the", "a", "of", "and"))).alias(
-            "n_stop"
-        ),
+        content_fp(F.col("text")).alias("fp"),
+        n_tokens.alias("n_tokens"),
+        n_stop.alias("n_stop"),
     )
     sims = simhash_df(docs, 64)
     return feat.join(sims, feat.doc_id == sims.id).drop("id")
@@ -1748,7 +1601,7 @@ def d48_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _D52_CAP = 4  # small enough that sf0.01 buckets actually split
 
 _D52_ORACLE = f"""
-    WITH {_SHINGLES_SQL},
+    WITH {_shingles_sql("documents")},
     {_sig_sql()},
     {_bands_sql()},
     split AS (
@@ -1800,39 +1653,11 @@ def d52_capped_tier_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _D53_ORACLE = f"""
-    WITH RECURSIVE {_SHINGLES_SQL},
-    {_sig_sql()},
-    {_bands_sql()},
-    cands AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM shingles GROUP BY id),
-    inter AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS n_both
-        FROM cands c
-        JOIN shingles sa ON c.id_a = sa.id
-        JOIN shingles sb ON c.id_b = sb.id AND sa.shingle = sb.shingle
-        GROUP BY c.id_a, c.id_b
-    ),
-    pairs AS (
-        SELECT id_a, id_b FROM inter
-        JOIN sizes na ON id_a = na.id JOIN sizes nb ON id_b = nb.id
-        WHERE ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) >= {JACCARD_T}
-    ),
-    sym AS (SELECT id_a AS s, id_b AS d FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-    walk(node, label) AS (
-        SELECT s, s FROM sym
-        UNION
-        SELECT e.d, w.label FROM walk w JOIN sym e ON w.node = e.s
-        WHERE w.label < e.d
-    ),
+    WITH RECURSIVE {_PAIRS_SQL},
+    {closure_sql("pairs", "id_a", "id_b")},
     comp AS (SELECT node, MIN(label) AS comp FROM walk GROUP BY node),
     tok AS (
-        SELECT doc_id,
-               len(regexp_split_to_array(trim(text), '[ \\t\\n\\f\\r]+')) AS n_tokens
+        SELECT doc_id, len({words_sql("text", False)}) AS n_tokens
         FROM documents
     ),
     keepers AS (
@@ -1867,15 +1692,13 @@ def d53_quality_keeper_election(spark: SparkSession, sf_dir: str) -> DataFrame:
     component (bounded groups), never globally."""
     from pyspark.sql import Window as W
 
-    from ..pipeline.closure import connected_components
-
     pairs = _verified_pairs_tier(spark, sf_dir)
     comps = connected_components(
         pairs.select("id_a", "id_b"), src="id_a", dst="id_b"
     ).select(F.col("node").alias("doc_id"), F.col("component").alias("comp"))
     tok = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"[ \t\n\f\r]+")).alias("n_tokens"),
+        F.size(words(F.col("text"), False)).alias("n_tokens"),
     )
     scored = comps.join(tok, "doc_id")
     w = W.partitionBy("comp").orderBy(F.desc("n_tokens"), "doc_id")

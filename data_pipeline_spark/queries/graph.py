@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..pipeline.closure import connected_components
+from ..pipeline.closure import closure_sql, connected_components, connected_components_star
 from .registry import query
 
 
@@ -289,9 +289,10 @@ def g03_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top
 
 
-@query(
-    "j09_closure_star",
-    oracle="""
+def _chain_oracle(link: int) -> str:
+    """Components of the ``link``-link customer chains (_chain_edges),
+    by the recursive-CTE closure."""
+    return f"""
     WITH RECURSIVE c AS (
         SELECT row_number() OVER (ORDER BY c_custkey) - 1 AS rn FROM customer
     ),
@@ -299,71 +300,45 @@ def g03_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT 'n' || lpad(CAST(rn AS VARCHAR), 8, '0') AS src,
                'n' || lpad(CAST(rn + 1 AS VARCHAR), 8, '0') AS dst
         FROM c
-        WHERE rn % 50 != 49 AND rn + 1 <= (SELECT MAX(rn) FROM c)
+        WHERE rn % {link} != {link - 1} AND rn + 1 <= (SELECT MAX(rn) FROM c)
     ),
-    sym AS (SELECT src AS s, dst AS d FROM edges
-            UNION SELECT dst, src FROM edges),
-    walk(node, label) AS (
-        SELECT s, s FROM sym
-        UNION
-        SELECT e.d, w.label FROM walk w JOIN sym e ON w.node = e.s
-        WHERE w.label < e.d
-    )
+    {closure_sql("edges", "src", "dst")}
     SELECT node, MIN(label) AS component FROM walk GROUP BY node
-    """,
-    survey="J5,graph-closure-star",
-)
-def j09_closure_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The distributed large-star/small-star closure (Kiveris et al.) as
-    its own driver gate, on the shape it exists for: 50-link CHAINS
-    (dense customer row numbers, chain edges rn -> rn+1 within blocks of
-    50).  It calls ``connected_components_star`` directly, because at
-    every driver scale factor the default closure routes to the local
-    gather — without this gate the path that takes over above the
-    broadcast threshold would have no driver proof.  Pins the star
-    rounds, the in-band fixpoint test and the root readout against the
-    same recursive-CTE oracle style as j05."""
-    from pyspark.sql import Window as W
+    """
 
-    from ..pipeline.closure import connected_components_star
+
+def _chain_edges(spark: SparkSession, sf_dir: str, link: int) -> DataFrame:
+    """(src, dst): chains of ``link`` nodes over the dense customer row
+    numbers, edges rn -> rn+1 within each block of ``link``."""
+    from pyspark.sql import Window as W
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     rn = F.row_number().over(W.orderBy("c_custkey")) - 1
     base = cust.select(rn.alias("rn"))
     node = F.concat(F.lit("n"), F.lpad(F.col("rn").cast("string"), 8, "0"))
     nxt = F.concat(F.lit("n"), F.lpad((F.col("rn") + 1).cast("string"), 8, "0"))
-    edges = (
+    return (
         base.withColumn("_has_next", F.lead("rn", 1).over(W.orderBy("rn")).isNotNull())
-        .filter((F.col("rn") % 50 != 49) & F.col("_has_next"))
+        .filter((F.col("rn") % link != link - 1) & F.col("_has_next"))
         .select(node.alias("src"), nxt.alias("dst"))
     )
-    return connected_components_star(edges)
 
 
-@query(
-    "j16_closure_auto_routed",
-    oracle="""
-    WITH RECURSIVE c AS (
-        SELECT row_number() OVER (ORDER BY c_custkey) - 1 AS rn FROM customer
-    ),
-    edges AS (
-        SELECT 'n' || lpad(CAST(rn AS VARCHAR), 8, '0') AS src,
-               'n' || lpad(CAST(rn + 1 AS VARCHAR), 8, '0') AS dst
-        FROM c
-        WHERE rn % 200 != 199 AND rn + 1 <= (SELECT MAX(rn) FROM c)
-    ),
-    sym AS (SELECT src AS s, dst AS d FROM edges
-            UNION SELECT dst, src FROM edges),
-    walk(node, label) AS (
-        SELECT s, s FROM sym
-        UNION
-        SELECT e.d, w.label FROM walk w JOIN sym e ON w.node = e.s
-        WHERE w.label < e.d
-    )
-    SELECT node, MIN(label) AS component FROM walk GROUP BY node
-    """,
-    survey="J5,graph-closure-auto",
-)
+@query("j09_closure_star", oracle=_chain_oracle(50), survey="J5,graph-closure-star")
+def j09_closure_star(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distributed large-star/small-star closure (Kiveris et al.) as
+    its own oracle gate, on the shape it exists for: 50-link CHAINS
+    (dense customer row numbers, chain edges rn -> rn+1 within blocks of
+    50).  It calls ``connected_components_star`` directly, because at
+    every testdata scale factor the default closure routes to the local
+    gather — without this gate the path that takes over above the
+    broadcast threshold would have no oracle-checked proof.  Pins the star
+    rounds, the in-band fixpoint test and the root readout against the
+    same recursive-CTE oracle style as j05."""
+    return connected_components_star(_chain_edges(spark, sf_dir, 50))
+
+
+@query("j16_closure_auto_routed", oracle=_chain_oracle(200), survey="J5,graph-closure-auto")
 def j16_closure_auto_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The closure's ROUTING as its own driver gate: 200-link chains
     through the DEFAULT closure, which must route to the local gather
@@ -375,22 +350,8 @@ def j16_closure_auto_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     broken size estimate cannot silently send every closure through the
     star rounds) and that its labels on long chains match the
     recursive-CTE oracle."""
-    from pyspark.sql import Window as W
-
-    from ..pipeline.closure import connected_components
-
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    rn = F.row_number().over(W.orderBy("c_custkey")) - 1
-    base = cust.select(rn.alias("rn"))
-    node = F.concat(F.lit("n"), F.lpad(F.col("rn").cast("string"), 8, "0"))
-    nxt = F.concat(F.lit("n"), F.lpad((F.col("rn") + 1).cast("string"), 8, "0"))
-    edges = (
-        base.withColumn("_has_next", F.lead("rn", 1).over(W.orderBy("rn")).isNotNull())
-        .filter((F.col("rn") % 200 != 199) & F.col("_has_next"))
-        .select(node.alias("src"), nxt.alias("dst"))
-    )
     stats: dict = {}
-    out = connected_components(edges, stats=stats)
+    out = connected_components(_chain_edges(spark, sf_dir, 200), stats=stats)
     # explicit raise, not assert: under `python -O` an assert is stripped
     # and the gate silently degrades into a star re-test — the exact
     # degradation this check exists to catch

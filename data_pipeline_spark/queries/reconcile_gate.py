@@ -22,7 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import empty_relation, load_table
+from ..catalog import empty_indexes, load_table
 from .registry import query
 
 # J7 golden yuids: uuid5(NAMESPACE_URL, "h{g}") for every possible hub —
@@ -248,14 +248,7 @@ def j06_reconcile_min_equivs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("t"), i).alias("target_identifier"),
         F.lit("Person").alias("rectype"),
     )
-    indexes = {
-        "name_index": name_index,
-        "uri_index": empty_relation(
-            spark, "ext_uri string, source string, target_identifier string, rectype string"
-        ),
-        "same_as": empty_relation(spark, "uri_a string, uri_b string"),
-        "different_from": empty_relation(spark, "uri_a string, uri_b string"),
-    }
+    indexes = {**empty_indexes(spark), "name_index": name_index}
     return reconcile(records, indexes, min_equivs=3)
 
 
@@ -523,12 +516,7 @@ def a02_skewed_merge_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("Person").alias("rectype"),
         data.alias("data"),
     )
-    indexes = {
-        "name_index": empty_relation(spark, "source string, name_clean string, target_identifier string, rectype string"),
-        "uri_index": empty_relation(spark, "source string, ext_uri string, target_identifier string, rectype string"),
-        "same_as": empty_relation(spark, "uri_a string, uri_b string"),
-        "different_from": empty_relation(spark, "uri_a string, uri_b string"),
-    }
+    indexes = empty_indexes(spark)
     edges = reconcile(records, indexes)
     all_uris = with_doc(records).select(
         F.coalesce(F.col("doc.id"), F.concat_ws("/", "source", "identifier")).alias("uri")

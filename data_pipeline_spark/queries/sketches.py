@@ -31,14 +31,12 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.strings import words, words_sql
 from .dedup import _tier
 from .registry import query
 
 # alpha_m * m^2 for m=256 registers: 0.7213/(1+1.079/256) * 65536.
 _HLL_ALPHA_M2 = 47072.71267120224
-
-_WS = r"[ \t\n\f\r]+"
-_WS_SQL = r"[ \t\n\f\r]+"
 
 # Count-min geometry: 4 rows x 1024 slots (disjoint 3-hex md5 windows).
 _CMS_DEPTHS = 4
@@ -58,7 +56,7 @@ def _tokens(docs: DataFrame) -> DataFrame:
     return (
         docs.select(
             "source",
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), _WS)).alias("tok"),
+            F.explode(words(F.col("text"), True)).alias("tok"),
         )
         .filter(F.col("tok") != "")
     )
@@ -66,7 +64,7 @@ def _tokens(docs: DataFrame) -> DataFrame:
 
 _TOK_SQL = f"""
       SELECT source,
-             unnest(regexp_split_to_array(lower(trim(text)), '{_WS_SQL}')) AS tok
+             unnest({words_sql("text", True)}) AS tok
       FROM documents
 """
 
@@ -384,7 +382,7 @@ def hist_bins(docs: DataFrame) -> DataFrame:
     driver-verifies the fold identity).  Same at-least-once posture as
     the CMS tier: SUM is not idempotent — the batch-keyed overwrite
     layout carries the retry contract."""
-    n_tokens = F.size(F.split(F.trim(F.col("text")), _WS))
+    n_tokens = F.size(words(F.col("text"), False))
     binned = docs.select(
         "source",
         F.when(n_tokens <= 0, F.lit(0))
@@ -438,7 +436,7 @@ def hist_quantiles(spark: SparkSession, hist: DataFrame) -> DataFrame:
 _D44_ORACLE = f"""
     WITH lens AS (
       SELECT source,
-             len(regexp_split_to_array(trim(text), '{_WS_SQL}')) AS n_tokens
+             len({words_sql("text", False)}) AS n_tokens
       FROM documents
     ),
     binned AS (

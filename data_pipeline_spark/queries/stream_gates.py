@@ -22,13 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import empty_relation, load_table
-from .dedup import JACCARD_T, _bands_sql, _shingles_sql, _sig_sql
+from ..catalog import empty_indexes, load_table
+from ..functions.strings import words_sql
+from .dedup import _JACCARD_SQL, _bands_sql, _shingles_sql, _sig_sql, _verified_sql, _verify_sql
 from .registry import query
 from .text3 import EMAIL_RE, IPV4_RE, PHONE_RE, _BENCH_MOD, _CONTAM_MOD, _PLANT
 from .text4 import _STOP_SQL
-
-from .text3 import _WS_SPLIT as _WS  # the one pinned separator (review catch)
 
 
 def _write_crawls(spark, workdir: str, crawls: list[DataFrame]) -> str:
@@ -85,7 +84,7 @@ _PII_TAIL_SQL = f"""CASE doc_id % 3
             SELECT unnest(list_distinct(list_transform(
                        range(1, len(toks) - 6),
                        i -> array_to_string(toks[i:i+7], ' ')))) AS gram
-            FROM (SELECT regexp_split_to_array(lower(trim(text, ' ')), '{_WS}') AS toks
+            FROM (SELECT {words_sql("text", True)} AS toks
                   FROM planted WHERE doc_id % {_BENCH_MOD} = 0)
             WHERE len(toks) >= 8
         )
@@ -94,7 +93,7 @@ _PII_TAIL_SQL = f"""CASE doc_id % 3
         SELECT doc_id, unnest(list_distinct(list_transform(
                    range(1, len(toks) - 6),
                    i -> array_to_string(toks[i:i+7], ' ')))) AS gram
-        FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text, ' ')), '{_WS}') AS toks
+        FROM (SELECT doc_id, {words_sql("text", True)} AS toks
               FROM feed)
         WHERE len(toks) >= 8
     ),
@@ -113,7 +112,7 @@ _PII_TAIL_SQL = f"""CASE doc_id % 3
                    / len(t) AS symbol_ratio,
                CAST(len(list_filter(t, w -> w IN ({_STOP_SQL}))) AS BIGINT) AS stopword_hits
         FROM (SELECT doc_id, text,
-                     regexp_split_to_array(lower(trim(text, ' ')), '{_WS}') AS t
+                     {words_sql("text", True)} AS t
               FROM feed)
     ),
     verdicts AS (
@@ -267,12 +266,7 @@ def r13_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(k % 7 == 1, doc("updated-")).alias("payload"),
     )
 
-    indexes = {
-        "name_index": empty_relation(spark, "source string, name_clean string, target_identifier string, rectype string"),
-        "uri_index": empty_relation(spark, "source string, ext_uri string, target_identifier string, rectype string"),
-        "same_as": empty_relation(spark, "uri_a string, uri_b string"),
-        "different_from": empty_relation(spark, "uri_a string, uri_b string"),
-    }
+    indexes = empty_indexes(spark)
     work = tempfile.mkdtemp(prefix="r13_lookup_gate_")
     state_dir = os.path.join(work, "state")
     ckpt = os.path.join(work, "ckpt")
@@ -295,6 +289,29 @@ def r13_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # r13_dedup_stream
 # ---------------------------------------------------------------------------
+def _probe_oracle(planted: str, where: str, cols: str) -> str:
+    """The index-probe oracle of r13_dedup_stream, r14_index_compact_probe
+    and r15_empty_index_bootstrap: over the ``planted`` CTE, every
+    (new_id, corpus_id) band-bucket match the ``where`` predicate admits,
+    Jaccard-verified as d07 verifies, selected as ``cols``."""
+    return f"""
+    WITH {planted},
+    {_shingles_sql("planted")},
+    {_sig_sql()},
+    {_bands_sql()},
+    cands AS (
+        SELECT DISTINCT n.id AS new_id, i.id AS corpus_id
+        FROM bands n JOIN bands i
+          ON n.band = i.band AND n.bh = i.bh
+        WHERE {where}
+    ),
+    {_verify_sql("cands", "new_id", "corpus_id")}
+    {_verified_sql("new_id", "corpus_id", cols)}
+    """
+
+
+_PROBE_COLS = f"new_id, corpus_id, {_JACCARD_SQL} AS jaccard"
+
 _DEDUP_PLANTED_SQL = """
     planted AS (
         SELECT d.doc_id,
@@ -316,35 +333,15 @@ _DEDUP_PLANTED_SQL = """
 # is execution-path-independent by design — mid-stream compaction must
 # not move a single match row, so BOTH gates hash against this exact
 # analytic recomputation.
-_DEDUP_STREAM_ORACLE = f"""
-    WITH {_DEDUP_PLANTED_SQL},
-    {_shingles_sql("planted")},
-    {_sig_sql()},
-    {_bands_sql()},
-    cands AS (
-        SELECT DISTINCT n.id AS new_id, i.id AS corpus_id
-        FROM bands n JOIN bands i
-          ON n.band = i.band AND n.bh = i.bh
-        WHERE n.id != i.id
+_DEDUP_STREAM_ORACLE = _probe_oracle(
+    _DEDUP_PLANTED_SQL,
+    """n.id != i.id
           AND ((n.id % 4 = 1 AND i.id % 4 = 0)
-               OR (n.id % 4 = 2 AND i.id % 4 IN (0, 1)))
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM shingles GROUP BY id),
-    inter AS (
-        SELECT c.new_id, c.corpus_id, COUNT(*) AS n_both
-        FROM cands c
-        JOIN shingles sa ON c.new_id = sa.id
-        JOIN shingles sb ON c.corpus_id = sb.id AND sa.shingle = sb.shingle
-        GROUP BY c.new_id, c.corpus_id
-    )
-    SELECT new_id, corpus_id,
-           ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) AS jaccard,
+               OR (n.id % 4 = 2 AND i.id % 4 IN (0, 1)))""",
+    f"""{_PROBE_COLS},
            CAST(CASE WHEN new_id % 4 = 1 THEN 0 ELSE 1 END AS BIGINT)
-               AS micro_batch_id
-    FROM inter JOIN sizes na ON new_id = na.id
-               JOIN sizes nb ON corpus_id = nb.id
-    WHERE ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) >= {JACCARD_T}
-    """
+               AS micro_batch_id""",
+)
 
 
 @query(
@@ -492,32 +489,12 @@ _COMPACT_PLANTED_SQL = """
 
 @query(
     "r14_index_compact_probe",
-    oracle=f"""
-    WITH {_COMPACT_PLANTED_SQL},
-    {_shingles_sql("planted")},
-    {_sig_sql()},
-    {_bands_sql()},
-    cands AS (
-        SELECT DISTINCT n.id AS new_id, i.id AS corpus_id
-        FROM bands n JOIN bands i
-          ON n.band = i.band AND n.bh = i.bh
-        WHERE n.id != i.id
-          AND n.id % 4 = 3 AND i.id % 4 IN (0, 1, 2)
+    oracle=_probe_oracle(
+        _COMPACT_PLANTED_SQL,
+        """n.id != i.id
+          AND n.id % 4 = 3 AND i.id % 4 IN (0, 1, 2)""",
+        _PROBE_COLS,
     ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM shingles GROUP BY id),
-    inter AS (
-        SELECT c.new_id, c.corpus_id, COUNT(*) AS n_both
-        FROM cands c
-        JOIN shingles sa ON c.new_id = sa.id
-        JOIN shingles sb ON c.corpus_id = sb.id AND sa.shingle = sb.shingle
-        GROUP BY c.new_id, c.corpus_id
-    )
-    SELECT new_id, corpus_id,
-           ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) AS jaccard
-    FROM inter JOIN sizes na ON new_id = na.id
-               JOIN sizes nb ON corpus_id = nb.id
-    WHERE ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) >= {JACCARD_T}
-    """,
     survey="streaming-dedup,R5",
 )
 def r14_index_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -546,7 +523,7 @@ def r14_index_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..streaming.dedup_stream import index_corpus, match_batch, stream_dedup
-    from ..streaming.index_util import compact_index, read_tier_meta, tier_dir
+    from ..streaming.index_util import compact_index, read_tier_meta
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     k = F.col("doc_id")
@@ -633,31 +610,11 @@ _BOOTSTRAP_PLANTED_SQL = """
 
 @query(
     "r15_empty_index_bootstrap",
-    oracle=f"""
-    WITH {_BOOTSTRAP_PLANTED_SQL},
-    {_shingles_sql("planted")},
-    {_sig_sql()},
-    {_bands_sql()},
-    cands AS (
-        SELECT DISTINCT n.id AS new_id, i.id AS corpus_id
-        FROM bands n JOIN bands i
-          ON n.band = i.band AND n.bh = i.bh
-        WHERE n.id % 3 = 2 AND i.id % 3 IN (0, 1)
+    oracle=_probe_oracle(
+        _BOOTSTRAP_PLANTED_SQL,
+        "n.id % 3 = 2 AND i.id % 3 IN (0, 1)",
+        _PROBE_COLS,
     ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM shingles GROUP BY id),
-    inter AS (
-        SELECT c.new_id, c.corpus_id, COUNT(*) AS n_both
-        FROM cands c
-        JOIN shingles sa ON c.new_id = sa.id
-        JOIN shingles sb ON c.corpus_id = sb.id AND sa.shingle = sb.shingle
-        GROUP BY c.new_id, c.corpus_id
-    )
-    SELECT new_id, corpus_id,
-           ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) AS jaccard
-    FROM inter JOIN sizes na ON new_id = na.id
-               JOIN sizes nb ON corpus_id = nb.id
-    WHERE ROUND(CAST(n_both AS DOUBLE) / (na.n + nb.n - n_both), 6) >= {JACCARD_T}
-    """,
     survey="streaming-dedup,R5",
 )
 def r15_empty_index_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,7 +716,7 @@ def r15_empty_index_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # r15_lm_curation_stream
 # ---------------------------------------------------------------------------
-from .text5 import _LM_BIGRAMS, _LM_REF, _LM_SCALE  # noqa: E402
+from .text5 import _LM_BIGRAMS, _LM_REF, lm_score_sql, lm_train_sql  # noqa: E402
 
 
 @query(
@@ -767,51 +724,17 @@ from .text5 import _LM_BIGRAMS, _LM_REF, _LM_SCALE  # noqa: E402
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang, source,
-               regexp_split_to_array(lower(trim(text, ' ')), '{_WS}') AS t
+               {words_sql("text", True)} AS t
         FROM documents
     ),
-    ref_uni AS (
-        SELECT lang, word, CAST(COUNT(*) AS BIGINT) AS c1
-        FROM (SELECT lang, unnest(t) AS word FROM toks
-              WHERE source IN {_LM_REF} AND len(t) >= 1)
-        GROUP BY lang, word
-    ),
-    ref_stats AS (
-        SELECT lang, CAST(SUM(c1) AS BIGINT) AS tt,
-               CAST(COUNT(*) AS BIGINT) AS vv
-        FROM ref_uni GROUP BY lang
-    ),
-    ref_big AS (
-        SELECT lang, w1, w2, CAST(COUNT(*) AS BIGINT) AS c2
-        FROM (SELECT lang, {_LM_BIGRAMS}
-              FROM toks WHERE source IN {_LM_REF} AND len(t) >= 2)
-        GROUP BY lang, w1, w2
-    ),
+    {lm_train_sql("toks", f"source IN {_LM_REF} AND ")},
     doc_big AS (
         SELECT doc_id, lang, {_LM_BIGRAMS}
         FROM toks WHERE len(t) >= 2
     ),
     fl AS (
         SELECT doc_id, lang, n_bigrams, psum // n_bigrams AS fluency_fp
-        FROM (
-            SELECT d.doc_id, d.lang,
-                   CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-                   CAST(SUM(CASE
-                       WHEN u1.c1 IS NOT NULL THEN
-                           ({_LM_SCALE} * (COALESCE(b.c2, 0) + 1))
-                           // (u1.c1 + s.vv)
-                       WHEN s.vv IS NOT NULL THEN
-                           ({_LM_SCALE} * (COALESCE(u2.c1, 0) + 1))
-                           // (s.tt + s.vv)
-                       ELSE 0 END) AS BIGINT) AS psum
-            FROM doc_big d
-            LEFT JOIN ref_big b
-                ON d.lang = b.lang AND d.w1 = b.w1 AND d.w2 = b.w2
-            LEFT JOIN ref_uni u1 ON d.lang = u1.lang AND d.w1 = u1.word
-            LEFT JOIN ref_uni u2 ON d.lang = u2.lang AND d.w2 = u2.word
-            LEFT JOIN ref_stats s ON d.lang = s.lang
-            GROUP BY d.doc_id, d.lang
-        )
+        FROM ({lm_score_sql("doc_big")})
     ),
     ref_nt AS (
         SELECT f.lang, f.fluency_fp,

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.strings import WS, content_fp, content_fp_sql, words, words_sql
 from .registry import query
 
 # Deterministic language marker words (shared Spark/DuckDB logic; the
@@ -26,9 +27,42 @@ _LANG_MARKERS = {
     "zh": ("spark", "vector", "query"),
 }
 
+# The d04 quality rule, the one every quality-gated stage applies (d04,
+# d13, d36, d41, d48): at least QUALITY_MIN_TOKENS whitespace tokens, and
+# fewer than QUALITY_MAX_STOP of them in STOPWORDS.
+STOPWORDS = ("the", "a", "of", "and")
+QUALITY_MIN_TOKENS = 20
+QUALITY_MAX_STOP = 0.5
 
-def _norm_text() -> F.Column:
-    return F.lower(F.trim(F.col("text")))
+
+def quality_counts(text: F.Column) -> tuple[F.Column, F.Column]:
+    """(n_tokens, n_stop) of the quality rule over a text column."""
+    n_tokens = F.size(words(text, False))
+    n_stop = F.size(F.filter(words(text, True), lambda t: t.isin(*STOPWORDS)))
+    return n_tokens, n_stop
+
+
+def quality_ok(n_tokens: F.Column, n_stop: F.Column) -> F.Column:
+    """The quality rule's verdict over quality_counts' two columns."""
+    return (n_tokens >= QUALITY_MIN_TOKENS) & (
+        (n_stop.cast("double") / n_tokens) < QUALITY_MAX_STOP
+    )
+
+
+def quality_counts_sql(expr: str) -> str:
+    """DuckDB twin of quality_counts: the n_tokens and n_stop select items."""
+    stop = ", ".join(f"'{w}'" for w in STOPWORDS)
+    return (
+        f"len({words_sql(expr, False)}) AS n_tokens,\n"
+        f"len(list_filter({words_sql(expr, True)}, t -> t IN ({stop}))) AS n_stop"
+    )
+
+
+# DuckDB twin of quality_ok, over the n_tokens and n_stop columns
+QUALITY_OK_SQL = (
+    f"n_tokens >= {QUALITY_MIN_TOKENS} "
+    f"AND CAST(n_stop AS DOUBLE) / n_tokens < {QUALITY_MAX_STOP}"
+)
 
 
 @query(
@@ -58,7 +92,7 @@ def d01_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = base.unionByName(copies)
     return (
-        docs.select("doc_id", F.md5(_norm_text()).alias("fp"))
+        docs.select("doc_id", F.md5(F.lower(F.trim(F.col("text")))).alias("fp"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
         .filter(F.col("n_copies") > 1)
@@ -67,9 +101,8 @@ def d01_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "d02_fingerprint",
-    oracle="""
-    SELECT doc_id,
-           md5(regexp_replace(lower(trim(text)), '[ \\t\\n\\f\\r]+', ' ', 'g')) AS fingerprint
+    oracle=f"""
+    SELECT doc_id, {content_fp_sql("text")} AS fingerprint
     FROM documents
     """,
     survey="fingerprint",
@@ -80,15 +113,15 @@ def d02_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.md5(F.regexp_replace(_norm_text(), r"[ \t\n\f\r]+", " ")).alias("fingerprint"),
+        content_fp(F.col("text")).alias("fingerprint"),
     )
 
 
 @query(
     "d03_token_stats",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           len(regexp_split_to_array(trim(text), '[ \\t\\n\\f\\r]+')) AS n_tokens,
+           len({words_sql("text", False)}) AS n_tokens,
            length(text) AS n_chars_computed,
            n_chars
     FROM documents
@@ -101,7 +134,7 @@ def d03_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"[ \t\n\f\r]+")).alias("n_tokens"),
+        F.size(words(F.col("text"), False)).alias("n_tokens"),
         F.length("text").alias("n_chars_computed"),
         "n_chars",
     )
@@ -109,18 +142,14 @@ def d03_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "d04_quality_score",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            n_tokens,
            CAST(n_stop AS DOUBLE) / n_tokens AS stopword_ratio,
            CAST(length(text) AS DOUBLE) / n_tokens AS avg_token_len,
-           CASE WHEN n_tokens >= 20 AND CAST(n_stop AS DOUBLE) / n_tokens < 0.5
-                THEN 'keep' ELSE 'drop' END AS verdict
+           CASE WHEN {QUALITY_OK_SQL} THEN 'keep' ELSE 'drop' END AS verdict
     FROM (
-      SELECT doc_id, text,
-             len(regexp_split_to_array(trim(text), '[ \\t\\n\\f\\r]+')) AS n_tokens,
-             len(list_filter(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\f\\r]+'),
-                             t -> t IN ('the', 'a', 'of', 'and'))) AS n_stop
+      SELECT doc_id, text, {quality_counts_sql("text")}
       FROM documents
     )
     """,
@@ -131,28 +160,21 @@ def d04_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep/drop verdict. Ratios are single-division doubles on identical
     operands → bit-exact across engines."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"[ \t\n\f\r]+")
-    low_toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\f\r]+")
-    n_tokens = F.size(toks)
-    n_stop = F.size(F.filter(low_toks, lambda t: t.isin("the", "a", "of", "and")))
-    stop_ratio = n_stop.cast("double") / n_tokens
+    n_tokens, n_stop = quality_counts(F.col("text"))
     return docs.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
-        stop_ratio.alias("stopword_ratio"),
+        (n_stop.cast("double") / n_tokens).alias("stopword_ratio"),
         (F.length("text").cast("double") / n_tokens).alias("avg_token_len"),
-        F.when((n_tokens >= 20) & (stop_ratio < 0.5), F.lit("keep"))
+        F.when(quality_ok(n_tokens, n_stop), F.lit("keep"))
         .otherwise(F.lit("drop"))
         .alias("verdict"),
     )
 
 
 def _lang_score_sql(lang: str) -> str:
-    words = ", ".join(f"'{w}'" for w in _LANG_MARKERS[lang])
-    return (
-        f"len(list_filter(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\f\\r]+'),"
-        f" t -> t IN ({words})))"
-    )
+    markers = ", ".join(f"'{w}'" for w in _LANG_MARKERS[lang])
+    return f"len(list_filter({words_sql('text', True)}, t -> t IN ({markers})))"
 
 
 @query(
@@ -177,7 +199,7 @@ def d05_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts with a deterministic priority tiebreak (encode score*10+prio,
     take GREATEST, decode). Pure integer arithmetic → engine-exact."""
     docs = load_table(spark, sf_dir, "documents")
-    low_toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\f\r]+")
+    low_toks = words(F.col("text"), True)
     prio = {"en": 4, "es": 3, "de": 2, "fr": 1, "zh": 0}
     encoded = [
         (F.size(F.filter(low_toks, lambda t: t.isin(*_LANG_MARKERS[lang]))) * 10 + p)
@@ -196,10 +218,10 @@ def d05_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "a16_top5_words",
-    oracle="""
+    oracle=f"""
     SELECT word, n FROM (
         SELECT word, COUNT(*) AS n
-        FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\f\\r]+')) AS word
+        FROM (SELECT unnest({words_sql("text", True)}) AS word
               FROM documents)
         WHERE word <> ''
         GROUP BY word
@@ -212,7 +234,7 @@ def a16_top5_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesis): explode(split) + count + ordered limit with tiebreak."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\f\r]+")).alias("word"))
+        docs.select(F.explode(words(F.col("text"), True)).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -221,14 +243,13 @@ def a16_top5_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_D06_ORACLE = """
+_D06_ORACLE = f"""
     WITH shingles AS (
         SELECT DISTINCT doc_id, shingle FROM (
             SELECT doc_id,
                    unnest(list_transform(range(1, len(toks) - 1),
                           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingle
-            FROM (SELECT doc_id,
-                         regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\f\\r]+') AS toks
+            FROM (SELECT doc_id, {words_sql("text", True)} AS toks
                   FROM documents)
             WHERE len(toks) >= 3
         )
@@ -251,6 +272,37 @@ _D06_ORACLE = """
 D06_MAX_DOCS = 100_000  # d06's corpus-size guard
 
 
+def _doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle): the distinct 3-word shingles of each document."""
+    toks = words(F.col("text"), True)
+    with_toks = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 3)
+    return with_toks.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(sequence(1, size(toks) - 2),"
+                " i -> concat_ws(' ', toks[i-1], toks[i], toks[i+1]))"
+            )
+        ).alias("shingle"),
+    ).distinct()
+
+
+def _jaccard_pairs(inter: DataFrame, shingles: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) of the ``inter`` pairs (doc_a, doc_b,
+    n_both) whose shingle-set Jaccard reaches ``threshold``."""
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    jac = F.col("n_both").cast("double") / (
+        F.col("sa.n") + F.col("sb.n") - F.col("n_both")
+    )
+    return (
+        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 @query("d06_ngram_jaccard_pairs", oracle=_D06_ORACLE, survey="dedup-ngram-jaccard")
 def d06_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs by 3-gram Jaccard >= 0.6: shingle -> inverted
@@ -270,21 +322,7 @@ def d06_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"(>{D06_MAX_DOCS} docs); use d07_minhash_lsh_pairs for large "
             f"corpora."
         )
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\f\r]+")
-    with_toks = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 3)
-    shingles = (
-        with_toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 2),"
-                    " i -> concat_ws(' ', toks[i-1], toks[i], toks[i+1]))"
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    shingles = _doc_shingles(docs)
     a = shingles.alias("a")
     b = shingles.alias("b")
     inter = (
@@ -296,15 +334,7 @@ def d06_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_both"))
     )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = F.col("n_both").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("n_both"))
-    return (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.6)
-    )
+    return _jaccard_pairs(inter, shingles, 0.6)
 
 
 @query(
@@ -522,14 +552,13 @@ def f08_clean_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "d14_winnowing_fingerprints",
-    oracle="""
+    oracle=f"""
     WITH grams AS (
         SELECT doc_id,
                gen.i AS pos,
                md5(toks[gen.i] || ' ' || toks[gen.i + 1] || ' ' || toks[gen.i + 2]) AS h,
                len(toks) - 2 AS n_grams
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\f\\r]+') AS toks
+        FROM (SELECT doc_id, {words_sql("text", True)} AS toks
               FROM documents),
              LATERAL unnest(range(1, len(toks) - 1)) AS gen(i)
         WHERE len(toks) >= 3
@@ -555,7 +584,7 @@ def d14_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     index is a bounded fraction of the corpus. One scan, one window,
     one distinct; all md5/substr inside codegen."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\f\r]+")
+    toks = words(F.col("text"), True)
     grams = (
         docs.select(F.col("doc_id"), toks.alias("toks"))
         .filter(F.size("toks") >= 3)
@@ -582,13 +611,12 @@ def d14_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "d15_repetition_ratio",
-    oracle="""
+    oracle=f"""
     WITH g AS (
         SELECT doc_id,
                list_transform(range(1, len(toks) - 1),
                               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS grams
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\f\\r]+') AS toks
+        FROM (SELECT doc_id, {words_sql("text", True)} AS toks
               FROM documents)
         WHERE len(toks) >= 3
     )
@@ -609,7 +637,7 @@ def d15_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     final double division is a single correctly-rounded op, identical
     bits in Spark and DuckDB (the repo's float determinism contract)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\f\r]+")
+    toks = words(F.col("text"), True)
     g = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 3)
     # sequence(0, size-3) never descends here: the filter guarantees
     # size-3 >= 0 (the sequence-descends gotcha needs no guard)
@@ -668,20 +696,7 @@ def d51_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (ceil(3n/5) = (3n+4) div 5) — no float boundary can
     shorten a prefix below the proof's bound."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\f\r]+")
-    with_toks = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 3)
-    shingles = (
-        with_toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 2),"
-                    " i -> concat_ws(' ', toks[i-1], toks[i], toks[i+1]))"
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
+    shingles = _doc_shingles(docs)
     dfreq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("dfreq"))
     w_doc = W.partitionBy("doc_id").orderBy("dfreq", "shingle")
     w_n = W.partitionBy("doc_id")
@@ -722,17 +737,7 @@ def d51_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_both"))
     )
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("n_both").cast("double") / (
-        F.col("sa.n") + F.col("sb.n") - F.col("n_both")
-    )
-    return (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= _D51_T_NUM / _D51_T_DEN)
-    )
+    return _jaccard_pairs(inter, shingles, _D51_T_NUM / _D51_T_DEN)
 
 
 def nfc_normalize_col():
@@ -756,15 +761,15 @@ def nfc_normalize_col():
 
 @query(
     "d54_unicode_normalize",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            trim(regexp_replace(
                regexp_replace(
                    nfc_normalize(text || ' cafe' || chr(769) || '  ' ||
                                  chr(8203) || 'x' || chr(3) || 'y'),
-                   '[\\x00-\\x08\\x0e-\\x1f\\x7f\\x{200b}-\\x{200d}\\x{feff}]',
+                   '[\\x00-\\x08\\x0e-\\x1f\\x7f\\x{{200b}}-\\x{{200d}}\\x{{feff}}]',
                    '', 'g'),
-               '[ \t\n\f\r]+', ' ', 'g')) AS norm_text
+               '{WS}', ' ', 'g')) AS norm_text
     FROM documents
     """,
     survey="text-normalize,F8,F14",
@@ -788,5 +793,5 @@ def d54_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stripped = F.regexp_replace(
         nfc, "[\x00-\x08\x0e-\x1f\x7f\u200b-\u200d\ufeff]", ""
     )
-    collapsed = F.trim(F.regexp_replace(stripped, "[ \t\n\f\r]+", " "))
+    collapsed = F.trim(F.regexp_replace(stripped, WS, " "))
     return docs.select("doc_id", collapsed.alias("norm_text"))

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.strings import WS, content_fp, content_fp_sql, words, words_sql
 from .registry import query, sql_dsum
 
 # Whitespace is the PINNED explicit class, not \s: Java's \s includes
@@ -216,9 +217,9 @@ def a22_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "d11_near_query",
-    oracle=r"""
+    oracle=f"""
     WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '[ \t\n\f\r]+') AS t
+        SELECT doc_id, {words_sql("text", True)} AS t
         FROM documents
     ),
     pa AS (SELECT doc_id, unnest(list_transform(range(1, len(t)+1),
@@ -241,7 +242,7 @@ def d11_near_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\f\r]+")).alias("p", "w"),
+        F.posexplode(words(F.col("text"), True)).alias("p", "w"),
     )
     pa = toks.filter(F.col("w") == "spark").select("doc_id", F.col("p").alias("pa"))
     pb = toks.filter(F.col("w") == "query").select("doc_id", F.col("p").alias("pb"))
@@ -751,14 +752,14 @@ def f09_name_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "f14_strip_html",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            trim(regexp_replace(
              replace(replace(replace(replace(
                regexp_replace('<p>Doc ' || doc_id || ' &amp; <b>more</b>&nbsp;text</p>',
                               '<[^>]*>', ' ', 'g'),
                '&amp;', '&'), '&lt;', '<'), '&gt;', '>'), '&nbsp;', ' '),
-             '[ \\t\\n\\f\\r]+', ' ', 'g')) AS clean
+             '{WS}', ' ', 'g')) AS clean
     FROM documents
     """,
     survey="F14",
@@ -800,8 +801,6 @@ def a01_merge_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     statements (A4), equivalent set-union by id (A2), merge order fixing
     the base (W2). The golden oracle pins the observable fold outcome
     per entity."""
-    import json as _json
-
     from ..pipeline.merge_records import merge_by_yuid
 
     c = load_table(spark, sf_dir, "customer")
@@ -1012,7 +1011,7 @@ PACK_BUDGET = 2048  # tokens per training sequence
     WITH toks AS (
         SELECT doc_id,
                substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS shard,
-               len(regexp_split_to_array(trim(text), '[ \\t\\n\\f\\r]+')) AS n_tok
+               len({words_sql("text", False)}) AS n_tok
         FROM documents
     ),
     packed AS (
@@ -1040,7 +1039,7 @@ def d16_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     most one document, never underfill by more than the last doc.  Output
     is per-pack (n_docs, n_tokens) — the pack manifest a trainer reads."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"[ \t\n\f\r]+")).cast("long")
+    n_tok = F.size(words(F.col("text"), False)).cast("long")
     toks = docs.select(
         "doc_id",
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1).alias("shard"),
@@ -1112,10 +1111,6 @@ def d17_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPLIT_VAL_LT = 230
 SPLIT_TRAIN_LT = 205
 
-# content fingerprint of a text column (the d02 normalization)
-CONTENT_FP_SQL = (
-    "md5(regexp_replace(lower(trim({col})), '[ \\t\\n\\f\\r]+', ' ', 'g'))"
-)
 # 0..255 bucket: RE-hash the fingerprint so the split bucket is
 # independent of every other use of fingerprint prefixes in the pipeline
 SPLIT_BUCKET_SQL = (
@@ -1125,11 +1120,6 @@ SPLIT_CASE_SQL = (
     f"CASE WHEN {{b}} < {SPLIT_TRAIN_LT} THEN 'train' "
     f"WHEN {{b}} < {SPLIT_VAL_LT} THEN 'val' ELSE 'test' END"
 )
-
-
-def content_fp(text_col):
-    """Spark twin of CONTENT_FP_SQL."""
-    return F.md5(F.regexp_replace(F.lower(F.trim(text_col)), r"[ \t\n\f\r]+", " "))
 
 
 def split_bucket(fp_col):
@@ -1155,7 +1145,7 @@ def split_label(bucket_col):
         SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 20 = 0
     ),
     fp AS (
-        SELECT doc_id, {CONTENT_FP_SQL.format(col="text")} AS group_fp
+        SELECT doc_id, {content_fp_sql("text")} AS group_fp
         FROM corpus
     ),
     b AS (

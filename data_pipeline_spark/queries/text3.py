@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread_scan
+from ..functions.strings import WS, words, words_sql
 from .registry import query
 
 # Java-regex / RE2 parity verified for all three (same counts, same spans)
@@ -111,14 +112,11 @@ N_GRAM = 8
 _BENCH_MOD = 29  # ~3% of docs form the benchmark set
 _CONTAM_MOD = 31  # planted-overlap docs (the guaranteed positives)
 _PLANT = "the quick brown fox jumps over the lazy benchmark dog"
-# engine-identical token separator (Java \s matches \x0B, RE2's does
-# not) — same pinning as the d20 sentence split below
-_WS_SPLIT = r"[ \t\n\f\r]+"
 
 
 def word_ngrams_expr(n: int = N_GRAM) -> F.Column:
     """Distinct word n-grams over a column named ``toks`` (the pinned
-    tokenization — build it with the _WS_SPLIT split first).  The grams
+    tokenization — build it with ``words`` first).  The grams
     are assembled by n direct subscripts per index instead of a per-index
     slice() allocation: transform() lambdas evaluate interpreted, outside
     codegen, so the slice copy was the hot allocation of the whole d19
@@ -147,7 +145,7 @@ def doc_gram_hashes(
     toked = spread_scan(
         docs.select(
             F.col(id_col).alias("doc_id"),
-            F.split(F.lower(F.trim(F.col(text_col))), _WS_SPLIT).alias("toks"),
+            words(F.col(text_col), True).alias("toks"),
         )
     )
     return toked.select(
@@ -168,7 +166,7 @@ def doc_gram_hashes(
         SELECT doc_id, unnest(list_distinct(list_transform(
                    range(1, len(toks) - {N_GRAM - 2}),
                    i -> array_to_string(toks[i:i+{N_GRAM - 1}], ' ')))) AS gram
-        FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text, ' ')), '{_WS_SPLIT}') AS toks
+        FROM (SELECT doc_id, {words_sql("text", True)} AS toks
               FROM planted)
         WHERE len(toks) >= {N_GRAM}
     ),
@@ -208,10 +206,8 @@ def d19_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# engine-identical separator class: Java's \s includes \x0B where RE2's
-# does not, so the whitespace class is spelled out (property-tested
-# against the oracle on pathological corpora, tests/test_properties.py)
-_SENT_SPLIT = r"\.[ \t\n\f\r]+"
+# a sentence ends at a period followed by whitespace (the pinned class)
+_SENT_SPLIT = r"\." + WS
 _DUP_MOD = 13
 _BOILER = "this material is provided as is without warranty of any kind"
 

@@ -56,24 +56,18 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from .registry import query
-from .text3 import _WS_SPLIT, EMAIL_RE, IPV4_RE, PHONE_RE
+from ..functions.strings import WS, content_fp, content_fp_sql, words, words_sql
+from .text3 import EMAIL_RE, IPV4_RE, PHONE_RE
 
 _STOPWORDS = ("the", "a", "of", "to", "and", "in")
 _STOP_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
-
-
-def _tokens(text: F.Column) -> F.Column:
-    """Lowercased whitespace tokens on the pinned separator class
-    (Java ``\\s`` matches \\x0B where RE2's does not — same pinning as
-    the d19/d20 splits)."""
-    return F.split(F.lower(F.trim(text)), _WS_SPLIT)
 
 
 def gopher_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append the Gopher/MassiveText quality metrics + verdict to ``df``
     (library form — the d21 query and the streaming curation stage both
     run exactly this).  All per-row expressions: stream-safe, no shuffle."""
-    t = _tokens(F.col(text_col))
+    t = words(F.col(text_col), True)
     n = F.size(t)
     m = df.withColumns({
         "n_words": n.cast("bigint"),
@@ -108,7 +102,7 @@ def gopher_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     ),
     toks AS (
         SELECT doc_id,
-               regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+') AS t
+               {words_sql("text", True)} AS t
         FROM planted
     ),
     m AS (
@@ -225,7 +219,7 @@ def d22_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+') AS t
+               {words_sql("text", True)} AS t
         FROM documents
     )
     SELECT doc_id,
@@ -251,7 +245,7 @@ def d23_hashed_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator a deterministic cross-engine oracle while exercising
     the same fold."""
     docs = load_table(spark, sf_dir, "documents")
-    t = _tokens(F.col("text"))
+    t = words(F.col("text"), True)
     weight = lambda w: (  # noqa: E731
         F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long")
         - F.lit(2147483648).cast("long")
@@ -325,8 +319,7 @@ _MIX_SALT = "mix-v1:"
     oracle=rf"""
     WITH sized AS (
         SELECT doc_id, source,
-               CAST(len(regexp_split_to_array(lower(trim(text, ' ')),
-                                              '[ \t\n\f\r]+')) AS BIGINT) AS n_words,
+               CAST(len({words_sql("text", True)}) AS BIGINT) AS n_words,
                md5('{_MIX_SALT}' || CAST(doc_id AS VARCHAR)) AS k,
                {_MIX_BUDGET_BASE}
                  + 1000 * (CAST(('0x' || substr(md5(source), 1, 4)) AS UINTEGER) % 3)
@@ -357,7 +350,7 @@ def d25_mixture_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently, and the under-budget prefix is a per-row filter on
     the cumsum — no driver state, no global sort."""
     docs = load_table(spark, sf_dir, "documents")
-    n_words = F.size(_tokens(F.col("text"))).cast("bigint")
+    n_words = F.size(words(F.col("text"), True)).cast("bigint")
     k = F.md5(F.concat(F.lit(_MIX_SALT), F.col("doc_id").cast("string")))
     budget = (
         F.lit(_MIX_BUDGET_BASE)
@@ -402,7 +395,7 @@ def d25_mixture_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(len(list_filter(t, w -> w = '#' OR w = '...')) AS DOUBLE)
                    / len(t) AS symbol_ratio,
                CAST(len(list_filter(t, w -> w IN ({_STOP_SQL}))) AS BIGINT) AS stop_hits
-        FROM (SELECT *, regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+') AS t
+        FROM (SELECT *, {words_sql("text", True)} AS t
               FROM planted)
     ),
     quality AS (
@@ -507,12 +500,7 @@ def d26_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PREV_MOD = 4  # doc_id % 4 == 0 plays the previously-ingested corpus
 _SHARED_MOD = 23  # planted shared-boilerplate docs (guaranteed prev dups)
 _BATCHDUP_MOD = 29  # planted new-only duplicates (guaranteed batch dups)
-
-
-@query(
-    "d27_incremental_dedup",
-    oracle=rf"""
-    WITH planted AS (
+_DUP_PLANTED_SQL = f"""planted AS (
         SELECT doc_id,
                CASE WHEN doc_id % {_SHARED_MOD} = 0
                     THEN 'shared boilerplate page ' || CAST(doc_id % 3 AS VARCHAR)
@@ -520,11 +508,36 @@ _BATCHDUP_MOD = 29  # planted new-only duplicates (guaranteed batch dups)
                     THEN 'batch duplicate page'
                     ELSE text END AS text
         FROM documents
-    ),
+    )"""
+
+
+def _dup_planted(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) with the d27/d49 duplicate plants (the Spark twin
+    of _DUP_PLANTED_SQL): shared boilerplate on every doc_id %
+    _SHARED_MOD, one batch-duplicate text on new doc_id % _BATCHDUP_MOD."""
+    k = F.col("doc_id")
+    return docs.select(
+        "doc_id",
+        F.when(
+            k % _SHARED_MOD == 0,
+            F.concat(F.lit("shared boilerplate page "), (k % 3).cast("string")),
+        )
+        .when(
+            (k % _BATCHDUP_MOD == 0) & (k % _PREV_MOD != 0),
+            F.lit("batch duplicate page"),
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+
+
+@query(
+    "d27_incremental_dedup",
+    oracle=rf"""
+    WITH {_DUP_PLANTED_SQL},
     fp AS (
         SELECT doc_id,
-               md5(regexp_replace(lower(trim(text, ' ')), '[ \t\n\f\r]+', ' ', 'g'))
-                   AS fingerprint,
+               {content_fp_sql("text")} AS fingerprint,
                (doc_id % {_PREV_MOD} = 0) AS is_prev
         FROM planted
     ),
@@ -564,25 +577,10 @@ def d27_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-batch election is one window on the fingerprint.  Admitted docs'
     fingerprints then append to the index for the next build (the sink
     side of R5's seen-dedupe, here as the corpus-level operator)."""
-    docs = load_table(spark, sf_dir, "documents")
-    k = F.col("doc_id")
-    planted = docs.select(
-        "doc_id",
-        F.when(
-            k % _SHARED_MOD == 0,
-            F.concat(F.lit("shared boilerplate page "), (k % 3).cast("string")),
-        )
-        .when(
-            (k % _BATCHDUP_MOD == 0) & (k % _PREV_MOD != 0),
-            F.lit("batch duplicate page"),
-        )
-        .otherwise(F.col("text")).alias("text"),
-    )
+    planted = _dup_planted(load_table(spark, sf_dir, "documents"))
     fp = planted.select(
         "doc_id",
-        F.md5(
-            F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS_SPLIT, " ")
-        ).alias("fingerprint"),
+        content_fp(F.col("text")).alias("fingerprint"),
         (F.col("doc_id") % _PREV_MOD == 0).alias("is_prev"),
     )
     prev = fp.filter("is_prev").select("fingerprint").distinct()
@@ -620,8 +618,8 @@ def _gram_col(n: int) -> F.Column:
     oracle=rf"""
     WITH toked AS (
         SELECT doc_id,
-               regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+') AS toks,
-               CAST(len(regexp_replace(lower(trim(text, ' ')), '[ \t\n\f\r]+', ' ', 'g'))
+               {words_sql("text", True)} AS toks,
+               CAST(len(regexp_replace(lower(trim(text, ' ')), '{WS}', ' ', 'g'))
                     AS BIGINT) AS norm_len
         FROM documents
     ),
@@ -669,10 +667,10 @@ def d28_top_ngram_fractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side — and one (doc, n)-partitioned top-1 window; same
     two-shuffle shape as a16 at any corpus size."""
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS_SPLIT, " ")
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), WS, " ")
     toked = docs.select(
         "doc_id",
-        _tokens(F.col("text")).alias("toks"),
+        words(F.col("text"), True).alias("toks"),
         F.length(norm).cast("bigint").alias("norm_len"),
     )
 
@@ -724,7 +722,7 @@ _CHUNK, _OVERLAP = 32, 8  # tokens per chunk / overlap (stride 24)
     oracle=rf"""
     WITH toked AS (
         SELECT doc_id,
-               regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+') AS toks
+               {words_sql("text", True)} AS toks
         FROM documents
     ),
     chunks AS (
@@ -762,7 +760,7 @@ def d29_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection — a pure scan with a fan-out, no shuffle, no state."""
     docs = load_table(spark, sf_dir, "documents")
     stride = _CHUNK - _OVERLAP
-    toked = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    toked = docs.select("doc_id", words(F.col("text"), True).alias("toks"))
     n_chunks = F.greatest(
         F.lit(1),
         F.ceil(
@@ -796,7 +794,7 @@ _N_KEYWORDS = 3
     oracle=rf"""
     WITH dtok AS (
         SELECT DISTINCT doc_id, unnest(
-            regexp_split_to_array(lower(trim(text, ' ')), '[ \t\n\f\r]+')) AS tok
+            {words_sql("text", True)}) AS tok
         FROM documents
     ),
     dfreq AS (
@@ -827,7 +825,7 @@ def d30_rare_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     dtok = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(_tokens(F.col("text")))).alias("tok"),
+        F.explode(F.array_distinct(words(F.col("text"), True))).alias("tok"),
     )
     dfreq = dtok.groupBy("tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
@@ -862,7 +860,7 @@ _SPANS_SQL = f"""hits AS (
             SELECT doc_id, unnest(range(1, len(toks) - {_SPAN_GRAM - 2})) AS i,
                    toks
             FROM (SELECT doc_id,
-                         regexp_split_to_array(lower(trim(text, ' ')), '{_WS_SPLIT}') AS toks
+                         {words_sql("text", True)} AS toks
                   FROM documents)
             WHERE len(toks) >= {_SPAN_GRAM}
         ),
@@ -873,7 +871,7 @@ _SPANS_SQL = f"""hits AS (
                 SELECT doc_id, unnest(range(1, len(toks) - {_SPAN_GRAM - 2})) AS i,
                        toks
                 FROM (SELECT doc_id,
-                             regexp_split_to_array(lower(trim(text, ' ')), '{_WS_SPLIT}') AS toks
+                             {words_sql("text", True)} AS toks
                       FROM documents)
                 WHERE len(toks) >= {_SPAN_GRAM}
             )
@@ -939,7 +937,7 @@ def _dup_span_islands(docs: DataFrame) -> DataFrame:
     -substring span relation — ONE definition shared by d38 (the
     analysis view) and d39 (the removal action that consumes it)."""
     toked = docs.select(
-        "doc_id", F.split(F.lower(F.trim(F.col("text"))), _WS_SPLIT).alias("toks")
+        "doc_id", words(F.col("text"), True).alias("toks")
     ).filter(F.size("toks") >= _SPAN_GRAM)
     refs = ", ".join(f"toks[i+{j - 1}]" for j in range(_SPAN_GRAM))
     grams = toked.select(
@@ -990,7 +988,7 @@ def _dup_span_islands(docs: DataFrame) -> DataFrame:
 # cannot drift between the stage and the composition.
 _CLEAN_SQL = f"""toked AS (
         SELECT doc_id,
-               regexp_split_to_array(lower(trim(text, ' ')), '{_WS_SPLIT}') AS toks
+               {words_sql("text", True)} AS toks
         FROM documents
     ),
     tokens AS (
@@ -1059,7 +1057,7 @@ def substring_dedup_clean(docs: DataFrame) -> DataFrame:
         .agg(F.collect_list(F.struct("span_start", "span_end")).alias("spans"))
     )
     toked = docs.select(
-        "doc_id", F.split(F.lower(F.trim(F.col("text"))), _WS_SPLIT).alias("toks")
+        "doc_id", words(F.col("text"), True).alias("toks")
     )
     j = toked.join(spans_per_doc, "doc_id", "left").withColumn(
         "kept",
@@ -1110,25 +1108,16 @@ def bloom_positions(fp_col: F.Column) -> F.Column:
 
 
 def _d49_oracle() -> str:
-    ws = r"[ \t\n\f\r]+"
     pos = (
         lambda d: f"CAST(CAST(('0x' || substr(md5(fp), {1 + 3 * d}, 3)) AS UBIGINT)"
         f" AS BIGINT) % {_BLOOM_BITS}"
     )
     pos_list = ", ".join(pos(d) for d in range(_BLOOM_K))
     return f"""
-    WITH planted AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % {_SHARED_MOD} = 0
-                    THEN 'shared boilerplate page ' || CAST(doc_id % 3 AS VARCHAR)
-                    WHEN doc_id % {_BATCHDUP_MOD} = 0 AND doc_id % {_PREV_MOD} != 0
-                    THEN 'batch duplicate page'
-                    ELSE text END AS text
-        FROM documents
-    ),
+    WITH {_DUP_PLANTED_SQL},
     fp AS (
         SELECT doc_id,
-               md5(regexp_replace(lower(trim(text, ' ')), '{ws}', ' ', 'g')) AS fp,
+               {content_fp_sql("text")} AS fp,
                (doc_id % {_PREV_MOD} = 0) AS is_prev
         FROM planted
     ),
@@ -1188,26 +1177,11 @@ def d49_bloom_prev_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     expects (1-e^(-kn/m))^k ~= 7e-4 FP; the gate pins exact equality of
     the whole verdict relation, so any FP the corpus does produce is in
     the hash-verified output, not averaged away."""
-    docs = load_table(spark, sf_dir, "documents")
     k = F.col("doc_id")
-    planted = docs.select(
-        "doc_id",
-        F.when(
-            k % _SHARED_MOD == 0,
-            F.concat(F.lit("shared boilerplate page "), (k % 3).cast("string")),
-        )
-        .when(
-            (k % _BATCHDUP_MOD == 0) & (k % _PREV_MOD != 0),
-            F.lit("batch duplicate page"),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
+    planted = _dup_planted(load_table(spark, sf_dir, "documents"))
     fp = planted.select(
         "doc_id",
-        F.md5(
-            F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS_SPLIT, " ")
-        ).alias("fp"),
+        content_fp(F.col("text")).alias("fp"),
         (k % _PREV_MOD == 0).alias("is_prev"),
     )
     prev_exact = fp.filter("is_prev").select("fp").distinct()

@@ -19,11 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..functions.strings import words, words_sql
 from .registry import query
-from .text3 import _WS_SPLIT
-from .text4 import _tokens
-
-_WS = _WS_SPLIT  # one pinned separator: Spark tokens and DuckDB oracles share it
 
 _DSIR_BUCKETS = 4096  # hashed feature space (Xie et al. use 10k)
 _DSIR_SCALE = 1_000_000  # fixed-point scale for the per-feature ratio
@@ -36,7 +33,7 @@ def _grams(df: DataFrame) -> DataFrame:
     portable, unlike xxhash64 which DuckDB lacks): first 8 md5 hex
     digits as an integer, mod the bucket count."""
     toks = df.select(
-        "doc_id", _tokens(F.col("text")).alias("t")
+        "doc_id", words(F.col("text"), True).alias("t")
     ).filter(F.size("t") >= 1)
     uni = F.explode(F.col("t")).alias("gram")
     bi = F.explode(
@@ -58,7 +55,7 @@ def _grams(df: DataFrame) -> DataFrame:
 _DSIR_GRAMS_SQL = f"""
     toks AS (
         SELECT doc_id, source,
-               regexp_split_to_array(lower(trim(text, ' ')), '{_WS}') AS t
+               {words_sql("text", True)} AS t
         FROM documents
     ),
     grams AS (
@@ -205,7 +202,7 @@ def lm_train(ref_docs: DataFrame) -> dict[str, DataFrame]:
     Bounded by the REFERENCE corpus (wiki-sized), so every consumer
     broadcasts them — library form shared by the d56 batch query and
     the streaming curation LM stage (curation_stream.index_lm)."""
-    toks = ref_docs.select("lang", _tokens(F.col("text")).alias("t"))
+    toks = ref_docs.select("lang", words(F.col("text"), True).alias("t"))
     # checkpoint the unigram relation (r15 opt, guide §5): it is bounded
     # by the reference corpus (every consumer broadcasts it) yet feeds
     # THREE consumers — stats below, and lm_score's two word-side
@@ -234,6 +231,54 @@ def lm_train(ref_docs: DataFrame) -> dict[str, DataFrame]:
     return {"uni": uni, "stats": stats, "big": big}
 
 
+def lm_train_sql(toks: str, ref_filter: str) -> str:
+    """DuckDB twin of lm_train: the ref_uni, ref_stats and ref_big CTEs
+    over the token relation ``toks`` (lang, t).  ``ref_filter`` is the
+    predicate prefix (``"... AND "``) that picks the reference rows out
+    of ``toks``, empty when ``toks`` holds only them."""
+    return f"""ref_uni AS (
+        SELECT lang, word, CAST(COUNT(*) AS BIGINT) AS c1
+        FROM (SELECT lang, unnest(t) AS word FROM {toks}
+              WHERE {ref_filter}len(t) >= 1)
+        GROUP BY lang, word
+    ),
+    ref_stats AS (
+        SELECT lang, CAST(SUM(c1) AS BIGINT) AS tt,
+               CAST(COUNT(*) AS BIGINT) AS vv
+        FROM ref_uni GROUP BY lang
+    ),
+    ref_big AS (
+        SELECT lang, w1, w2, CAST(COUNT(*) AS BIGINT) AS c2
+        FROM (SELECT lang, {_LM_BIGRAMS}
+              FROM {toks} WHERE {ref_filter}len(t) >= 2)
+        GROUP BY lang, w1, w2
+    )"""
+
+
+def lm_score_sql(grams: str) -> str:
+    """DuckDB twin of lm_score before its division: (doc_id, lang,
+    n_bigrams, psum) of the bigram relation ``grams`` (doc_id, lang, w1,
+    w2) against lm_train_sql's CTEs; fluency_fp is psum // n_bigrams."""
+    return f"""
+        SELECT d.doc_id, d.lang,
+               CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+               CAST(SUM(CASE
+                   WHEN u1.c1 IS NOT NULL THEN
+                       ({_LM_SCALE} * (COALESCE(b.c2, 0) + 1))
+                       // (u1.c1 + s.vv)
+                   WHEN s.vv IS NOT NULL THEN
+                       ({_LM_SCALE} * (COALESCE(u2.c1, 0) + 1))
+                       // (s.tt + s.vv)
+                   ELSE 0 END) AS BIGINT) AS psum
+        FROM {grams} d
+        LEFT JOIN ref_big b
+            ON d.lang = b.lang AND d.w1 = b.w1 AND d.w2 = b.w2
+        LEFT JOIN ref_uni u1 ON d.lang = u1.lang AND d.w1 = u1.word
+        LEFT JOIN ref_uni u2 ON d.lang = u2.lang AND d.w2 = u2.word
+        LEFT JOIN ref_stats s ON d.lang = s.lang
+        GROUP BY d.doc_id, d.lang"""
+
+
 def lm_score(docs: DataFrame, lm: dict[str, DataFrame]) -> DataFrame:
     """Score documents (doc_id, lang, text) against a trained LM:
     (doc_id, lang, n_bigrams, fluency_fp) for every doc with >= 2
@@ -242,7 +287,7 @@ def lm_score(docs: DataFrame, lm: dict[str, DataFrame]) -> DataFrame:
     exact arithmetic d56 documents; integer-exact so the DuckDB oracles
     replay it bit-for-bit."""
     doc_big = (
-        docs.select("doc_id", "lang", _tokens(F.col("text")).alias("t"))
+        docs.select("doc_id", "lang", words(F.col("text"), True).alias("t"))
         .filter(F.size("t") >= 2)
         .select("doc_id", "lang", F.explode(F.expr(_LM_PAIRS)).alias("p"))
         .select("doc_id", "lang", "p.w1", "p.w2")
@@ -293,48 +338,15 @@ def lm_score(docs: DataFrame, lm: dict[str, DataFrame]) -> DataFrame:
 _D56_ORACLE = f"""
     WITH toks AS (
         SELECT doc_id, lang, source,
-               regexp_split_to_array(lower(trim(text, ' ')), '{_WS}') AS t
+               {words_sql("text", True)} AS t
         FROM documents
     ),
-    ref_uni AS (
-        SELECT lang, word, CAST(COUNT(*) AS BIGINT) AS c1
-        FROM (SELECT lang, unnest(t) AS word FROM toks
-              WHERE source IN {_LM_REF} AND len(t) >= 1)
-        GROUP BY lang, word
-    ),
-    ref_stats AS (
-        SELECT lang, CAST(SUM(c1) AS BIGINT) AS tt,
-               CAST(COUNT(*) AS BIGINT) AS vv
-        FROM ref_uni GROUP BY lang
-    ),
-    ref_big AS (
-        SELECT lang, w1, w2, CAST(COUNT(*) AS BIGINT) AS c2
-        FROM (SELECT lang, {_LM_BIGRAMS}
-              FROM toks WHERE source IN {_LM_REF} AND len(t) >= 2)
-        GROUP BY lang, w1, w2
-    ),
+    {lm_train_sql("toks", f"source IN {_LM_REF} AND ")},
     doc_big AS (
         SELECT doc_id, lang, {_LM_BIGRAMS}
         FROM toks WHERE len(t) >= 2
     ),
-    scored AS (
-        SELECT d.doc_id, d.lang,
-               CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-               CAST(SUM(CASE
-                   WHEN u1.c1 IS NOT NULL THEN
-                       ({_LM_SCALE} * (COALESCE(b.c2, 0) + 1))
-                       // (u1.c1 + s.vv)
-                   WHEN s.vv IS NOT NULL THEN
-                       ({_LM_SCALE} * (COALESCE(u2.c1, 0) + 1))
-                       // (s.tt + s.vv)
-                   ELSE 0 END) AS BIGINT) AS psum
-        FROM doc_big d
-        LEFT JOIN ref_big b
-            ON d.lang = b.lang AND d.w1 = b.w1 AND d.w2 = b.w2
-        LEFT JOIN ref_uni u1 ON d.lang = u1.lang AND d.w1 = u1.word
-        LEFT JOIN ref_uni u2 ON d.lang = u2.lang AND d.w2 = u2.word
-        LEFT JOIN ref_stats s ON d.lang = s.lang
-        GROUP BY d.doc_id, d.lang
+    scored AS ({lm_score_sql("doc_big")}
     )
     SELECT doc_id, lang, n_bigrams,
            psum // n_bigrams AS fluency_fp,
@@ -404,7 +416,7 @@ _OOV_MAX = 0.35  # keep documents with at most this OOV token fraction
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               regexp_split_to_array(lower(trim(text, ' ')), '{_WS}') AS t
+               {words_sql("text", True)} AS t
         FROM documents
     ),
     vocab AS (
@@ -451,7 +463,7 @@ def d59_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast into a row-local array_contains filter, so the per-doc
     pass is scan-side with no second shuffle."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    t = _tokens(F.col("text"))
+    t = words(F.col("text"), True)
     toks = docs.select("doc_id", t.alias("t")).filter(F.size("t") >= 1)
     vocab = [
         r["word"]
@@ -482,25 +494,10 @@ def d59_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .text3 import EMAIL_RE as _EMAIL, IPV4_RE as _IP, PHONE_RE as _PHONE  # noqa: E402
 from .text4 import _STOP_SQL  # noqa: E402
 
-_D57_SCORE_SQL = f"""
-            SELECT d.doc_id, d.lang,
-                   CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-                   CAST(SUM(CASE
-                       WHEN u1.c1 IS NOT NULL THEN
-                           ({_LM_SCALE} * (COALESCE(b.c2, 0) + 1))
-                           // (u1.c1 + s.vv)
-                       WHEN s.vv IS NOT NULL THEN
-                           ({_LM_SCALE} * (COALESCE(u2.c1, 0) + 1))
-                           // (s.tt + s.vv)
-                       ELSE 0 END) AS BIGINT) AS psum
-            FROM __GRAMS__ d
-            LEFT JOIN ref_big b
-                ON d.lang = b.lang AND d.w1 = b.w1 AND d.w2 = b.w2
-            LEFT JOIN ref_uni u1 ON d.lang = u1.lang AND d.w1 = u1.word
-            LEFT JOIN ref_uni u2 ON d.lang = u2.lang AND d.w2 = u2.word
-            LEFT JOIN ref_stats s ON d.lang = s.lang
-            GROUP BY d.doc_id, d.lang
-"""
+_D57_SCRUB_SQL = f"""regexp_replace(regexp_replace(regexp_replace(text,
+                       '{_EMAIL}', '<EMAIL>', 'g'),
+                       '{_PHONE}', '<PHONE>', 'g'),
+                       '{_IP}', '<IP>', 'g')"""
 
 
 @query(
@@ -517,7 +514,7 @@ _D57_SCORE_SQL = f"""
     ),
     ptoks AS (
         SELECT doc_id, lang, source, text,
-               regexp_split_to_array(lower(trim(text, ' ')), '{_WS}') AS t
+               {words_sql("text", True)} AS t
         FROM planted
     ),
     quality AS (
@@ -533,34 +530,15 @@ _D57_SCORE_SQL = f"""
     ),
     stoks AS (
         SELECT doc_id, lang,
-               regexp_split_to_array(lower(trim(
-                   regexp_replace(regexp_replace(regexp_replace(text,
-                       '{_EMAIL}', '<EMAIL>', 'g'),
-                       '{_PHONE}', '<PHONE>', 'g'),
-                       '{_IP}', '<IP>', 'g'), ' ')), '{_WS}') AS t
+               {words_sql(_D57_SCRUB_SQL, True)} AS t
         FROM quality
     ),
     rtoks AS (
         SELECT doc_id, lang,
-               regexp_split_to_array(lower(trim(text, ' ')), '{_WS}') AS t
+               {words_sql("text", True)} AS t
         FROM documents WHERE source IN {_LM_REF}
     ),
-    ref_uni AS (
-        SELECT lang, word, CAST(COUNT(*) AS BIGINT) AS c1
-        FROM (SELECT lang, unnest(t) AS word FROM rtoks WHERE len(t) >= 1)
-        GROUP BY lang, word
-    ),
-    ref_stats AS (
-        SELECT lang, CAST(SUM(c1) AS BIGINT) AS tt,
-               CAST(COUNT(*) AS BIGINT) AS vv
-        FROM ref_uni GROUP BY lang
-    ),
-    ref_big AS (
-        SELECT lang, w1, w2, CAST(COUNT(*) AS BIGINT) AS c2
-        FROM (SELECT lang, {_LM_BIGRAMS}
-              FROM rtoks WHERE len(t) >= 2)
-        GROUP BY lang, w1, w2
-    ),
+    {lm_train_sql("rtoks", "")},
     doc_big AS (
         SELECT doc_id, lang, {_LM_BIGRAMS} FROM stoks WHERE len(t) >= 2
     ),
@@ -569,11 +547,11 @@ _D57_SCORE_SQL = f"""
     ),
     fl AS (
         SELECT doc_id, lang, n_bigrams, psum // n_bigrams AS fluency_fp
-        FROM ({_D57_SCORE_SQL.replace("__GRAMS__", "doc_big")})
+        FROM ({lm_score_sql("doc_big")})
     ),
     ref_fl AS (
         SELECT doc_id, lang, psum // n_bigrams AS fluency_fp
-        FROM ({_D57_SCORE_SQL.replace("__GRAMS__", "ref_doc_big")})
+        FROM ({lm_score_sql("ref_doc_big")})
     ),
     ref_nt AS (
         SELECT lang, fluency_fp,

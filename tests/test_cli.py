@@ -55,6 +55,23 @@ def test_cli_build_writes_tiers(spark, fixture_dirs, tmp_path):
     assert edges.count() == 22
 
 
+def test_cli_absent_indexes_are_statically_empty(spark, fixture_dirs):
+    """A build without --name-index, --uri-index, --same-as or
+    --different-from gets provably-empty indexes, so reconcile elides
+    their joins as it does for the gates; a named one is read."""
+    from data_pipeline_spark.cli import _load_indexes, build_parser
+    from data_pipeline_spark.pipeline.reconcile import _statically_empty
+
+    args = build_parser().parse_args(
+        ["build", "--records", fixture_dirs["records"], "--out", "unused",
+         "--same-as", fixture_dirs["same_as"]]
+    )
+    indexes = _load_indexes(spark, args)
+    assert {k: _statically_empty(df) for k, df in indexes.items()} == {
+        "name_index": True, "uri_index": True, "same_as": False, "different_from": True,
+    }
+
+
 def test_cli_incremental_splices(spark, fixture_dirs, tmp_path):
     from data_pipeline_spark.pipeline.fixtures import build_changes
 

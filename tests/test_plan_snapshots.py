@@ -15,8 +15,9 @@ Intentional plan changes regenerate the snapshot:
         tests/test_plan_snapshots.py -q
 
 and the snapshot diff then shows up in review like any other code
-change.  Counts are of operator LINES in the pre-execution adaptive
-plan (isFinalPlan=false), which is deterministic for fixed testdata +
+change.  Counts are tools/measure.py's ``plan_signature`` (the one
+operator-count rule, also what ``measure.py plans`` reports) of the
+pre-execution adaptive plan (isFinalPlan=false), which is deterministic for fixed testdata +
 session confs — AQE runtime re-plans don't feed into it.
 """
 
@@ -24,55 +25,15 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from pathlib import Path
 
 import pytest
 
 from data_pipeline_spark.queries import QUERIES
+from tools.measure import plan_signature
 
 SF = "/root/testdata/sf0.001"
 SNAPSHOT_PATH = Path(__file__).parent / "plan_snapshots.json"
-
-# operators whose per-plan counts ARE the shape claim; prefix-matched on
-# the operator token that starts each plan line ("Exchange" deliberately
-# does not match "BroadcastExchange"/"ReusedExchange" — those are counted
-# as themselves)
-SIG_OPS = (
-    "BroadcastHashJoin",
-    "SortMergeJoin",
-    "ShuffledHashJoin",
-    "BroadcastNestedLoopJoin",
-    "CartesianProduct",
-    "Exchange",
-    "BroadcastExchange",
-    "HashAggregate",
-    "SortAggregate",
-    "ObjectHashAggregate",
-    "Window",
-    "TakeOrderedAndProject",
-    "MapInPandas",
-    "FlatMapGroupsInPandas",
-    "ArrowEvalPython",
-    "BatchEvalPython",
-    "Generate",
-)
-
-_OP_LINE = re.compile(r"^[\s:+*()-]*(\w+)")
-
-
-def plan_signature(plan: str) -> dict[str, int]:
-    counts: dict[str, int] = {}
-    for line in plan.splitlines():
-        m = _OP_LINE.match(line)
-        if not m:
-            continue
-        tok = m.group(1)
-        for op in SIG_OPS:
-            if tok == op:
-                counts[op] = counts.get(op, 0) + 1
-                break
-    return counts
 
 
 def headline_names() -> list[str]:

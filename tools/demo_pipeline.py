@@ -97,6 +97,7 @@ def main() -> None:
 
     # 4 — the streaming entity build on delta (merge-on-read) state:
     # one crawl becomes one blast-sized delta; reads fold base + deltas
+    from data_pipeline_spark.catalog import empty_indexes
     from data_pipeline_spark.streaming.entity_stream import (
         init_state, latest_state, lookup_state, stream_entity_builds,
     )
@@ -113,13 +114,7 @@ def main() -> None:
         "source string, identifier string, rectype string, "
         "record_time string, change string, data string",
     )
-    e = spark.createDataFrame
-    idx_empty = {
-        "name_index": e([], "source string, name_clean string, target_identifier string, rectype string"),
-        "uri_index": e([], "source string, ext_uri string, target_identifier string, rectype string"),
-        "same_as": e([], "uri_a string, uri_b string"),
-        "different_from": e([], "uri_a string, uri_b string"),
-    }
+    idx_empty = empty_indexes(spark)
     state = os.path.join(out, "entity_state")
     init_state(spark, recs, idx_empty, state)
     efeed = os.path.join(out, "entity_feed")

@@ -24,8 +24,10 @@ Each run prints one JSON line.
   ``incremental_build`` with an N-change feed and forces the spliced
   tier.  Domain counters are read off the returned tiers after the
   timed region.
-- ``plans`` reports operator counts of each query's physical plan, and
-  with ``--out`` writes the formatted plans; it runs no action itself.
+- ``plans`` reports each query's plan signature (``plan_signature``: the
+  counts of the SIG_OPS operators in its physical plan, the rule
+  tests/plan_snapshots.json is written with), and with ``--out`` writes
+  the formatted plans; it runs no action itself.
 - ``--against REV`` runs each rep as two subprocesses, one importing the
   engine package from REV (extracted with ``git archive``) and one from
   this checkout, alternating which runs first.  bench.py and entitybench
@@ -60,7 +62,31 @@ from entitybench.trace import GROUP_PREFIX, Tracer, event_log_path, fold_event_l
 
 ENGINE = os.path.dirname(os.path.dirname(os.path.abspath(data_pipeline_spark.__file__)))
 
-PLAN_OPS = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython", "Exchange")
+# operators whose per-plan counts are a plan's shape: a join flipping
+# between sort-merge and broadcast, an added shuffle or a lost partial
+# aggregate each change the signature
+SIG_OPS = (
+    "BroadcastHashJoin",
+    "SortMergeJoin",
+    "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin",
+    "CartesianProduct",
+    "Exchange",
+    "BroadcastExchange",
+    "HashAggregate",
+    "SortAggregate",
+    "ObjectHashAggregate",
+    "Window",
+    "TakeOrderedAndProject",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "Generate",
+)
+# an operator line starts with the operator's name after the tree glyphs
+# (and a codegen stage id); "Exchange" does not match "BroadcastExchange"
+_OP_LINE = re.compile(r"^[\s:+*()\d-]*(\w+)")
 MERGE_ORDER = {"srcA": 0, "srcB": 1, "srcN": 2}
 
 
@@ -213,6 +239,16 @@ def run_build_scenario(spark, sf: str, crawl: int = 0, reps: int = 1,
     return _report(spark, "build", walls, jobs, canaries, events, sf=sf, counters=counters)
 
 
+def plan_signature(plan: str) -> dict[str, int]:
+    """Counts of the SIG_OPS operators among a plan string's lines."""
+    counts: dict[str, int] = {}
+    for line in plan.splitlines():
+        m = _OP_LINE.match(line)
+        if m and m.group(1) in SIG_OPS:
+            counts[m.group(1)] = counts.get(m.group(1), 0) + 1
+    return counts
+
+
 def run_plans(spark, names: list[str], sf: str, out_dir: str | None = None) -> dict:
     from data_pipeline_spark.queries import QUERIES
 
@@ -223,11 +259,7 @@ def run_plans(spark, names: list[str], sf: str, out_dir: str | None = None) -> d
             os.makedirs(out_dir, exist_ok=True)
             with open(os.path.join(out_dir, f"{n}.txt"), "w") as f:
                 f.write(spark.sparkContext._jvm.PythonSQLUtils.explainString(qe, "formatted"))
-        lines = qe.executedPlan().toString().splitlines()
-        # an operator line starts with the operator's name after the tree
-        # glyphs; "Exchange" counts shuffles, not BroadcastExchange
-        counts[n] = {op: sum(1 for ln in lines if re.match(rf"^[\s:+*()\d-]*{op}\b", ln))
-                     for op in PLAN_OPS}
+        counts[n] = plan_signature(qe.executedPlan().toString())
     return {"scenario": "plans", "sf": sf, "ops": counts}
 
 

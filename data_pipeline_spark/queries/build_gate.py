@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import empty_indexes, load_table
+from ..sources.loaders import envelope
 from .registry import query
 
 _MERGE_ORDER = {"srcA": 0, "srcB": 1}
@@ -103,12 +104,8 @@ def _pair_records(
         if with_statement
         else []
     )
-    a = cust.select(
-        F.lit("srcA").alias("source"),
-        key.alias("identifier"),
-        F.lit("Person").alias("rectype"),
-        F.lit("2026-01-01T00:00:00").alias("record_time"),
-        F.lit("create").alias("change"),
+    a = envelope(
+        cust, "srcA", key, F.lit("Person"), F.lit(None).cast("string"),
         F.to_json(
             F.struct(
                 F.concat(F.lit("https://fixture.test/srcA/"), key).alias("id"),
@@ -124,14 +121,10 @@ def _pair_records(
                 *names,
                 *statement,
             )
-        ).alias("data"),
+        ),
     )
-    b = cust.select(
-        F.lit("srcB").alias("source"),
-        key.alias("identifier"),
-        F.lit("Person").alias("rectype"),
-        F.lit("2026-01-01T00:00:00").alias("record_time"),
-        F.lit("create").alias("change"),
+    b = envelope(
+        cust, "srcB", key, F.lit("Person"), F.lit(None).cast("string"),
         F.to_json(
             F.struct(
                 F.concat(F.lit("https://fixture.test/srcB/"), key).alias("id"),
@@ -140,7 +133,7 @@ def _pair_records(
                 # (srcA's label must win), not just component counting
                 F.concat(F.col("c_name"), F.lit(" (b)")).alias("_label"),
             )
-        ).alias("data"),
+        ),
     )
     return a.unionByName(b)
 

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import empty_indexes, load_table
+from ..sources.loaders import envelope
 from .registry import query
 
 
@@ -402,18 +403,14 @@ def _pair_rec(src: str, label_prefix: str, extra_name: str, link_to: str | None)
 def _pair_records(cust: DataFrame) -> DataFrame:
     """The previous build's records: srcA_k (linking srcB_k) and srcB_k."""
 
-    def envelope(src: str, data):
-        return cust.select(
-            F.lit(src).alias("source"),
-            F.col("c_custkey").cast("string").alias("identifier"),
-            F.lit("Person").alias("rectype"),
-            F.lit("2026-01-01T00:00:00").alias("record_time"),
-            F.lit("create").alias("change"),
-            data.alias("data"),
+    def records(src: str, data):
+        return envelope(
+            cust, src, F.col("c_custkey").cast("string"), F.lit("Person"),
+            F.lit(None).cast("string"), data,
         )
 
-    return envelope("srcA", _pair_rec("srcA", "A", "Aname", "srcB")).unionByName(
-        envelope("srcB", _pair_rec("srcB", "B", "Bname", None))
+    return records("srcA", _pair_rec("srcA", "A", "Aname", "srcB")).unionByName(
+        records("srcB", _pair_rec("srcB", "B", "Bname", None))
     )
 
 

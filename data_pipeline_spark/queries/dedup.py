@@ -1366,10 +1366,12 @@ def v05_stream_similarity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # never the previous corpus text
 # ---------------------------------------------------------------------------
 
-_D48_PREV_MOD = 4  # doc_id % 4 == 0 plays the previously-ingested corpus
-# Planted near-duplicates: SimHash64 hashes the DISTINCT word set, so a
-# word-order permutation of the same vocabulary is a guaranteed near-dup
-# (identical simhash) that is NOT an exact dup (different normalized md5).
+# doc_id % text4._PREV_MOD == 0 plays the previously-ingested corpus;
+# text4's d27 duplicate plants take precedence over the near-dup plants
+# below.  Planted near-duplicates: SimHash64 hashes the DISTINCT word
+# set, so a word-order permutation of the same vocabulary is a
+# guaranteed near-dup (identical simhash) that is NOT an exact dup
+# (different normalized md5).
 _D48_NEARPREV_MOD = 31  # prev gets _W ordered, delta gets _W reversed
 _D48_NEARBATCH_MOD = 37  # delta-only: two permutations of _X by doc_id parity
 _D48_W = (
@@ -1386,29 +1388,26 @@ _D48_X_REV = " ".join(reversed(_D48_X.split()))
 
 
 def _d48_oracle() -> str:
-    from .text4 import _BATCHDUP_MOD, _SHARED_MOD
+    from .text4 import _PREV_MOD, _dup_planted_sql
 
     return f"""
-    WITH planted AS (
+    WITH near AS (
         SELECT doc_id,
-               CASE WHEN doc_id % {_SHARED_MOD} = 0
-                    THEN 'shared boilerplate page ' || CAST(doc_id % 3 AS VARCHAR)
-                    WHEN doc_id % {_BATCHDUP_MOD} = 0 AND doc_id % {_D48_PREV_MOD} != 0
-                    THEN 'batch duplicate page'
-                    WHEN doc_id % {_D48_NEARPREV_MOD} = 0
-                    THEN CASE WHEN doc_id % {_D48_PREV_MOD} = 0
+               CASE WHEN doc_id % {_D48_NEARPREV_MOD} = 0
+                    THEN CASE WHEN doc_id % {_PREV_MOD} = 0
                               THEN '{_D48_W}' ELSE '{_D48_W_REV}' END
-                    WHEN doc_id % {_D48_NEARBATCH_MOD} = 0 AND doc_id % {_D48_PREV_MOD} != 0
+                    WHEN doc_id % {_D48_NEARBATCH_MOD} = 0 AND doc_id % {_PREV_MOD} != 0
                     THEN CASE WHEN doc_id % 2 = 0
                               THEN '{_D48_X}' ELSE '{_D48_X_REV}' END
                     ELSE text END AS text
         FROM documents
     ),
+    {_dup_planted_sql("near")},
     {_simhash_sql(64, 'planted')},
     feat AS (
         SELECT doc_id, {content_fp_sql("text")} AS fp,
                {quality_counts_sql("text")},
-               (doc_id % {_D48_PREV_MOD} = 0) AS is_prev
+               (doc_id % {_PREV_MOD} = 0) AS is_prev
         FROM planted
     ),
     joined AS (
@@ -1563,34 +1562,26 @@ def d48_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous corpus text, so a daily refresh costs O(delta + indexes)
     regardless of corpus age — the same contract as d27, extended to
     near-dups."""
-    from .text4 import _BATCHDUP_MOD, _SHARED_MOD
+    from .text4 import _PREV_MOD, _dup_planted
 
     docs = load_table(spark, sf_dir, "documents")
     k = F.col("doc_id")
-    planted = docs.select(
+    near = docs.select(
         "doc_id",
         F.when(
-            k % _SHARED_MOD == 0,
-            F.concat(F.lit("shared boilerplate page "), (k % 3).cast("string")),
-        )
-        .when(
-            (k % _BATCHDUP_MOD == 0) & (k % _D48_PREV_MOD != 0),
-            F.lit("batch duplicate page"),
-        )
-        .when(
             k % _D48_NEARPREV_MOD == 0,
-            F.when(k % _D48_PREV_MOD == 0, F.lit(_D48_W)).otherwise(F.lit(_D48_W_REV)),
+            F.when(k % _PREV_MOD == 0, F.lit(_D48_W)).otherwise(F.lit(_D48_W_REV)),
         )
         .when(
-            (k % _D48_NEARBATCH_MOD == 0) & (k % _D48_PREV_MOD != 0),
+            (k % _D48_NEARBATCH_MOD == 0) & (k % _PREV_MOD != 0),
             F.when(k % 2 == 0, F.lit(_D48_X)).otherwise(F.lit(_D48_X_REV)),
         )
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    planted = _tier(spark, sf_dir, "d48_planted", lambda: planted)
+    planted = _tier(spark, sf_dir, "d48_planted", lambda: _dup_planted(near))
     joined = refresh_features(planted).withColumn(
-        "is_prev", F.col("doc_id") % _D48_PREV_MOD == 0
+        "is_prev", F.col("doc_id") % _PREV_MOD == 0
     )
     prev_fp = joined.filter("is_prev").select("fp").distinct()
     prev_sim = joined.filter("is_prev").select("simhash").distinct()

@@ -1278,6 +1278,7 @@ def u14_dnb_close_match_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent from the table passes through untouched on the no-Python
     side of the join."""
     from ..sources.dnb import enrich_close_matches, load_macs
+    from ..sources.loaders import envelope
 
     c = load_table(spark, sf_dir, "customer")
     k = F.col("c_custkey")
@@ -1296,13 +1297,8 @@ def u14_dnb_close_match_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit('{"id":"https://d-nb.info/gnd/'), ks,
                  F.lit('","type":"Person"}'))
     )
-    envelopes = c.select(
-        F.lit("dnb").alias("source"),
-        ks.alias("identifier"),
-        F.lit("Person").alias("rectype"),
-        F.lit("2026-01-01T00:00:00").alias("record_time"),
-        F.lit("create").alias("change"),
-        data.alias("data"),
+    envelopes = envelope(
+        c, "dnb", ks, F.lit("Person"), F.lit(None).cast("string"), data
     )
     # the NT relation, synthesized through the same line parser the file
     # path uses: rows only for m in (0, 1)

@@ -24,10 +24,13 @@ from pyspark.sql import functions as F
 
 from ..catalog import empty_indexes, load_table
 from ..functions.strings import words_sql
+from ..sources.loaders import envelope
 from .dedup import _JACCARD_SQL, _bands_sql, _shingles_sql, _sig_sql, _verified_sql, _verify_sql
 from .registry import query
-from .text3 import EMAIL_RE, IPV4_RE, PHONE_RE, _BENCH_MOD, _CONTAM_MOD, _PLANT
-from .text4 import _STOP_SQL
+from .text3 import (
+    EMAIL_RE, IPV4_RE, PHONE_RE, PII_TAIL_SQL, _BENCH_MOD, _CONTAM_MOD, _PLANT, pii_tail,
+)
+from .text4 import GOPHER_KEEP_SQL, gopher_metrics_sql
 
 
 def _write_crawls(spark, workdir: str, crawls: list[DataFrame]) -> str:
@@ -61,19 +64,12 @@ def _materialized(spark, df: DataFrame, workdir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # r13_curation_stream
 # ---------------------------------------------------------------------------
-_PII_TAIL_SQL = f"""CASE doc_id % 3
-                 WHEN 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@mail.example.org'
-                 WHEN 1 THEN ' call 555-123-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                 ELSE ' host 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7'
-               END"""
-
-
 @query(
     "r13_curation_stream",
     oracle=rf"""
     WITH planted AS (
         SELECT doc_id,
-               text || {_PII_TAIL_SQL}
+               text || {PII_TAIL_SQL}
                     || CASE WHEN doc_id % {_BENCH_MOD} = 0 OR doc_id % {_CONTAM_MOD} = 0
                             THEN ' {_PLANT}' ELSE '' END AS text
         FROM documents
@@ -103,25 +99,14 @@ _PII_TAIL_SQL = f"""CASE doc_id % 3
         GROUP BY g.doc_id
     ),
     scored AS (
-        SELECT doc_id, text,
-               CAST(len(t) AS BIGINT) AS n_words,
-               CAST(len(array_to_string(t, '')) AS DOUBLE) / len(t) AS mean_word_len,
-               CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
-                   / len(t) AS alpha_frac,
-               CAST(len(list_filter(t, w -> w = '#' OR w = '...')) AS DOUBLE)
-                   / len(t) AS symbol_ratio,
-               CAST(len(list_filter(t, w -> w IN ({_STOP_SQL}))) AS BIGINT) AS stopword_hits
+        SELECT doc_id, text, {gopher_metrics_sql("t")}
         FROM (SELECT doc_id, text,
                      {words_sql("text", True)} AS t
               FROM feed)
     ),
     verdicts AS (
         SELECT *,
-               CASE WHEN n_words BETWEEN 50 AND 100000
-                         AND mean_word_len BETWEEN 3 AND 10
-                         AND alpha_frac >= 0.8 AND symbol_ratio <= 0.1
-                         AND stopword_hits >= 2
-                    THEN 'keep' ELSE 'drop' END AS verdict
+               CASE WHEN {GOPHER_KEEP_SQL} THEN 'keep' ELSE 'drop' END AS verdict
         FROM scored
     )
     SELECT v.doc_id, v.n_words, v.stopword_hits, v.verdict,
@@ -162,21 +147,11 @@ def r13_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     k = F.col("doc_id")
-    pii_tail = (
-        F.when(k % 3 == 0,
-               F.concat(F.lit(" contact user"), k.cast("string"),
-                        F.lit("@mail.example.org")))
-        .when(k % 3 == 1,
-              F.concat(F.lit(" call 555-123-"),
-                       F.lpad((k % 10000).cast("string"), 4, "0")))
-        .otherwise(F.concat(F.lit(" host 10.0."),
-                            (k % 256).cast("string"), F.lit(".7")))
-    )
     plant = (k % _BENCH_MOD == 0) | (k % _CONTAM_MOD == 0)
     planted = docs.select(
         "doc_id",
         F.concat(
-            F.col("text"), pii_tail,
+            F.col("text"), pii_tail(k),
             F.when(plant, F.lit(" " + _PLANT)).otherwise(F.lit("")),
         ).alias("text"),
     )
@@ -251,11 +226,8 @@ def r13_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit(label_prefix), ks).alias("_label"),
         ))
 
-    records = cust.select(
-        F.lit("srcA").alias("source"), ks.alias("identifier"),
-        F.lit("Person").alias("rectype"),
-        F.lit("2026-01-01T00:00:00").alias("record_time"),
-        F.lit("create").alias("change"), doc("orig-").alias("data"),
+    records = envelope(
+        cust, "srcA", ks, F.lit("Person"), F.lit(None).cast("string"), doc("orig-")
     )
     crawl = cust.filter((k % 7).isin(1, 2)).select(
         k.alias("seq"),

@@ -74,7 +74,7 @@ QUALITY_OK_SQL = (
       SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 20 = 0
     )
     SELECT fp, MIN(doc_id) AS keeper_doc_id, COUNT(*) AS n_copies
-    FROM (SELECT doc_id, md5(lower(trim(text))) AS fp FROM corpus)
+    FROM (SELECT doc_id, md5(lower(trim(text, ' '))) AS fp FROM corpus)
     GROUP BY fp HAVING COUNT(*) > 1
     """,
     survey="dedup-exact",
@@ -769,7 +769,7 @@ def nfc_normalize_col():
                                  chr(8203) || 'x' || chr(3) || 'y'),
                    '[\\x00-\\x08\\x0e-\\x1f\\x7f\\x{{200b}}-\\x{{200d}}\\x{{feff}}]',
                    '', 'g'),
-               '{WS}', ' ', 'g')) AS norm_text
+               '{WS}', ' ', 'g'), ' ') AS norm_text
     FROM documents
     """,
     survey="text-normalize,F8,F14",

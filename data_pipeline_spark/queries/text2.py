@@ -759,7 +759,7 @@ def f09_name_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
                regexp_replace('<p>Doc ' || doc_id || ' &amp; <b>more</b>&nbsp;text</p>',
                               '<[^>]*>', ' ', 'g'),
                '&amp;', '&'), '&lt;', '<'), '&gt;', '>'), '&nbsp;', ' '),
-             '{WS}', ' ', 'g')) AS clean
+             '{WS}', ' ', 'g'), ' ') AS clean
     FROM documents
     """,
     survey="F14",

@@ -52,20 +52,35 @@ def pii_counts(text: F.Column) -> list[F.Column]:
     ]
 
 
-_PII_INJECT_SQL = """
-        CASE doc_id % 3
-          WHEN 0 THEN text || ' contact user' || doc_id || '@mail.example.org'
-          WHEN 1 THEN text || ' call 555-123-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-          ELSE text || ' host 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7'
-        END
-"""
+def pii_tail(k: F.Column) -> F.Column:
+    """The planted PII item every PII gate appends to a document (the
+    synthetic corpus carries none): an email, a phone number or an IPv4
+    address, rotating on doc_id % 3."""
+    return (
+        F.when(k % 3 == 0,
+               F.concat(F.lit(" contact user"), k.cast("string"),
+                        F.lit("@mail.example.org")))
+        .when(k % 3 == 1,
+              F.concat(F.lit(" call 555-123-"),
+                       F.lpad((k % 10000).cast("string"), 4, "0")))
+        .otherwise(F.concat(F.lit(" host 10.0."),
+                            (k % 256).cast("string"), F.lit(".7")))
+    )
+
+
+# DuckDB twin of pii_tail over doc_id
+PII_TAIL_SQL = """CASE doc_id % 3
+                 WHEN 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@mail.example.org'
+                 WHEN 1 THEN ' call 555-123-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+                 ELSE ' host 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7'
+               END"""
 
 
 @query(
     "d18_pii_scrub",
     oracle=f"""
     WITH planted AS (
-        SELECT doc_id, {_PII_INJECT_SQL} AS t FROM documents
+        SELECT doc_id, text || {PII_TAIL_SQL} AS t FROM documents
     )
     SELECT doc_id,
            CAST(len(regexp_extract_all(t, '{EMAIL_RE}')) AS BIGINT) AS n_emails,
@@ -85,24 +100,7 @@ def d18_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries none organically), the counts find it, and the md5 of the
     scrubbed text proves byte-identical redaction across engines."""
     docs = load_table(spark, sf_dir, "documents")
-    k = F.col("doc_id")
-    planted = (
-        F.when(
-            k % 3 == 0,
-            F.concat(F.col("text"), F.lit(" contact user"), k.cast("string"),
-                     F.lit("@mail.example.org")),
-        )
-        .when(
-            k % 3 == 1,
-            F.concat(F.col("text"), F.lit(" call 555-123-"),
-                     F.lpad((k % 10000).cast("string"), 4, "0")),
-        )
-        .otherwise(
-            F.concat(F.col("text"), F.lit(" host 10.0."),
-                     (k % 256).cast("string"), F.lit(".7"))
-        )
-    )
-    t = planted
+    t = F.concat(F.col("text"), pii_tail(F.col("doc_id")))
     return docs.select(
         "doc_id", *pii_counts(t), F.md5(scrub_pii(t)).alias("scrub_md5")
     )

@@ -57,7 +57,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_table
 from .registry import query
 from ..functions.strings import WS, content_fp, content_fp_sql, words, words_sql
-from .text3 import EMAIL_RE, IPV4_RE, PHONE_RE
+from .text3 import EMAIL_RE, IPV4_RE, PHONE_RE, PII_TAIL_SQL, pii_tail
 
 _STOPWORDS = ("the", "a", "of", "to", "and", "in")
 _STOP_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
@@ -90,6 +90,26 @@ def gopher_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def gopher_metrics_sql(t: str) -> str:
+    """DuckDB twin of gopher_metrics: the five metric columns over the
+    token-list column ``t`` (a SELECT-list fragment)."""
+    return f"""CAST(len({t}) AS BIGINT) AS n_words,
+               CAST(len(array_to_string({t}, '')) AS DOUBLE) / len({t}) AS mean_word_len,
+               CAST(len(list_filter({t}, w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
+                   / len({t}) AS alpha_frac,
+               CAST(len(list_filter({t}, w -> w = '#' OR w = '...')) AS DOUBLE)
+                   / len({t}) AS symbol_ratio,
+               CAST(len(list_filter({t}, w -> w IN ({_STOP_SQL}))) AS BIGINT)
+                   AS stopword_hits"""
+
+
+# DuckDB twin of gopher_metrics' keep verdict, over the metric columns
+GOPHER_KEEP_SQL = (
+    "n_words BETWEEN 50 AND 100000 AND mean_word_len BETWEEN 3 AND 10"
+    " AND alpha_frac >= 0.8 AND symbol_ratio <= 0.1 AND stopword_hits >= 2"
+)
+
+
 @query(
     "d21_gopher_quality",
     oracle=rf"""
@@ -106,25 +126,12 @@ def gopher_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
         FROM planted
     ),
     m AS (
-        SELECT doc_id,
-               CAST(len(t) AS BIGINT) AS n_words,
-               CAST(len(array_to_string(t, '')) AS DOUBLE) / len(t) AS mean_word_len,
-               CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
-                   / len(t) AS alpha_frac,
-               CAST(len(list_filter(t, w -> w = '#' OR w = '...')) AS DOUBLE)
-                   / len(t) AS symbol_ratio,
-               CAST(len(list_filter(t, w -> w IN ({_STOP_SQL}))) AS BIGINT)
-                   AS stopword_hits
+        SELECT doc_id, {gopher_metrics_sql("t")}
         FROM toks
     )
     SELECT doc_id, n_words, mean_word_len, alpha_frac, symbol_ratio,
            stopword_hits,
-           CASE WHEN n_words BETWEEN 50 AND 100000
-                 AND mean_word_len BETWEEN 3 AND 10
-                 AND alpha_frac >= 0.8
-                 AND symbol_ratio <= 0.1
-                 AND stopword_hits >= 2
-                THEN 'keep' ELSE 'drop' END AS verdict
+           CASE WHEN {GOPHER_KEEP_SQL} THEN 'keep' ELSE 'drop' END AS verdict
     FROM m
     """,
     survey="dedup-gopher-quality",
@@ -378,30 +385,17 @@ def d25_mixture_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "d26_curation_pipeline",
     oracle=rf"""
     WITH planted AS (
-        SELECT doc_id, source,
-               CASE doc_id % 3
-                 WHEN 0 THEN text || ' contact user' || doc_id || '@mail.example.org'
-                 WHEN 1 THEN text || ' call 555-123-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                 ELSE text || ' host 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7'
-               END AS text
+        SELECT doc_id, source, text || {PII_TAIL_SQL} AS text
         FROM documents
     ),
     scored AS (
-        SELECT doc_id, source, text,
-               CAST(len(t) AS BIGINT) AS n_words,
-               CAST(len(array_to_string(t, '')) AS DOUBLE) / len(t) AS mean_word_len,
-               CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
-                   / len(t) AS alpha_frac,
-               CAST(len(list_filter(t, w -> w = '#' OR w = '...')) AS DOUBLE)
-                   / len(t) AS symbol_ratio,
-               CAST(len(list_filter(t, w -> w IN ({_STOP_SQL}))) AS BIGINT) AS stop_hits
+        SELECT doc_id, source, text, {gopher_metrics_sql("t")}
         FROM (SELECT *, {words_sql("text", True)} AS t
               FROM planted)
     ),
     quality AS (
         SELECT doc_id, source, text, n_words FROM scored
-        WHERE n_words BETWEEN 50 AND 100000 AND mean_word_len BETWEEN 3 AND 10
-          AND alpha_frac >= 0.8 AND symbol_ratio <= 0.1 AND stop_hits >= 2
+        WHERE {GOPHER_KEEP_SQL}
     ),
     scrubbed AS (
         SELECT doc_id, source, n_words,
@@ -449,16 +443,7 @@ def d26_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     k = F.col("doc_id")
     planted = docs.select(
-        "doc_id", "source",
-        F.when(k % 3 == 0,
-               F.concat(F.col("text"), F.lit(" contact user"),
-                        k.cast("string"), F.lit("@mail.example.org")))
-        .when(k % 3 == 1,
-              F.concat(F.col("text"), F.lit(" call 555-123-"),
-                       F.lpad((k % 10000).cast("string"), 4, "0")))
-        .otherwise(F.concat(F.col("text"), F.lit(" host 10.0."),
-                            (k % 256).cast("string"), F.lit(".7")))
-        .alias("text"),
+        "doc_id", "source", F.concat(F.col("text"), pii_tail(k)).alias("text")
     )
     # the quality gate IS gopher_metrics — the d21 construction applied
     # verbatim, so the pipeline and the standalone operator cannot drift
@@ -500,20 +485,23 @@ def d26_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PREV_MOD = 4  # doc_id % 4 == 0 plays the previously-ingested corpus
 _SHARED_MOD = 23  # planted shared-boilerplate docs (guaranteed prev dups)
 _BATCHDUP_MOD = 29  # planted new-only duplicates (guaranteed batch dups)
-_DUP_PLANTED_SQL = f"""planted AS (
+def _dup_planted_sql(src: str) -> str:
+    """The ``planted`` CTE over relation ``src``: _dup_planted's DuckDB
+    twin."""
+    return f"""planted AS (
         SELECT doc_id,
                CASE WHEN doc_id % {_SHARED_MOD} = 0
                     THEN 'shared boilerplate page ' || CAST(doc_id % 3 AS VARCHAR)
                     WHEN doc_id % {_BATCHDUP_MOD} = 0 AND doc_id % {_PREV_MOD} != 0
                     THEN 'batch duplicate page'
                     ELSE text END AS text
-        FROM documents
+        FROM {src}
     )"""
 
 
 def _dup_planted(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) with the d27/d49 duplicate plants (the Spark twin
-    of _DUP_PLANTED_SQL): shared boilerplate on every doc_id %
+    """(doc_id, text) with the d27/d48/d49 duplicate plants (the Spark
+    twin of _dup_planted_sql): shared boilerplate on every doc_id %
     _SHARED_MOD, one batch-duplicate text on new doc_id % _BATCHDUP_MOD."""
     k = F.col("doc_id")
     return docs.select(
@@ -534,7 +522,7 @@ def _dup_planted(docs: DataFrame) -> DataFrame:
 @query(
     "d27_incremental_dedup",
     oracle=rf"""
-    WITH {_DUP_PLANTED_SQL},
+    WITH {_dup_planted_sql("documents")},
     fp AS (
         SELECT doc_id,
                {content_fp_sql("text")} AS fingerprint,
@@ -1114,7 +1102,7 @@ def _d49_oracle() -> str:
     )
     pos_list = ", ".join(pos(d) for d in range(_BLOOM_K))
     return f"""
-    WITH {_DUP_PLANTED_SQL},
+    WITH {_dup_planted_sql("documents")},
     fp AS (
         SELECT doc_id,
                {content_fp_sql("text")} AS fp,

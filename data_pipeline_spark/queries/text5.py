@@ -492,7 +492,8 @@ def d59_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # constants, the r13/r15 gate pattern) — never paste a regex into SQL
 # source text: literal braces and backslashes silently corrupt there.
 from .text3 import EMAIL_RE as _EMAIL, IPV4_RE as _IP, PHONE_RE as _PHONE  # noqa: E402
-from .text4 import _STOP_SQL  # noqa: E402
+from .text3 import PII_TAIL_SQL, pii_tail  # noqa: E402
+from .text4 import GOPHER_KEEP_SQL, gopher_metrics_sql  # noqa: E402
 
 _D57_SCRUB_SQL = f"""regexp_replace(regexp_replace(regexp_replace(text,
                        '{_EMAIL}', '<EMAIL>', 'g'),
@@ -504,12 +505,7 @@ _D57_SCRUB_SQL = f"""regexp_replace(regexp_replace(regexp_replace(text,
     "d57_curation_lm_pipeline",
     oracle=f"""
     WITH planted AS (
-        SELECT doc_id, lang, source,
-               CASE doc_id % 3
-                 WHEN 0 THEN text || ' contact user' || doc_id || '@mail.example.org'
-                 WHEN 1 THEN text || ' call 555-123-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                 ELSE text || ' host 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7'
-               END AS text
+        SELECT doc_id, lang, source, text || {PII_TAIL_SQL} AS text
         FROM documents
     ),
     ptoks AS (
@@ -518,15 +514,10 @@ _D57_SCRUB_SQL = f"""regexp_replace(regexp_replace(regexp_replace(text,
         FROM planted
     ),
     quality AS (
-        SELECT doc_id, lang, source, text FROM ptoks
-        WHERE len(t) BETWEEN 50 AND 100000
-          AND CAST(len(array_to_string(t, '')) AS DOUBLE) / len(t)
-              BETWEEN 3 AND 10
-          AND CAST(len(list_filter(t, w -> regexp_matches(w, '[a-z]')))
-                   AS DOUBLE) / len(t) >= 0.8
-          AND CAST(len(list_filter(t, w -> w = '#' OR w = '...'))
-                   AS DOUBLE) / len(t) <= 0.1
-          AND len(list_filter(t, w -> w IN ({_STOP_SQL}))) >= 2
+        SELECT doc_id, lang, source, text
+        FROM (SELECT doc_id, lang, source, text, {gopher_metrics_sql("t")}
+              FROM ptoks)
+        WHERE {GOPHER_KEEP_SQL}
     ),
     stoks AS (
         SELECT doc_id, lang,
@@ -614,18 +605,9 @@ def d57_curation_lm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "text"
     )
-    k = F.col("doc_id")
     planted = docs.select(
         "doc_id", "lang", "source",
-        F.when(k % 3 == 0,
-               F.concat(F.col("text"), F.lit(" contact user"),
-                        k.cast("string"), F.lit("@mail.example.org")))
-        .when(k % 3 == 1,
-              F.concat(F.col("text"), F.lit(" call 555-123-"),
-                       F.lpad((k % 10000).cast("string"), 4, "0")))
-        .otherwise(F.concat(F.col("text"), F.lit(" host 10.0."),
-                            (k % 256).cast("string"), F.lit(".7")))
-        .alias("text"),
+        F.concat(F.col("text"), pii_tail(F.col("doc_id"))).alias("text"),
     )
     quality = (
         gopher_metrics(planted)

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import envelope, load_jsonl_dump, name_node, type_ref
+
 RAW_SCHEMA = (
     "id bigint, api_model string, is_artist boolean, title string,"
     " alt_titles array<string>, description string, short_description string,"
@@ -28,8 +30,6 @@ _API_BASE = "https://api.artic.edu/api/v1"
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
         spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=r'"id"\s*:\s*(\d+)'
     )
@@ -58,29 +58,11 @@ def _uri(rectype: F.Column, ident: F.Column) -> F.Column:
     return F.concat(F.lit(_API_BASE + "/"), path, F.lit("/"), ident.cast("string"))
 
 
-def _name(content: F.Column, cls: str) -> F.Column:
-    return F.struct(
-        F.lit("Name").alias("type"),
-        content.alias("content"),
-        F.array(
-            F.struct(
-                F.lit(f"http://vocab.example/{cls}").alias("id"),
-                F.lit("Type").alias("type"),
-            )
-        ).alias("classified_as"),
-    )
-
-
 def _statement(content: F.Column) -> F.Column:
     return F.struct(
         F.lit("LinguisticObject").alias("type"),
         content.alias("content"),
-        F.array(
-            F.struct(
-                F.lit("http://vocab.example/description").alias("id"),
-                F.lit("Type").alias("type"),
-            )
-        ).alias("classified_as"),
+        F.array(type_ref("description")).alias("classified_as"),
     )
 
 
@@ -111,11 +93,11 @@ def map_records(loaded: DataFrame, source_name: str = "artic") -> DataFrame:
     )
 
     primary = F.when(
-        doc.getField("title").isNotNull(), _name(doc.getField("title"), "primaryName")
+        doc.getField("title").isNotNull(), name_node(doc.getField("title"), "primaryName")
     )
     alts = F.transform(
         F.coalesce(doc.getField("alt_titles"), F.array()),
-        lambda t: _name(t, "alternateName"),
+        lambda t: name_node(t, "alternateName"),
     )
     names = F.filter(
         F.concat(F.array(primary), alts), lambda n: n.isNotNull() & n.getField("content").isNotNull()
@@ -142,13 +124,9 @@ def map_records(loaded: DataFrame, source_name: str = "artic") -> DataFrame:
             _event("Death", F.col("died_ts")).alias("died"),
         )
     )
-    return df.select(
-        F.lit(source_name).alias("source"),
-        doc.getField("id").cast("string").alias("identifier"),
-        F.col("rectype"),
-        F.coalesce(doc.getField("timestamp"), F.lit("2026-01-01T00:00:00")).alias("record_time"),
-        F.lit("create").alias("change"),
-        body.alias("data"),
+    return envelope(
+        df, source_name, doc.getField("id").cast("string"), "rectype",
+        doc.getField("timestamp"), body,
     )
 
 

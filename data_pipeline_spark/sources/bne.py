@@ -30,7 +30,8 @@ nomisma/ycba boundary policy).  Kept semantics:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .loaders import as_list, load_doc_lines, loads_object, map_rows, name_dict
 
 PROCESS_LANGS = [
     "en", "fr", "de", "es", "it", "nl", "pt", "zh", "ja", "ru", "ar",
@@ -44,22 +45,6 @@ TYPE_GROUP = "https://datos.bne.es/def/C1006"
 
 MALE = "http://vocab.getty.edu/aat/300189559"
 FEMALE = "http://vocab.getty.edu/aat/300189557"
-
-
-def _as_list(v):
-    if v is None or v == "" or v == {} or v == []:
-        return []
-    return v if isinstance(v, list) else [v]
-
-
-def _name(content, cls, lang=None):
-    n = {
-        "type": "Name", "content": content,
-        "classified_as": [{"id": f"http://vocab.example/{cls}", "type": "Type"}],
-    }
-    if lang:
-        n["language"] = lang
-    return n
 
 
 def guess_type(rec: dict) -> str | None:
@@ -77,31 +62,31 @@ def guess_type(rec: dict) -> str | None:
 
 def _handle_common(rec: dict, rectype: str, out: dict) -> None:
     names, dupes = [], {}
-    for item in _as_list(rec.get("prefLabel")):
+    for item in as_list(rec.get("prefLabel")):
         if not isinstance(item, dict):
             item = {"@value": item}
         val = item.get("@value", "")
         lang = item.get("@language", "")
         dupes = {val: 1}  # the reference REASSIGNS per pref item; kept
         if val:
-            names.append(_name(val, "primaryName",
-                               lang if lang in PROCESS_LANGS else None))
-    for a in _as_list(rec.get("altLabel")):
+            names.append(name_dict(val, "primaryName",
+                                   lang if lang in PROCESS_LANGS else None))
+    for a in as_list(rec.get("altLabel")):
         if isinstance(a, dict):
             val, lang = a.get("@value", ""), a.get("@language", "")
         else:
             val, lang = a, None
         if val and val not in dupes:
             dupes[val] = 1
-            names.append(_name(val, "alternateName",
-                               lang if lang and lang in PROCESS_LANGS else None))
+            names.append(name_dict(val, "alternateName",
+                                   lang if lang and lang in PROCESS_LANGS else None))
     if names:
         out["identified_by"] = names
 
     equivs = [
         {"id": s, "type": rectype}
         for field in ("sameAs", "closeMatch")
-        for s in _as_list(rec.get(field))
+        for s in as_list(rec.get(field))
         if isinstance(s, str) and s
     ]
     if equivs:
@@ -122,16 +107,16 @@ def _event(raw_display, parsed, place_label):
 def _handle_person(rec: dict, out: dict, parse_datetime) -> None:
     prefname = rec.get("P5001", "")
     dupes = {prefname: 1}
-    names = [_name(prefname, "primaryName")]
-    for alt in _as_list(rec.get("P5012")):
+    names = [name_dict(prefname, "primaryName")]
+    for alt in as_list(rec.get("P5012")):
         if alt not in dupes:
             dupes[alt] = 1
-            names.append(_name(alt, "alternateName"))
+            names.append(name_dict(alt, "alternateName"))
     out["identified_by"] = names
 
-    p5024 = _as_list(rec.get("P5024"))
-    same_as = _as_list(rec.get("sameAs"))
-    see_also = _as_list(rec.get("seeAlso"))
+    p5024 = as_list(rec.get("P5024"))
+    same_as = as_list(rec.get("sameAs"))
+    see_also = as_list(rec.get("seeAlso"))
     sames = [x for x in p5024 if x not in same_as] + same_as
     sames = [x for x in sames if x not in see_also] + see_also
     equivs = [
@@ -193,7 +178,7 @@ def _handle_person(rec: dict, out: dict, parse_datetime) -> None:
     if nationality:
         classes.append({"type": "Type", "_label": nationality,
                         "role": "nationality"})
-    for cxn in _as_list(rec.get("P50104")):
+    for cxn in as_list(rec.get("P50104")):
         classes.append({"type": "Type", "_label": cxn, "language": "es"})
     if classes:
         out["classified_as"] = classes
@@ -217,7 +202,7 @@ def transform_record(rec: dict, parse_datetime) -> dict | None:
         _handle_common(rec, rectype, out)
         refs = [
             {"id": b, "type": rectype}
-            for b in _as_list(rec.get("broader")) if isinstance(b, str) and b
+            for b in as_list(rec.get("broader")) if isinstance(b, str) and b
         ]
         if refs:
             out["part_of" if rectype == "Place" else "broader"] = refs
@@ -232,56 +217,21 @@ def transform_record(rec: dict, parse_datetime) -> dict | None:
 def map_records(loaded: DataFrame, source_name: str = "bne") -> DataFrame:
     """(identifier, record_time?, value) rows, value = the raw record
     JSON ({"@graph": [rec]}) -> envelopes."""
-    import json as _json
-
-    import pandas as pd
-
     from ..functions.dates import parse_datetime
 
-    if "record_time" not in set(loaded.columns):
-        loaded = loaded.withColumn("record_time", F.lit(None).cast("string"))
+    def row(ident, rt, val):
+        try:
+            rec = loads_object(val)["@graph"][0]
+        except (TypeError, KeyError, IndexError):
+            return None
+        mapped = transform_record(rec, parse_datetime)
+        return None if mapped is None else (ident, rt, mapped)
 
-    def run(batches):
-        for pdf in batches:
-            out = {"identifier": [], "rectype": [], "record_time": [], "data": []}
-            for ident, rt, val in zip(
-                pdf["identifier"], pdf["record_time"], pdf["value"]
-            ):
-                try:
-                    doc = _json.loads(val)
-                    rec = doc["@graph"][0]
-                except (ValueError, TypeError, KeyError, IndexError):
-                    continue
-                mapped = transform_record(rec, parse_datetime)
-                if mapped is None:
-                    continue
-                out["identifier"].append(ident)
-                out["rectype"].append(mapped["type"])
-                out["record_time"].append(
-                    rt if isinstance(rt, str) and rt else "2026-01-01T00:00:00"
-                )
-                out["data"].append(_json.dumps(mapped, sort_keys=True))
-            yield pd.DataFrame(out)
-
-    mapped = loaded.select("identifier", "record_time", "value").mapInPandas(
-        run, schema="identifier string, rectype string, record_time string, data string"
-    )
-    return mapped.select(
-        F.lit(source_name).alias("source"),
-        "identifier", "rectype", "record_time",
-        F.lit("create").alias("change"),
-        "data",
-    )
+    return map_rows(loaded, source_name, row)
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    raw = spark.read.text(cfg["dump_path"])
-    parsed = F.from_json("value", "struct<identifier: string, record_time: string>")
-    return raw.select(
-        parsed.getField("identifier").alias("identifier"),
-        parsed.getField("record_time").alias("record_time"),
-        F.get_json_object("value", "$.doc").alias("value"),
-    ).filter(F.col("identifier").isNotNull() & F.col("value").isNotNull())
+    return load_doc_lines(spark, cfg["dump_path"], "$.doc")
 
 
 CONFIG = {

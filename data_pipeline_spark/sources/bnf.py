@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import IDENTIFIER_SNIFF, NAME_T, envelope, load_jsonl_dump, name_node
+
 FOAF_ORG = "http://xmlns.com/foaf/0.1/Organization"
 FOAF_PERSON = "http://xmlns.com/foaf/0.1/Person"
 WGS_SPATIAL = "http://www.w3.org/2003/01/geo/wgs84_pos#SpatialThing"
@@ -62,31 +64,9 @@ RAW_SCHEMA = "identifier string, record_time string, doc struct<xml: string>"
 
 ARK_NS = "https://data.bnf.fr/ark:/12148/"
 
-_NAME_T = (
-    "struct<type: string, content: string, language: string,"
-    " classified_as: array<struct<id: string, type: string>>>"
-)
-
-
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
-        spark, cfg["dump_path"], schema=RAW_SCHEMA,
-        sniff_regex=r'"identifier"\s*:\s*"([^"]+)"',
-    )
-
-
-def _name(content, cls: str, lang) -> F.Column:
-    return F.struct(
-        F.lit("Name").alias("type"), content.alias("content"),
-        lang.alias("language"),
-        F.array(
-            F.struct(
-                F.lit(f"http://vocab.example/{cls}").alias("id"),
-                F.lit("Type").alias("type"),
-            )
-        ).alias("classified_as"),
+        spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=IDENTIFIER_SNIFF
     )
 
 
@@ -137,11 +117,11 @@ def map_records(loaded: DataFrame, source_name: str = "bnf") -> DataFrame:
         F.lit(1),
     )
     common_names = F.concat(
-        F.when(pref.isNotNull(), F.array(_name(pref, "primaryName", fr)))
-        .otherwise(F.array().cast(f"array<{_NAME_T}>")),
+        F.when(pref.isNotNull(), F.array(name_node(pref, "primaryName", fr)))
+        .otherwise(F.array().cast(f"array<{NAME_T}>")),
         F.transform(
             F.coalesce(common.getField("skos:altLabel"), F.array().cast("array<string>")),
-            lambda a: _name(a, "alternateName", fr),
+            lambda a: name_node(a, "alternateName", fr),
         ),
     )
     # class-specific name fallback, only when the common block gave none
@@ -161,8 +141,8 @@ def map_records(loaded: DataFrame, source_name: str = "bnf") -> DataFrame:
     names = F.when(F.size(common_names) > 0, common_names).otherwise(
         F.when(
             fallback_name.isNotNull(),
-            F.array(_name(fallback_name, "primaryName", F.lit(None).cast("string"))),
-        ).otherwise(F.array().cast(f"array<{_NAME_T}>"))
+            F.array(name_node(fallback_name, "primaryName")),
+        ).otherwise(F.array().cast(f"array<{NAME_T}>"))
     )
 
     broaders = _resources(common.getField("skos:broader"))
@@ -302,20 +282,13 @@ def map_records(loaded: DataFrame, source_name: str = "bnf") -> DataFrame:
             wkt.alias("defined_by"),
         )
     )
-    return (
+    df = (
         loaded.filter(ident.isNotNull())
         .withColumn("_rdf", rdf)
         .filter(F.col("_rdf").isNotNull())
-        .select(
-            F.lit(source_name).alias("source"),
-            ident.alias("identifier"),
-            rectype.alias("rectype"),
-            F.coalesce(
-                doc.getField("record_time"), F.lit("2026-01-01T00:00:00")
-            ).alias("record_time"),
-            F.lit("create").alias("change"),
-            body.alias("data"),
-        )
+    )
+    return envelope(
+        df, source_name, ident, rectype, doc.getField("record_time"), body
     )
 
 

@@ -37,6 +37,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import as_list, load_doc_lines, loads_object, map_rows, name_dict
+
 GND = "https://d-nb.info/standards/elementset/gnd#"
 MALE_G = "https://d-nb.info/standards/vocab/gnd/gender#male"
 FEMALE_G = "https://d-nb.info/standards/vocab/gnd/gender#female"
@@ -53,22 +55,6 @@ LDS_RELATED_PLACES = [
     GND + "relatedPlaceOrGeographicName",
     GND + "contributingPlaceOrGeographicName", GND + "place",
 ]
-
-
-def _as_list(v):
-    if v is None or v == "" or v == {} or v == []:
-        return []
-    return v if isinstance(v, list) else [v]
-
-
-def _name(content, cls, lang=None):
-    n = {
-        "type": "Name", "content": content,
-        "classified_as": [{"id": f"http://vocab.example/{cls}", "type": "Type"}],
-    }
-    if lang:
-        n["language"] = lang
-    return n
 
 
 def _event(parsed, display, place=None):
@@ -98,7 +84,7 @@ def guess_type(rec: dict) -> str | None:
 
 
 def _first(v):
-    vs = _as_list(v)
+    vs = as_list(v)
     return vs[0] if vs else None
 
 
@@ -153,7 +139,7 @@ def _handle_person(rec: dict, out: dict, parse_datetime) -> None:
     poas = [
         {"id": p.get("@id", ""), "type": "Place",
          "_label": p.get("preferredName", "")}
-        for p in _as_list(rec.get("placeOfActivity"))
+        for p in as_list(rec.get("placeOfActivity"))
         if isinstance(p, dict) and p.get("@id")
     ]
     if poas:
@@ -163,7 +149,7 @@ def _handle_person(rec: dict, out: dict, parse_datetime) -> None:
         out["carried_out"] = active
 
     classes = []
-    for g in _as_list(rec.get("gender")):
+    for g in as_list(rec.get("gender")):
         gid = g.get("@id", "") if isinstance(g, dict) else ""
         if gid == MALE_G:
             classes.append({"id": MALE, "type": "Type", "_label": "male",
@@ -171,7 +157,7 @@ def _handle_person(rec: dict, out: dict, parse_datetime) -> None:
         elif gid == FEMALE_G:
             classes.append({"id": FEMALE, "type": "Type", "_label": "female",
                             "role": "gender"})
-    for o in _as_list(rec.get("professionOrOccupation")):
+    for o in as_list(rec.get("professionOrOccupation")):
         if isinstance(o, dict) and o.get("@id"):
             classes.append({"id": o["@id"], "type": "Type",
                             "_label": o.get("preferredName", ""),
@@ -181,7 +167,7 @@ def _handle_person(rec: dict, out: dict, parse_datetime) -> None:
 
     members = [
         {"id": a["@id"], "type": "Group", "_label": a.get("preferredName", "")}
-        for a in _as_list(rec.get("affiliation"))
+        for a in as_list(rec.get("affiliation"))
         if isinstance(a, dict) and a.get("@id")
     ]
     if members:
@@ -238,13 +224,13 @@ def transform_entity(rec: dict, parse_datetime) -> dict | None:
     pn = rec.get("preferredName")
     if isinstance(pn, str) and pn:
         out["_label"] = pn
-        names.append(_name(pn, "primaryName"))
-    for v in _as_list(rec.get("variantName")):
+        names.append(name_dict(pn, "primaryName"))
+    for v in as_list(rec.get("variantName")):
         if isinstance(v, str):
-            names.append(_name(v, "alternateName"))
-    for p in _as_list(rec.get("pseudonym")):
+            names.append(name_dict(v, "alternateName"))
+    for p in as_list(rec.get("pseudonym")):
         if isinstance(p, dict) and p.get("preferredName"):
-            names.append(_name(p["preferredName"], "pseudonym"))
+            names.append(name_dict(p["preferredName"], "pseudonym"))
     if names:
         out["identified_by"] = names
 
@@ -256,7 +242,7 @@ def transform_entity(rec: dict, parse_datetime) -> dict | None:
 
     recnumber = rec["@id"].split("/")[-1]
     pages = []
-    for h in _as_list(rec.get("homepage")):
+    for h in as_list(rec.get("homepage")):
         if not isinstance(h, str) or recnumber in h.split("/"):
             continue  # the record's own page carries no information
         pages.append({
@@ -270,7 +256,7 @@ def transform_entity(rec: dict, parse_datetime) -> dict | None:
         out["subject_of"] = pages
 
     reps = []
-    for d in _as_list(rec.get("depiction")):
+    for d in as_list(rec.get("depiction")):
         if isinstance(d, dict) and d.get("@id"):
             jpg = d["@id"].replace(" ", "_").replace("%20", "_")
             reps.append({
@@ -285,7 +271,7 @@ def transform_entity(rec: dict, parse_datetime) -> dict | None:
 
     equivs = [
         {"id": s["@id"], "type": rectype, "_label": out.get("_label", "")}
-        for s in _as_list(rec.get("sameAs"))
+        for s in as_list(rec.get("sameAs"))
         if isinstance(s, dict) and s.get("@id")
     ]
     if equivs:
@@ -301,7 +287,7 @@ def transform_entity(rec: dict, parse_datetime) -> dict | None:
 
 
 def guess_lds_type(rec: dict) -> str | None:
-    for t in _as_list(rec.get("@type")):
+    for t in as_list(rec.get("@type")):
         if t.endswith("Language"):
             return "Language"
         if t.endswith(("SubjectHeadingSensoStricto", "SubjectHeading",
@@ -314,7 +300,7 @@ def guess_lds_type(rec: dict) -> str | None:
 
 def transform_lds(doc: dict, parse_datetime) -> dict | None:
     rec = None
-    for r in _as_list(doc.get("list")):
+    for r in as_list(doc.get("list")):
         rid = r.get("@id", "") if isinstance(r, dict) else ""
         if rid and not rid.endswith("/about"):
             rec = r
@@ -328,7 +314,7 @@ def transform_lds(doc: dict, parse_datetime) -> dict | None:
 
     recnumber = rec["@id"].split("/")[-1]
     pages = []
-    for val in _as_list(rec.get("http://www.w3.org/2007/05/powder-s#describedby")):
+    for val in as_list(rec.get("http://www.w3.org/2007/05/powder-s#describedby")):
         vid = val.get("@id", "") if isinstance(val, dict) else ""
         if not vid or recnumber in vid.split("/"):
             continue
@@ -343,12 +329,12 @@ def transform_lds(doc: dict, parse_datetime) -> dict | None:
         out["subject_of"] = pages
 
     names = []
-    for val in _as_list(rec.get(GND + "preferredNameForTheSubjectHeading")):
+    for val in as_list(rec.get(GND + "preferredNameForTheSubjectHeading")):
         if isinstance(val, dict) and val.get("@value"):
-            names.append(_name(val["@value"], "primaryName", "de"))
-    for val in _as_list(rec.get(GND + "variantNameForTheSubjectHeading")):
+            names.append(name_dict(val["@value"], "primaryName", "de"))
+    for val in as_list(rec.get(GND + "variantNameForTheSubjectHeading")):
         if isinstance(val, dict) and val.get("@value"):
-            names.append(_name(val["@value"], "alternateName", "de"))
+            names.append(name_dict(val["@value"], "alternateName", "de"))
     if names:
         out["identified_by"] = names
         out["_label"] = names[0]["content"]
@@ -356,7 +342,7 @@ def transform_lds(doc: dict, parse_datetime) -> dict | None:
     notes = [
         {"type": "LinguisticObject", "content": val["@value"],
          "language": "de", "role": "description"}
-        for val in _as_list(rec.get(GND + "definition"))
+        for val in as_list(rec.get(GND + "definition"))
         if isinstance(val, dict) and val.get("@value")
     ]
     if notes:
@@ -364,7 +350,7 @@ def transform_lds(doc: dict, parse_datetime) -> dict | None:
 
     equivs = [
         {"id": val["@id"], "type": rectype}
-        for val in _as_list(rec.get("http://www.w3.org/2002/07/owl#sameAs"))
+        for val in as_list(rec.get("http://www.w3.org/2002/07/owl#sameAs"))
         if isinstance(val, dict) and val.get("@id")
     ]
     if equivs:
@@ -374,7 +360,7 @@ def transform_lds(doc: dict, parse_datetime) -> dict | None:
         refs = [
             {"id": val["@id"], "type": rectype}
             for b in LDS_BROADERS
-            for val in _as_list(rec.get(b))
+            for val in as_list(rec.get(b))
             if isinstance(val, dict) and val.get("@id")
         ]
         if refs:
@@ -384,7 +370,7 @@ def transform_lds(doc: dict, parse_datetime) -> dict | None:
         {"type": "AttributeAssignment",
          "assigned": {"id": val["@id"], "type": "Place"}}
         for rel in LDS_RELATED_PLACES
-        for val in _as_list(rec.get(rel))
+        for val in as_list(rec.get(rel))
         if isinstance(val, dict) and val.get("@id")
     ]
     if attributions:
@@ -395,49 +381,17 @@ def transform_lds(doc: dict, parse_datetime) -> dict | None:
 def map_records(loaded: DataFrame, source_name: str = "dnb") -> DataFrame:
     """(identifier, record_time?, value) raw JSON rows -> envelopes; the
     ``list`` key routes to the sachbegriff handler."""
-    import pandas as pd
-
     from ..functions.dates import parse_datetime
 
-    if "record_time" not in set(loaded.columns):
-        loaded = loaded.withColumn("record_time", F.lit(None).cast("string"))
+    def row(ident, rt, val):
+        doc = loads_object(val)
+        if doc is None:
+            return None
+        transform = transform_lds if "list" in doc else transform_entity
+        mapped = transform(doc, parse_datetime)
+        return None if mapped is None else (fix_identifier(ident), rt, mapped)
 
-    def run(batches):
-        for pdf in batches:
-            out = {"identifier": [], "rectype": [], "record_time": [], "data": []}
-            for ident, rt, val in zip(
-                pdf["identifier"], pdf["record_time"], pdf["value"]
-            ):
-                try:
-                    doc = json.loads(val)
-                except (ValueError, TypeError):
-                    continue
-                if not isinstance(doc, dict):
-                    continue
-                mapped = (
-                    transform_lds(doc, parse_datetime)
-                    if "list" in doc
-                    else transform_entity(doc, parse_datetime)
-                )
-                if mapped is None:
-                    continue
-                out["identifier"].append(fix_identifier(ident))
-                out["rectype"].append(mapped["type"])
-                out["record_time"].append(
-                    rt if isinstance(rt, str) and rt else "2026-01-01T00:00:00"
-                )
-                out["data"].append(json.dumps(mapped, sort_keys=True))
-            yield pd.DataFrame(out)
-
-    mapped = loaded.select("identifier", "record_time", "value").mapInPandas(
-        run, schema="identifier string, rectype string, record_time string, data string"
-    )
-    return mapped.select(
-        F.lit(source_name).alias("source"),
-        "identifier", "rectype", "record_time",
-        F.lit("create").alias("change"),
-        "data",
-    )
+    return map_rows(loaded, source_name, row)
 
 
 def load_macs(spark: SparkSession, path: str) -> DataFrame:
@@ -484,13 +438,7 @@ def enrich_close_matches(envelopes: DataFrame, macs: DataFrame) -> DataFrame:
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    raw = spark.read.text(cfg["dump_path"])
-    parsed = F.from_json("value", "struct<identifier: string, record_time: string>")
-    return raw.select(
-        parsed.getField("identifier").alias("identifier"),
-        parsed.getField("record_time").alias("record_time"),
-        F.get_json_object("value", "$.doc").alias("value"),
-    ).filter(F.col("identifier").isNotNull() & F.col("value").isNotNull())
+    return load_doc_lines(spark, cfg["dump_path"], "$.doc")
 
 
 CONFIG = {

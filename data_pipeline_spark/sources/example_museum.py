@@ -6,6 +6,15 @@ record envelopes (with `guess_type` — the F23 heuristic every reference
 source implements, e.g. wikidata/mapper.py:121-296), and the registry
 config that wires both. A new source = one module like this + one config
 dict; every component is a pure DataFrame transform.
+
+The module holds only the source's own rules (raw schema, type guess,
+field mapping).  Everything shared comes from ``loaders``: the mapper
+builds its document with ``name_node`` and hands ``envelope`` the five
+envelope columns — ``envelope(df, source, identifier, rectype,
+record_time, data)`` adds ``change="create"`` and turns a null or empty
+record time into ``DEFAULT_RECORD_TIME``.  A source whose records need
+Python per row passes ``map_rows`` one ``row_fn(identifier,
+record_time, value) -> (identifier, record_time, doc) | None`` instead.
 """
 
 from __future__ import annotations
@@ -42,26 +51,19 @@ def map_records(loaded: DataFrame, source_name: str = "museum") -> DataFrame:
     """Mapper: raw rows -> record envelopes (source, identifier, rectype,
     record_time, change, data). The document is assembled JVM-side with
     to_json(struct(...)) — a 100TB map stage with no Python."""
+    from .loaders import envelope, name_node
+
     doc = F.to_json(
         F.struct(
             F.concat(F.lit("https://fixture.test/"), F.lit(source_name), F.lit("/"), F.col("doc.id")).alias("id"),
             guess_type(F.col("doc.kind")).alias("type"),
             F.col("doc.title").alias("_label"),
-            F.array(
-                F.struct(
-                    F.lit("Name").alias("type"),
-                    F.col("doc.title").alias("content"),
-                )
-            ).alias("identified_by"),
+            F.array(name_node(F.col("doc.title"), None)).alias("identified_by"),
         )
     )
-    return loaded.select(
-        F.lit(source_name).alias("source"),
-        F.col("doc.id").alias("identifier"),
-        guess_type(F.col("doc.kind")).alias("rectype"),
-        F.lit("2026-01-01T00:00:00").alias("record_time"),
-        F.lit("create").alias("change"),
-        doc.alias("data"),
+    return envelope(
+        loaded, source_name, "doc.id", guess_type(F.col("doc.kind")),
+        F.lit(None).cast("string"), doc,
     )
 
 

@@ -46,11 +46,11 @@ get_wikidata_qid network call.
 
 from __future__ import annotations
 
-import json
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .loaders import load_doc_lines, map_rows, name_dict
 
 MARC_NS = "{http://www.loc.gov/MARC21/slim}"
 MALE = "http://vocab.getty.edu/aat/300189559"
@@ -103,20 +103,13 @@ def _combine(*fields) -> str:
     return ", ".join(filter(None, fields))
 
 
-def _name(content, cls):
-    return {
-        "type": "Name", "content": content,
-        "classified_as": [{"id": f"http://vocab.example/{cls}", "type": "Type"}],
-    }
-
-
 def _assign_names(out: dict, names) -> bool:
     got = False
     for name in names:
         if not name:
             continue
         cls = "alternateName" if got else "primaryName"
-        out.setdefault("identified_by", []).append(_name(name, cls))
+        out.setdefault("identified_by", []).append(name_dict(name, cls))
         got = True
     return got
 
@@ -611,55 +604,19 @@ def map_records(
     reconcile=None,
     wikipedia_qid=None,
 ) -> DataFrame:
-    import pandas as pd
-
     from ..functions.dates import parse_datetime
 
-    cols = set(loaded.columns)
-    if "record_time" not in cols:
-        loaded = loaded.withColumn("record_time", F.lit(None).cast("string"))
+    ctx = _Ctx(parse_datetime, reconcile, wikipedia_qid)
 
-    def run(batches):
-        ctx = _Ctx(parse_datetime, reconcile, wikipedia_qid)
-        for pdf in batches:
-            out = {"identifier": [], "rectype": [], "record_time": [], "data": []}
-            for ident, rt, val in zip(
-                pdf["identifier"], pdf["record_time"], pdf["value"]
-            ):
-                mapped = transform_record(ident, val, ctx)
-                if mapped is None:
-                    continue
-                out["identifier"].append(ident)
-                out["rectype"].append(mapped["type"])
-                out["record_time"].append(
-                    rt if isinstance(rt, str) and rt else "2026-01-01T00:00:00"
-                )
-                out["data"].append(json.dumps(mapped, sort_keys=True))
-            yield pd.DataFrame(out)
+    def row(ident, rt, xml):
+        mapped = transform_record(ident, xml, ctx)
+        return None if mapped is None else (ident, rt, mapped)
 
-    mapped = loaded.select("identifier", "record_time", "value").mapInPandas(
-        run, schema="identifier string, rectype string, record_time string, data string"
-    )
-    return mapped.select(
-        F.lit(source_name).alias("source"),
-        "identifier", "rectype", "record_time",
-        F.lit("create").alias("change"),
-        "data",
-    )
+    return map_rows(loaded, source_name, row)
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    raw = spark.read.text(cfg["dump_path"])
-    parsed = F.from_json(
-        "value",
-        "struct<identifier: string, record_time: string,"
-        " doc: struct<xml: string>>",
-    )
-    return raw.select(
-        parsed.getField("identifier").alias("identifier"),
-        parsed.getField("record_time").alias("record_time"),
-        parsed.getField("doc").getField("xml").alias("value"),
-    ).filter(F.col("identifier").isNotNull() & F.col("value").isNotNull())
+    return load_doc_lines(spark, cfg["dump_path"], "$.doc.xml")
 
 
 CONFIG = {

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.strings import LANG_THREE_TO_TWO
+from .loaders import IDENTIFIER_SNIFF, envelope, load_jsonl_dump, type_ref
 
 WD = "http://www.wikidata.org/entity/"
 
@@ -62,11 +63,8 @@ RAW_SCHEMA = (
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
-        spark, cfg["dump_path"], schema=RAW_SCHEMA,
-        sniff_regex=r'"identifier"\s*:\s*"([^"]+)"',
+        spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=IDENTIFIER_SNIFF
     )
 
 
@@ -98,12 +96,7 @@ def map_records(
     def name_struct(content, cls):
         return F.struct(
             F.lit("Name").alias("type"), content.alias("content"),
-            F.array(
-                F.struct(
-                    F.lit(f"http://vocab.example/{cls}").alias("id"),
-                    F.lit("Type").alias("type"),
-                )
-            ).alias("classified_as"),
+            F.array(type_ref(cls)).alias("classified_as"),
             F.lit(None).cast("string").alias("_note"),
         )
 
@@ -126,14 +119,7 @@ def map_records(
             F.when(
                 cls.isNotNull(),
                 F.array(F.struct(cls.alias("id"), F.lit("Type").alias("type"))),
-            ).otherwise(
-                F.array(
-                    F.struct(
-                        F.lit("http://vocab.example/alternateName").alias("id"),
-                        F.lit("Type").alias("type"),
-                    )
-                )
-            ).alias("classified_as"),
+            ).otherwise(F.array(type_ref("alternateName"))).alias("classified_as"),
             F.when(cls.isNull(), a.getField("source")).alias("_note"),
         )
 
@@ -201,23 +187,17 @@ def map_records(
             F.when(F.size(descriptions) > 0, descriptions).alias("referred_to_by"),
         )
     )
-    return (
+    df = (
         loaded.filter(
             doc.getField("identifier").isNotNull()
             & d.getField("key").isNotNull()
         )
         .withColumn("_n", names_list)
         .filter(F.size(F.col("_n")) > 0)
-        .select(
-            F.lit(source_name).alias("source"),
-            doc.getField("identifier").alias("identifier"),
-            F.lit("Type").alias("rectype"),
-            F.coalesce(
-                doc.getField("record_time"), F.lit("2026-01-01T00:00:00")
-            ).alias("record_time"),
-            F.lit("create").alias("change"),
-            body.alias("data"),
-        )
+    )
+    return envelope(
+        df, source_name, doc.getField("identifier"), F.lit("Type"),
+        doc.getField("record_time"), body,
     )
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geometry import wkt_point
+from .loaders import IDENTIFIER_SNIFF, envelope, load_jsonl_dump, name_node
 
 # The reference filters names to languages it has vocab instances for
 # (process/base/mapper.py:35-41: every cromulent Language with a
@@ -68,36 +69,14 @@ RAW_SCHEMA = (
     "identifier string, record_time string, doc struct<value: string>"
 )
 
-_NAME_T = (
-    "struct<type: string, content: string, language: string,"
-    " classified_as: array<struct<id: string, type: string>>>"
-)
 _LANGED_T = "array<struct<lang: string, txt: string>>"
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
     """Fetched-record JSONL dump: one row per place, the raw RDF/XML in
     doc.value (the fetcher stores it verbatim, fetcher.py:3-5)."""
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
-        spark, cfg["dump_path"], schema=RAW_SCHEMA,
-        sniff_regex=r'"identifier"\s*:\s*"([^"]+)"',
-    )
-
-
-def _name(content, cls: str, language=None) -> F.Column:
-    lang = F.lit(None).cast("string") if language is None else language
-    return F.struct(
-        F.lit("Name").alias("type"),
-        content.alias("content"),
-        lang.alias("language"),
-        F.array(
-            F.struct(
-                F.lit(f"http://vocab.example/{cls}").alias("id"),
-                F.lit("Type").alias("type"),
-            )
-        ).alias("classified_as"),
+        spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=IDENTIFIER_SNIFF
     )
 
 
@@ -178,7 +157,7 @@ def map_records(loaded: DataFrame, source_name: str = "geonames") -> DataFrame:
     def names_of(pairs: F.Column, cls: str) -> F.Column:
         return F.transform(
             pairs,
-            lambda p: _name(
+            lambda p: name_node(
                 p.getField("txt"), cls,
                 F.when(p.getField("lang") != "", p.getField("lang")),
             ),
@@ -232,16 +211,10 @@ def map_records(loaded: DataFrame, source_name: str = "geonames") -> DataFrame:
             equivalents.alias("equivalent"),
         )
     )
-    return df.select(
-        F.lit(source_name).alias("source"),
-        F.regexp_replace(F.col("doc").getField("identifier"), "/+$", "").alias(
-            "identifier"
-        ),
-        F.lit("Place").alias("rectype"),
-        F.coalesce(F.col("doc").getField("record_time"), F.lit("2026-01-01T00:00:00"))
-        .alias("record_time"),
-        F.lit("create").alias("change"),
-        body.alias("data"),
+    return envelope(
+        df, source_name,
+        F.regexp_replace(F.col("doc").getField("identifier"), "/+$", ""),
+        F.lit("Place"), F.col("doc").getField("record_time"), body,
     )
 
 
@@ -302,8 +275,8 @@ def map_dump(
         lambda a: (a != "") & (a != name),
     )
     identified = F.concat(
-        F.array(_name(name, "primaryName")),
-        F.transform(alts, lambda a: _name(a, "alternateName")),
+        F.array(name_node(name, "primaryName")),
+        F.transform(alts, lambda a: name_node(a, "alternateName")),
     )
     lat, lng = F.col("latitude"), F.col("longitude")
     wkt = F.when(
@@ -329,16 +302,9 @@ def map_dump(
             part_of.alias("part_of"),
         )
     )
-    return df.select(
-        F.lit("geonames").alias("source"),
-        ident.alias("identifier"),
-        F.lit("Place").alias("rectype"),
-        F.coalesce(
-            F.concat(F.col("modification_date"), F.lit("T00:00:00")),
-            F.lit("2026-01-01T00:00:00"),
-        ).alias("record_time"),
-        F.lit("create").alias("change"),
-        body.alias("data"),
+    return envelope(
+        df, "geonames", ident, F.lit("Place"),
+        F.concat(F.col("modification_date"), F.lit("T00:00:00")), body,
     )
 
 

@@ -42,10 +42,9 @@ preferred parent (aat 300449152), else all broader entries as broader.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .loaders import as_list, loads_object, map_rows, name_dict
 
 AAT = "http://vocab.getty.edu/aat/"
 
@@ -98,15 +97,9 @@ PROCESS_LANGS = [
 TYPEISH = ["Type", "Material", "Language", "Currency", "MeasurementUnit"]
 
 
-def _as_list(v):
-    if v is None or v == "" or v == {} or v == []:
-        return []
-    return v if isinstance(v, list) else [v]
-
-
 def _lang_of(js) -> tuple[str | None, bool]:
     """(two-letter code or None, drop?) from a name/statement language."""
-    langs = _as_list(js.get("language"))
+    langs = as_list(js.get("language"))
     if not langs:
         return None, False
     lang = langs[0].get("_label") if isinstance(langs[0], dict) else None
@@ -127,21 +120,14 @@ def process_getty_name(js: dict) -> dict | None:
     if "content" not in js:
         return None
     cls = "name"
-    for c in _as_list(js.get("classified_as")):
+    for c in as_list(js.get("classified_as")):
         cid = c.get("id", "") if isinstance(c, dict) else ""
         if cid in NAME_CLASSIFICATIONS:
             cls = NAME_CLASSIFICATIONS[cid]
     ll, drop = _lang_of(js)
     if drop:
         return None
-    nm = {
-        "type": "Name", "content": js["content"],
-        "classified_as": [{"id": f"http://vocab.example/{cls}", "type": "Type"}],
-        "_cls": cls,
-    }
-    if ll:
-        nm["language"] = ll
-    return nm
+    return {**name_dict(js["content"], cls, ll), "_cls": cls}
 
 
 def process_getty_statement(js: dict) -> dict | None:
@@ -151,7 +137,7 @@ def process_getty_statement(js: dict) -> dict | None:
     if isinstance(content, list):
         content = content[0]
     role = None
-    for cx in _as_list(js.get("classified_as")):
+    for cx in as_list(js.get("classified_as")):
         cxid = cx if isinstance(cx, str) else cx.get("id", "")
         if "/aat/" in cxid:
             code = cxid.rsplit("/", 1)[1]
@@ -188,7 +174,7 @@ def fix_getty_timestamp(value: str, which: str, parse_datetime) -> str:
 
 def do_common(rec: dict, out: dict, parse_datetime) -> bool:
     names, coords_wkt, label = [], None, None
-    for i in _as_list(rec.get("identified_by")):
+    for i in as_list(rec.get("identified_by")):
         if not isinstance(i, dict):
             continue
         if i.get("type") == "Name":
@@ -214,7 +200,7 @@ def do_common(rec: dict, out: dict, parse_datetime) -> bool:
         out["defined_by"] = coords_wkt
 
     stmts = []
-    for st in _as_list(rec.get("referred_to_by")) + _as_list(rec.get("subject_of")):
+    for st in as_list(rec.get("referred_to_by")) + as_list(rec.get("subject_of")):
         if isinstance(st, dict):
             new = process_getty_statement(st)
             if new:
@@ -237,7 +223,7 @@ def do_common_event(data: dict, parse_datetime) -> dict:
                     ts[p] = val
         ev["timespan"] = ts
     places = []
-    for place in _as_list(data.get("took_place_at")):
+    for place in as_list(data.get("took_place_at")):
         if isinstance(place, str):
             place = {"id": place}
         pid = place.get("id", "")
@@ -272,7 +258,7 @@ def aat_guess_type(
             return "Material"
         return "Type"
     if typ == "Type":
-        pof = _as_list(rec.get("part_of")) or _as_list(rec.get("broader"))
+        pof = as_list(rec.get("part_of")) or as_list(rec.get("broader"))
         for p in pof:
             pid = p.get("id", "") if isinstance(p, dict) else ""
             if pid == AAT + "300411913":
@@ -296,7 +282,7 @@ def aat_guess_type(
 
 def _broaders(rec: dict, rectype: str) -> list:
     out = []
-    for br in _as_list(rec.get("part_of")) + _as_list(rec.get("broader")):
+    for br in as_list(rec.get("part_of")) + as_list(rec.get("broader")):
         if isinstance(br, str):
             br = {"id": br, "_label": ""}
         lbl = br.get("_label", "")
@@ -345,7 +331,7 @@ def transform_ulan(rec: dict, parse_datetime, namespace="http://vocab.getty.edu/
         return None
 
     classes = []
-    for cx in _as_list(rec.get("classified_as")):
+    for cx in as_list(rec.get("classified_as")):
         if not isinstance(cx, dict):
             continue
         cxid = cx.get("id", "")
@@ -355,7 +341,7 @@ def transform_ulan(rec: dict, parse_datetime, namespace="http://vocab.getty.edu/
         if cxid in ULAN_ACCEPT:
             classes.append({"id": cxid, "type": "Type", "_label": lbl})
             continue
-        for cx2 in _as_list(cx.get("classified_as")):
+        for cx2 in as_list(cx.get("classified_as")):
             cx2id = cx2.get("id", "") if isinstance(cx2, dict) else ""
             if cx2id == NATIONALITY_FLAG:
                 classes.append({"id": cxid, "type": "Type", "_label": lbl,
@@ -392,10 +378,10 @@ def transform_ulan(rec: dict, parse_datetime, namespace="http://vocab.getty.edu/
                 out.pop("died", None)
 
     actives = []
-    for act in _as_list(rec.get("carried_out")):
+    for act in as_list(rec.get("carried_out")):
         if not isinstance(act, dict):
             continue
-        cxnids = [x.get("id") for x in _as_list(act.get("classified_as"))
+        cxnids = [x.get("id") for x in as_list(act.get("classified_as"))
                   if isinstance(x, dict)]
         if ACTIVE_FLAG in cxnids:
             actives.append(do_common_event(act, parse_datetime))
@@ -415,7 +401,7 @@ def transform_tgn(rec: dict, parse_datetime, namespace="http://vocab.getty.edu/t
 
     classes = [
         {"id": cx["id"], "type": "Type", "_label": cx.get("_label", "")}
-        for cx in _as_list(rec.get("classified_as"))
+        for cx in as_list(rec.get("classified_as"))
         if isinstance(cx, dict) and cx.get("id")
         and cx["id"] not in IGNORE_VALUES and cx["id"] in TGN_ACCEPT
     ]
@@ -423,13 +409,13 @@ def transform_tgn(rec: dict, parse_datetime, namespace="http://vocab.getty.edu/t
         out["classified_as"] = classes
 
     brdrs = []
-    for br in _as_list(rec.get("part_of")) + _as_list(rec.get("broader")):
+    for br in as_list(rec.get("part_of")) + as_list(rec.get("broader")):
         if isinstance(br, str):
             br = {"id": br, "_label": ""}
         brdrs.append(br)
     preferred = None
     for br in brdrs:
-        for c in _as_list(br.get("classified_as")):
+        for c in as_list(br.get("classified_as")):
             if isinstance(c, dict) and c.get("id") == TGN_PREFERRED_PARENT:
                 preferred = br
                 break
@@ -457,51 +443,20 @@ _TRANSFORMS = {"aat": transform_aat, "ulan": transform_ulan, "tgn": transform_tg
 
 def _map_records(which: str):
     def map_records(loaded: DataFrame, source_name: str | None = None) -> DataFrame:
-        import pandas as pd
-
         from ..functions.dates import parse_datetime
 
         transform = _TRANSFORMS[which]
-        src = source_name or which
-        if "record_time" not in set(loaded.columns):
-            loaded = loaded.withColumn("record_time", F.lit(None).cast("string"))
 
-        def run(batches):
-            for pdf in batches:
-                out = {"identifier": [], "rectype": [], "record_time": [],
-                       "data": []}
-                for ident, rt, val in zip(
-                    pdf["identifier"], pdf["record_time"], pdf["value"]
-                ):
-                    try:
-                        doc = json.loads(val)
-                    except (ValueError, TypeError):
-                        continue
-                    if which == "ulan":
-                        ident = ulan_fix_identifier(ident)
-                    mapped = transform(doc, parse_datetime)
-                    if mapped is None:
-                        continue
-                    out["identifier"].append(ident)
-                    out["rectype"].append(mapped["type"])
-                    out["record_time"].append(
-                        rt if isinstance(rt, str) and rt
-                        else "2026-01-01T00:00:00"
-                    )
-                    out["data"].append(json.dumps(mapped, sort_keys=True))
-                yield pd.DataFrame(out)
+        def row(ident, rt, val):
+            doc = loads_object(val)
+            if doc is None:
+                return None
+            if which == "ulan":
+                ident = ulan_fix_identifier(ident)
+            mapped = transform(doc, parse_datetime)
+            return None if mapped is None else (ident, rt, mapped)
 
-        mapped = loaded.select("identifier", "record_time", "value").mapInPandas(
-            run,
-            schema="identifier string, rectype string, record_time string,"
-            " data string",
-        )
-        return mapped.select(
-            F.lit(src).alias("source"),
-            "identifier", "rectype", "record_time",
-            F.lit("create").alias("change"),
-            "data",
-        )
+        return map_rows(loaded, source_name or which, row)
 
     return map_records
 

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import IDENTIFIER_SNIFF, NAME_T, envelope, load_jsonl_dump, name_node
+
 _REF = "array<struct<`@id`: string>>"
 RAW_SCHEMA = (
     "identifier string, record_time string,"
@@ -27,23 +29,8 @@ RAW_SCHEMA = (
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
-        spark, cfg["dump_path"], schema=RAW_SCHEMA,
-        sniff_regex=r'"identifier"\s*:\s*"([^"]+)"',
-    )
-
-
-def _name(content, cls: str) -> F.Column:
-    return F.struct(
-        F.lit("Name").alias("type"), content.alias("content"),
-        F.array(
-            F.struct(
-                F.lit(f"http://vocab.example/{cls}").alias("id"),
-                F.lit("Type").alias("type"),
-            )
-        ).alias("classified_as"),
+        spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=IDENTIFIER_SNIFF
     )
 
 
@@ -67,13 +54,11 @@ def map_records(
     pref = F.when(
         d.getField("skos:prefLabel").isNotNull()
         & (d.getField("skos:prefLabel") != ""),
-        F.array(_name(d.getField("skos:prefLabel"), "primaryName")),
-    ).otherwise(F.array().cast(
-        "array<struct<type: string, content: string,"
-        " classified_as: array<struct<id: string, type: string>>>>"))
+        F.array(name_node(d.getField("skos:prefLabel"), "primaryName")),
+    ).otherwise(F.array().cast(f"array<{NAME_T}>"))
     alts = F.transform(
         F.coalesce(d.getField("skos:altLabel"), F.array().cast("array<string>")),
-        lambda a: _name(a, "alternateName"),
+        lambda a: name_node(a, "alternateName"),
     )
 
     # exactMatch first; closeMatch joins only when not already present
@@ -113,15 +98,9 @@ def map_records(
             F.when(F.size(broader) > 0, broader).alias("broader"),
         )
     )
-    return loaded.filter(doc.getField("identifier").isNotNull()).select(
-        F.lit(source_name).alias("source"),
-        doc.getField("identifier").alias("identifier"),
-        F.lit("Type").alias("rectype"),
-        F.coalesce(doc.getField("record_time"), F.lit("2026-01-01T00:00:00")).alias(
-            "record_time"
-        ),
-        F.lit("create").alias("change"),
-        body.alias("data"),
+    return envelope(
+        loaded.filter(doc.getField("identifier").isNotNull()), source_name,
+        doc.getField("identifier"), F.lit("Type"), doc.getField("record_time"), body,
     )
 
 

@@ -39,12 +39,10 @@ value) rows, sharing the YCBA plumbing.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .ycba import _fix_links, _normalize_timespans
+from .loaders import map_rows
+from .ycba import _fix_links, _normalize_timespans, canonicalizer, linked_art_row
 
 AAT_COLLECTION_ITEM = "http://vocab.getty.edu/aat/300404024"
 AAT_ARCHIVE = "http://vocab.getty.edu/aat/300375748"
@@ -260,55 +258,10 @@ def _map_records(transform, source_name: str):
     def map_records(
         loaded: DataFrame, namespace: str = "", rewrites: dict | None = None
     ) -> DataFrame:
-        import pandas as pd
-
-        rw = dict(rewrites or {})
-
-        def canonical(uri: str):
-            for old, new in rw.items():
-                if uri == old or uri.startswith(old):
-                    return None if new is None else new + uri[len(old):]
-            return uri
-
-        cols = set(loaded.columns)
-        if "record_time" not in cols:
-            loaded = loaded.withColumn("record_time", F.lit(None).cast("string"))
-
-        def run(batches):
-            for pdf in batches:
-                out = {"identifier": [], "rectype": [], "record_time": [],
-                       "data": []}
-                for ident, rt, val in zip(
-                    pdf["identifier"], pdf["record_time"], pdf["value"]
-                ):
-                    try:
-                        doc = json.loads(val)
-                    except (ValueError, TypeError):
-                        continue
-                    if not isinstance(doc, dict) or "type" not in doc:
-                        continue
-                    doc = transform(doc, canonical if rw else None)
-                    if ident is None:
-                        ident = str(doc.get("id", "")).removeprefix(namespace)
-                    out["identifier"].append(ident)
-                    out["rectype"].append(doc["type"])
-                    out["record_time"].append(
-                        rt if isinstance(rt, str) and rt
-                        else "2026-01-01T00:00:00"
-                    )
-                    out["data"].append(json.dumps(doc, sort_keys=True))
-                yield pd.DataFrame(out)
-
-        mapped = loaded.select("identifier", "record_time", "value").mapInPandas(
-            run,
-            schema="identifier string, rectype string, record_time string,"
-            " data string",
-        )
-        return mapped.select(
-            F.lit(source_name).alias("source"),
-            "identifier", "rectype", "record_time",
-            F.lit("create").alias("change"),
-            "data",
+        canonical = canonicalizer(rewrites)
+        return map_rows(
+            loaded, source_name,
+            linked_art_row(lambda doc: transform(doc, canonical), namespace),
         )
 
     return map_records

@@ -38,6 +38,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import (
+    IDENTIFIER_SNIFF, NAME_T, envelope, load_jsonl_dump, name_node, type_ref,
+)
+
 FOAF_PERSON = "http://xmlns.com/foaf/0.1/Person"
 FOAF_ORG = "http://xmlns.com/foaf/0.1/Organization"
 FRBR_FAMILY = "http://RDVocab.info/uri/schema/FRBRentitiesRDA/Family"
@@ -70,11 +74,8 @@ RAW_SCHEMA = (
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
-        spark, cfg["dump_path"], schema=RAW_SCHEMA,
-        sniff_regex=r'"identifier"\s*:\s*"([^"]+)"',
+        spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=IDENTIFIER_SNIFF
     )
 
 
@@ -95,31 +96,10 @@ def guess_type(doc: F.Column) -> F.Column:
     )
 
 
-def _name(content, cls: str, language=None) -> F.Column:
-    lang = F.lit(None).cast("string") if language is None else language
-    return F.struct(
-        F.lit("Name").alias("type"),
-        content.alias("content"),
-        lang.alias("language"),
-        F.array(
-            F.struct(
-                F.lit(f"http://vocab.example/{cls}").alias("id"),
-                F.lit("Type").alias("type"),
-            )
-        ).alias("classified_as"),
-    )
-
-
 def _txn_lang(t: F.Column) -> F.Column:
     """'-'-split language tag head ('ja-Latn' -> 'ja'); null when empty."""
     head = F.split(F.coalesce(t.getField("lang"), F.lit("")), "-")[0]
     return F.when(head != "", F.lower(head))
-
-
-_NAME_T = (
-    "struct<type: string, content: string, language: string,"
-    " classified_as: array<struct<id: string, type: string>>>"
-)
 
 
 def _preflbl(doc: F.Column) -> F.Column:
@@ -154,21 +134,20 @@ def _names(doc: F.Column) -> F.Column:
                 (t.getField("value").isNotNull())
                 & (t.getField("value") != "")
                 & (t.getField("value") != preflbl),
-                _name(t.getField("value"), "primaryName", _txn_lang(t)),
+                name_node(t.getField("value"), "primaryName", _txn_lang(t)),
             ),
         ),
         lambda n: n.isNotNull(),
     )
-    anchor = F.when(preflbl != "", F.array(_name(preflbl, "primaryName"))).otherwise(
+    anchor = F.when(preflbl != "", F.array(name_node(preflbl, "primaryName"))).otherwise(
         F.array()
     )
 
     # the running dupes set: seen = {preflbl} + each visited alt literal;
     # alt transcriptions test against seen AFTER their own literal joined
-    name_t = _NAME_T
     init = F.struct(
         F.array(preflbl).alias("seen"),
-        F.array().cast(f"array<{name_t}>").alias("names"),
+        F.array().cast(f"array<{NAME_T}>").alias("names"),
     )
 
     def fold(acc, alt):
@@ -179,8 +158,8 @@ def _names(doc: F.Column) -> F.Column:
         ).otherwise(acc.getField("seen"))
         alt_name = F.when(
             fresh & (alt_txt != ""),
-            F.array(_name(alt_txt, "alternateName")),
-        ).otherwise(F.array().cast(f"array<{name_t}>"))
+            F.array(name_node(alt_txt, "alternateName")),
+        ).otherwise(F.array().cast(f"array<{NAME_T}>"))
         txns = F.filter(
             F.transform(
                 F.coalesce(alt.getField("transcriptions"), F.array()),
@@ -188,7 +167,7 @@ def _names(doc: F.Column) -> F.Column:
                     (t.getField("value").isNotNull())
                     & (t.getField("value") != "")
                     & ~F.array_contains(seen2, t.getField("value")),
-                    _name(t.getField("value"), "alternateName", _txn_lang(t)),
+                    name_node(t.getField("value"), "alternateName", _txn_lang(t)),
                 ),
             ),
             lambda n: n.isNotNull(),
@@ -349,8 +328,8 @@ def map_records(loaded: DataFrame, source_name: str = "japan") -> DataFrame:
     topic_name = F.coalesce(topic.getField("name"), F.lit(""))
     topic_alt = F.when(
         (topic_name != "") & ~F.array_contains(_dupes(d), topic_name),
-        F.array(_name(topic_name, "alternateName")),
-    ).otherwise(F.array().cast(f"array<{_NAME_T}>"))
+        F.array(name_node(topic_name, "alternateName")),
+    ).otherwise(F.array().cast(f"array<{NAME_T}>"))
 
     body = F.to_json(
         F.struct(
@@ -361,12 +340,7 @@ def map_records(loaded: DataFrame, source_name: str = "japan") -> DataFrame:
             equivalents.alias("equivalent"),
             F.when(
                 is_family,
-                F.array(
-                    F.struct(
-                        F.lit("http://vocab.example/family").alias("id"),
-                        F.lit("Type").alias("type"),
-                    )
-                ),
+                F.array(type_ref("family")),
             ).alias("classified_as"),
             F.when(is_person, event(F.col("begin_ts"), F.col("begin_raw"))).alias("born"),
             F.when(is_person, event(F.col("end_ts"), F.col("end_raw"))).alias("died"),
@@ -375,15 +349,9 @@ def map_records(loaded: DataFrame, source_name: str = "japan") -> DataFrame:
             F.when(is_group, attributed).alias("attributed_by"),
         )
     )
-    return df.select(
-        F.lit(source_name).alias("source"),
-        doc.getField("identifier").alias("identifier"),
-        F.col("rectype"),
-        F.coalesce(doc.getField("record_time"), F.lit("2026-01-01T00:00:00")).alias(
-            "record_time"
-        ),
-        F.lit("create").alias("change"),
-        body.alias("data"),
+    return envelope(
+        df, source_name, doc.getField("identifier"), "rectype",
+        doc.getField("record_time"), body,
     )
 
 

@@ -35,6 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.strings import normalize_lang
+from .loaders import IDENTIFIER_SNIFF, envelope, load_jsonl_dump, name_node, type_ref
+
 # Normalized JSON-LD node shape (the dump loader's parse schema applies
 # the compaction coercions the reference does in Python per record).
 RAW_SCHEMA = (
@@ -74,11 +77,8 @@ NAF_CLASSES = ["Place", "Group", "Person", "Activity"]
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
-        spark, cfg["dump_path"], schema=RAW_SCHEMA,
-        sniff_regex=r'"identifier"\s*:\s*"([^"]+)"',
+        spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=IDENTIFIER_SNIFF
     )
 
 
@@ -113,20 +113,11 @@ def guess_type(top: F.Column, rwo: F.Column) -> F.Column:
     )
 
 
-def _name(entry: F.Column, cls: str) -> F.Column:
-    from ..functions.strings import normalize_lang
-
+def _label_name(entry: F.Column, cls: str) -> F.Column:
+    """A {value, lang} label entry -> Name, language through F15."""
     lang = entry.getField("lang")
-    return F.struct(
-        F.lit("Name").alias("type"),
-        entry.getField("value").alias("content"),
-        F.when(lang.isNotNull(), normalize_lang(lang)).alias("language"),
-        F.array(
-            F.struct(
-                F.lit(f"http://vocab.example/{cls}").alias("id"),
-                F.lit("Type").alias("type"),
-            )
-        ).alias("classified_as"),
+    return name_node(
+        entry.getField("value"), cls, F.when(lang.isNotNull(), normalize_lang(lang))
     )
 
 
@@ -174,10 +165,10 @@ def map_records(loaded: DataFrame, source_name: str = "lc") -> DataFrame:
     t = F.col("top")
     prefs = F.coalesce(t.getField("auth_labels"), F.array())
     names = F.concat(
-        F.transform(prefs, lambda p: _name(p, "primaryName")),
+        F.transform(prefs, lambda p: _label_name(p, "primaryName")),
         F.transform(
             F.coalesce(t.getField("variants"), F.array()),
-            lambda v: _name(v, "alternateName"),
+            lambda v: _label_name(v, "alternateName"),
         ),
     )
     statements = F.transform(
@@ -185,12 +176,7 @@ def map_records(loaded: DataFrame, source_name: str = "lc") -> DataFrame:
         lambda n: F.struct(
             F.lit("LinguisticObject").alias("type"),
             n.alias("content"),
-            F.array(
-                F.struct(
-                    F.lit("http://vocab.example/note").alias("id"),
-                    F.lit("Type").alias("type"),
-                )
-            ).alias("classified_as"),
+            F.array(type_ref("note")).alias("classified_as"),
         ),
     )
     # fix_links (mapper.py:99-109): strip bnf.fr equivalents
@@ -215,13 +201,8 @@ def map_records(loaded: DataFrame, source_name: str = "lc") -> DataFrame:
             ).alias("equivalent"),
         )
     )
-    return df.select(
-        lc_source.alias("source"),
-        F.col("ident").alias("identifier"),
-        F.col("rectype"),
-        F.coalesce(doc.getField("record_time"), F.lit("2026-01-01T00:00:00")).alias("record_time"),
-        F.lit("create").alias("change"),
-        body.alias("data"),
+    return envelope(
+        df, lc_source, "ident", "rectype", doc.getField("record_time"), body
     )
 
 

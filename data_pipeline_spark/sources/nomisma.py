@@ -33,7 +33,8 @@ Kept semantics, in reference order:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .loaders import as_list, load_doc_lines, loads_object, map_rows, name_dict
 
 PROCESS_LANGS = [
     "en", "fr", "de", "es", "it", "nl", "pt", "zh", "ja", "ru", "ar",
@@ -50,24 +51,6 @@ TYPE_TYPES = {
     "nmo:Denomination", "nmo:Material", "nmo:ObjectType",
     "nmo:NumismaticTerm", "nmo:TypeSeries",
 }
-
-
-def _as_list(v):
-    if v is None or v == "" or v == {}:
-        return []
-    return v if isinstance(v, list) else [v]
-
-
-def _name(content, cls, lang=None):
-    n = {
-        "type": "Name", "content": content,
-        "classified_as": [{
-            "id": f"http://vocab.example/{cls}", "type": "Type",
-        }],
-    }
-    if lang:
-        n["language"] = lang
-    return n
 
 
 def _nm_tail(ref) -> str | None:
@@ -96,13 +79,13 @@ def _gyear_event(node_or_val, parse_datetime):
 
 
 def transform_record(recid: str, doc: dict, namespace: str, parse_datetime):
-    graph = _as_list(doc.get("@graph"))
+    graph = as_list(doc.get("@graph"))
     if not graph:
         return None
     top_node, rectype = None, None
     for r in graph:
         if r.get("@id") == f"nm:{recid}":
-            for t in _as_list(r.get("@type")):
+            for t in as_list(r.get("@type")):
                 if t in PLACE_TYPES:
                     rectype = "Place"
                 elif t in PERSON_TYPES:
@@ -121,24 +104,24 @@ def transform_record(recid: str, doc: dict, namespace: str, parse_datetime):
     out = {"id": f"{namespace}{recid}.jsonld", "type": rectype}
 
     names = []
-    for pref in _as_list(r.get("skos:prefLabel")):
+    for pref in as_list(r.get("skos:prefLabel")):
         val = pref.get("@value") if isinstance(pref, dict) else pref
         lang = pref.get("@language", "") if isinstance(pref, dict) else ""
         if val:
-            names.append(_name(val, "primaryName",
-                               lang if lang in PROCESS_LANGS else None))
-    for alt in _as_list(r.get("skos:altLabel")):
+            names.append(name_dict(val, "primaryName",
+                                   lang if lang in PROCESS_LANGS else None))
+    for alt in as_list(r.get("skos:altLabel")):
         val = alt.get("@value") if isinstance(alt, dict) else alt
         lang = alt.get("@language", "") if isinstance(alt, dict) else ""
         if val:
-            names.append(_name(val, "alternateName",
-                               lang if lang in PROCESS_LANGS else None))
+            names.append(name_dict(val, "alternateName",
+                                   lang if lang in PROCESS_LANGS else None))
     if names:
         out["identified_by"] = names
 
     notes = []
     for field in ("skos:definition", "skos:scopeNote"):
-        for d in _as_list(r.get(field)):
+        for d in as_list(r.get(field)):
             if not isinstance(d, dict) or not d.get("@value"):
                 continue
             note = {"type": "LinguisticObject", "content": d["@value"],
@@ -152,7 +135,7 @@ def transform_record(recid: str, doc: dict, namespace: str, parse_datetime):
 
     equivs = []
     for field in ("skos:closeMatch", "skos:exactMatch"):
-        for c in _as_list(r.get(field)):
+        for c in as_list(r.get(field)):
             cid = c.get("@id") if isinstance(c, dict) else None
             if cid:
                 equivs.append({"id": cid, "type": rectype})
@@ -161,7 +144,7 @@ def transform_record(recid: str, doc: dict, namespace: str, parse_datetime):
 
     if rectype in ("Type", "Place"):
         refs = []
-        for b in _as_list(r.get("skos:broader")):
+        for b in as_list(r.get("skos:broader")):
             tail = _nm_tail(b)
             if tail:
                 refs.append({
@@ -171,7 +154,7 @@ def transform_record(recid: str, doc: dict, namespace: str, parse_datetime):
         if refs:
             out["part_of" if rectype == "Place" else "broader"] = refs
 
-    homepages = _as_list(r.get("foaf:homepage"))
+    homepages = as_list(r.get("foaf:homepage"))
     if homepages and isinstance(homepages[0], dict) and homepages[0].get("@id"):
         out["subject_of"] = [{
             "type": "LinguisticObject", "_label": "Website Text",
@@ -195,7 +178,7 @@ def transform_record(recid: str, doc: dict, namespace: str, parse_datetime):
 
     if rectype == "Person":
         member_of = []
-        for mem in _as_list(r.get("org:hasMembership")):
+        for mem in as_list(r.get("org:hasMembership")):
             node = by_id.get(mem.get("@id")) if isinstance(mem, dict) else None
             if node is not None:
                 tail = _nm_tail(node.get("org:organization"))
@@ -203,7 +186,7 @@ def transform_record(recid: str, doc: dict, namespace: str, parse_datetime):
                     member_of.append({
                         "id": f"{namespace}{tail}.jsonld", "type": "Group",
                     })
-        for m in _as_list(r.get("org:memberOf")):
+        for m in as_list(r.get("org:memberOf")):
             tail = _nm_tail(m)
             if tail:
                 member_of.append({
@@ -238,61 +221,21 @@ def map_records(
     namespace: str = "https://num.example/id/",
 ) -> DataFrame:
     """(identifier, record_time?, value) raw JSON rows -> envelopes."""
-    import json as _json
-
-    import pandas as pd
-
     from ..functions.dates import parse_datetime
 
-    cols = set(loaded.columns)
-    if "record_time" not in cols:
-        loaded = loaded.withColumn("record_time", F.lit(None).cast("string"))
+    def row(ident, rt, val):
+        doc = loads_object(val)
+        mapped = None if doc is None else transform_record(
+            ident, doc, namespace, parse_datetime)
+        return None if mapped is None else (ident, rt, mapped)
 
-    def run(batches):
-        for pdf in batches:
-            out = {"identifier": [], "rectype": [], "record_time": [], "data": []}
-            for ident, rt, val in zip(
-                pdf["identifier"], pdf["record_time"], pdf["value"]
-            ):
-                try:
-                    doc = _json.loads(val)
-                except (ValueError, TypeError):
-                    continue
-                mapped = transform_record(ident, doc, namespace, parse_datetime)
-                if mapped is None:
-                    continue
-                out["identifier"].append(ident)
-                out["rectype"].append(mapped["type"])
-                out["record_time"].append(
-                    rt if isinstance(rt, str) and rt else "2026-01-01T00:00:00"
-                )
-                out["data"].append(_json.dumps(mapped, sort_keys=True))
-            yield pd.DataFrame(out)
-
-    mapped = loaded.select("identifier", "record_time", "value").mapInPandas(
-        run, schema="identifier string, rectype string, record_time string, data string"
-    )
-    return mapped.select(
-        F.lit(source_name).alias("source"),
-        "identifier", "rectype", "record_time",
-        F.lit("create").alias("change"),
-        "data",
-    )
+    return map_rows(loaded, source_name, row)
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
     """JSONL dump rows {identifier, doc: <raw JSON-LD>}: the doc is kept
     as a raw string (the graph walk parses it in the Arrow pass)."""
-    raw = spark.read.text(cfg["dump_path"])
-    parsed = F.from_json(
-        "value", "struct<identifier: string, record_time: string>"
-    )
-    doc_raw = F.get_json_object("value", "$.doc")
-    return raw.select(
-        parsed.getField("identifier").alias("identifier"),
-        parsed.getField("record_time").alias("record_time"),
-        doc_raw.alias("value"),
-    ).filter(F.col("identifier").isNotNull() & F.col("value").isNotNull())
+    return load_doc_lines(spark, cfg["dump_path"], "$.doc")
 
 
 CONFIG = {

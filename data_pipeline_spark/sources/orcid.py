@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import IDENTIFIER_SNIFF, envelope, load_jsonl_dump, type_ref
+
 _DATE_T = (
     "struct<`common:year`: string, `common:month`: string, `common:day`: string>"
 )
@@ -96,11 +98,8 @@ EXTID_EQUIVALENTS = {
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
-        spark, cfg["dump_path"], schema=RAW_SCHEMA,
-        sniff_regex=r'"identifier"\s*:\s*"([^"]+)"',
+        spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=IDENTIFIER_SNIFF
     )
 
 
@@ -149,12 +148,7 @@ def map_records(loaded: DataFrame, source_name: str = "orcid") -> DataFrame:
     orcid = rec.getField("common:orcid-identifier").getField("common:uri")
 
     def cls(c: str) -> F.Column:
-        return F.array(
-            F.struct(
-                F.lit(f"http://vocab.example/{c}").alias("id"),
-                F.lit("Type").alias("type"),
-            )
-        )
+        return F.array(type_ref(c))
 
     part_t = (
         "array<struct<type: string, content: string,"
@@ -430,21 +424,15 @@ def map_records(loaded: DataFrame, source_name: str = "orcid") -> DataFrame:
             F.when(F.size(member_of) > 0, member_of).alias("member_of"),
         )
     )
-    return (
+    df = (
         loaded.filter(doc.getField("identifier").isNotNull())
         .withColumn("_rec", rec)
         .withColumn("_name", name)
         .filter(F.col("_rec").isNotNull() & F.col("_name").isNotNull())
-        .select(
-            F.lit(source_name).alias("source"),
-            doc.getField("identifier").alias("identifier"),
-            F.lit("Person").alias("rectype"),
-            F.coalesce(
-                doc.getField("record_time"), F.lit("2026-01-01T00:00:00")
-            ).alias("record_time"),
-            F.lit("create").alias("change"),
-            body.alias("data"),
-        )
+    )
+    return envelope(
+        df, source_name, doc.getField("identifier"), F.lit("Person"),
+        doc.getField("record_time"), body,
     )
 
 

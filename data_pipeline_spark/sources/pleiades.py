@@ -22,13 +22,12 @@ record shapes:
 
 from __future__ import annotations
 
-import json
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.strings import LANG_THREE_TO_TWO
+from .loaders import loads_object, map_rows, name_dict
 
 PROCESS_LANGS = [
     "en", "fr", "de", "es", "it", "nl", "pt", "zh", "ja", "ru", "ar",
@@ -76,16 +75,6 @@ def _lang2(code: str) -> str | None:
     return code if code in PROCESS_LANGS else None
 
 
-def _name(content, cls, lang=None):
-    n = {
-        "type": "Name", "content": content,
-        "classified_as": [{"id": f"http://vocab.example/{cls}", "type": "Type"}],
-    }
-    if lang:
-        n["language"] = lang
-    return n
-
-
 def parse_place(rec: dict) -> dict | None:
     if not rec.get("uri"):
         return None
@@ -99,8 +88,8 @@ def parse_place(rec: dict) -> dict | None:
         return None
     names = []
     for i, (content, lang) in enumerate(all_names):
-        names.append(_name(content, "primaryName" if i == 0 else "alternateName",
-                           _lang2(lang)))
+        names.append(name_dict(content, "primaryName" if i == 0 else "alternateName",
+                               _lang2(lang)))
     out = {"id": rec["uri"], "type": "Place",
            "_label": all_names[0][0], "identified_by": names}
 
@@ -160,8 +149,8 @@ def parse_type_section(ttl_section: str) -> dict | None:
         return None
     label_lang = label_m.group(2) or "en"
     out = {"id": uri, "type": "Type", "_label": label_m.group(1),
-           "identified_by": [_name(label_m.group(1), "primaryName",
-                                   _lang2(label_lang))],
+           "identified_by": [name_dict(label_m.group(1), "primaryName",
+                                       _lang2(label_lang))],
            "_identifier": uri_m.group(1)}
     scope_m = re.search(r'skos:scopeNote "([^"]+)"(?:@([a-z]{2}))?', ttl_section)
     if scope_m:
@@ -180,72 +169,24 @@ def parse_type_section(ttl_section: str) -> dict | None:
     return out
 
 
-def _envelope_select(mapped, source_name):
-    return mapped.select(
-        F.lit(source_name).alias("source"),
-        "identifier", "rectype", "record_time",
-        F.lit("create").alias("change"),
-        "data",
-    )
-
-
 def map_places(loaded: DataFrame, source_name: str = "pleiades") -> DataFrame:
     """(identifier, record_time?, value) raw place JSON -> envelopes."""
-    import pandas as pd
+    def row(ident, rt, val):
+        rec = loads_object(val)
+        mapped = None if rec is None else parse_place(rec)
+        return None if mapped is None else (ident, rt, mapped)
 
-    if "record_time" not in set(loaded.columns):
-        loaded = loaded.withColumn("record_time", F.lit(None).cast("string"))
-
-    def run(batches):
-        for pdf in batches:
-            out = {"identifier": [], "rectype": [], "record_time": [], "data": []}
-            for ident, rt, val in zip(
-                pdf["identifier"], pdf["record_time"], pdf["value"]
-            ):
-                try:
-                    rec = json.loads(val)
-                except (ValueError, TypeError):
-                    continue
-                mapped = parse_place(rec) if isinstance(rec, dict) else None
-                if mapped is None:
-                    continue
-                out["identifier"].append(ident)
-                out["rectype"].append("Place")
-                out["record_time"].append(
-                    rt if isinstance(rt, str) and rt else "2026-01-01T00:00:00"
-                )
-                out["data"].append(json.dumps(mapped, sort_keys=True))
-            yield pd.DataFrame(out)
-
-    mapped = loaded.select("identifier", "record_time", "value").mapInPandas(
-        run, schema="identifier string, rectype string, record_time string,"
-        " data string"
-    )
-    return _envelope_select(mapped, source_name)
+    return map_rows(loaded, source_name, row)
 
 
 def map_concepts(sections: DataFrame, source_name: str = "pleiades") -> DataFrame:
-    """(value) TTL-section rows -> Type envelopes."""
-    import pandas as pd
+    """(value) TTL-section rows -> Type envelopes; the identifier comes
+    from the section's own URI."""
+    def row(_ident, _rt, val):
+        mapped = parse_type_section(val) if isinstance(val, str) else None
+        return None if mapped is None else (mapped.pop("_identifier"), None, mapped)
 
-    def run(batches):
-        for pdf in batches:
-            out = {"identifier": [], "rectype": [], "record_time": [], "data": []}
-            for val in pdf["value"]:
-                mapped = parse_type_section(val) if isinstance(val, str) else None
-                if mapped is None:
-                    continue
-                out["identifier"].append(mapped.pop("_identifier"))
-                out["rectype"].append("Type")
-                out["record_time"].append("2026-01-01T00:00:00")
-                out["data"].append(json.dumps(mapped, sort_keys=True))
-            yield pd.DataFrame(out)
-
-    mapped = sections.select("value").mapInPandas(
-        run, schema="identifier string, rectype string, record_time string,"
-        " data string"
-    )
-    return _envelope_select(mapped, source_name)
+    return map_rows(sections.select("value"), source_name, row)
 
 
 CONFIG = {

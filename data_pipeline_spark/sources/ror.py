@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import IDENTIFIER_SNIFF, envelope, load_jsonl_dump, name_node
+
 PROCESS_LANGS = [
     "en", "fr", "de", "es", "it", "nl", "pt", "zh", "ja", "ru", "ar",
     "el", "he", "hi", "ko", "pl", "sv", "da", "no", "fi", "cs", "tr",
@@ -51,36 +53,9 @@ RAW_SCHEMA = (
 
 EXTERNAL_ID_PREFIXES = (("ISNI", "isni"), ("Wikidata", "wd"))
 
-_NAME_T = (
-    "struct<type: string, content: string, language: string,"
-    " classified_as: array<struct<id: string, type: string>>>"
-)
-
-
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
-        spark, cfg["dump_path"], schema=RAW_SCHEMA,
-        sniff_regex=r'"identifier"\s*:\s*"([^"]+)"',
-    )
-
-
-def _name(content, cls: str | None, language=None) -> F.Column:
-    lang = F.lit(None).cast("string") if language is None else language
-    classes = (
-        F.lit(None).cast("array<struct<id: string, type: string>>")
-        if cls is None
-        else F.array(
-            F.struct(
-                F.lit(f"http://vocab.example/{cls}").alias("id"),
-                F.lit("Type").alias("type"),
-            )
-        )
-    )
-    return F.struct(
-        F.lit("Name").alias("type"), content.alias("content"),
-        lang.alias("language"), classes.alias("classified_as"),
+        spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=IDENTIFIER_SNIFF
     )
 
 
@@ -116,10 +91,10 @@ def map_records(loaded: DataFrame, source_name: str = "ror") -> DataFrame:
                     F.array_contains(
                         F.coalesce(n.getField("types"), F.array()), "ror_display"
                     ),
-                    _name(n.getField("value"), "primaryName",
+                    name_node(n.getField("value"), "primaryName",
                           lang_ok(n.getField("lang"))),
                 ).otherwise(
-                    _name(n.getField("value"), None, lang_ok(n.getField("lang")))
+                    name_node(n.getField("value"), None, lang_ok(n.getField("lang")))
                 ),
             ),
         ),
@@ -131,7 +106,7 @@ def map_records(loaded: DataFrame, source_name: str = "ror") -> DataFrame:
                 "array<struct<label: string, iso639: string>>")),
             lambda l: F.when(
                 l.getField("label").isNotNull(),
-                _name(l.getField("label"), None, lang_ok(l.getField("iso639"))),
+                name_node(l.getField("label"), None, lang_ok(l.getField("iso639"))),
             ),
         ),
         lambda n: n.isNotNull(),
@@ -255,20 +230,14 @@ def map_records(loaded: DataFrame, source_name: str = "ror") -> DataFrame:
             F.when(F.size(member_of) > 0, member_of).alias("member_of"),
         )
     )
-    return (
+    df = (
         loaded.filter(doc.getField("identifier").isNotNull())
         .withColumn("_names", names)
         .filter(F.size(F.col("_names")) > 0)  # nameless records dropped
-        .select(
-            F.lit(source_name).alias("source"),
-            doc.getField("identifier").alias("identifier"),
-            F.lit("Group").alias("rectype"),
-            F.coalesce(
-                doc.getField("record_time"), F.lit("2026-01-01T00:00:00")
-            ).alias("record_time"),
-            F.lit("create").alias("change"),
-            body.alias("data"),
-        )
+    )
+    return envelope(
+        df, source_name, doc.getField("identifier"), F.lit("Group"),
+        doc.getField("record_time"), body,
     )
 
 

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import IDENTIFIER_SNIFF, envelope, load_jsonl_dump, name_node
+
 RAW_SCHEMA = (
     "identifier string, record_time string,"
     " doc struct<"
@@ -48,24 +50,8 @@ RAW_SCHEMA = (
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
-        spark, cfg["dump_path"], schema=RAW_SCHEMA,
-        sniff_regex=r'"identifier"\s*:\s*"([^"]+)"',
-    )
-
-
-def _name(content, cls: str) -> F.Column:
-    return F.struct(
-        F.lit("Name").alias("type"), content.alias("content"),
-        F.lit("en").alias("language"),
-        F.array(
-            F.struct(
-                F.lit(f"http://vocab.example/{cls}").alias("id"),
-                F.lit("Type").alias("type"),
-            )
-        ).alias("classified_as"),
+        spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=IDENTIFIER_SNIFF
     )
 
 
@@ -98,12 +84,13 @@ def map_records(loaded: DataFrame, source_name: str = "snac") -> DataFrame:
     first_primary = F.try_element_at(
         F.filter(entries, is_primary_candidate), F.lit(1)
     ).getField("original")
+    en = F.lit("en")  # every name English (the mapper's fixed process_langs['en'])
     names = F.transform(
         entries,
         lambda n: F.when(
             first_primary.isNotNull() & (n.getField("original") == first_primary),
-            _name(n.getField("original"), "primaryName"),
-        ).otherwise(_name(n.getField("original"), "alternateName")),
+            name_node(n.getField("original"), "primaryName", en),
+        ).otherwise(name_node(n.getField("original"), "alternateName", en)),
     )
 
     # biogHists: <biogHist> XML unwrapped (tags stripped, whitespace
@@ -202,17 +189,12 @@ def map_records(loaded: DataFrame, source_name: str = "snac") -> DataFrame:
             event(active_raw).alias("active"),
         )
     )
-    return loaded.filter(
-        doc.getField("identifier").isNotNull() & d.getField("ark").isNotNull()
-    ).select(
-        F.lit(source_name).alias("source"),
-        doc.getField("identifier").alias("identifier"),
-        rectype.alias("rectype"),
-        F.coalesce(doc.getField("record_time"), F.lit("2026-01-01T00:00:00")).alias(
-            "record_time"
+    return envelope(
+        loaded.filter(
+            doc.getField("identifier").isNotNull() & d.getField("ark").isNotNull()
         ),
-        F.lit("create").alias("change"),
-        body.alias("data"),
+        source_name, doc.getField("identifier"), rectype,
+        doc.getField("record_time"), body,
     )
 
 

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import IDENTIFIER_SNIFF, envelope, load_jsonl_dump, name_node
+
 NAME_TYPE_MAP = {"Personal": "Person", "Corporate": "Group", "Geographic": "Place"}
 PRIMARY_SOURCES = ["JPG", "LC", "LCSH", "ULAN"]
 
@@ -80,11 +82,8 @@ RAW_SCHEMA = "identifier string, record_time string, doc struct<xml: string>"
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
-        spark, cfg["dump_path"], schema=RAW_SCHEMA,
-        sniff_regex=r'"identifier"\s*:\s*"([^"]+)"',
+        spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=IDENTIFIER_SNIFF
     )
 
 
@@ -126,14 +125,6 @@ def map_records(
     )
     n_names = F.size(datas)
 
-    def cls(c: str) -> F.Column:
-        return F.array(
-            F.struct(
-                F.lit(f"http://vocab.example/{c}").alias("id"),
-                F.lit("Type").alias("type"),
-            )
-        )
-
     # entries kept: text present; WKP-sourced non-primary headings skipped
     # when the cluster has several headings
     kept = F.filter(
@@ -153,12 +144,10 @@ def map_records(
     )
     names = F.transform(
         kept,
-        lambda x: F.struct(
-            F.lit("Name").alias("type"),
-            x.getField("d").getField("text").alias("content"),
-            F.when(x.getField("i") == eff_prim_idx, cls("primaryName"))
-            .otherwise(cls("name")).alias("classified_as"),
-        ),
+        lambda x: F.when(
+            x.getField("i") == eff_prim_idx,
+            name_node(x.getField("d").getField("text"), "primaryName"),
+        ).otherwise(name_node(x.getField("d").getField("text"), "name")),
     )
     label = F.try_element_at(
         F.filter(kept, lambda x: x.getField("i") == eff_prim_idx), F.lit(1)
@@ -351,7 +340,7 @@ def map_records(
             ).alias("classified_as"),
         )
     )
-    return (
+    df = (
         loaded.filter(
             doc.getField("identifier").isNotNull()
             & ~doc.getField("identifier").startswith("sourceID/")
@@ -359,16 +348,10 @@ def map_records(
         .withColumn("_rectype", rectype)
         .withColumn("_names", names)
         .filter(F.col("_rectype").isNotNull() & (F.size(F.col("_names")) > 0))
-        .select(
-            F.lit(source_name).alias("source"),
-            doc.getField("identifier").alias("identifier"),
-            F.col("_rectype").alias("rectype"),
-            F.coalesce(
-                doc.getField("record_time"), F.lit("2026-01-01T00:00:00")
-            ).alias("record_time"),
-            F.lit("create").alias("change"),
-            body.alias("data"),
-        )
+    )
+    return envelope(
+        df, source_name, doc.getField("identifier"), "_rectype",
+        doc.getField("record_time"), body,
     )
 
 

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import envelope, load_jsonl_dump, name_node
+
 WD_URI_PREFIX = "http://www.wikidata.org/entity/"
 
 # string-valued snaks (external identifiers) + labels + modified
@@ -143,8 +145,6 @@ NAT_MAP: dict[str, str] = {
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
     """S6: entity-dump lines with the property-line prefilter and
     already-loaded skip, raw line retained for the mapper's two parses."""
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
         spark,
         cfg["dump_path"],
@@ -208,15 +208,14 @@ def map_records(loaded: DataFrame, source_name: str = "wikidata") -> DataFrame:
     ))))
     names = F.transform(
         entries,
-        lambda e: F.struct(
-            F.lit("Name").alias("type"),
-            e.getField("value").getField("value").alias("content"),
+        lambda e: name_node(
+            e.getField("value").getField("value"), None,
             F.array(
                 F.struct(
                     F.concat(F.lit("http://vocab.example/iso639-1/"), e.getField("key")).alias("id"),
                     F.lit("Language").alias("type"),
                 )
-            ).alias("language"),
+            ),
         ),
     )
     label = F.coalesce(
@@ -269,14 +268,7 @@ def map_records(loaded: DataFrame, source_name: str = "wikidata") -> DataFrame:
             classifications.alias("classified_as"),
         )
     )
-    return df.select(
-        F.lit(source_name).alias("source"),
-        F.col("identifier"),
-        F.col("rectype"),
-        F.coalesce(F.col("doc.modified"), F.lit("2026-01-01T00:00:00")).alias("record_time"),
-        F.lit("create").alias("change"),
-        doc.alias("data"),
-    )
+    return envelope(df, source_name, "identifier", "rectype", "doc.modified", doc)
 
 
 CONFIG = {

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import IDENTIFIER_SNIFF, envelope, load_jsonl_dump, name_node
+
 ALLOWED_LICENSES = ["pd", "cc0", "cc-by-sa-4.0", "cc-by-4.0"]
 _OK_EXT = r"(?i)\.(jpe?g|gif|png)$"
 FILEPATH_BASE = "https://commons.wikimedia.org/wiki/Special:Filepath/"
@@ -57,11 +59,8 @@ RAW_SCHEMA = (
 
 
 def load(spark: SparkSession, cfg: dict) -> DataFrame:
-    from .loaders import load_jsonl_dump
-
     return load_jsonl_dump(
-        spark, cfg["dump_path"], schema=RAW_SCHEMA,
-        sniff_regex=r'"identifier"\s*:\s*"([^"]+)"',
+        spark, cfg["dump_path"], schema=RAW_SCHEMA, sniff_regex=IDENTIFIER_SNIFF
     )
 
 
@@ -147,18 +146,7 @@ def map_records(loaded: DataFrame, source_name: str = "wikimedia") -> DataFrame:
     img = F.col("img")
     names = F.when(
         img.getField("name") != "",
-        F.array(
-            F.struct(
-                F.lit("Name").alias("type"),
-                img.getField("name").alias("content"),
-                F.array(
-                    F.struct(
-                        F.lit("http://vocab.example/primaryName").alias("id"),
-                        F.lit("Type").alias("type"),
-                    )
-                ).alias("classified_as"),
-            )
-        ),
+        F.array(name_node(img.getField("name"), "primaryName")),
     )
     statements = F.concat(
         F.when(
@@ -209,15 +197,9 @@ def map_records(loaded: DataFrame, source_name: str = "wikimedia") -> DataFrame:
             rights.alias("subject_to"),
         )
     )
-    return df.select(
-        F.lit(source_name).alias("source"),
-        doc.getField("identifier").alias("identifier"),
-        F.lit("DigitalImage").alias("rectype"),
-        F.coalesce(doc.getField("record_time"), F.lit("2026-01-01T00:00:00")).alias(
-            "record_time"
-        ),
-        F.lit("create").alias("change"),
-        body.alias("data"),
+    return envelope(
+        df, source_name, doc.getField("identifier"), F.lit("DigitalImage"),
+        doc.getField("record_time"), body,
     )
 
 

@@ -137,6 +137,7 @@ def wof_fetch_factory(db_path: str, http_fetch_factory=None):
 # ---------------------------------------------------------------------------
 
 from ..functions.strings import LANG_THREE_TO_TWO  # noqa: E402
+from .loaders import loads_object, map_rows, name_dict  # noqa: E402
 
 # placetype ladder for the hierarchy parent fallback (mapper.py:61)
 HIERARCHY_ORDER = [
@@ -276,20 +277,15 @@ def transform_place(rec: dict, namespace: str = "https://gazetteer.example/wof/"
             val = v[0] if isinstance(v, list) else v
             ll = LANG_THREE_TO_TWO.get(k[5:8], "")
             if ll in MUST_HAVE:
-                names.append({
-                    "type": "Name", "content": val, "language": ll,
-                    "classified_as": [{
-                        "id": "http://vocab.example/primaryName", "type": "Type"
-                    }],
-                })
+                names.append(name_dict(val, "primaryName", ll))
                 if ll == "en":
                     label = val
     if label is None and "wof:name" in props:
         label = props["wof:name"]
         if not names:
-            names = [{"type": "Name", "content": props["wof:name"]}]
+            names = [name_dict(props["wof:name"], None)]
     if not names:
-        names = [{"type": "Name", "content": "Unnamed Place"}]
+        names = [name_dict("Unnamed Place", None)]
 
     doc = {"id": ident, "type": "Place", "identified_by": names}
     if label is not None:
@@ -342,44 +338,20 @@ def map_records(
     namespace: str = "https://gazetteer.example/wof/",
 ) -> DataFrame:
     """(id, body) rows from the S13 scan -> Place record envelopes; the
-    per-feature munging (adaptive RDP, area math) runs Arrow-batched."""
-    import json as _json
-
-    import pandas as pd
-
+    per-feature munging (adaptive RDP, area math) runs Arrow-batched.
+    The record time is the feature's wof:lastmodified."""
     from pyspark.sql import functions as F
 
-    def run(batches):
-        for pdf in batches:
-            out = {"identifier": [], "record_time": [], "data": []}
-            for rid, body in zip(pdf["id"], pdf["body"]):
-                try:
-                    rec = _json.loads(body)
-                except (ValueError, TypeError):
-                    continue
-                doc = transform_place(rec, namespace)
-                if doc is None:
-                    continue
-                props = rec.get("properties") or {}
-                lastmod = props.get("wof:lastmodified")
-                out["identifier"].append(fix_identifier(str(rid)))
-                out["record_time"].append(
-                    str(lastmod) if lastmod else "2026-01-01T00:00:00"
-                )
-                out["data"].append(_json.dumps(doc, sort_keys=True))
-            yield pd.DataFrame(out)
+    def row(rid, _rt, body):
+        rec = loads_object(body)
+        doc = None if rec is None else transform_place(rec, namespace)
+        if doc is None:
+            return None
+        lastmod = rec["properties"].get("wof:lastmodified")
+        return fix_identifier(str(rid)), str(lastmod) if lastmod else None, doc
 
-    mapped = loaded.mapInPandas(
-        run, schema="identifier string, record_time string, data string"
-    )
-    return mapped.select(
-        F.lit(source_name).alias("source"),
-        "identifier",
-        F.lit("Place").alias("rectype"),
-        "record_time",
-        F.lit("create").alias("change"),
-        "data",
-    )
+    rows = loaded.select(F.col("id").alias("identifier"), F.col("body").alias("value"))
+    return map_rows(rows, source_name, row)
 
 
 CONFIG = {

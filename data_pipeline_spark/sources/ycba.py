@@ -52,6 +52,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .loaders import loads_object, map_rows, name_dict
+
 # the collection's own term namespace (entries deleted on sight) and the
 # protected record types for the P5 wikidata veto (mapper.py:16,46-56)
 TERM_PREFIXES = (
@@ -170,12 +172,11 @@ def _process_period(doc: dict) -> None:
                 "begin_of_the_begin": parsed[0] or "",
                 "end_of_the_end": parsed[1] or "",
                 "identified_by": [{
-                    "type": "Name",
+                    **name_dict(content, None),
                     "classified_as": [{
                         "id": AAT_DISPLAY_TITLE, "type": "Type",
                         "_label": "Display Title",
                     }],
-                    "content": content,
                 }],
             }
         break
@@ -284,6 +285,39 @@ def transform_doc(doc: dict, canonical=None) -> dict:
     return doc
 
 
+def canonicalizer(rewrites: dict | None):
+    """The F13 prefix-rewrite table as fix_links' canonical(uri) (an
+    exact/prefix map; a rewrite to None unsets), or None when empty."""
+    rw = dict(rewrites or {})
+
+    def canonical(uri: str):
+        for old, new in rw.items():
+            if uri == old or uri.startswith(old):
+                return None if new is None else new + uri[len(old):]
+        return uri
+
+    return canonical if rw else None
+
+
+def linked_art_row(transform, namespace: str):
+    """map_rows row function for sources whose records already are Linked
+    Art: untyped or non-object records are skipped, ``transform(doc)``
+    returning None drops the record, and a missing identifier falls back
+    to the record id minus ``namespace``."""
+    def row(ident, rt, val):
+        doc = loads_object(val)
+        if doc is None or "type" not in doc:
+            return None
+        doc = transform(doc)
+        if doc is None:
+            return None
+        if not isinstance(ident, str):
+            ident = str(doc.get("id", "")).removeprefix(namespace)
+        return ident, rt, doc
+
+    return row
+
+
 def map_records(
     loaded: DataFrame,
     source_name: str = "ycba",
@@ -294,53 +328,10 @@ def map_records(
     cleanup pass runs in one Arrow batch per partition.  ``rewrites`` is
     the F13 prefix-rewrite table fix_links canonicalizes through (an
     exact/prefix map; identity when omitted)."""
-    import pandas as pd
-
-    rw = dict(rewrites or {})
-
-    def canonical(uri: str):
-        for old, new in rw.items():
-            if uri == old or uri.startswith(old):
-                return None if new is None else new + uri[len(old):]
-        return uri
-
-    cols = set(loaded.columns)
-    if "identifier" not in cols:
-        loaded = loaded.withColumn("identifier", F.lit(None).cast("string"))
-    if "record_time" not in cols:
-        loaded = loaded.withColumn("record_time", F.lit(None).cast("string"))
-
-    def run(batches):
-        for pdf in batches:
-            out = {"identifier": [], "rectype": [], "record_time": [], "data": []}
-            for ident, rt, val in zip(
-                pdf["identifier"], pdf["record_time"], pdf["value"]
-            ):
-                try:
-                    doc = json.loads(val)
-                except ValueError:
-                    continue
-                if not isinstance(doc, dict) or "type" not in doc:
-                    continue
-                doc = transform_doc(doc, canonical if rw else None)
-                if ident is None or (isinstance(ident, float) and pd.isna(ident)):
-                    ident = str(doc.get("id", "")).removeprefix(namespace)
-                out["identifier"].append(ident)
-                out["rectype"].append(doc["type"])
-                out["record_time"].append(
-                    rt if isinstance(rt, str) and rt else "2026-01-01T00:00:00"
-                )
-                out["data"].append(json.dumps(doc, sort_keys=True))
-            yield pd.DataFrame(out)
-
-    mapped = loaded.select("identifier", "record_time", "value").mapInPandas(
-        run, schema="identifier string, rectype string, record_time string, data string"
-    )
-    return mapped.select(
-        F.lit(source_name).alias("source"),
-        "identifier", "rectype", "record_time",
-        F.lit("create").alias("change"),
-        "data",
+    canonical = canonicalizer(rewrites)
+    return map_rows(
+        loaded, source_name,
+        linked_art_row(lambda doc: transform_doc(doc, canonical), namespace),
     )
 
 

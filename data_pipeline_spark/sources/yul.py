@@ -34,13 +34,12 @@ missing file):
 
 from __future__ import annotations
 
-import json
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .ycba import _normalize_timespans, _process_period
+from .loaders import map_rows
+from .ycba import _normalize_timespans, _process_period, linked_art_row
 
 MULTI_PROPS = [
     "part_of", "identified_by", "classified_as", "equivalent", "member_of",
@@ -292,48 +291,9 @@ def map_records(
     """(identifier?, record_time?, value) rows -> envelopes; ``tables``
     forwards the side tables to transform_doc (broadcast with the UDF
     closure — they are small curated files in the reference)."""
-    import pandas as pd
-
-    cols = set(loaded.columns)
-    if "identifier" not in cols:
-        loaded = loaded.withColumn("identifier", F.lit(None).cast("string"))
-    if "record_time" not in cols:
-        loaded = loaded.withColumn("record_time", F.lit(None).cast("string"))
-
-    def run(batches):
-        for pdf in batches:
-            out = {"identifier": [], "rectype": [], "record_time": [], "data": []}
-            for ident, rt, val in zip(
-                pdf["identifier"], pdf["record_time"], pdf["value"]
-            ):
-                try:
-                    doc = json.loads(val)
-                except (ValueError, TypeError):
-                    continue
-                if not isinstance(doc, dict) or "type" not in doc:
-                    continue
-                doc = transform_doc(doc, **tables)
-                if doc is None:
-                    continue
-                if ident is None:
-                    ident = str(doc.get("id", "")).removeprefix(namespace)
-                out["identifier"].append(ident)
-                out["rectype"].append(doc["type"])
-                out["record_time"].append(
-                    rt if isinstance(rt, str) and rt else "2026-01-01T00:00:00"
-                )
-                out["data"].append(json.dumps(doc, sort_keys=True))
-            yield pd.DataFrame(out)
-
-    mapped = loaded.select("identifier", "record_time", "value").mapInPandas(
-        run, schema="identifier string, rectype string, record_time string,"
-        " data string"
-    )
-    return mapped.select(
-        F.lit(source_name).alias("source"),
-        "identifier", "rectype", "record_time",
-        F.lit("create").alias("change"),
-        "data",
+    return map_rows(
+        loaded, source_name,
+        linked_art_row(lambda doc: transform_doc(doc, **tables), namespace),
     )
 
 

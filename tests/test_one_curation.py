@@ -3,7 +3,9 @@ content fingerprint (functions/strings.py), the d04 quality rule and its
 keeper election (queries/text.py, queries/dedup.py), the MinHash
 candidate join and Jaccard verify SQL (queries/dedup.py), the DuckDB
 closure walk (pipeline/closure.py) and the bigram-LM oracle
-(queries/text5.py) are each defined once under data_pipeline_spark/,
+(queries/text5.py), the Gopher quality rule (queries/text4.py) and the
+planted PII-tail and duplicate fixtures (queries/text3.py,
+queries/text4.py) are each defined once under data_pipeline_spark/,
 beside their Spark twins, and the copies they replaced stay deleted — so
 a second separator, stopword set or walk cannot grow back and drift."""
 
@@ -36,6 +38,11 @@ PRIMITIVES = (
     "closure_sql",
     "lm_train_sql",
     "lm_score_sql",
+    "gopher_metrics",
+    "gopher_metrics_sql",
+    "pii_tail",
+    "_dup_planted",
+    "_dup_planted_sql",
 )
 
 DELETED = (
@@ -46,6 +53,10 @@ DELETED = (
     "_SHINGLES_SQL",
     "_D57_SCORE_SQL",
     "_norm_text",
+    "_PII_INJECT_SQL",
+    "_PII_TAIL_SQL",
+    "_DUP_PLANTED_SQL",
+    "_D48_PREV_MOD",
 )
 
 # constructions a hand copy of a primitive would repeat verbatim; each
@@ -65,6 +76,14 @@ CONSTRUCTIONS = {
     "keeper election (Spark)": re.compile(r'F\.col\("keeper"\)\.isNull\(\)'),
     "LM unigram CTE": re.compile(r"ref_uni AS \("),
     "LM backoff score": re.compile(r"// \(s\.tt \+ s\.vv\)"),
+    # the Gopher alpha-word rule (gopher_metrics_sql), the PII-tail plant
+    # (pii_tail / PII_TAIL_SQL) and the d27 boilerplate plant
+    # (_dup_planted / _dup_planted_sql), one spelling per engine
+    "Gopher alpha rule (SQL)": re.compile(r"regexp_matches\(w, '\[a-z\]'\)"),
+    "PII-tail plant (Spark)": re.compile(r'F\.lit\(" contact user"\)'),
+    "PII-tail plant (SQL)": re.compile(r"' contact user' \|\|"),
+    "boilerplate plant (Spark)": re.compile(r'F\.lit\("shared boilerplate page "\)'),
+    "boilerplate plant (SQL)": re.compile(r"'shared boilerplate page ' \|\|"),
 }
 
 

@@ -249,7 +249,10 @@ def test_d21_d23_match_oracle_on_pathological_corpora(
     """The round-5 curation scans share d19/d20's pinned tokenization
     (explicit whitespace class, trim(x, ' ')); d21 adds ratio divisions
     and rule thresholds, d23 an md5-derived integer fold.  Both must
-    agree with DuckDB on NBSP/VT/Unicode/empty corpora."""
+    agree with DuckDB on NBSP/VT/Unicode/empty corpora — and so must
+    d01's fingerprint and d54's normalizer, whose trims keep a leading
+    or trailing U+00A0 as Spark's trim does (doc 0, which d01 always
+    duplicates, carries both)."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -265,7 +268,9 @@ def test_d21_d23_match_oracle_on_pathological_corpora(
         st.just("   "),
         st.lists(word, max_size=12).map(" ".join),
     )
-    docs = data.draw(st.lists(doc, min_size=1, max_size=10))
+    nbsp_edged = word.map(lambda w: "\xa0" + w + "\xa0")
+    docs = [data.draw(nbsp_edged)] + data.draw(
+        st.lists(st.one_of(doc, nbsp_edged), max_size=10))
 
     sf = tmp_path_factory.mktemp("d21prop")
     pq.write_table(
@@ -280,7 +285,8 @@ def test_d21_d23_match_oracle_on_pathological_corpora(
         f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
     )
     try:
-        for name in ("d21_gopher_quality", "d23_hashed_linear_score"):
+        for name in ("d21_gopher_quality", "d23_hashed_linear_score",
+                     "d01_dedup_exact", "d54_unicode_normalize"):
             q = QUERIES[name]
             ok, msg = compare(q.spark_fn(spark, str(sf)), con, q.oracle)
             assert ok, f"{name}: {msg}"

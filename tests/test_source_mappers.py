@@ -797,6 +797,19 @@ def test_ycba_transform_paths(spark):
     assert "end_of_the_end" not in ts
 
 
+def test_ycba_skips_null_value_rows(spark):
+    """A null raw value is a skipped row, as in every other JSON source,
+    not a TypeError that fails the job."""
+    from data_pipeline_spark.sources.ycba import map_records
+
+    loaded = spark.createDataFrame(
+        [("obj/aa/r1", json.dumps(_ycba_docs()["obj/aa/r1"])), ("obj/aa/r0", None)],
+        "identifier string, value string",
+    )
+    rows = map_records(loaded, namespace="https://coll.example/v3/").collect()
+    assert [r.identifier for r in rows] == ["obj/aa/r1"]
+
+
 def test_ycba_fix_links_and_merge_veto(spark):
     from data_pipeline_spark.pipeline.merge_records import should_merge
     from data_pipeline_spark.sources.ycba import (
@@ -1088,6 +1101,22 @@ def test_ror_mapper_end_to_end(spark, tmp_path):
     legacy = json.loads(rows["legacy1"].data)
     assert legacy["identified_by"][0]["content"] == "Old Style Org"
     assert legacy["identified_by"][0]["classified_as"][0]["id"].endswith("primaryName")
+
+
+def test_column_mapper_empty_record_time_takes_default(spark, tmp_path):
+    """The one record-time rule on the Column side: an empty record_time
+    becomes the default, exactly as a null one does."""
+    from data_pipeline_spark.sources.ror import CONFIG
+
+    dump = tmp_path / "ror.jsonl"
+    _write_jsonl(dump, [
+        {**ROR_RECORDS[0], "record_time": ""},
+        {**ROR_RECORDS[1], "record_time": "2026-03-01T00:00:00"},
+    ])
+    src = SourceRegistry().register_config({**CONFIG, "dump_path": str(dump)})
+    envelopes = src.component("mapper")(src.component("loader")(spark, src.config))
+    times = {r.identifier: r.record_time for r in envelopes.collect()}
+    assert times == {"04aj4c181": "2026-01-01T00:00:00", "legacy1": "2026-03-01T00:00:00"}
 
 
 # ------------------------------------------------------------------- gbif

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import empty_indexes, load_table
-from ..sources.loaders import envelope
+from ..sources.loaders import DEFAULT_RECORD_TIME, envelope
 from .registry import query
 
 _MERGE_ORDER = {"srcA": 0, "srcB": 1}
@@ -105,7 +105,7 @@ def _pair_records(
         else []
     )
     a = envelope(
-        cust, "srcA", key, F.lit("Person"), F.lit(None).cast("string"),
+        cust, "srcA", key, F.lit("Person"), F.lit(DEFAULT_RECORD_TIME),
         F.to_json(
             F.struct(
                 F.concat(F.lit("https://fixture.test/srcA/"), key).alias("id"),
@@ -124,7 +124,7 @@ def _pair_records(
         ),
     )
     b = envelope(
-        cust, "srcB", key, F.lit("Person"), F.lit(None).cast("string"),
+        cust, "srcB", key, F.lit("Person"), F.lit(DEFAULT_RECORD_TIME),
         F.to_json(
             F.struct(
                 F.concat(F.lit("https://fixture.test/srcB/"), key).alias("id"),

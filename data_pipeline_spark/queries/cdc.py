@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import empty_indexes, load_table
-from ..sources.loaders import envelope
+from ..sources.loaders import DEFAULT_RECORD_TIME, envelope
 from .registry import query
 
 
@@ -406,7 +406,7 @@ def _pair_records(cust: DataFrame) -> DataFrame:
     def records(src: str, data):
         return envelope(
             cust, src, F.col("c_custkey").cast("string"), F.lit("Person"),
-            F.lit(None).cast("string"), data,
+            F.lit(DEFAULT_RECORD_TIME), data,
         )
 
     return records("srcA", _pair_rec("srcA", "A", "Aname", "srcB")).unionByName(

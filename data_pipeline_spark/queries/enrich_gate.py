@@ -1278,7 +1278,7 @@ def u14_dnb_close_match_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent from the table passes through untouched on the no-Python
     side of the join."""
     from ..sources.dnb import enrich_close_matches, load_macs
-    from ..sources.loaders import envelope
+    from ..sources.loaders import DEFAULT_RECORD_TIME, envelope
 
     c = load_table(spark, sf_dir, "customer")
     k = F.col("c_custkey")
@@ -1298,7 +1298,7 @@ def u14_dnb_close_match_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lit('","type":"Person"}'))
     )
     envelopes = envelope(
-        c, "dnb", ks, F.lit("Person"), F.lit(None).cast("string"), data
+        c, "dnb", ks, F.lit("Person"), F.lit(DEFAULT_RECORD_TIME), data
     )
     # the NT relation, synthesized through the same line parser the file
     # path uses: rows only for m in (0, 1)

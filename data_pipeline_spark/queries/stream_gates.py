@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import empty_indexes, load_table
 from ..functions.strings import words_sql
-from ..sources.loaders import envelope
+from ..sources.loaders import DEFAULT_RECORD_TIME, envelope
 from .dedup import _JACCARD_SQL, _bands_sql, _shingles_sql, _sig_sql, _verified_sql, _verify_sql
 from .registry import query
 from .text3 import (
@@ -227,7 +227,7 @@ def r13_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ))
 
     records = envelope(
-        cust, "srcA", ks, F.lit("Person"), F.lit(None).cast("string"), doc("orig-")
+        cust, "srcA", ks, F.lit("Person"), F.lit(DEFAULT_RECORD_TIME), doc("orig-")
     )
     crawl = cust.filter((k % 7).isin(1, 2)).select(
         k.alias("seq"),

@@ -51,7 +51,7 @@ def map_records(loaded: DataFrame, source_name: str = "museum") -> DataFrame:
     """Mapper: raw rows -> record envelopes (source, identifier, rectype,
     record_time, change, data). The document is assembled JVM-side with
     to_json(struct(...)) — a 100TB map stage with no Python."""
-    from .loaders import envelope, name_node
+    from .loaders import DEFAULT_RECORD_TIME, envelope, name_node
 
     doc = F.to_json(
         F.struct(
@@ -63,7 +63,7 @@ def map_records(loaded: DataFrame, source_name: str = "museum") -> DataFrame:
     )
     return envelope(
         loaded, source_name, "doc.id", guess_type(F.col("doc.kind")),
-        F.lit(None).cast("string"), doc,
+        F.lit(DEFAULT_RECORD_TIME), doc,
     )
 
 

@@ -168,9 +168,10 @@ def type_ref(cls: str) -> Column:
 
 
 def name_node(content: Column, cls: str | None, language: Column | None = None) -> Column:
-    """A Linked Art Name struct (NAME_T): ``cls`` None leaves it
-    unclassified, ``language`` None untagged; to_json drops the null
-    fields, so every variant serializes in one field order."""
+    """A Linked Art Name struct: ``cls`` None leaves it unclassified,
+    ``language`` None untagged; to_json drops the null fields, so every
+    variant serializes in one field order.  ``language`` may be any
+    Column; the struct is NAME_T when it is a string."""
     return F.struct(
         F.lit("Name").alias("type"),
         content.alias("content"),

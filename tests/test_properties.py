@@ -249,10 +249,7 @@ def test_d21_d23_match_oracle_on_pathological_corpora(
     """The round-5 curation scans share d19/d20's pinned tokenization
     (explicit whitespace class, trim(x, ' ')); d21 adds ratio divisions
     and rule thresholds, d23 an md5-derived integer fold.  Both must
-    agree with DuckDB on NBSP/VT/Unicode/empty corpora — and so must
-    d01's fingerprint and d54's normalizer, whose trims keep a leading
-    or trailing U+00A0 as Spark's trim does (doc 0, which d01 always
-    duplicates, carries both)."""
+    agree with DuckDB on NBSP/VT/Unicode/empty corpora."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -268,9 +265,7 @@ def test_d21_d23_match_oracle_on_pathological_corpora(
         st.just("   "),
         st.lists(word, max_size=12).map(" ".join),
     )
-    nbsp_edged = word.map(lambda w: "\xa0" + w + "\xa0")
-    docs = [data.draw(nbsp_edged)] + data.draw(
-        st.lists(st.one_of(doc, nbsp_edged), max_size=10))
+    docs = data.draw(st.lists(doc, min_size=1, max_size=10))
 
     sf = tmp_path_factory.mktemp("d21prop")
     pq.write_table(
@@ -285,8 +280,57 @@ def test_d21_d23_match_oracle_on_pathological_corpora(
         f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
     )
     try:
-        for name in ("d21_gopher_quality", "d23_hashed_linear_score",
-                     "d01_dedup_exact", "d54_unicode_normalize"):
+        for name in ("d21_gopher_quality", "d23_hashed_linear_score"):
+            q = QUERIES[name]
+            ok, msg = compare(q.spark_fn(spark, str(sf)), con, q.oracle)
+            assert ok, f"{name}: {msg}"
+    finally:
+        con.close()
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.data())
+def test_d01_d54_match_oracle_on_nbsp_edged_corpora(
+    spark, tmp_path_factory, data
+):
+    """d01's fingerprint and d54's normalizer trim with Spark's trim,
+    which keeps a leading or trailing U+00A0; their DuckDB twins must
+    spell trim(x, ' ') to agree.  Doc 0, which d01 always duplicates,
+    is NBSP-edged; the rest mix NBSP-edged words with the empty,
+    blank and multi-word documents of the d21/d23 corpora."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_spark.queries import QUERIES
+
+    from .oracle_harness import compare
+
+    word = st.text(alphabet=_D20_ALPHABET.replace(".", "") + "cd", min_size=1,
+                   max_size=6)
+    nbsp_edged = word.map(lambda w: "\xa0" + w + "\xa0")
+    doc = st.one_of(
+        st.just(""),
+        st.just("   "),
+        st.lists(word, max_size=12).map(" ".join),
+        nbsp_edged,
+    )
+    docs = [data.draw(nbsp_edged)] + data.draw(st.lists(doc, max_size=10))
+
+    sf = tmp_path_factory.mktemp("d01prop")
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(len(docs)), pa.int64()),
+            "text": pa.array(docs, pa.string()),
+        }),
+        str(sf / "documents.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
+    )
+    try:
+        for name in ("d01_dedup_exact", "d54_unicode_normalize"):
             q = QUERIES[name]
             ok, msg = compare(q.spark_fn(spark, str(sf)), con, q.oracle)
             assert ok, f"{name}: {msg}"

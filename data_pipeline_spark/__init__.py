@@ -9,7 +9,8 @@ analysis, multimodal plumbing).
 
 Everything is declarative DataFrame/SQL so Catalyst+AQE pick physical plans;
 Python UDFs appear only where semantics genuinely require them (free-text
-date parsing tail, minhash permutations) and are Arrow-vectorized.
+date parsing, every row of it, and minhash permutations) and are
+Arrow-vectorized.
 """
 
 __version__ = "0.1.0"

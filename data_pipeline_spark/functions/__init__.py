@@ -1,7 +1,7 @@
 """Scalar function library (SURVEY §2.8): dates (incl. BCE), strings/URIs,
 names, geometry. Everything that CAN be a built-in pyspark.sql.functions
-expression is one; only the free-text date tail and geometry scoring are
-(vectorized, Arrow-batched) UDFs.
+expression is one; only free-text date parsing (every row, ISO included)
+and geometry scoring are (vectorized, Arrow-batched) UDFs.
 """
 
 from .dates import (  # noqa: F401

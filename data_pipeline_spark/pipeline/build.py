@@ -28,41 +28,24 @@ from .reconcile import reconcile
 from .reidentify import reidentify
 
 
-def run_build(
-    spark: SparkSession,
+def merge_chain(
     records: DataFrame,
     indexes: dict[str, DataFrame],
-    idmap_prev: DataFrame | None = None,
-    merge_order: dict[str, int] | None = None,
-    delta_sized: bool = False,
-    materialize: bool = True,
+    idmap_prev: DataFrame | None,
+    merge_order: dict[str, int] | None,
+    delta_sized: bool,
 ) -> dict[str, DataFrame]:
-    """records + reconcile indexes (+ prev idmap) -> all output tiers.
+    """records + reconcile indexes (+ prev idmap) -> the merge chain's
+    tiers: parse -> reconcile -> idmap -> reidentify -> merged.
 
-    Every shared tier (the parsed docs, equiv_edges, idmap,
-    reidentified, merged and the parsed merged docs) is one eager
-    localCheckpoint where it is produced, so a consumer of several tiers
-    never re-runs an upstream layer and each returned tier's plan reads
-    only checkpointed relations.
+    Every shared tier (the parsed docs, equiv_edges, idmap, reidentified
+    and merged) is one eager localCheckpoint where it is produced, so a
+    consumer of several tiers never re-runs an upstream layer and each
+    returned tier's plan reads only checkpointed relations.
 
-    Reliability caveat (ADVICE r15): localCheckpoint stores
-    non-replicated executor-local blocks with TRUNCATED lineage — on a
-    cluster with dynamic allocation or executor loss the blocks cannot
-    be recomputed and the job fails.  It is the right tool for the
-    single-JVM bench/gate shape this function serves; a cluster
-    deployment consuming several tiers should persist them (the CLI's
-    write-per-tier layout IS that) or use a reliable checkpoint dir.
-
-    ``delta_sized``: this build covers a change-feed-sized slice (the
+    ``delta_sized``: the records are a change-feed-sized slice (the
     incremental rebuild) — size-asymmetric joins against prev-build
-    relations broadcast the slice side (see idmap.assign_yuids).
-
-    ``materialize`` is kept only because the benchmark (entitybench/)
-    passes ``True``; ``False`` raises."""
-    if not materialize:
-        raise ValueError(
-            "run_build always checkpoints its tiers; materialize=False is not supported"
-        )
+    relations broadcast the slice side (see idmap.assign_yuids)."""
     # parse the JSON envelope ONCE: reconcile's extractions and all_uris
     # each read the checkpointed struct instead of re-parsing the corpus
     docs = with_doc(records).localCheckpoint()
@@ -77,13 +60,48 @@ def run_build(
     merged = merge_by_yuid(
         reidentified.select("yuid", "source", "identifier", "data"), merge_order
     ).localCheckpoint()
-    # the same parse-once rule for the three export extractions
-    merged_docs = with_doc(merged).localCheckpoint()
     return {
         "equiv_edges": equiv_edges,
         "idmap": idmap,
         "reidentified": reidentified,
         "merged": merged,
+    }
+
+
+def run_build(
+    spark: SparkSession,
+    records: DataFrame,
+    indexes: dict[str, DataFrame],
+    idmap_prev: DataFrame | None = None,
+    merge_order: dict[str, int] | None = None,
+    delta_sized: bool = False,
+    materialize: bool = True,
+) -> dict[str, DataFrame]:
+    """records + reconcile indexes (+ prev idmap) -> all output tiers:
+    the merge chain's (``merge_chain``) plus the parsed merged docs, one
+    more eager localCheckpoint, and the three export extractions read
+    from it.
+
+    Reliability caveat (ADVICE r15): localCheckpoint stores
+    non-replicated executor-local blocks with TRUNCATED lineage — on a
+    cluster with dynamic allocation or executor loss the blocks cannot
+    be recomputed and the job fails.  It is the right tool for the
+    single-JVM bench/gate shape this function serves; a cluster
+    deployment consuming several tiers should persist them (the CLI's
+    write-per-tier layout IS that) or use a reliable checkpoint dir.
+
+    ``delta_sized`` is passed to ``merge_chain``.  ``materialize`` is
+    kept only because the benchmark (entitybench/) passes ``True``;
+    ``False`` raises."""
+    if not materialize:
+        raise ValueError(
+            "run_build always checkpoints its tiers; materialize=False is not supported"
+        )
+    tiers = merge_chain(records, indexes, idmap_prev, merge_order, delta_sized)
+    # the same parse-once rule for the three export extractions
+    merged_docs = with_doc(tiers["merged"]).localCheckpoint()
+    return {
+        **tiers,
         "edges": extract_edges(merged_docs),
         "facets": extract_facets(merged_docs),
         "names": extract_names_table(merged_docs),

@@ -78,9 +78,11 @@ def assign_yuids(
     """idmap(qua_uri, yuid) from component labels + the previous build.
 
     The split rule needs one deterministic winner per prev yuid: the new
-    component containing the yuid's lexically-first surviving member."""
+    component containing the yuid's lexically-first surviving member.
+    An empty ``idmap_prev`` needs no probe: the stability join adopts
+    nothing and mints every yuid, the same rows as ``None``."""
     comps = components.select(F.col("uri").alias("qua_uri"), "component")
-    if idmap_prev is None or idmap_prev.isEmpty():
+    if idmap_prev is None:
         return comps.select("qua_uri", uuid5_col(F.col("component")).alias("yuid"))
 
     from pyspark.sql import Window as W

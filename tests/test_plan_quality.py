@@ -953,6 +953,37 @@ def test_incremental_splice_broadcasts_delta_side(spark):
                 )
 
 
+def test_incremental_crawl_job_budget(spark):
+    """A crawl pays once per relation: one deduped feed checkpoint, one
+    blast that carries its yuids (no second idmap pass for the affected
+    yuids), the slice rebuilt through the merge chain only (no merged-docs
+    tier), no empty-idmap probe, and the records tier spliced from the
+    slice instead of re-applying the feed to the corpus.  The crawl plus
+    forcing the three tiers a crawl commits is pinned at its job count;
+    the shape before those changes launched 69 jobs here."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_spark.pipeline.build import run_build
+    from data_pipeline_spark.pipeline.fixtures import fixture_tables
+    from data_pipeline_spark.pipeline.incremental import incremental_build
+
+    t = fixture_tables(spark)
+    idx = {k: t[k] for k in ("name_index", "uri_index", "same_as", "different_from")}
+    prev = run_build(spark, t["records"], idx, idmap_prev=t["idmap_prev"])
+    changes = t["changes"].withColumn("end_time", F.col("end_time").cast("timestamp"))
+
+    def crawl():
+        inc = incremental_build(
+            spark, t["records"], changes, idx, idmap_prev=prev["idmap"],
+            prev_merged=prev["merged"], last_harvest="2026-01-10 00:00:00",
+        )
+        for tier in ("merged_full", "idmap_full", "records"):
+            inc[tier].write.format("noop").mode("overwrite").save()
+
+    _, jobs = _count_jobs(spark, crawl)
+    assert jobs <= 51, f"crawl launched {jobs} jobs"
+
+
 @pytest.mark.parametrize("name", [
     "a02_skewed_merge_fold",
     "r11_incremental_build",

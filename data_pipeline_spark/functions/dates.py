@@ -9,12 +9,11 @@ inference that widens the interval to the end of the coarsest given unit.
 
 Spark-first restatement:
 
-- **ISO fast path** stays JVM-side (``to_timestamp``) — the hot path for
-  machine-generated data never leaves whole-stage codegen.
-- **The long tail** is a vectorized ``pandas_udf`` (Arrow-batched) over the
-  pure-Python parser below — invoked only on rows the fast path rejects
-  (``coalesce(fast, udf)``), so at 100TB the Python cost is proportional to
-  the dirty fraction, not the table.
+- **One parser, one UDF**: every row, ISO strings included, goes through
+  a vectorized ``pandas_udf`` (Arrow-batched) over the pure-Python parser
+  below.  There is no JVM-side ISO fast path (``to_timestamp`` +
+  ``coalesce(fast, udf)``): the UDF stage's fixed cost (see
+  ``make_datetime``) is paid whatever fraction of rows reaches it.
 - **BCE-capable epoch seconds**: Spark/Parquet timestamps cannot hold
   ``-0450-…`` (SURVEY §7.4#4), so intervals are carried as ISO *strings*
   plus **int64 proleptic-Gregorian epoch seconds** — exact, comparable,
@@ -385,11 +384,14 @@ def make_datetime_udf():
 def make_datetime(col):
     """Column expression: free-text date -> timespan struct.  Every row,
     ISO strings included, goes through the pandas UDF (there is no
-    JVM-side fast path).  A pandas-UDF stage has a fixed cost once any of
-    its partitions holds a row: on local[4], 4 rows cost about what 2,000
+    JVM-side fast path).  A pandas-UDF stage has a fixed cost that does
+    not scale with its rows: on local[4], 4 rows cost about what 2,000
     do, ~2 s for the first such stage in a JVM (Python worker start) and
-    ~0.3-0.5 s warm; a stage whose partitions are all empty starts no
-    worker.
+    ~0.3-0.5 s warm.  The cost is paid even when every row is filtered
+    out below the UDF: on a 4-core host, a 3,000-row input filtered to
+    zero rows took 1.4-2.4 s as the first Python stage against 0.07-0.9 s
+    for the same job without the UDF, and 0.27-0.69 s warm against
+    0.03-0.23 s.
 
     The returned struct carries (begin_iso, end_iso, begin_sec, end_sec);
     the *_sec fields are BCE-safe int64 epoch seconds — use them for every

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..sinks.exports import write_bucketed
 
 
 def build_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,7 +117,7 @@ def load_planner(spark: SparkSession, path: str):
 
 
 def materialize_model_bucketed(
-    spark: SparkSession, sf_dir: str, prefix: str, n_buckets: int = 32
+    spark: SparkSession, sf_dir: str, prefix: str, n_buckets: int | None = None
 ) -> None:
     """The exchange-eliminating model form: edges saved as BUCKETED
     tables, one bucketed+sorted by subject (inverse hops' join key), one
@@ -126,23 +127,20 @@ def materialize_model_bucketed(
     shuffles to the bucket count.  At 100 TB that removes a
     full-edge-relation exchange PER HOP (41M rows per exchange already
     at the 30x protocol scale).  Plan-pinned in
-    tests/test_plan_quality.py."""
+    tests/test_plan_quality.py.
+
+    Both edge layouts go through ``sinks.exports.write_bucketed``:
+    ``n_buckets=None`` resolves there to ``spark.sql.shuffle.partitions``
+    (the sizing under which the bucketed read satisfies a shuffle join's
+    distribution), and each table is one file per bucket."""
     edges = build_edges(spark, sf_dir)
     for suffix in ("entities", "edges_subj", "edges_obj"):
         _drop_managed(spark, f"{prefix}_{suffix}")
     build_entities(spark, sf_dir).write.mode("overwrite").saveAsTable(
         f"{prefix}_entities"
     )
-    (
-        edges.write.mode("overwrite")
-        .bucketBy(n_buckets, "subject").sortBy("subject")
-        .saveAsTable(f"{prefix}_edges_subj")
-    )
-    (
-        edges.write.mode("overwrite")
-        .bucketBy(n_buckets, "object").sortBy("object")
-        .saveAsTable(f"{prefix}_edges_obj")
-    )
+    write_bucketed(edges, f"{prefix}_edges_subj", "subject", n_buckets)
+    write_bucketed(edges, f"{prefix}_edges_obj", "object", n_buckets)
 
 
 def _drop_managed(spark: SparkSession, table: str) -> None:
@@ -272,7 +270,7 @@ def _reap_at_exit(spark: SparkSession) -> None:
 _REAP_AT_EXIT: set = set()
 
 
-def serving_planner(spark: SparkSession, sf_dir: str, n_buckets: int = 32):
+def serving_planner(spark: SparkSession, sf_dir: str, n_buckets: int | None = None):
     """The production SERVING path as one call: materialize the bucketed
     model once per (application, sf_dir) and answer every subsequent
     query from the persisted dual-layout tables — forward hops join the
@@ -285,7 +283,13 @@ def serving_planner(spark: SparkSession, sf_dir: str, n_buckets: int = 32):
     serving win (dual-layout routing + bucketed layout; SCALE.md,
     "Measured scaling curve (round 11)", search-DSL serving at scale)
     lived only in a self-reported tool — a routing regression was
-    driver-invisible (VERDICT r11 #4)."""
+    driver-invisible (VERDICT r11 #4).
+
+    Bucket count: ``n_buckets=None`` (every caller) leaves the sizing to
+    materialize_model_bucketed, which takes the session's
+    ``spark.sql.shuffle.partitions`` (the core count under ``get_spark``,
+    so 32 for bench.py on a 32-core host) and writes one file per
+    bucket."""
     key = (spark.sparkContext.applicationId, sf_dir, n_buckets)
     p = _SERVING.get(key)
     if p is None:

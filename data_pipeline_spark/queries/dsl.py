@@ -317,7 +317,10 @@ def dsl_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_planner_bucketed — so the inverse hop joins the
     subject-BUCKETED edges table (the lineitem-scale `contains`
     relation, 41M rows per exchange already at the 30x protocol scale)
-    with NO Exchange on the edge side.  A regression in the dual-layout
+    with NO Exchange on the edge side.  Each edge table has
+    ``spark.sql.shuffle.partitions`` buckets (32 on a 32-core bench
+    host) stored one file per bucket, so the subquery side's shuffle
+    lands on exactly the bucket count.  A regression in the dual-layout
     routing (forward->object-bucketed, inverse->subject-bucketed) now
     shows up as a driver bench/correctness delta instead of only in a
     scale run (SCALE.md, "Measured scaling curve (round 11)"; reproduce

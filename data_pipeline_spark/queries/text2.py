@@ -677,9 +677,10 @@ def f01_make_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     process/utils/mapper_utils.py:241-494) through the driver gate:
     ISO dates, bare years, (early) century phrases, year-month, German
     dd.mm.yyyy, year ranges, digit masks, BCE years and junk — rotated
-    over customer keys, parsed by the make_datetime column (ISO fast path
-    JVM-side, Arrow UDF tail), pinned against golden intervals incl. the
-    BCE-safe proleptic-Gregorian epoch seconds (F7)."""
+    over customer keys, parsed by the make_datetime column (one Arrow
+    pandas UDF for every row, ISO included), pinned against golden
+    intervals incl. the BCE-safe proleptic-Gregorian epoch seconds
+    (F7)."""
     from ..functions.dates import make_datetime
 
     c = load_table(spark, sf_dir, "customer")

@@ -101,7 +101,7 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     key: str,
-    n_buckets: int = 32,
+    n_buckets: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """K2 at scale: persist a tier bucketed AND sorted by its join/merge
@@ -110,9 +110,22 @@ def write_bucketed(
     x lineitem, record x idmap, shingle x candidate) becomes a zipper
     over co-located files.  This is the concrete form of every "bucketed
     by the key at scale" note in SCALE.md; the shuffle-free plan is
-    pinned by tests/test_plan_quality.py."""
+    pinned by tests/test_plan_quality.py.
+
+    ``n_buckets`` defaults to ``spark.sql.shuffle.partitions``: a
+    bucketed scan replaces a join's exchange only when its bucket count
+    is at least the shuffle partition count (otherwise EnsureRequirements
+    reshuffles it), and more buckets than that only multiply tasks and
+    files.  The rows are hash-partitioned by ``key`` into ``n_buckets``
+    partitions first; a bucket id is the same ``pmod(murmur3(key), n)``
+    as that partition id, so each writer task holds exactly one bucket
+    and the table is one file per bucket instead of one per bucket per
+    input partition."""
+    if n_buckets is None:
+        n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     (
-        df.write.mode(mode)
+        df.repartition(n_buckets, key)
+        .write.mode(mode)
         .bucketBy(n_buckets, key)
         .sortBy(key)
         .format("parquet")

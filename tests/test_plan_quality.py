@@ -297,6 +297,34 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bt_lineitem")
 
 
+def _bucket_files(spark, table: str) -> list[int]:
+    """Bucket id of every data file of a managed bucketed table, from
+    the ``_<bucket>`` suffix Spark's bucketed writer puts in file names."""
+    import os
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    d = os.path.join(wh, table.lower())
+    return sorted(
+        int(re.search(r"_(\d+)(?:\..*)?$", f).group(1))
+        for f in os.listdir(d) if f.endswith(".parquet")
+    )
+
+
+def test_write_bucketed_one_file_per_bucket(spark):
+    """write_bucketed hash-partitions by the key into the bucket count
+    before the bucketed write, so a 6-partition input becomes exactly
+    one file per bucket (not one per bucket per input partition)."""
+    from data_pipeline_spark.sinks.exports import write_bucketed
+
+    df = spark.range(0, 2000, numPartitions=6).selectExpr("CAST(id AS STRING) AS k")
+    try:
+        write_bucketed(df, "bt_one_file", "k", n_buckets=4)
+        assert _bucket_files(spark, "bt_one_file") == [0, 1, 2, 3]
+        assert spark.table("bt_one_file").count() == 2000
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bt_one_file")
+
+
 def test_closure_star_variant_matches_and_converges_fast(spark):
     """The distributed star path on the pathological long chain: O(log n)
     rounds, each ONE action of at most three jobs (two window exchanges
@@ -1019,6 +1047,47 @@ def test_dsl_q13_serves_from_bucketed_tables(spark):
     n = len(model._SERVING)
     QUERIES["dsl_q13_bucketed_serving_inverse"].spark_fn(spark, SF)
     assert len(model._SERVING) == n
+
+
+def test_serving_edge_tables_sized_by_shuffle_partitions(spark):
+    """serving_planner's edge tables take the session's
+    spark.sql.shuffle.partitions as their bucket count and hold one file
+    per bucket; a shuffle-join traversal still reads them as a bucketed
+    scan (autoBucketedScan left on), and dsl_q13 still matches its
+    oracle over them."""
+    from data_pipeline_spark.plans import model
+
+    from .oracle_harness import compare, duckdb_con
+
+    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "5")
+        model._SERVING.clear()
+        planner = model.serving_planner(spark, SF)
+        prefix = model.serving_prefix(SF)
+        for t in ("_edges_subj", "_edges_obj"):
+            assert _bucket_files(spark, prefix + t) == [0, 1, 2, 3, 4], t
+        # tiny test tables would broadcast; the claim is the shuffle path
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        for q, t in (
+            ('AND(type=customer, in_nation(name="NATION_7"))', "_edges_obj"),
+            ("^placed_by(AND(type=order, number>100))", "_edges_subj"),
+        ):
+            plan = planner.plan(q)._jdf.queryExecution().executedPlan().toString()
+            assert prefix + t in plan and "Bucketed: true" in plan, plan
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
+        q = QUERIES["dsl_q13_bucketed_serving_inverse"]
+        con = duckdb_con(SF)
+        try:
+            ok, msg = compare(q.spark_fn(spark, SF), con, q.oracle)
+        finally:
+            con.close()
+        assert ok, msg
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
+        model._SERVING.clear()
 
 
 def test_serving_planner_rematerializes_across_catalog_loss(spark):

@@ -188,19 +188,19 @@ def cmd_query(args) -> int:
 
 
 def cmd_search(args) -> int:
-    from .plans.model import build_planner, load_planner, materialize_model
+    from .plans.model import load_planner, materialize_model, serving_planner
 
     spark = _spark(args)
     if args.model:
         # persisted-model path: --materialize writes it once, later
-        # searches load the parquet model instead of rebuilding the
-        # entity/edge unions per invocation (the production serving form)
+        # searches (in any process) load the bucketed model instead of
+        # rebuilding it per invocation
         if args.materialize:
             materialize_model(spark, args.sf_dir, args.model)
             print(f"[cli] materialized search model at {args.model}")
         planner = load_planner(spark, args.model)
     else:
-        planner = build_planner(spark, args.sf_dir)
+        planner = serving_planner(spark, args.sf_dir)
     q = json.loads(args.query) if args.json else args.query
     if args.json:
         from .plans.parser import parse_json

@@ -7,10 +7,10 @@ and geometry scoring are (vectorized, Arrow-batched) UDFs.
 from .dates import (  # noqa: F401
     epoch_seconds,
     lifespan_ok,
+    lifespan_ok_py,
     make_datetime,
     make_datetime_udf,
     parse_datetime,
-    with_timespan,
     year_of,
 )
 from .strings import (  # noqa: F401

@@ -400,24 +400,27 @@ def make_datetime(col):
     return udf(col.cast("string"))
 
 
-def with_timespan(df, text_col: str, out_col: str = "timespan"):
-    """Attach a parsed timespan struct for ``text_col``."""
+# F5 (mapper_utils.py:146-197): the longest plausible lifespan, in
+# seconds; 122 * 365.25 days is a whole number of seconds
+MAX_LIFESPAN_SEC = int(122 * 365.25 * 86400)
+
+
+def lifespan_ok(begin_sec, end_sec):
+    """F5 birth/death sanity as a Column: death no earlier than birth
+    and at most 122 years after it, on BCE-safe epoch seconds (the
+    birth's begin, the death's end); true when either is unknown.
+    ``lifespan_ok_py`` is its Python twin."""
     from pyspark.sql import functions as F
 
-    return df.withColumn(out_col, make_datetime(F.col(text_col)))
+    return F.when(
+        begin_sec.isNotNull() & end_sec.isNotNull(),
+        (end_sec >= begin_sec) & ((end_sec - begin_sec) <= F.lit(MAX_LIFESPAN_SEC)),
+    ).otherwise(F.lit(True))
 
 
-def lifespan_ok(birth_begin_sec, death_end_sec, max_years: int = 122):
-    """F5 birth/death sanity (mapper_utils.py:146-197): death after birth
-    and lifespan <= 122 years, computed on BCE-safe epoch seconds."""
-    from pyspark.sql import functions as F
-
-    span = F.col(death_end_sec) - F.col(birth_begin_sec) if isinstance(
-        birth_begin_sec, str
-    ) else death_end_sec - birth_begin_sec
-    lo = F.col(birth_begin_sec) if isinstance(birth_begin_sec, str) else birth_begin_sec
-    hi = F.col(death_end_sec) if isinstance(death_end_sec, str) else death_end_sec
-    return (hi >= lo) & (span <= max_years * 365.25 * 86400)
+def lifespan_ok_py(begin_sec: int, end_sec: int) -> bool:
+    """``lifespan_ok`` for the Python row mappers, on known seconds."""
+    return begin_sec <= end_sec <= begin_sec + MAX_LIFESPAN_SEC
 
 
 def year_of(iso_col):

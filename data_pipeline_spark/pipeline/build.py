@@ -18,10 +18,9 @@ threshold, bounded by a limit before the gather (pipeline/closure.py).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .edges import extract_edges, extract_facets, extract_names_table
-from .envelope import with_doc
+from .envelope import record_uri, with_doc
 from .idmap import build_idmap
 from .merge_records import merge_by_yuid
 from .reconcile import reconcile
@@ -50,9 +49,7 @@ def merge_chain(
     # each read the checkpointed struct instead of re-parsing the corpus
     docs = with_doc(records).localCheckpoint()
     equiv_edges = reconcile(docs, indexes).localCheckpoint()
-    all_uris = docs.select(
-        F.coalesce(F.col("doc.id"), F.concat_ws("/", "source", "identifier")).alias("uri")
-    )
+    all_uris = docs.select(record_uri(docs).alias("uri"))
     idmap = build_idmap(equiv_edges, all_uris, idmap_prev, delta_sized).localCheckpoint()
     reidentified = reidentify(
         records.select("source", "identifier", "rectype", "data"), idmap
@@ -74,7 +71,6 @@ def run_build(
     indexes: dict[str, DataFrame],
     idmap_prev: DataFrame | None = None,
     merge_order: dict[str, int] | None = None,
-    delta_sized: bool = False,
     materialize: bool = True,
 ) -> dict[str, DataFrame]:
     """records + reconcile indexes (+ prev idmap) -> all output tiers:
@@ -90,14 +86,13 @@ def run_build(
     deployment consuming several tiers should persist them (the CLI's
     write-per-tier layout IS that) or use a reliable checkpoint dir.
 
-    ``delta_sized`` is passed to ``merge_chain``.  ``materialize`` is
-    kept only because the benchmark (entitybench/) passes ``True``;
-    ``False`` raises."""
+    ``materialize`` is kept only because the benchmark (entitybench/)
+    passes ``True``; ``False`` raises."""
     if not materialize:
         raise ValueError(
             "run_build always checkpoints its tiers; materialize=False is not supported"
         )
-    tiers = merge_chain(records, indexes, idmap_prev, merge_order, delta_sized)
+    tiers = merge_chain(records, indexes, idmap_prev, merge_order, False)
     # the same parse-once rule for the three export extractions
     merged_docs = with_doc(tiers["merged"]).localCheckpoint()
     return {

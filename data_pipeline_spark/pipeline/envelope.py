@@ -108,10 +108,10 @@ DOC_SCHEMA = StructType(
 )
 
 
-def with_doc(records: DataFrame, data_col: str = "data") -> DataFrame:
+def with_doc(records: DataFrame) -> DataFrame:
     """Attach the typed `doc` column (one from_json per record, reused by
     every downstream extraction)."""
-    return records.withColumn("doc", F.from_json(F.col(data_col), DOC_SCHEMA))
+    return records.withColumn("doc", F.from_json(F.col("data"), DOC_SCHEMA))
 
 
 def record_uri(records: DataFrame) -> F.Column:
@@ -256,7 +256,7 @@ def extract_timespans(records: DataFrame) -> DataFrame:
     """(uri, born_begin_sec, died_end_sec, lifespan_ok): parsed birth/death
     with the free-text/BCE parser (F1) + the 122y sanity veto (F5,
     mapper_utils.py:146-197)."""
-    from ..functions.dates import make_datetime
+    from ..functions.dates import lifespan_ok, make_datetime
 
     docs = records if "doc" in records.columns else with_doc(records)
     base = docs.select(
@@ -279,10 +279,6 @@ def extract_timespans(records: DataFrame) -> DataFrame:
     )
     born = F.col("born_ts.begin_sec")
     died = F.col("died_ts.end_sec")
-    ok = F.when(
-        born.isNotNull() & died.isNotNull(),
-        (died >= born) & ((died - born) <= F.lit(int(122 * 365.25 * 86400))),
-    ).otherwise(F.lit(True))
     return parsed.select(
         "uri",
         "rectype",
@@ -290,5 +286,5 @@ def extract_timespans(records: DataFrame) -> DataFrame:
         F.col("born_ts.begin_iso").alias("born_begin_iso"),
         died.alias("died_end_sec"),
         F.col("died_ts.end_iso").alias("died_end_iso"),
-        ok.alias("lifespan_ok"),
+        lifespan_ok(born, died).alias("lifespan_ok"),
     )

@@ -30,7 +30,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .envelope import extract_equivalents, extract_names, extract_timespans, with_doc
+from .envelope import (
+    extract_equivalents,
+    extract_names,
+    extract_timespans,
+    record_uri,
+    with_doc,
+)
 from .fixtures import URI
 
 
@@ -288,7 +294,7 @@ def reconcile(
         # corpus where two records assert the SAME doc id, the row-local
         # form is the reference-faithful one (each record gates on its
         # own count, not the collision-pooled sum).
-        uri = F.coalesce(F.col("doc.id"), F.concat_ws("/", "source", "identifier"))
+        uri = record_uri(docs)
         n_eq = F.size(
             F.filter(
                 F.coalesce(F.col("doc.equivalent"), F.array()),

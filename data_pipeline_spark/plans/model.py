@@ -1,10 +1,18 @@
 """Entity/edge model over the testdata star schema — the search-DSL's
 queryable universe (the Spark analog of the reference's flattened
 triples+facets form, SURVEY §1.5/§2.9).
+
+The model has one persisted form: entities as parquet plus the edges
+bucketed twice, by subject and by object.  ``materialize_model`` writes
+it, ``load_planner`` reads it back in any session, and
+``serving_planner`` is the two over a process-unique warehouse dir,
+once per session — the planner every DSL search uses.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,123 +87,100 @@ def build_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def materialize_model(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Persist the entity/edge model as parquet tables (the production
-    form: SURVEY §1.5's extracted relational view). Edges are written
-    twice-sorted — INVERSE traversals join edges on SUBJECT and forward
-    traversals on OBJECT (planner.Rel), so each direction gets the
-    layout clustered by its join key.  For the exchange-eliminating
-    form use materialize_model_bucketed."""
-    import os
+_EDGE_LAYOUTS = (("edges_subj", "subject"), ("edges_obj", "object"))
+_EDGE_COLUMNS = "subject string, predicate string, object string"
 
+
+def _table(path: str, layout: str) -> str:
+    """Catalog name of one edge layout of the model at ``path``: the
+    directory's name plus the layout."""
+    base = re.sub(r"\W+", "_", os.path.basename(os.path.normpath(path))).strip("_")
+    return f"{base}_{layout}"
+
+
+def _meta_file(path: str) -> str:
+    """The model's ``_META.json`` as a local file (a ``file:`` URI is
+    accepted; the model directory must be on the local file system)."""
+    return os.path.join(path.removeprefix("file:"), "_META.json")
+
+
+def materialize_model(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Persist the search model at ``path`` (SURVEY §1.5's extracted
+    relational view): ``entities`` as parquet and the edges twice
+    through ``sinks.exports.write_bucketed`` — ``edges_subj`` bucketed
+    and sorted by subject (inverse hops' join key), ``edges_obj`` by
+    object (forward hops').  A traversal's edge side then reads
+    pre-partitioned buckets and Catalyst plans NO Exchange on the
+    corpus-scale relation — only the sub-plan side shuffles to the
+    bucket count (41M rows per exchange already at the 30x protocol
+    scale).  Plan-pinned in tests/test_plan_quality.py.
+
+    The bucket count is ``spark.sql.shuffle.partitions`` (the sizing
+    under which the bucketed read satisfies a shuffle join's
+    distribution), each table is one file per bucket, and
+    ``_META.json`` records the count for ``load_planner``."""
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     build_entities(spark, sf_dir).write.mode("overwrite").parquet(
         os.path.join(path, "entities")
     )
     edges = build_edges(spark, sf_dir)
-    edges.sortWithinPartitions("subject").write.mode("overwrite").parquet(
-        os.path.join(path, "edges_by_subject")
-    )
-    edges.sortWithinPartitions("object").write.mode("overwrite").parquet(
-        os.path.join(path, "edges_by_object")
-    )
+    for layout, key in _EDGE_LAYOUTS:
+        write_bucketed(
+            edges, _table(path, layout), key, os.path.join(path, layout), n_buckets
+        )
+    with open(_meta_file(path), "w") as f:
+        json.dump({"buckets": n_buckets}, f)
 
 
 def load_planner(spark: SparkSession, path: str):
-    """Planner over a materialized model directory (no cache warm-up —
-    lineage is already truncated at the parquet boundary).  Inverse hops
-    read the subject-clustered layout, forward hops the object-clustered
-    one."""
-    import os
-
+    """Planner over a ``materialize_model`` directory, in this or any
+    later session: both edge layouts are (re-)registered as bucketed
+    tables over their files, so inverse hops read the subject-bucketed
+    layout and forward hops the object-bucketed one, each with no
+    Exchange of its own.  Re-registering drops only the catalog entry —
+    the tables are external, their files stay."""
     from .planner import SearchPlanner
 
+    with open(_meta_file(path)) as f:
+        n_buckets = json.load(f)["buckets"]
+    edges = {}
+    for layout, key in _EDGE_LAYOUTS:
+        table = _table(path, layout)
+        location = os.path.abspath(os.path.join(path.removeprefix("file:"), layout))
+        spark.sql(f"DROP TABLE IF EXISTS `{table}`")
+        spark.sql(
+            f"CREATE TABLE `{table}` ({_EDGE_COLUMNS}) USING parquet"
+            f" CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS"
+            f" LOCATION '{location}'"
+        )
+        edges[layout] = spark.table(table)
     return SearchPlanner(
         spark.read.parquet(os.path.join(path, "entities")),
-        spark.read.parquet(os.path.join(path, "edges_by_subject")),
-        edges_object_keyed=spark.read.parquet(os.path.join(path, "edges_by_object")),
-    )
-
-
-def materialize_model_bucketed(
-    spark: SparkSession, sf_dir: str, prefix: str, n_buckets: int | None = None
-) -> None:
-    """The exchange-eliminating model form: edges saved as BUCKETED
-    tables, one bucketed+sorted by subject (inverse hops' join key), one
-    by object (forward hops').  A traversal's edge side then reads
-    pre-partitioned buckets and Catalyst plans NO Exchange on the
-    corpus-scale relation — only the (sub-plan-sized) other side
-    shuffles to the bucket count.  At 100 TB that removes a
-    full-edge-relation exchange PER HOP (41M rows per exchange already
-    at the 30x protocol scale).  Plan-pinned in
-    tests/test_plan_quality.py.
-
-    Both edge layouts go through ``sinks.exports.write_bucketed``:
-    ``n_buckets=None`` resolves there to ``spark.sql.shuffle.partitions``
-    (the sizing under which the bucketed read satisfies a shuffle join's
-    distribution), and each table is one file per bucket."""
-    edges = build_edges(spark, sf_dir)
-    for suffix in ("entities", "edges_subj", "edges_obj"):
-        _drop_managed(spark, f"{prefix}_{suffix}")
-    build_entities(spark, sf_dir).write.mode("overwrite").saveAsTable(
-        f"{prefix}_entities"
-    )
-    write_bucketed(edges, f"{prefix}_edges_subj", "subject", n_buckets)
-    write_bucketed(edges, f"{prefix}_edges_obj", "object", n_buckets)
-
-
-def _drop_managed(spark: SparkSession, table: str) -> None:
-    """Make saveAsTable re-runnable ACROSS processes: a fresh session's
-    in-memory catalog does not know last run's managed table, so
-    mode('overwrite') cannot drop it and the leftover warehouse
-    directory raises LOCATION_ALREADY_EXISTS.  Drop the registration if
-    present, then clear any orphaned location."""
-    import shutil
-    from urllib.parse import urlparse
-
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    parsed = urlparse(warehouse)
-    root = parsed.path if parsed.scheme in ("", "file") else None
-    if root:
-        import os
-
-        leftover = os.path.join(root, table.lower())
-        if os.path.isdir(leftover):
-            shutil.rmtree(leftover, ignore_errors=True)
-
-
-def load_planner_bucketed(spark: SparkSession, prefix: str):
-    """Planner over materialize_model_bucketed tables."""
-    from .planner import SearchPlanner
-
-    return SearchPlanner(
-        spark.table(f"{prefix}_entities"),
-        spark.table(f"{prefix}_edges_subj"),
-        edges_object_keyed=spark.table(f"{prefix}_edges_obj"),
+        edges["edges_subj"],
+        edges_object_keyed=edges["edges_obj"],
     )
 
 
 def serving_prefix(sf_dir: str) -> str:
-    """Process-unique managed-table prefix for the serving model.
+    """Process-unique name of the serving model: its directory under
+    the warehouse and the prefix of its edge tables.
 
     The pid suffix is load-bearing: processes sharing one repo CWD share
     one spark-warehouse, and with a shared name every fresh process
-    REBUILDS the tables (a new session's catalog never knows the old
-    registration — that is what _drop_managed exists for), so a rebuild
-    in process B deletes the part-files process A is mid-read on
-    (observed twice: FAILED_READ_FILE.FILE_NOT_EXIST on dsl_q13 whenever
-    a bench/sweep ran beside the test suite).  Cross-process sharing was
-    already zero; the unique name removes only the interference.  A
-    process removes its own dirs at clean exit; dirs orphaned by killed
-    processes are reaped in serving_planner."""
-    import os
-
+    REBUILDS the model (a new session's catalog never knows the old
+    registration), so a rebuild in process B deletes the part-files
+    process A is mid-read on (observed twice:
+    FAILED_READ_FILE.FILE_NOT_EXIST on dsl_q13 whenever a bench/sweep
+    ran beside the test suite).  Cross-process sharing was already zero;
+    the unique name removes only the interference.  A process removes
+    its own dir at clean exit; dirs orphaned by killed processes are
+    reaped in serving_planner."""
     return (
         "serve_" + re.sub(r"\W+", "_", sf_dir).strip("_") + f"_p{os.getpid()}"
     )
 
 
-_SERVE_DIR = re.compile(r"^serve_.+_p(\d+)_(entities|edges_subj|edges_obj)$")
+_SERVE_DIR = re.compile(r"^serve_.+_p(\d+)$")
 
 
 def _local_warehouse(spark: SparkSession) -> str | None:
@@ -209,8 +194,8 @@ def _local_warehouse(spark: SparkSession) -> str | None:
 
 def _reap_stale_serving_dirs(spark: SparkSession) -> None:
     """Best-effort removal of serving-model warehouse dirs whose owning
-    process is gone.  Only ``serve_*_p<pid>_*`` dirs of DEAD pids are
-    touched, so a live concurrent session's tables are never disturbed;
+    process is gone.  Only ``serve_*_p<pid>`` dirs of DEAD pids are
+    touched, so a live concurrent session's model is never disturbed;
     dirs without a pid suffix are left alone, since nothing proves their
     owner is gone.
 
@@ -220,7 +205,6 @@ def _reap_stale_serving_dirs(spark: SparkSession) -> None:
     host's live owner would look dead); and the catalog is the in-memory
     one, so a dead process's table registrations died with it and
     removing the files orphans no catalog entry."""
-    import os
     import shutil
 
     root = _local_warehouse(spark)
@@ -235,7 +219,7 @@ def _reap_stale_serving_dirs(spark: SparkSession) -> None:
             continue
         try:
             os.kill(pid, 0)
-            continue  # owner alive — leave its tables alone
+            continue  # owner alive — leave its model alone
         except ProcessLookupError:
             pass
         except PermissionError:
@@ -244,10 +228,9 @@ def _reap_stale_serving_dirs(spark: SparkSession) -> None:
 
 
 def _reap_own_serving_dirs(root: str) -> None:
-    """This process's ``serve_*_p<pid>_*`` dirs under ``root`` — run at
+    """This process's ``serve_*_p<pid>`` dirs under ``root`` — run at
     clean interpreter exit, so a finished process leaves no serving
-    tables behind for a later process's stale-dir reaper."""
-    import os
+    model behind for a later process's stale-dir reaper."""
     import shutil
 
     if not os.path.isdir(root):
@@ -270,68 +253,26 @@ def _reap_at_exit(spark: SparkSession) -> None:
 _REAP_AT_EXIT: set = set()
 
 
-def serving_planner(spark: SparkSession, sf_dir: str, n_buckets: int | None = None):
-    """The production SERVING path as one call: materialize the bucketed
-    model once per (application, sf_dir) and answer every subsequent
-    query from the persisted dual-layout tables — forward hops join the
-    object-bucketed edges, inverse hops the subject-bucketed ones, so
-    the corpus-scale edge relation never exchanges (exactly one fewer
-    Exchange per hop; plan-pinned in tests/test_plan_quality.py).
-
-    This is what dsl_q13 drives in the driver bench: build_planner's
-    cached in-memory model measures QUERY plans, but the round-11
-    serving win (dual-layout routing + bucketed layout; SCALE.md,
-    "Measured scaling curve (round 11)", search-DSL serving at scale)
-    lived only in a self-reported tool — a routing regression was
-    driver-invisible (VERDICT r11 #4).
-
-    Bucket count: ``n_buckets=None`` (every caller) leaves the sizing to
-    materialize_model_bucketed, which takes the session's
-    ``spark.sql.shuffle.partitions`` (the core count under ``get_spark``,
-    so 32 for bench.py on a 32-core host) and writes one file per
-    bucket."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_buckets)
+def serving_planner(spark: SparkSession, sf_dir: str):
+    """The planner every DSL search uses: ``materialize_model`` once per
+    (application, sf_dir) into a process-unique warehouse dir
+    (``serving_prefix``), then ``load_planner`` over it — forward hops
+    join the object-bucketed edges, inverse hops the subject-bucketed
+    ones, so the corpus-scale edge relation never exchanges (exactly one
+    fewer Exchange per hop; plan-pinned in tests/test_plan_quality.py).
+    Later calls return the same planner."""
+    key = (spark.sparkContext.applicationId, sf_dir)
     p = _SERVING.get(key)
     if p is None:
         _reap_stale_serving_dirs(spark)
         _reap_at_exit(spark)
-        prefix = serving_prefix(sf_dir)
-        materialize_model_bucketed(spark, sf_dir, prefix, n_buckets)
-        p = load_planner_bucketed(spark, prefix)
+        path = os.path.join(
+            spark.conf.get("spark.sql.warehouse.dir"), serving_prefix(sf_dir)
+        )
+        materialize_model(spark, sf_dir, path)
+        p = load_planner(spark, path)
         _SERVING[key] = p
     return p
 
 
 _SERVING: dict = {}
-
-
-def build_planner(spark: SparkSession, sf_dir: str):
-    """Planner over a MATERIALIZED entity/edge model.
-
-    `.cache()` here is load-bearing: DSL plans nest semi-joins over these
-    relations, and with raw 6-way-union lineage at every leaf Catalyst's
-    optimization time grows exponentially with traversal depth (measured:
-    137s of pure `explain()` at depth 4). Caching truncates the lineage to
-    an InMemoryRelation leaf — and mirrors the production design, where
-    entities/edges are persistent extracted tables (SURVEY §1.5), not
-    recomputed per query. Spark's CacheManager dedupes by canonicalized
-    plan, so every build_planner() call in a session shares one copy.
-    """
-    from .planner import SearchPlanner
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PLANNERS.get(key)
-    if cached is not None:
-        return cached
-    planner = SearchPlanner(
-        build_entities(spark, sf_dir).cache(), build_edges(spark, sf_dir).cache()
-    )
-    _PLANNERS[key] = planner
-    return planner
-
-
-# planner memo: building the 12-table union model costs ~5s of pure
-# analysis per call even when the DATA is already cached (CacheManager
-# dedupes storage, not DataFrame construction) — every DSL query in a
-# session shares one planner instance instead.
-_PLANNERS: dict = {}

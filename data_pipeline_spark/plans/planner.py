@@ -41,14 +41,13 @@ class SearchPlanner:
 
     ``entities`` must have an `id` column plus queryable field columns
     (e.g. type, name, number, date). ``edges`` is (subject, predicate,
-    object). ``field_map`` renames DSL field names to entity columns.
+    object).
     """
 
     def __init__(
         self,
         entities: DataFrame,
         edges: DataFrame,
-        field_map: dict[str, str] | None = None,
         any_predicate: str = "any",
         edges_object_keyed: DataFrame | None = None,
     ):
@@ -59,11 +58,10 @@ class SearchPlanner:
         # object serves forward traversals and the subject layout serves
         # inverse ones.  When the caller has only one relation, both
         # directions use it (identical results either way; the split is
-        # purely the exchange-elimination lever, model.load_planner_bucketed).
+        # purely the exchange-elimination lever, model.load_planner).
         self.edges_object_keyed = (
             edges_object_keyed if edges_object_keyed is not None else edges
         )
-        self.field_map = field_map or {}
         # the reference's `any` relationship (searchConfig.json
         # `any: [lux:*Any, Reference]`, ml_lexer.py:286): a traversal
         # matching over EVERY predicate — compiled as the edge semi-join
@@ -153,7 +151,7 @@ class SearchPlanner:
         for c in leaves:
             if not isinstance(c, Leaf) or c.op != "~":
                 raise ValueError("NEAR children must be word queries (field~word)")
-        fields = {self.field_map.get(c.field, c.field) for c in leaves}
+        fields = {c.field for c in leaves}
         if len(fields) != 1:
             raise ValueError(f"NEAR children must target one field, got {fields}")
         toks = F.split(F.lower(F.col(fields.pop())), r"\W+")
@@ -187,8 +185,7 @@ class SearchPlanner:
     # -- recursive plan builder ------------------------------------------
     def _plan(self, node) -> DataFrame:
         if isinstance(node, Leaf):
-            col = self.field_map.get(node.field, node.field)
-            cond = _OPS[node.op](F.col(col), F.lit(node.value))
+            cond = _OPS[node.op](F.col(node.field), F.lit(node.value))
             return self.entities.filter(cond).select("id")
         if isinstance(node, Bool):
             if node.op == "AND":

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.model import build_planner
+from ..plans.model import serving_planner
 from .registry import query
 
 
@@ -23,7 +23,7 @@ from .registry import query
 def dsl_q01(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`AND(type=customer, in_nation(name="NATION_7"))`: boolean + leaf +
     relationship traversal (ml_lexer.py:227-248 semantics)."""
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     return planner.plan('AND(type=customer, in_nation(name="NATION_7"))')
 
 
@@ -38,7 +38,7 @@ def dsl_q01(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dsl_q02(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`AND(type=customer, OR(acctbal>9900, name="..."))`: OR + typed
     comparison leaves (ml_lexer.py:154-195 comparators)."""
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     return planner.plan(
         'AND(type=customer, OR(number>9900, name="Customer#000000001"))'
     )
@@ -64,7 +64,7 @@ def dsl_q03(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested traversal under NOT: big orders whose customer is NOT in
     ASIA — NOT compiles to an anti-join against the universe, scoped by the
     enclosing AND (cts.py:30-60 notQuery semantics)."""
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     return planner.plan(
         "AND(type=order, number>300000,"
         ' NOT(placed_by(in_nation(in_region(name="ASIA")))))'
@@ -82,7 +82,7 @@ def dsl_q03(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dsl_q04(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverse traversal (`^in_nation`): nations pointed TO by high-balance
     customers (Q6, ml_lexer.py:250-257 / cts.py:95-106)."""
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     return planner.plan("AND(type=nation, ^in_nation(AND(type=customer, number>9500)))")
 
 
@@ -99,7 +99,7 @@ def dsl_q04(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dsl_q08(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word query (`name~widget`): tokenized whole-word match on the
     name field — the cts word-query core (Q4) as a DSL comparator."""
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     return planner.plan('AND(type=part, name~"widget")')
 
 
@@ -117,7 +117,7 @@ def dsl_q09(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOOST (cts boostQuery): NATION_7 customers, scored +1 when the
     boost leg (balance>5000) also matches — boost changes order, never
     membership."""
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     return planner.search_scored(
         'AND(type=customer, in_nation(name="NATION_7"))',
         boost="AND(type=customer, number>5000)",
@@ -138,7 +138,7 @@ def dsl_q07(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ml_lexer.py:324-405's JSON parser) — must plan identically."""
     from ..plans.parser import parse_json
 
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     ast = parse_json(
         {"AND": [{"type": "customer"}, {"in_nation": {"name": "NATION_7"}}]}
     )
@@ -165,7 +165,7 @@ def dsl_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER/LIMIT patterns (qlever/mapper.py:5-63) — expressed directly as
     Spark SQL over the registered edges/entities views, the engine's
     SPARQL-equivalent surface."""
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     planner.entities.createOrReplaceTempView("v_entities")
     planner.edges.createOrReplaceTempView("v_edges")
     return spark.sql(
@@ -197,7 +197,7 @@ def dsl_q06(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similar-to / query-by-example (Q7, ml_lexer.py:22-148): synthesize a
     predicate tree from customer:42's own edges + numeric window and run it
     through the same planner."""
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     return planner.similar("customer:42", number_window=100.0)
 
 
@@ -216,7 +216,7 @@ def dsl_q06(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dsl_q05(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-hop inverse chain: parts contained in orders placed by German
     customers — `^contains` after a forward `placed_by/in_nation` walk."""
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     return planner.plan(
         'AND(type=part, ^contains(AND(type=order, placed_by(in_nation(name="NATION_7")))))'
     )
@@ -257,7 +257,7 @@ def dsl_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface: parts whose name word-matches 'small' ANDNOT 'small' NEAR
     'bolt' (distance 1), BOOSTed (+1 score, membership unchanged) when
     the name also contains 'gizmo'."""
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     return planner.search_scored(
         "BOOST(ANDNOT(AND(type=part, name~small),"
         " NEAR(name~small, name~bolt, 1)), AND(type=part, name~gizmo))"
@@ -288,7 +288,7 @@ def dsl_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     1995 with ANY related entity whose anytext word-matches 'widget'.
     Only contains-edges can satisfy the sub-plan (parts own the word),
     so the oracle replays the wildcard traversal as the lineitem join."""
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     return planner.plan(
         'AND(type=order, date>="1995-06-01", date<="1995-06-30",'
         ' any(anytext~widget))'
@@ -311,11 +311,10 @@ def dsl_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dsl_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-11 serving win under driver eyes (VERDICT r11 #4):
     the PERSISTED bucketed dual-layout model answering the worst-scaling
-    traversal shape.  Every other dsl query plans over build_planner's
-    cached in-memory model; this one goes through serving_planner —
-    materialize_model_bucketed once per session, then
-    load_planner_bucketed — so the inverse hop joins the
-    subject-BUCKETED edges table (the lineitem-scale `contains`
+    traversal shape.  Like every dsl query it goes through
+    serving_planner — materialize_model once per session, then
+    load_planner — so the inverse hop joins the subject-BUCKETED edges
+    table (the lineitem-scale `contains`
     relation, 41M rows per exchange already at the 30x protocol scale)
     with NO Exchange on the edge side.  Each edge table has
     ``spark.sql.shuffle.partitions`` buckets (32 on a 32-core bench
@@ -330,8 +329,6 @@ def dsl_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     Query: widget parts contained in >480k orders — a word-query leaf
     AND an inverse traversal whose subquery side (orders) shuffles to
     the bucket count while the edges side reads pre-partitioned."""
-    from ..plans.model import serving_planner
-
     planner = serving_planner(spark, sf_dir)
     return planner.plan(
         'AND(type=part, name~"widget",'

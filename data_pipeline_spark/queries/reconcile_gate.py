@@ -470,11 +470,7 @@ def a02_skewed_merge_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedupe drift breaks a column."""
     from pyspark.sql import Window as W
 
-    from ..pipeline.envelope import with_doc
-    from ..pipeline.idmap import build_idmap
-    from ..pipeline.merge_records import merge_by_yuid
-    from ..pipeline.reconcile import reconcile
-    from ..pipeline.reidentify import reidentify
+    from ..pipeline.build import merge_chain
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     rn = F.row_number().over(W.orderBy("c_custkey")) - 1
@@ -516,17 +512,9 @@ def a02_skewed_merge_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("Person").alias("rectype"),
         data.alias("data"),
     )
-    indexes = empty_indexes(spark)
-    edges = reconcile(records, indexes)
-    all_uris = with_doc(records).select(
-        F.coalesce(F.col("doc.id"), F.concat_ws("/", "source", "identifier")).alias("uri")
-    )
-    idmap = build_idmap(edges, all_uris)
-    reident = reidentify(records, idmap)
-    merged = merge_by_yuid(
-        reident.select("yuid", "source", "identifier", "data"), {"srcA": 0}
-    )
-    per = reident.groupBy("yuid").agg(
+    tiers = merge_chain(records, empty_indexes(spark), None, {"srcA": 0}, False)
+    merged = tiers["merged"]
+    per = tiers["reidentified"].groupBy("yuid").agg(
         F.min("identifier").alias("comp_key"),
         F.count(F.lit(1)).alias("n_records"),
     )

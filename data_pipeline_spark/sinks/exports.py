@@ -16,7 +16,6 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def merge_upsert(existing: DataFrame, updates: DataFrame, key: str) -> DataFrame:
@@ -98,19 +97,18 @@ def export_csv(df: DataFrame, path: str) -> None:
 
 
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int | None = None,
-    mode: str = "overwrite",
+    df: DataFrame, table: str, key: str, path: str, n_buckets: int | None = None
 ) -> None:
-    """K2 at scale: persist a tier bucketed AND sorted by its join/merge
-    key.  Two bucketed tables with the same bucket count join with NO
-    exchange and NO sort — the join that dominates a 100TB build (orders
-    x lineitem, record x idmap, shingle x candidate) becomes a zipper
-    over co-located files.  This is the concrete form of every "bucketed
-    by the key at scale" note in SCALE.md; the shuffle-free plan is
-    pinned by tests/test_plan_quality.py.
+    """K2 at scale: persist a tier at ``path`` bucketed AND sorted by its
+    join/merge key, registered as the external table ``table``.  Two
+    bucketed tables with the same bucket count join with NO exchange and
+    NO sort — the join that dominates a 100TB build (orders x lineitem,
+    record x idmap, shingle x candidate) becomes a zipper over
+    co-located files.  This is the concrete form of every "bucketed by
+    the key at scale" note in SCALE.md; the shuffle-free plan is pinned
+    by tests/test_plan_quality.py.  The files outlive the registration:
+    a later session re-registers them with the same bucket spec
+    (plans.model.load_planner).
 
     ``n_buckets`` defaults to ``spark.sql.shuffle.partitions``: a
     bucketed scan replaces a join's exchange only when its bucket count
@@ -125,11 +123,12 @@ def write_bucketed(
         n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     (
         df.repartition(n_buckets, key)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .bucketBy(n_buckets, key)
         .sortBy(key)
         .format("parquet")
-        .saveAsTable(table)  # managed table under spark.sql.warehouse.dir
+        .option("path", path)
+        .saveAsTable(table)
     )
 
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.dates import lifespan_ok_py
 from .loaders import as_list, load_doc_lines, loads_object, map_rows, name_dict
 
 PROCESS_LANGS = [
@@ -188,7 +189,7 @@ def _handle_person(rec: dict, out: dict, parse_datetime) -> None:
     # computed on the parser's BCE-safe epoch seconds
     if born_parsed and died_parsed:
         bs, es = born_parsed[2], died_parsed[3]
-        if es < bs or (es - bs) > 122 * 365.25 * 86400:
+        if not lifespan_ok_py(bs, es):
             out.pop("born", None)
             out.pop("died", None)
 

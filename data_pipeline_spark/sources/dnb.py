@@ -37,6 +37,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.dates import lifespan_ok_py
 from .loaders import as_list, load_doc_lines, loads_object, map_rows, name_dict
 
 GND = "https://d-nb.info/standards/elementset/gnd#"
@@ -176,7 +177,7 @@ def _handle_person(rec: dict, out: dict, parse_datetime) -> None:
     # F5 lifespan sanity on the parser's epoch seconds
     if born_parsed and died_parsed:
         bs, es = born_parsed[2], died_parsed[3]
-        if es < bs or (es - bs) > 122 * 365.25 * 86400:
+        if not lifespan_ok_py(bs, es):
             out.pop("born", None)
             out.pop("died", None)
 

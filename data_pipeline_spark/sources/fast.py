@@ -50,6 +50,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.dates import lifespan_ok_py
 from .loaders import load_doc_lines, map_rows, name_dict
 
 MARC_NS = "{http://www.loc.gov/MARC21/slim}"
@@ -275,9 +276,7 @@ def _process_agent(root, out: dict, rectype: str, ctx: _Ctx) -> None:
         if b and e:
             pb = ctx.parse_datetime(b)
             pe = ctx.parse_datetime(e)
-            if pb and pe and (
-                pe[3] < pb[2] or (pe[3] - pb[2]) > 122 * 365.25 * 86400
-            ):
+            if pb and pe and not lifespan_ok_py(pb[2], pe[3]):
                 out.pop("born", None)
                 out.pop("died", None)
 

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..functions.dates import lifespan_ok_py
 from .loaders import as_list, loads_object, map_rows, name_dict
 
 AAT = "http://vocab.getty.edu/aat/"
@@ -371,9 +372,7 @@ def transform_ulan(rec: dict, parse_datetime, namespace="http://vocab.getty.edu/
         e = out.get("died", {}).get("timespan", {}).get("end_of_the_end")
         if b and e:
             pb, pe = parse_datetime(b), parse_datetime(e)
-            if pb and pe and (
-                pe[3] < pb[2] or (pe[3] - pb[2]) > 122 * 365.25 * 86400
-            ):
+            if pb and pe and not lifespan_ok_py(pb[2], pe[3]):
                 out.pop("born", None)
                 out.pop("died", None)
 

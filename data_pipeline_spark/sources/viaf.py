@@ -92,7 +92,7 @@ def map_records(
     source_name: str = "viaf",
     wikidata_types: dict[str, str] | None = None,
 ) -> DataFrame:
-    from ..functions.dates import make_datetime
+    from ..functions.dates import lifespan_ok, make_datetime
 
     doc = F.col("doc")
     top = F.from_xml(doc.getField("doc").getField("xml"), CLUSTER_XML_SCHEMA)
@@ -280,13 +280,7 @@ def map_records(
     impossible = (
         (rectype == "Person")
         & born.isNotNull() & died.isNotNull()
-        & (
-            (d_ts.getField("end_sec") < b_ts.getField("begin_sec"))
-            | (
-                (d_ts.getField("end_sec") - b_ts.getField("begin_sec"))
-                > F.lit(int(122 * 365.25 * 86400))
-            )
-        )
+        & ~lifespan_ok(b_ts.getField("begin_sec"), d_ts.getField("end_sec"))
     )
     born = F.when(~impossible, born)
     died = F.when(~impossible, died)

@@ -91,15 +91,19 @@ from .index_util import (
     touched_buckets,
     write_bucketed_base,
 )
+from .ingest import CHANGES_SCHEMA
 from .locks import maintenance_lock, try_maintenance_lock
 from .storage import provider as _storage
 
-CHANGES_SCHEMA = (
-    "seq bigint, end_time timestamp, change string, object_uri string, "
-    "payload string"
-)
-
 _TIERS = ("records", "idmap", "merged")
+
+# the file cap of each crawl's delta: deltas are blast-sized by the
+# incremental module's contract, but their lineage ends at
+# shuffle-partition width (64 near-empty files per tier per crawl — a
+# small-files problem at crawl cadence; measured 5x delta bytes at
+# fixture scale from parquet footers alone).  Coalesce, not repartition:
+# no extra exchange, just narrower writes.
+_DELTA_FILES = 8
 
 # the fold key of each tier, as the store's bucket key (SQL expressions):
 # records by canonical uri (one JSON path, column-pruned — the
@@ -355,20 +359,13 @@ def entity_build_batch(
     batch_id: int,
     merge_order: dict[str, int] | None = None,
     last_harvest: str | None = None,
-    delta_partitions: int = 8,
 ) -> None:
     """One crawl: incremental_build against the folded pre-state, DELTA
     tiers + touched manifest written under the crawl's key with overwrite
     (idempotent per-delta-dir write — the retry contract).  Every write
     is blast-radius-sized; the full tiers are never rewritten (SCALE.md
-    round 12: per-crawl write bytes flat vs corpus scale).
-
-    ``delta_partitions`` caps each delta's FILE count: deltas are
-    blast-sized by the incremental module's contract, but their lineage
-    ends at shuffle-partition width (64 near-empty files per tier per
-    crawl — a small-files problem at crawl cadence; measured 5x delta
-    bytes at fixture scale from parquet footers alone).  Coalesce, not
-    repartition: no extra exchange, just narrower writes."""
+    round 12: per-crawl write bytes flat vs corpus scale), and each delta
+    is at most ``_DELTA_FILES`` files."""
     st = read_state_at(spark, state_dir, checkpoint, batch_id)
     inc = incremental_build(
         spark, st["records"], changes, indexes,
@@ -376,13 +373,13 @@ def entity_build_batch(
         merge_order=merge_order, last_harvest=last_harvest,
     )
     key = run_batch_key(checkpoint, batch_id)
-    inc["records_delta"].coalesce(delta_partitions).write.mode(
+    inc["records_delta"].coalesce(_DELTA_FILES).write.mode(
         "overwrite"
     ).parquet(_delta_dir(state_dir, "records", key))
     inc["idmap"].select("qua_uri", "yuid").coalesce(
-        delta_partitions
+        _DELTA_FILES
     ).write.mode("overwrite").parquet(_delta_dir(state_dir, "idmap", key))
-    inc["merged"].coalesce(delta_partitions).write.mode("overwrite").parquet(
+    inc["merged"].coalesce(_DELTA_FILES).write.mode("overwrite").parquet(
         _delta_dir(state_dir, "merged", key)
     )
     yuids = inc["touched_yuids"].select(F.col("yuid").alias("k"))
@@ -393,7 +390,7 @@ def entity_build_batch(
         .unionByName(yuids.select(F.lit("idmap").alias("tier"), "k"))
         .unionByName(yuids.select(F.lit("merged").alias("tier"), "k"))
     )
-    touched.coalesce(delta_partitions).write.mode("overwrite").parquet(
+    touched.coalesce(_DELTA_FILES).write.mode("overwrite").parquet(
         _touched_dir(state_dir, key)
     )
 

@@ -166,6 +166,75 @@ def test_cli_search_persisted_model(tmp_path, capsys):
     assert first and again == first
 
 
+_LOAD_IN_FRESH_INTERPRETER = """
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+from data_pipeline_spark.plans.model import load_planner
+from data_pipeline_spark.plans.planner import SearchPlanner
+from data_pipeline_spark.session import get_spark
+
+model = sys.argv[2]
+spark = get_spark("fresh_loader", cpus=2)
+with open(os.path.join(model, "_META.json")) as f:
+    spark.conf.set("spark.sql.shuffle.partitions", str(json.load(f)["buckets"]))
+spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+planner = load_planner(spark, model)
+flat = SearchPlanner(
+    spark.read.parquet(model + "/entities"),
+    spark.read.parquet(model + "/edges_subj"),
+    edges_object_keyed=spark.read.parquet(model + "/edges_obj"),
+)
+
+def shape(p, q):
+    plan = p.plan(q)._jdf.queryExecution().executedPlan().toString()
+    n = sum(1 for line in plan.splitlines()
+            if line.lstrip(" :+-*(").startswith("Exchange"))
+    return n, "Bucketed: true" in plan
+
+out = {}
+for q in ('AND(type=customer, in_nation(name="NATION_7"))',
+          "^placed_by(AND(type=order, number>100))"):
+    (nb, bucketed), (nf, _) = shape(planner, q), shape(flat, q)
+    out[q] = {"bucketed": bucketed, "exchanges": nb, "flat_exchanges": nf,
+              "ids": sorted(r.id for r in planner.plan(q).collect())}
+print("RESULT " + json.dumps(out))
+spark.stop()
+"""
+
+
+def test_cli_persisted_model_is_bucketed_in_a_fresh_interpreter(tmp_path, capsys):
+    """`search --model DIR --materialize` persists the bucketed form: a
+    fresh interpreter, whose catalog has never seen the tables,
+    re-registers them with load_planner, and a forward and an inverse
+    hop each read a bucketed edge scan with no Exchange of its own (one
+    fewer than the same files read as plain parquet)."""
+    import subprocess
+    import sys
+
+    model = str(tmp_path / "model")
+    q = 'AND(type=customer, in_nation(name="NATION_7"))'
+    assert main([
+        "search", "--sf-dir", SF, "--query", q,
+        "--model", model, "--materialize",
+    ]) == 0
+    written = {json.loads(x)["id"] for x in capsys.readouterr().out.strip().splitlines()
+               if x.startswith("{")}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g", "PYTHONPATH": repo}
+    proc = subprocess.run(
+        [sys.executable, "-c", _LOAD_IN_FRESH_INTERPRETER, repo, model],
+        capture_output=True, text=True, timeout=600, cwd=str(tmp_path), env=env,
+    )
+    lines = [x for x in proc.stdout.splitlines() if x.startswith("RESULT ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-3000:]
+    hops = json.loads(lines[0][len("RESULT "):])
+    for hop, got in hops.items():
+        assert got["bucketed"], hop
+        assert got["exchanges"] == got["flat_exchanges"] - 1, (hop, got)
+        assert got["ids"], hop
+    assert set(hops[q]["ids"]) == written
+
+
 def test_cli_export_jsonl(spark, fixture_dirs, tmp_path):
     out = str(tmp_path / "exp")
     assert main([

@@ -132,6 +132,33 @@ def test_lifespan_precheck_math():
     assert epoch_seconds(2025, 1, 1) - epoch_seconds(1875, 1, 1) > 122 * 365.25 * 86400
 
 
+def test_lifespan_rule_boundary_both_twins(spark):
+    """F5's one rule, Column and Python twin alike: exactly 122 years
+    passes, one second more fails, and so does a death before birth; the
+    Column form passes a row with either date unknown."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_spark.functions.dates import (
+        MAX_LIFESPAN_SEC,
+        lifespan_ok,
+        lifespan_ok_py,
+    )
+
+    born = epoch_seconds(1880, 2, 21)
+    cases = [
+        (born, born + MAX_LIFESPAN_SEC, True),
+        (born, born + MAX_LIFESPAN_SEC + 1, False),
+        (born, born - 1, False),
+        (born, born, True),
+    ]
+    for b, d, want in cases:
+        assert lifespan_ok_py(b, d) is want, (b, d)
+    rows = [(b, d) for b, d, _ in cases] + [(None, born), (born, None)]
+    df = spark.createDataFrame(rows, "b bigint, d bigint")
+    got = [r.ok for r in df.select(lifespan_ok(F.col("b"), F.col("d")).alias("ok")).collect()]
+    assert got == [want for _, _, want in cases] + [True, True]
+
+
 def test_spark_string_functions(spark):
     from pyspark.sql import functions as F
 

@@ -225,12 +225,18 @@ def test_name_variants(spark):
 
 
 def test_materialized_model_planner(spark, tmp_path):
-    from data_pipeline_spark.plans.model import build_planner, load_planner, materialize_model
+    from data_pipeline_spark.plans.model import (
+        build_edges,
+        build_entities,
+        load_planner,
+        materialize_model,
+    )
+    from data_pipeline_spark.plans.planner import SearchPlanner
 
     sf = "/root/testdata/sf0.001"
     path = str(tmp_path / "model")
     materialize_model(spark, sf, path)
-    live = build_planner(spark, sf)
+    live = SearchPlanner(build_entities(spark, sf), build_edges(spark, sf))
     stored = load_planner(spark, path)
     q = 'AND(type=customer, in_nation(name="NATION_7"))'
     a = {r.id for r in live.plan(q).collect()}

@@ -137,16 +137,19 @@ def test_d07_minhash_band_join_only(spark):
     assert not pair_dedup, pair_dedup
 
 
-def test_dsl_planner_is_memoized_and_cached(spark):
-    """The DSL model must be built once per (session, sf_dir) and backed by
-    InMemoryRelation leaves — without the cache, Catalyst analysis time
-    grows exponentially with traversal depth (measured round 1)."""
-    from data_pipeline_spark.plans.model import build_planner
+def test_dsl_planner_is_memoized_and_persisted(spark):
+    """The DSL model must be built once per (session, sf_dir) and its
+    relations must be leaf scans of the persisted tables — with the raw
+    6-way-union lineage at every leaf, Catalyst analysis time grows
+    exponentially with traversal depth (measured round 1)."""
+    from data_pipeline_spark.plans.model import serving_planner
 
-    p1 = build_planner(spark, SF)
-    p2 = build_planner(spark, SF)
+    p1 = serving_planner(spark, SF)
+    p2 = serving_planner(spark, SF)
     assert p1 is p2  # memoized per session+sf
-    assert p1.entities.is_cached and p1.edges.is_cached
+    for rel in (p1.entities, p1.edges, p1.edges_object_keyed):
+        plan = rel._jdf.queryExecution().optimizedPlan().toString()
+        assert "Union" not in plan and "Relation" in plan, plan
 
 
 def _chain(spark, n=120):
@@ -276,10 +279,10 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
 
     orders = load_table(spark, SF, "orders").select("o_orderkey", "o_totalprice")
     items = load_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(orders, "bt_orders", "o_orderkey", n_buckets=4)
+    write_bucketed(orders, "bt_orders", "o_orderkey", str(tmp_path / "o"), n_buckets=4)
     write_bucketed(
         items.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "bt_lineitem", "o_orderkey", n_buckets=4,
+        "bt_lineitem", "o_orderkey", str(tmp_path / "l"), n_buckets=4,
     )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -297,20 +300,19 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bt_lineitem")
 
 
-def _bucket_files(spark, table: str) -> list[int]:
-    """Bucket id of every data file of a managed bucketed table, from
+def _bucket_files(d: str) -> list[int]:
+    """Bucket id of every data file of the bucketed table at ``d``, from
     the ``_<bucket>`` suffix Spark's bucketed writer puts in file names."""
     import os
 
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    d = os.path.join(wh, table.lower())
+    d = d.removeprefix("file:")
     return sorted(
         int(re.search(r"_(\d+)(?:\..*)?$", f).group(1))
         for f in os.listdir(d) if f.endswith(".parquet")
     )
 
 
-def test_write_bucketed_one_file_per_bucket(spark):
+def test_write_bucketed_one_file_per_bucket(spark, tmp_path):
     """write_bucketed hash-partitions by the key into the bucket count
     before the bucketed write, so a 6-partition input becomes exactly
     one file per bucket (not one per bucket per input partition)."""
@@ -318,8 +320,8 @@ def test_write_bucketed_one_file_per_bucket(spark):
 
     df = spark.range(0, 2000, numPartitions=6).selectExpr("CAST(id AS STRING) AS k")
     try:
-        write_bucketed(df, "bt_one_file", "k", n_buckets=4)
-        assert _bucket_files(spark, "bt_one_file") == [0, 1, 2, 3]
+        write_bucketed(df, "bt_one_file", "k", str(tmp_path / "t"), n_buckets=4)
+        assert _bucket_files(str(tmp_path / "t")) == [0, 1, 2, 3]
         assert spark.table("bt_one_file").count() == 2000
     finally:
         spark.sql("DROP TABLE IF EXISTS bt_one_file")
@@ -376,44 +378,46 @@ def test_closure_long_ids_keep_type(spark):
         assert {(r.node, r.component) for r in out.collect()} == want
 
 
-def test_bucketed_model_traversal_edges_side_no_exchange(spark):
-    """The bucketed DSL model (materialize_model_bucketed): a traversal's
-    corpus-scale edges side must read pre-bucketed data with NO Exchange
-    of its own — only the sub-plan side shuffles to the bucket count.
-    This is the per-hop exchange elimination the 100 TB serving design
-    relies on (41M-row edge relations at the 30x protocol scale)."""
+def test_bucketed_model_traversal_edges_side_no_exchange(spark, tmp_path):
+    """The DSL model (materialize_model): a traversal's corpus-scale
+    edges side must read pre-bucketed data with NO Exchange of its own —
+    only the sub-plan side shuffles to the bucket count.  This is the
+    per-hop exchange elimination the 100 TB serving design relies on
+    (41M-row edge relations at the 30x protocol scale)."""
     from data_pipeline_spark.plans.model import (
-        load_planner_bucketed,
-        materialize_model_bucketed,
+        build_edges,
+        build_entities,
+        load_planner,
+        materialize_model,
     )
+    from data_pipeline_spark.plans.planner import SearchPlanner
 
+    path = str(tmp_path / "pqm")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     prev_abs = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        materialize_model_bucketed(spark, SF, "pqm", n_buckets=8)
         # tiny test tables would broadcast; the claim is the shuffle path.
-        # autoBucketedScan off + shuffle.partitions == n_buckets: the
+        # autoBucketedScan off + shuffle.partitions == bucket count: the
         # bucket layout only replaces the exchange when its partitioning
-        # SATISFIES the join's required distribution — production sizes
-        # n_buckets to the cluster's shuffle parallelism (and Spark's
-        # autoBucketedScan heuristic otherwise falls back to a plain scan
-        # when buckets < target parallelism); this pin emulates that
-        # sizing at test scale and must not depend on what partition
-        # count an earlier test left on the shared session
+        # SATISFIES the join's required distribution — the model takes
+        # its bucket count from the session's shuffle parallelism (and
+        # Spark's autoBucketedScan heuristic otherwise falls back to a
+        # plain scan when buckets < target parallelism); this pin must
+        # not depend on what partition count an earlier test left on the
+        # shared session
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
-        planner = load_planner_bucketed(spark, "pqm")
-        from data_pipeline_spark.plans.planner import SearchPlanner
+        materialize_model(spark, SF, path)
+        planner = load_planner(spark, path)
 
         # the same data WITHOUT bucketing metadata: reading the table's
         # files as plain parquet drops the bucket spec — the unbucketed twin
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
         flat = SearchPlanner(
-            spark.table("pqm_entities"),
-            spark.read.parquet(f"{wh}/pqm_edges_subj"),
-            edges_object_keyed=spark.read.parquet(f"{wh}/pqm_edges_obj"),
+            spark.read.parquet(f"{path}/entities"),
+            spark.read.parquet(f"{path}/edges_subj"),
+            edges_object_keyed=spark.read.parquet(f"{path}/edges_obj"),
         )
 
         def n_exchanges(p, q):
@@ -434,21 +438,19 @@ def test_bucketed_model_traversal_edges_side_no_exchange(spark):
             # layout; the scan must actually be the bucketed read
             assert nb == nf - 1, f"{q}: bucketed {nb} vs flat {nf}\n{plan_b}"
             assert "Bucketed: true" in plan_b, q
-        # and the two layouts return identical results
-        flat = load_planner_bucketed(spark, "pqm")
-        ids_f = {r.id for r in flat.plan('AND(type=customer, in_nation(name="NATION_7"))').collect()}
-        from data_pipeline_spark.plans.model import build_planner
-
-        ids_c = {r.id for r in build_planner(spark, SF).plan(
-            'AND(type=customer, in_nation(name="NATION_7"))').collect()}
-        assert ids_f == ids_c and ids_f
+        # and the persisted model answers as the unpersisted union model
+        q = 'AND(type=customer, in_nation(name="NATION_7"))'
+        ids_b = {r.id for r in planner.plan(q).collect()}
+        live = SearchPlanner(build_entities(spark, SF), build_edges(spark, SF))
+        ids_u = {r.id for r in live.plan(q).collect()}
+        assert ids_b == ids_u and ids_b
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.conf.set(
             "spark.sql.sources.bucketing.autoBucketedScan.enabled", prev_abs
         )
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        for t in ("pqm_entities", "pqm_edges_subj", "pqm_edges_obj"):
+        for t in ("pqm_edges_subj", "pqm_edges_obj"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -1066,8 +1068,9 @@ def test_serving_edge_tables_sized_by_shuffle_partitions(spark):
         model._SERVING.clear()
         planner = model.serving_planner(spark, SF)
         prefix = model.serving_prefix(SF)
-        for t in ("_edges_subj", "_edges_obj"):
-            assert _bucket_files(spark, prefix + t) == [0, 1, 2, 3, 4], t
+        wh = spark.conf.get("spark.sql.warehouse.dir")
+        for t in ("edges_subj", "edges_obj"):
+            assert _bucket_files(f"{wh}/{prefix}/{t}") == [0, 1, 2, 3, 4], t
         # tiny test tables would broadcast; the claim is the shuffle path
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         for q, t in (
@@ -1091,26 +1094,23 @@ def test_serving_edge_tables_sized_by_shuffle_partitions(spark):
 
 
 def test_serving_planner_rematerializes_across_catalog_loss(spark):
-    """materialize_model_bucketed must be re-runnable when the previous
-    process left warehouse directories behind but the (in-memory)
-    catalog registration is gone — the LOCATION_ALREADY_EXISTS failure
-    mode of a fresh driver session reusing the repo CWD (ADVICE-class
-    robustness; hit by the first cross-session dsl_q13 run)."""
+    """materialize_model must be re-runnable when the previous process
+    left the model directory behind but the (in-memory) catalog
+    registration is gone — the LOCATION_ALREADY_EXISTS failure mode of a
+    fresh driver session reusing the repo CWD (ADVICE-class robustness;
+    hit by the first cross-session dsl_q13 run)."""
+    import os
+
     from data_pipeline_spark.plans import model
 
     model._SERVING.clear()
     model.serving_planner(spark, SF)
     # simulate a fresh process: registrations dropped, directories kept
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    import os
-    import shutil
-
-    for t in (model.serving_prefix(SF) + "_entities",):
-        src = os.path.join(wh, t)
-        keep = src + "_keepalive"
-        shutil.copytree(src, keep)
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.move(keep, src) if not os.path.isdir(src) else shutil.rmtree(keep)
+    prefix = model.serving_prefix(SF)
+    for t in ("_edges_subj", "_edges_obj"):
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}{t}")
+    assert os.path.isdir(os.path.join(wh, prefix, "edges_subj"))
     model._SERVING.clear()
     p = model.serving_planner(spark, SF)  # must not raise
     assert p.plan("AND(type=nation)").count() == 25
@@ -1121,7 +1121,7 @@ def test_serving_tables_are_process_unique_and_reaped(spark):
     each other's serving tables mid-read (the dsl_q13
     FAILED_READ_FILE.FILE_NOT_EXIST flake): the prefix carries this
     process's pid, and the reaper removes only dirs whose owning pid is
-    dead — a live peer's tables, this process's own, and un-suffixed
+    dead — a live peer's model, this process's own, and un-suffixed
     dirs (no pid, so no proof their owner is gone) are untouched."""
     import os
     import shutil
@@ -1131,9 +1131,9 @@ def test_serving_tables_are_process_unique_and_reaped(spark):
     assert model.serving_prefix(SF).endswith(f"_p{os.getpid()}")
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     os.makedirs(wh, exist_ok=True)
-    dead = os.path.join(wh, "serve_x_p999999999_entities")
-    legacy = os.path.join(wh, "serve_x_entities")
-    mine = os.path.join(wh, f"serve_x_p{os.getpid()}_entities")
+    dead = os.path.join(wh, "serve_x_p999999999")
+    legacy = os.path.join(wh, "serve_x")
+    mine = os.path.join(wh, f"serve_x_p{os.getpid()}")
     for d in (dead, legacy, mine):
         os.makedirs(d, exist_ok=True)
     try:
@@ -1147,18 +1147,18 @@ def test_serving_tables_are_process_unique_and_reaped(spark):
 
 
 def test_serving_dirs_removed_at_clean_exit(tmp_path):
-    """A process removes its OWN ``serve_*_p<pid>_*`` warehouse dirs at
-    clean interpreter exit instead of leaving them for a later process's
+    """A process removes its OWN ``serve_*_p<pid>`` warehouse dir at
+    clean interpreter exit instead of leaving it for a later process's
     stale-dir reaper; another pid's dirs are not its to touch.  Runs a
     real child interpreter; the model build is stubbed to just create the
-    three table dirs, so the drill needs no JVM."""
+    model's three table dirs, so the drill needs no JVM."""
     import os
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     wh = str(tmp_path / "warehouse")
-    other = os.path.join(wh, "serve_x_p1_entities")  # pid 1: alive, not ours
+    other = os.path.join(wh, "serve_x_p1")  # pid 1: alive, not ours
     os.makedirs(other)
     script = f"""
 import os, sys
@@ -1174,21 +1174,21 @@ class _Spark:
     class sparkContext:
         applicationId = "app"
 
-def fake_materialize(spark, sf_dir, prefix, n_buckets):
+def fake_materialize(spark, sf_dir, path):
     for t in ("entities", "edges_subj", "edges_obj"):
-        os.makedirs(os.path.join({wh!r}, prefix + "_" + t))
+        os.makedirs(os.path.join(path, t))
 
-model.materialize_model_bucketed = fake_materialize
-model.load_planner_bucketed = lambda spark, prefix: object()
+model.materialize_model = fake_materialize
+model.load_planner = lambda spark, path: object()
 model.serving_planner(_Spark(), "sf_x")
-own = [d for d in os.listdir({wh!r}) if d.endswith(("entities", "edges_subj", "edges_obj")) and f"_p{{os.getpid()}}_" in d]
-print(os.getpid(), len(own))
+own = [d for d in os.listdir({wh!r}) if d.endswith(f"_p{{os.getpid()}}")]
+print(os.getpid(), len(os.listdir(os.path.join({wh!r}, own[0]))))
 """
     out = subprocess.run([sys.executable, "-c", script], capture_output=True,
                          text=True, timeout=120, check=True).stdout.split()
     pid, live_dirs = int(out[0]), int(out[1])
-    assert live_dirs == 3  # the dirs existed while the process ran
-    left = [d for d in os.listdir(wh) if f"_p{pid}_" in d]
+    assert live_dirs == 3  # the model existed while the process ran
+    left = [d for d in os.listdir(wh) if d.endswith(f"_p{pid}")]
     assert left == [], f"serving dirs survived a clean exit: {left}"
     assert os.path.isdir(other)
 

@@ -52,9 +52,9 @@ def main() -> None:
     print(f"[build] N-Triples sample written to {nt_path}")
 
     # 2 — the search DSL over the benchmark tables
-    from data_pipeline_spark.plans.model import build_planner
+    from data_pipeline_spark.plans.model import serving_planner
 
-    planner = build_planner(spark, sf_dir)
+    planner = serving_planner(spark, sf_dir)
     hits = planner.plan(
         'AND(type=customer, in_nation(name="NATION_7"))'
     ).count()

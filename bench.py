@@ -5,11 +5,11 @@ and prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query value is the MEDIAN across $SPARK_GRAFT_BENCH_REPS (default
-3) whole-suite passes (tier memos cleared between passes) — steady
-state, not the first-execution envelope; the raw samples ship in the
-"reps" key and the canary pair ("canary_spin_sec"/"canary_spark_sec")
-stays the cross-round host normalizer (SCALE.md, 'Bench measurement
-protocol').
+3) whole-suite passes (dedup tiers dropped from the session memo
+between passes) — steady state, not the first-execution envelope; the
+raw samples ship in the "reps" key and the canary pair
+("canary_spin_sec"/"canary_spark_sec") stays the cross-round host
+normalizer (SCALE.md, 'Bench measurement protocol').
 """
 
 from __future__ import annotations
@@ -169,27 +169,28 @@ def main() -> None:
     # and the host's JVM-op unit cost moved +-25% across rounds while
     # plan snapshots were pinned unchanged — so the driver's 2x
     # regression contract was reading noise.  Whole-suite passes, NOT
-    # per-query back-to-back reps: the dedup tier memo (queries/dedup.py
-    # _TIER_CACHE — the production stand-in for persisted tiers that
-    # d07 builds and d12/d13 read) would otherwise serve rep 2+ of d07
-    # from rep 1's checkpoint and the "median" would measure a memo
-    # probe (0.07 s) instead of the plan (~2 s).  Clearing the memo
-    # between passes keeps every query's semantics exactly what the
-    # r1-r14 single-shot history measured: d07 cold-tier, d12/d13
-    # memo-fed.  Raw samples ship in the "reps" side-channel so a drift
-    # analysis never needs to re-run the suite; JSON shape is unchanged
-    # ("queries" still maps name -> one number, now the median; "value"
-    # is still their sum).
+    # per-query back-to-back reps: the dedup tiers in the session memo
+    # (catalog.memo via queries/dedup.py _tier — the production stand-in
+    # for persisted tiers that d07 builds and d12/d13 read) would
+    # otherwise serve rep 2+ of d07 from rep 1's checkpoint and the
+    # "median" would measure a memo probe (0.07 s) instead of the plan
+    # (~2 s).  Dropping the tiers (clear_tier_cache) between passes
+    # keeps every query's semantics exactly what the r1-r14 single-shot
+    # history measured: d07 cold-tier, d12/d13 memo-fed.  Raw samples
+    # ship in the "reps" side-channel so a drift analysis never needs
+    # to re-run the suite; JSON shape is unchanged ("queries" still
+    # maps name -> one number, now the median; "value" is still their
+    # sum).
     reps_n = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     reps: dict[str, list[float]] = {n: [] for n in HEADLINE}
     canary_pre_b01 = None
     spark_canary_pre_b01 = None
     for rep in range(reps_n):
         if rep:
-            # ONLY the dedup tier memo resets between passes; the DSL
-            # serving model is persisted once, outside the timed loop
-            # (production serves thousands of queries per
-            # materialization).
+            # ONLY the dedup tiers leave the memo between passes; the
+            # table plans and the DSL serving model stay memoized, the
+            # model persisted once, outside the timed loop (production
+            # serves thousands of queries per materialization).
             from data_pipeline_spark.queries.dedup import clear_tier_cache
 
             clear_tier_cache()

@@ -70,7 +70,7 @@ def extract_edges(merged: DataFrame) -> DataFrame:
         structs("produced_by.carried_out_by", "agentOfProduction"),
         structs("produced_by.took_place_at", "placeOfProduction"),
     ]
-    docs = merged if "doc" in merged.columns else with_doc(merged)
+    docs = with_doc(merged)
     return (
         docs
         .select(
@@ -114,7 +114,7 @@ def extract_texts(merged: DataFrame) -> DataFrame:
     """texts(yuid, field, text): the full-text tier (SURVEY §7.1) — names
     and statement contents, one row per text value, ready for tokenized
     word queries (Q4) and the top-k keyword synthesis (A16)."""
-    docs = merged if "doc" in merged.columns else with_doc(merged)
+    docs = with_doc(merged)
     names = (
         docs.select(
             "yuid",
@@ -150,7 +150,7 @@ def word_query(texts: DataFrame, term: str, field: str | None = None) -> DataFra
 def extract_facets(merged: DataFrame) -> DataFrame:
     """X2 facet columns (marklogic/mapper.py:248-845 analog): per-entity
     booleans/ids derived in one pass."""
-    docs = merged if "doc" in merged.columns else with_doc(merged)
+    docs = with_doc(merged)
     return docs.select(
         "yuid",
         F.col("rectype").alias("dataType"),
@@ -173,7 +173,7 @@ def extract_names_table(merged: DataFrame) -> DataFrame:
     (including empty-string keys)."""
     from ..functions.strings import clean_name
 
-    docs = merged if "doc" in merged.columns else with_doc(merged)
+    docs = with_doc(merged)
     cleaned = F.array_distinct(
         F.filter(
             F.transform(

@@ -110,7 +110,11 @@ DOC_SCHEMA = StructType(
 
 def with_doc(records: DataFrame) -> DataFrame:
     """Attach the typed `doc` column (one from_json per record, reused by
-    every downstream extraction)."""
+    every downstream extraction).  Records that already carry one are
+    returned unchanged, so the JSON is parsed once however the
+    extractions compose."""
+    if "doc" in records.columns:
+        return records
     return records.withColumn("doc", F.from_json(F.col("data"), DOC_SCHEMA))
 
 
@@ -125,7 +129,7 @@ def extract_names(records: DataFrame) -> DataFrame:
     primary names first, then alternates, then the _label fallback."""
     from ..functions.strings import clean_name
 
-    docs = records if "doc" in records.columns else with_doc(records)
+    docs = with_doc(records)
     base = docs.select(
         record_uri(docs).alias("uri"),
         "source",
@@ -235,7 +239,7 @@ def name_variants(names: DataFrame) -> DataFrame:
 def extract_equivalents(records: DataFrame) -> DataFrame:
     """equiv_edges(src_uri, dst_uri, rectype, provenance='record'): the
     record's own `equivalent[].id` links (J2 input)."""
-    docs = records if "doc" in records.columns else with_doc(records)
+    docs = with_doc(records)
     return (
         docs.select(
             record_uri(docs).alias("src_uri"),
@@ -258,7 +262,7 @@ def extract_timespans(records: DataFrame) -> DataFrame:
     mapper_utils.py:146-197)."""
     from ..functions.dates import lifespan_ok, make_datetime
 
-    docs = records if "doc" in records.columns else with_doc(records)
+    docs = with_doc(records)
     base = docs.select(
         record_uri(docs).alias("uri"),
         "rectype",

@@ -268,7 +268,7 @@ def reconcile(
     shuffle join for an authority index too large to broadcast."""
     # accept a pre-parsed (and possibly checkpointed) envelope relation —
     # run_build shares one parse across reconcile and all_uris
-    docs = records if "doc" in records.columns else with_doc(records)
+    docs = with_doc(records)
     equivs = extract_equivalents(docs)
     timespans = extract_timespans(docs)
 

@@ -145,7 +145,7 @@ def validate_records(
     probe the raw JSON string, so they need the ``data`` column — records
     handed over as pre-parsed docs only get the semantic rules."""
     rules = SCHEMA_RULES if schema_rules is None else schema_rules
-    docs = records if "doc" in records.columns else with_doc(records)
+    docs = with_doc(records)
     has_data = "data" in docs.columns
     # from_json is PERMISSIVE: malformed input yields an all-null struct,
     # NOT a null doc — so "unparseable" must probe the raw string with

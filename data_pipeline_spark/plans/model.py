@@ -6,7 +6,7 @@ The model has one persisted form: entities as parquet plus the edges
 bucketed twice, by subject and by object.  ``materialize_model`` writes
 it, ``load_planner`` reads it back in any session, and
 ``serving_planner`` is the two over a process-unique warehouse dir,
-once per session — the planner every DSL search uses.
+once per session and input — the planner every DSL search uses.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, memo
 from ..sinks.exports import write_bucketed
 
 
@@ -253,6 +253,11 @@ def _reap_at_exit(spark: SparkSession) -> None:
 _REAP_AT_EXIT: set = set()
 
 
+# the tables build_entities and build_edges read: the serving model is
+# rebuilt when any of them is regenerated in place
+_MODEL_TABLES = ("customer", "supplier", "part", "nation", "region", "orders", "lineitem")
+
+
 def serving_planner(spark: SparkSession, sf_dir: str):
     """The planner every DSL search uses: ``materialize_model`` once per
     (application, sf_dir) into a process-unique warehouse dir
@@ -260,19 +265,17 @@ def serving_planner(spark: SparkSession, sf_dir: str):
     join the object-bucketed edges, inverse hops the subject-bucketed
     ones, so the corpus-scale edge relation never exchanges (exactly one
     fewer Exchange per hop; plan-pinned in tests/test_plan_quality.py).
-    Later calls return the same planner."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    p = _SERVING.get(key)
-    if p is None:
+    Later calls return the same planner from the session memo
+    (``catalog.memo``) until one of ``_MODEL_TABLES`` changes on disk,
+    which rematerializes the model over the new rows."""
+
+    def build():
         _reap_stale_serving_dirs(spark)
         _reap_at_exit(spark)
         path = os.path.join(
             spark.conf.get("spark.sql.warehouse.dir"), serving_prefix(sf_dir)
         )
         materialize_model(spark, sf_dir, path)
-        p = load_planner(spark, path)
-        _SERVING[key] = p
-    return p
+        return load_planner(spark, path)
 
-
-_SERVING: dict = {}
+    return memo(spark, sf_dir, _MODEL_TABLES, ("serving",), build)

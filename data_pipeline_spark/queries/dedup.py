@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import forget, load_table, memo
 from ..functions.strings import content_fp, content_fp_sql, words, words_sql
 from ..operators.similarity import (
     COSINE_SQL,
@@ -46,65 +46,27 @@ JACCARD_T = 0.6
 # shared Spark-side builders (used by the declared queries AND importable as
 # library functions for arbitrary corpora)
 # ---------------------------------------------------------------------------
-_TIER_CACHE: dict[tuple[str, str, str, str, str], DataFrame] = {}
-
-
-def _input_fingerprint(sf_dir: str, table: str = "documents") -> str:
-    """Cheap identity of a tier's input table: (name, size, mtime_ns) of
-    every file under <sf_dir>/<table>.parquet.  Regenerating testdata in
-    place within one SparkSession changes the fingerprint and invalidates
-    the memoized tiers instead of silently serving stale checkpoints."""
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    parts: list[str] = []
-    if os.path.isdir(path):
-        for entry in sorted(os.listdir(path)):
-            st = os.stat(os.path.join(path, entry))
-            parts.append(f"{entry}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(path):
-        st = os.stat(path)
-        parts.append(f"{os.path.basename(path)}:{st.st_size}:{st.st_mtime_ns}")
-    return ";".join(parts)
-
-
 def clear_tier_cache() -> None:
-    """Drop all memoized tiers (test-harness hook for in-place testdata
-    regeneration; the checkpoint blocks are released with the refs)."""
-    _TIER_CACHE.clear()
+    """Drop every memoized tier (bench.py's rule between passes, and the
+    test-harness hook for in-place testdata regeneration; the checkpoint
+    blocks are released with the refs).  Table plans and the serving
+    model stay memoized."""
+    forget("tier")
 
 
 def _tier(
     spark: SparkSession, sf_dir: str, key: str, builder, table: str = "documents"
 ) -> DataFrame:
-    """Session-scoped memo of a materialized (localCheckpoint) dedup tier.
+    """A materialized (localCheckpoint) dedup tier, held in the session
+    memo (``catalog.memo``) while ``table``'s files stand.
 
     d07/d12/d13 are one pipeline staged as three queries: pairs build on
     candidates build on shingles.  In production each tier is a persisted
-    table (SURVEY §7.1) that downstream stages READ, not recompute — this
-    cache is the test-harness stand-in for that, keyed by application id
-    (a new SparkContext never sees another context's checkpoint blocks)
-    and by an input fingerprint (a testdata regen under the same path
-    invalidates rather than serving stale tiers).  Every tier is a pure
+    table (SURVEY §7.1) that downstream stages READ, not recompute — the
+    memo is the test-harness stand-in for that.  Every tier is a pure
     deterministic function of the input parquet (md5-based hashing, no
     RNG), so memoization cannot change results."""
-    app = spark.sparkContext.applicationId
-    fp = _input_fingerprint(sf_dir, table)
-    # evict tiers of stopped contexts (their checkpoint blocks are gone;
-    # keeping the DataFrames pins dead-session plan graphs) and of inputs
-    # that changed under this sf_dir (stale data AND freed blocks) —
-    # comparing fingerprints only within the SAME input table
-    for stale in [
-        k for k in _TIER_CACHE
-        if k[0] != app or (k[1] == sf_dir and k[3] == table and k[4] != fp)
-    ]:
-        del _TIER_CACHE[stale]
-    ck = (app, sf_dir, key, table, fp)
-    df = _TIER_CACHE.get(ck)
-    if df is None:
-        df = builder().localCheckpoint()
-        _TIER_CACHE[ck] = df
-    return df
+    return memo(spark, sf_dir, (table,), ("tier", key), lambda: builder().localCheckpoint())
 
 
 def _doc_arrays_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,8 +711,9 @@ def simhash_candidates(sims: DataFrame, bits: int) -> DataFrame:
 
 def _simhash_tier(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
     """The documents' fingerprint tier at one width, materialized once
-    per session (localCheckpoint via the tier cache): the banded join
-    references it on both sides, and at 100TB it is a persisted table."""
+    per session (a ``_tier``: localCheckpoint in the session memo): the
+    banded join references it on both sides, and at 100TB it is a
+    persisted table."""
     return _tier(
         spark, sf_dir, f"simhash{bits}",
         lambda: simhash_df(load_table(spark, sf_dir, "documents"), bits),

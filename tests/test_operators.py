@@ -163,10 +163,10 @@ def test_hot_key_salted_join_equals_plain_join(spark):
 
 
 def test_load_table_session_plan_cache(spark):
-    """catalog.load_table caches ONE lazy scan plan per (session, sf_dir,
-    table) — the r11 fix for the ~0.1s-per-call schema-infer round trip
-    that dominated small-query build time (SCALE.md round 11).  Same
-    session + same args -> same plan object; different sf_dir -> a
+    """catalog.load_table caches ONE lazy scan plan per (application,
+    sf_dir, table) — the r11 fix for the ~0.1s-per-call schema-infer
+    round trip that dominated small-query build time (SCALE.md round
+    11).  Same session + same args -> same plan object; different sf_dir -> a
     different plan; the events nanos->micros shim survives caching."""
     from data_pipeline_spark.catalog import load_table
 
@@ -201,8 +201,35 @@ def test_input_fingerprint_survives_deletion_race(tmp_path, monkeypatch):
         return real_stat(p, *a, **kw)
 
     monkeypatch.setattr(catalog.os, "stat", racy_stat)
-    fp = catalog.input_fingerprint(str(tmp_path), "t")
+    fp = catalog.input_fingerprint(str(tmp_path), ("t",))
     assert "part-0" in fp and "part-1" not in fp
+
+
+def test_tier_build_survives_deletion_race(spark, tmp_path, monkeypatch):
+    """A dedup tier's input fingerprint is the catalog's: a documents
+    part file whose stat races a deletion drops out of it instead of
+    raising out of the tier build."""
+    import os as _os
+
+    from data_pipeline_spark import catalog
+    from data_pipeline_spark.queries.dedup import _doc_arrays_tier
+
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "zeta eta theta iota")], ["doc_id", "text"]
+    ).repartition(2).write.parquet(f"{sf}/documents.parquet")
+    parts = sorted(f for f in _os.listdir(f"{sf}/documents.parquet") if f.startswith("part-"))
+    assert len(parts) == 2
+    real_stat = _os.stat
+
+    def racy_stat(p, *a, **kw):
+        if str(p).endswith(parts[1]):
+            raise FileNotFoundError(p)
+        return real_stat(p, *a, **kw)
+
+    monkeypatch.setattr(catalog.os, "stat", racy_stat)
+    got = {s for r in _doc_arrays_tier(spark, sf).collect() for s in r.sh}
+    assert {"alpha beta gamma", "zeta eta theta"} <= got
 
 
 def test_name_variants(spark):
@@ -450,13 +477,18 @@ def test_d06_refuses_large_corpus(spark, monkeypatch):
 
 def test_tier_cache_invalidates_on_input_regen(spark, tmp_path):
     """An in-place testdata regeneration under the same sf_dir must
-    invalidate the memoized dedup tiers (the cache key carries an input
-    fingerprint), never serve a stale checkpoint."""
-    from data_pipeline_spark.queries.dedup import (
-        _TIER_CACHE, _doc_arrays_tier, clear_tier_cache,
-    )
+    invalidate the memoized dedup tiers (the memo holds each entry with
+    its input fingerprint), never serve a stale checkpoint."""
+    import os
+
+    from data_pipeline_spark import catalog
+    from data_pipeline_spark.queries.dedup import _doc_arrays_tier, clear_tier_cache
 
     sf = str(tmp_path)
+
+    def tiers(kind="tier"):
+        return [k for k in catalog._MEMO if k[1] == os.path.abspath(sf) and k[2][0] == kind]
+
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta")], ["doc_id", "text"]
     )
@@ -471,10 +503,12 @@ def test_tier_cache_invalidates_on_input_regen(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
     second = {s for r in _doc_arrays_tier(spark, sf).collect() for s in r.sh}
     assert "zeta eta theta" in second and "alpha beta gamma" not in second
-    # the stale tier was evicted, not retained alongside
-    assert len([k for k in _TIER_CACHE if k[1] == sf]) == 1
+    # the stale tier was replaced, not retained alongside
+    assert len(tiers()) == 1
     clear_tier_cache()
-    assert not _TIER_CACHE
+    assert not [k for k in catalog._MEMO if k[2][0] == "tier"]
+    # only tiers are dropped: the documents scan plan stays memoized
+    assert len(tiers("table")) == 1
 
 
 def test_d09_exact_equality_at_tiny_sf(spark):

@@ -1039,16 +1039,46 @@ def test_dsl_q13_serves_from_bucketed_tables(spark):
     correct rows — the read path is the claim).  serving_planner
     memoizes per (application, sf_dir): the second call must not
     rematerialize."""
+    from data_pipeline_spark import catalog
     from data_pipeline_spark.plans import model
 
-    model._SERVING.clear()
+    def serving():
+        return {k: v[1] for k, v in catalog._MEMO.items() if k[2] == ("serving",)}
+
+    catalog.forget("serving")
     df = QUERIES["dsl_q13_bucketed_serving_inverse"].spark_fn(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert model.serving_prefix(SF) + "_edges_subj" in plan, plan
     assert "Bucketed: true" in plan, plan
-    n = len(model._SERVING)
+    before = serving()
     QUERIES["dsl_q13_bucketed_serving_inverse"].spark_fn(spark, SF)
-    assert len(model._SERVING) == n
+    after = serving()
+    assert after.keys() == before.keys()
+    assert all(after[k] is before[k] for k in before)
+
+
+def test_serving_planner_follows_regenerated_tables(spark, tmp_path):
+    """A model table regenerated in place under the same sf_dir changes
+    the serving model's input fingerprint: the next search plans over
+    the new rows, not over the model materialized from the old ones."""
+    import os
+    import shutil
+
+    from data_pipeline_spark.plans import model
+
+    sf = str(tmp_path)
+    for t in ("customer", "supplier", "part", "nation", "region", "orders", "lineitem"):
+        src = f"{SF}/{t}.parquet"
+        (shutil.copytree if os.path.isdir(src) else shutil.copy)(src, f"{sf}/{t}.parquet")
+    assert model.serving_planner(spark, sf).plan("AND(type=nation)").count() == 25
+    nation = spark.read.parquet(f"{sf}/nation.parquet")
+    rows = nation.collect()
+    extra = [r.asDict() | {"n_nationkey": 100 + i, "n_name": f"NATION_X{i}"}
+             for i, r in enumerate(rows[:5])]
+    spark.createDataFrame([r.asDict() for r in rows] + extra, nation.schema).write.mode(
+        "overwrite"
+    ).parquet(f"{sf}/nation.parquet")
+    assert model.serving_planner(spark, sf).plan("AND(type=nation)").count() == 30
 
 
 def test_serving_edge_tables_sized_by_shuffle_partitions(spark):
@@ -1057,6 +1087,7 @@ def test_serving_edge_tables_sized_by_shuffle_partitions(spark):
     per bucket; a shuffle-join traversal still reads them as a bucketed
     scan (autoBucketedScan left on), and dsl_q13 still matches its
     oracle over them."""
+    from data_pipeline_spark.catalog import forget
     from data_pipeline_spark.plans import model
 
     from .oracle_harness import compare, duckdb_con
@@ -1065,7 +1096,7 @@ def test_serving_edge_tables_sized_by_shuffle_partitions(spark):
     prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "5")
-        model._SERVING.clear()
+        forget("serving")
         planner = model.serving_planner(spark, SF)
         prefix = model.serving_prefix(SF)
         wh = spark.conf.get("spark.sql.warehouse.dir")
@@ -1090,7 +1121,7 @@ def test_serving_edge_tables_sized_by_shuffle_partitions(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-        model._SERVING.clear()
+        forget("serving")
 
 
 def test_serving_planner_rematerializes_across_catalog_loss(spark):
@@ -1101,9 +1132,10 @@ def test_serving_planner_rematerializes_across_catalog_loss(spark):
     hit by the first cross-session dsl_q13 run)."""
     import os
 
+    from data_pipeline_spark.catalog import forget
     from data_pipeline_spark.plans import model
 
-    model._SERVING.clear()
+    forget("serving")
     model.serving_planner(spark, SF)
     # simulate a fresh process: registrations dropped, directories kept
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
@@ -1111,7 +1143,7 @@ def test_serving_planner_rematerializes_across_catalog_loss(spark):
     for t in ("_edges_subj", "_edges_obj"):
         spark.sql(f"DROP TABLE IF EXISTS {prefix}{t}")
     assert os.path.isdir(os.path.join(wh, prefix, "edges_subj"))
-    model._SERVING.clear()
+    forget("serving")
     p = model.serving_planner(spark, SF)  # must not raise
     assert p.plan("AND(type=nation)").count() == 25
 

@@ -16,9 +16,10 @@ console progress bar off.  bench.py supplies the warm-up and both
 canaries; ``--sf`` defaults to $SPARK_GRAFT_SF_DIR as in bench.py.
 Each run prints one JSON line.
 
-- ``queries`` times declared queries in whole passes, the dedup tier memo
-  cleared between passes (bench.py's rule), to ``count`` (bench.py's
-  action) or to the ``noop`` sink (every column computed).
+- ``queries`` times declared queries in whole passes, the dedup tiers
+  dropped from the session memo between passes (``clear_tier_cache``,
+  bench.py's rule), to ``count`` (bench.py's action) or to the ``noop``
+  sink (every column computed).
 - ``build`` calls ``run_build`` on b01's pair corpus (``build_gate.
   _pair_records``) and forces the export tiers; ``--crawl N`` then calls
   ``incremental_build`` with an N-change feed and forces the spliced
@@ -29,11 +30,13 @@ Each run prints one JSON line.
   tests/plan_snapshots.json is written with), and with ``--out`` writes
   the formatted plans; it runs no action itself.
 - ``--against REV`` runs each rep as two subprocesses, one importing the
-  engine package from REV (extracted with ``git archive``) and one from
-  this checkout, alternating which runs first.  bench.py and entitybench
-  always load from this checkout, so REV may predate this file.  The
-  output gives both rep vectors, wins per pair, both medians and
-  quartiles, and the parent's inter-quartile range.
+  engine package and bench.py from REV (extracted with ``git archive``)
+  and one from this checkout, alternating which runs first, so each side
+  warms up with its own ``bench.warm_up``.  A REV without bench.py takes
+  this checkout's, and entitybench always loads from this checkout, so
+  REV may predate this file.  The output gives both rep vectors, wins
+  per pair, both medians and quartiles, and the parent's inter-quartile
+  range.
 """
 
 from __future__ import annotations
@@ -50,10 +53,10 @@ import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# the engine comes from PYTHONPATH when it names one (the --against
-# sides, which hold only the engine package), else from this checkout;
-# bench.py and entitybench exist only here.  Bind the engine before
-# bench.py puts its own directory first on sys.path.
+# the engine and bench.py come from PYTHONPATH when it names them (the
+# --against sides, which hold the engine package and the revision's own
+# bench.py), else from this checkout; entitybench exists only here.  Bind
+# the engine before bench.py puts its own directory first on sys.path.
 sys.path.append(ROOT)
 import data_pipeline_spark.queries  # noqa: E402,F401
 
@@ -61,6 +64,7 @@ import bench  # noqa: E402
 from entitybench.trace import GROUP_PREFIX, Tracer, event_log_path, fold_event_log  # noqa: E402
 
 ENGINE = os.path.dirname(os.path.dirname(os.path.abspath(data_pipeline_spark.__file__)))
+BENCH = os.path.dirname(os.path.abspath(bench.__file__))
 
 # operators whose per-plan counts are a plan's shape: a join flipping
 # between sort-merge and broadcast, an added shuffle or a lost partial
@@ -116,7 +120,7 @@ def _report(spark, scenario: str, walls: dict, jobs: dict, canaries: dict,
         folded = fold_event_log(event_log_path(events, spark.sparkContext.applicationId))
         fold = {k: [{m: round(v, 3) for m, v in folded[f"{k}.rep{i}"].items()}
                     for i in range(len(v))] for k, v in walls.items()}
-    return {"scenario": scenario, "engine": ENGINE, "reps": walls,
+    return {"scenario": scenario, "engine": ENGINE, "bench": BENCH, "reps": walls,
             "median": {k: _median(v) for k, v in walls.items()}, "jobs": jobs,
             "canary_spin_sec": {e: c["spin"] for e, c in canaries.items()},
             "canary_spark_sec": {e: c["spark"] for e, c in canaries.items()},
@@ -183,17 +187,11 @@ def _changes(spark, sf: str, n: int):
 
 def run_build_scenario(spark, sf: str, crawl: int = 0, reps: int = 1,
                        events: str | None = None) -> dict:
-    from data_pipeline_spark.catalog import empty_relation
+    from data_pipeline_spark.catalog import empty_indexes
     from data_pipeline_spark.pipeline import build, incremental
     from data_pipeline_spark.queries.build_gate import _pair_records
 
-    schema = "source string, {} string, target_identifier string, rectype string"
-    indexes = {
-        "name_index": empty_relation(spark, schema.format("name_clean")),
-        "uri_index": empty_relation(spark, schema.format("ext_uri")),
-        "same_as": empty_relation(spark, "uri_a string, uri_b string"),
-        "different_from": empty_relation(spark, "uri_a string, uri_b string"),
-    }
+    indexes = empty_indexes(spark)
     records = _pair_records(spark, sf).localCheckpoint()
     changes = _changes(spark, sf, crawl).localCheckpoint() if crawl else None
     bench.warm_up(spark, sf)
@@ -273,10 +271,14 @@ def run_against(rev: str, argv: list[str], pairs: int) -> dict:
     """``pairs`` pairs of one-rep subprocesses, parent engine vs this checkout."""
     parent = tempfile.mkdtemp(prefix="measure_rev_")
     try:
-        archive = subprocess.run(["git", "-C", ROOT, "archive", rev, "data_pipeline_spark"],
+        own_bench = subprocess.run(["git", "-C", ROOT, "cat-file", "-e", f"{rev}:bench.py"],
+                                   capture_output=True).returncode == 0
+        paths = ["data_pipeline_spark", *(["bench.py"] if own_bench else [])]
+        archive = subprocess.run(["git", "-C", ROOT, "archive", rev, *paths],
                                  check=True, capture_output=True).stdout
         subprocess.run(["tar", "-x", "-C", parent], input=archive, check=True)
         sides = {"parent": parent, "current": ROOT}
+        benches = {"parent": parent if own_bench else ROOT, "current": ROOT}
         reps = {s: {} for s in sides}
         canaries = {s: [] for s in sides}
         for i in range(pairs):
@@ -285,8 +287,9 @@ def run_against(rev: str, argv: list[str], pairs: int) -> dict:
                 proc = subprocess.run([sys.executable, os.path.abspath(__file__), *argv, "--reps", "1"],
                                       env=env, check=True, stdout=subprocess.PIPE, text=True)
                 res = json.loads(proc.stdout.strip().splitlines()[-1])
-                if res["engine"] != sides[side]:
-                    raise RuntimeError(f"{side} side imported the engine from {res['engine']}")
+                if (res["engine"], res["bench"]) != (sides[side], benches[side]):
+                    raise RuntimeError(f"{side} side imported the engine from {res['engine']}"
+                                       f" and bench.py from {res['bench']}")
                 for k, v in res["reps"].items():
                     reps[side].setdefault(k, []).extend(v)
                 canaries[side].append({"spin": res["canary_spin_sec"], "spark": res["canary_spark_sec"]})
